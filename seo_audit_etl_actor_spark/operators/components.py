@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def connected_components(
@@ -38,7 +39,13 @@ def connected_components(
     """(src, dst) undirected edge list → (vertex, component) where
     component = min vertex id in the connected component (deterministic
     canonical label). Raises if not converged within max_iter (real
-    near-dup graphs converge in a handful of rounds)."""
+    near-dup graphs converge in a handful of rounds), and raises TypeError
+    for non-integral vertex ids: the label-sum convergence test below needs
+    ids that cast exactly to DECIMAL(38,0)."""
+    for c in (src, dst):
+        dtype = edges.schema[c].dataType
+        if not isinstance(dtype, T.IntegralType):
+            raise TypeError(f"vertex id column {c!r} must be integral, got {dtype.simpleString()}")
     sym = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).unionByName(
         edges.select(F.col(dst).alias("s"), F.col(src).alias("t"))
     )
@@ -91,7 +98,9 @@ def connected_components(
         ).first()["s"]
         converged = labels is not None and new_sum == label_sum
         if labels is None and new_sum is None:
-            converged = True  # empty edge set: fixpoint is the empty labeling
+            # integral ids cast exactly, so a NULL round-1 sum means no
+            # labels: the empty edge set, whose fixpoint is the empty labeling
+            converged = True
         # drop the superseded generation's references and collect so
         # Spark's ContextCleaner can free its localCheckpoint blocks —
         # otherwise a long-diameter graph pins every iteration's

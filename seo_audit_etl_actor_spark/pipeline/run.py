@@ -2,10 +2,13 @@
 driver orchestration over per-source Spark stanzas (SURVEY §3.2, §3.4).
 
 Flow: fetch → PK validation → unzip → per-source stanzas in reference
-order (each one Spark aggregation job) → coverage-weighted scoring →
-{normalized_audit, scores, manifest}. Cross-stanza dependencies are
-exactly the reference's: the errors.* `+=` accumulation (A11) and the
-pages_total coalesce priority (A12) — everything else is independent.
+order → coverage-weighted scoring → {normalized_audit, scores, manifest}.
+Every CSV entry is parsed once on the driver (`read_csv` → `ParsedCsv`);
+manifest row counts (`len(rows)`) and placeholder checks read that parse
+and run no Spark job. Spark runs the stanza aggregations (one job each)
+and the scoring. Cross-stanza dependencies are exactly the reference's:
+the errors.* `+=` accumulation (A11) and the pages_total coalesce
+priority (A12) — everything else is independent.
 
 Citations: /root/reference/src/main.js:4-41, src/etl.js:93-454.
 """
@@ -17,7 +20,6 @@ from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import (
@@ -25,10 +27,8 @@ from seo_audit_etl_actor_spark.pipeline.document import (
     to_reference_json,
 )
 from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
-from seo_audit_etl_actor_spark.sources.csv_smart import (
-    parse_csv_smart,
-    parse_csv_smart_rows,
-)
+from seo_audit_etl_actor_spark.sources import csv_smart
+from seo_audit_etl_actor_spark.sources.csv_smart import ParsedCsv, parse_csv_smart_rows
 from seo_audit_etl_actor_spark.sources.lighthouse import extract_lighthouse
 from seo_audit_etl_actor_spark.sources.zip_io import (
     FetchImpl,
@@ -78,8 +78,9 @@ class JobInput:
             raise ValueError(f"Missing required input: {', '.join(missing)}")
 
 
-def _parse(spark: SparkSession, buf: bytes) -> DataFrame | None:
-    return parse_csv_smart(spark, buf)
+def _n_rows(parsed: ParsedCsv | None) -> int:
+    """Manifest row count: the data rows, 0 for a missing or header-less entry."""
+    return len(parsed.rows) if parsed is not None and parsed.header else 0
 
 
 def process_zip(
@@ -100,18 +101,20 @@ def process_zip(
     doc = empty_normalized(job.client, job.domain, job.run_date)
     prov = doc["provenance"]
 
+    def read_csv(name: str) -> ParsedCsv | None:
+        """Read + parse one entry on the driver; None when it is missing
+        (recorded as such in the manifest)."""
+        buf = read_entry(zf, name, manifest)
+        return None if buf is None else parse_csv_smart_rows(buf)
+
     def csv_stanza(name: str, apply) -> None:
         """Shared shape: read entry → parse → rows>0 → stanza + rows count;
         empty parse → 'partial' (src/etl.js:149,164,180,229)."""
-        buf = read_entry(zf, name, manifest)
-        if buf is None:
-            return
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n:
-            apply(df)
+        parsed = read_csv(name)
+        if n := _n_rows(parsed):
+            apply(csv_smart.to_dataframe(spark, parsed))
             manifest[name]["rows"] = n
-        else:
+        elif parsed is not None:
             manifest[name]["status"] = "partial"
 
     # ---- Ahrefs keywords (src/etl.js:115-151)
@@ -166,21 +169,17 @@ def process_zip(
     csv_stanza("sf_internal_all.csv", _sf_internal)
 
     # ---- Screaming Frog structured data (src/etl.js:234-250)
-    buf = read_entry(zf, "sf_structured_data.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n:
-            note = stanzas.sf_structured_data(doc)
-            manifest["sf_structured_data.csv"]["rows"] = n
-            manifest["sf_structured_data.csv"]["note"] = note
-            prov["screamingfrog"] = True
+    if n := _n_rows(read_csv("sf_structured_data.csv")):
+        note = stanzas.sf_structured_data(doc)
+        manifest["sf_structured_data.csv"]["rows"] = n
+        manifest["sf_structured_data.csv"]["note"] = note
+        prov["screamingfrog"] = True
 
     # ---- duplicates / images: row counts only (src/etl.js:253-256)
     for name in ("sf_duplicates.csv", "sf_images.csv"):
-        buf = read_entry(zf, name, manifest)
-        if buf is not None:
-            manifest[name]["rows"] = len(parse_csv_smart_rows(buf).rows)
+        parsed = read_csv(name)
+        if parsed is not None:
+            manifest[name]["rows"] = len(parsed.rows)
 
     # ---- Lighthouse JSONs (src/etl.js:259-304)
     lh_metrics = []
@@ -214,11 +213,9 @@ def process_zip(
     csv_stanza("brightlocal_citations.csv", _citations)
 
     # ---- BrightLocal reviews — placeholder-prone (src/etl.js:369-379)
-    buf = read_entry(zf, "brightlocal_reviews.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n and not stanzas.is_placeholder(df):
+    parsed = read_csv("brightlocal_reviews.csv")
+    if parsed is not None:
+        if (n := _n_rows(parsed)) and not stanzas.is_placeholder(parsed):
             prov["brightlocal"] = True
             manifest["brightlocal_reviews.csv"]["rows"] = n
         else:
@@ -226,85 +223,46 @@ def process_zip(
             manifest["brightlocal_reviews.csv"]["note"] = "login_required"
 
     # ---- BrightLocal GBP insights (src/etl.js:382-397)
-    buf = read_entry(zf, "brightlocal_gbp_insights.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        n = df.count() if df is not None else 0
-        if n:
-            stanzas.brightlocal_gbp_insights(df, doc)
-            prov["brightlocal"] = True
-            manifest["brightlocal_gbp_insights.csv"] = {
-                "status": "partial",
-                "rows": n,
-                "note": "public listing only; true Insights missing",
-            }
+    parsed = read_csv("brightlocal_gbp_insights.csv")
+    if n := _n_rows(parsed):
+        stanzas.brightlocal_gbp_insights(csv_smart.to_dataframe(spark, parsed), doc)
+        prov["brightlocal"] = True
+        manifest["brightlocal_gbp_insights.csv"] = {
+            "status": "partial",
+            "rows": n,
+            "note": "public listing only; true Insights missing",
+        }
 
     # ---- GBP categories / photos (src/etl.js:400-421)
-    buf = read_entry(zf, "gbp_categories.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        if df is not None:
-            stanzas.gbp_categories(df, doc)
-        prov["gbp_public"] = True
-        manifest["gbp_categories.csv"]["rows"] = df.count() if df is not None else 0
-
-    buf = read_entry(zf, "gbp_photos.csv", manifest)
-    if buf is not None:
-        df = _parse(spark, buf)
-        if df is not None:
-            stanzas.gbp_photos(df, doc)
-        prov["gbp_public"] = True
-        manifest["gbp_photos.csv"]["rows"] = df.count() if df is not None else 0
+    for name, stanza in (
+        ("gbp_categories.csv", stanzas.gbp_categories),
+        ("gbp_photos.csv", stanzas.gbp_photos),
+    ):
+        parsed = read_csv(name)
+        if parsed is not None:
+            if parsed.header:
+                stanza(csv_smart.to_dataframe(spark, parsed), doc)
+            prov["gbp_public"] = True
+            manifest[name]["rows"] = _n_rows(parsed)
 
     # ---- login-required placeholders (src/etl.js:424-434)
-    placeholder_dfs: dict[str, DataFrame | None] = {}
+    real: set[str] = set()
     for name in PLACEHOLDER_FILES:
-        try:
-            data = zf.read(name)
-        except KeyError:
-            manifest[name] = {"status": "missing"}
+        parsed = read_csv(name)
+        if parsed is None:
             continue
-        df = _parse(spark, data)
-        placeholder_dfs[name] = df
-        n = df.count() if df is not None else 0
-        if n and not stanzas.is_placeholder(df):
+        if (n := _n_rows(parsed)) and not stanzas.is_placeholder(parsed):
             manifest[name] = {"status": "full", "rows": n}
+            real.add(name)
         else:
             manifest[name] = {"status": "placeholder", "note": "access_required_or_empty"}
 
     # ---- GSC/GA4 presence flags (src/etl.js:437-448)
-    def _real_rows(name: str) -> bool:
-        df = placeholder_dfs.get(name)
-        if df is None:
-            return False
-        return bool(df.count()) and not stanzas.is_placeholder(df)
-
-    if any(_real_rows(n) for n in GSC_FILES):
-        prov["gsc"] = True
-    if any(_real_rows(n) for n in GA4_FILES):
-        prov["ga4"] = True
+    prov["gsc"] = any(name in real for name in GSC_FILES)
+    prov["ga4"] = any(name in real for name in GA4_FILES)
 
     scores = compute_scores(spark, doc)
     return {"normalized_audit": doc, "scores": scores, "manifest": manifest}
-
-
-def manifest_df(spark: SparkSession, manifest: dict) -> DataFrame:
-    """Long-format lineage frame (SURVEY §1.4): queryable provenance,
-    writes to the same JSON."""
-    schema = T.StructType(
-        [
-            T.StructField("file", T.StringType(), False),
-            T.StructField("status", T.StringType(), True),
-            T.StructField("size", T.LongType(), True),
-            T.StructField("rows", T.LongType(), True),
-            T.StructField("note", T.StringType(), True),
-        ]
-    )
-    rows = [
-        (name, m.get("status"), m.get("size"), m.get("rows"), m.get("note"))
-        for name, m in manifest.items()
-    ]
-    return spark.createDataFrame(rows, schema)
 
 
 def write_outputs(result: dict, out_dir: str) -> dict[str, str]:

@@ -18,7 +18,7 @@ from seo_audit_etl_actor_spark.operators.aggregates import (
     conditional_count,
 )
 from seo_audit_etl_actor_spark.pipeline.resolve import pick_col
-from seo_audit_etl_actor_spark.sources.csv_smart import ROW_ID
+from seo_audit_etl_actor_spark.sources.csv_smart import ROW_ID, ParsedCsv
 
 
 def _cols(df: DataFrame) -> list[str]:
@@ -219,17 +219,15 @@ def brightlocal_citations(df: DataFrame, doc: dict) -> None:
         doc["local"]["citations"]["consistency"] = row["good"] / row["total"]
 
 
-def is_placeholder(df: DataFrame) -> bool:
+def is_placeholder(parsed: ParsedCsv) -> bool:
     """Login-wall placeholder: the first row has truthy `status` AND
     `message` fields — exact lowercase keys, no fuzzy match (P10,
-    src/etl.js:372)."""
-    cols = _cols(df)
-    if "status" not in cols or "message" not in cols:
+    src/etl.js:372). Reads the driver-side parse; runs no Spark job."""
+    header = parsed.header
+    if "status" not in header or "message" not in header or not parsed.rows:
         return False
-    first = df.orderBy(ROW_ID).select("status", "message").first()
-    if first is None:
-        return False
-    return bool(first["status"]) and bool(first["message"])
+    first = parsed.rows[0]
+    return bool(first[header.index("status")]) and bool(first[header.index("message")])
 
 
 def brightlocal_gbp_insights(df: DataFrame, doc: dict) -> None:

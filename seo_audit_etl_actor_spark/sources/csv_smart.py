@@ -12,12 +12,13 @@ papaparse TooFewFields/TooManyFields analog) OR zero data rows
 (src/etl.js:23).
 
 The decode + parse happens on the driver: these are the reference's
-ZIP-of-small-CSVs inputs, where per-file drivers-side parsing is the right
-cost model (SURVEY §3.4). The result is handed to Spark as an all-string
-DataFrame with a `__row_id` ingest-order column (H2 determinism — Spark has
-no implicit file order). For big standalone CSVs use
-`read_csv_distributed`, which pushes the same encoding/delimiter decision
-into Spark's distributed CSV scan.
+ZIP-of-small-CSVs inputs, where per-file driver-side parsing is the right
+cost model (SURVEY §3.4). Row counts and placeholder checks read the
+`ParsedCsv` directly. Only a stanza aggregation hands it to Spark, via
+`to_dataframe`: an all-string DataFrame with a `__row_id` ingest-order
+column (H2 determinism — Spark has no implicit file order). For big
+standalone CSVs use `read_csv_distributed`, which pushes the same
+encoding/delimiter decision into Spark's distributed CSV scan.
 
 Deliberate divergence: papaparse emits a phantom `{col: ""}` row for a
 trailing newline; Python's csv module does not. We follow csv-module
@@ -116,11 +117,6 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     )
     data = [(i, *row) for i, row in enumerate(parsed.rows)]
     return spark.createDataFrame(data, schema)
-
-
-def parse_csv_smart(spark: SparkSession, buf: bytes) -> DataFrame | None:
-    """Sniff + parse chain → Spark DataFrame (None for an empty buffer)."""
-    return to_dataframe(spark, parse_csv_smart_rows(buf))
 
 
 def read_csv_distributed(

@@ -109,3 +109,17 @@ def test_single_edge_converges_with_two_rounds_budget(spark):
     df = spark.createDataFrame([(7, 3)], "id_a: long, id_b: long")
     got = {r["vertex"]: r["component"] for r in connected_components(df, max_iter=2).collect()}
     assert got == {3: 3, 7: 3}
+
+
+def test_non_integral_ids_raise_with_ansi_off(spark):
+    """With ANSI off, a string id casts to a NULL DECIMAL label sum, which
+    the round-1 empty-graph check would read as "converged" and return a
+    one-round labeling. Non-integral ids must be refused up front."""
+    df = spark.createDataFrame([("b", "a"), ("c", "b")], "id_a: string, id_b: string")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(TypeError, match="id_a"):
+            connected_components(df)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

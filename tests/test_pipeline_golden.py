@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import pytest
 
+from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import to_reference_json
 from seo_audit_etl_actor_spark.pipeline.run import JobInput, process_zip, write_outputs
+from seo_audit_etl_actor_spark.sources.csv_smart import parse_csv_smart_rows
 from seo_audit_etl_actor_spark.sources.zip_io import NotAZipError
 from tests.fixtures_seo import build_fixture_zip
 
@@ -147,6 +149,42 @@ def test_write_outputs(result, tmp_path):
     scores = json.loads(open(paths["scores.json"]).read())
     assert scores["oss"] == pytest.approx(39.6)
     assert "etl_manifest.json" in paths and "OUTPUT.json" in paths
+
+
+def test_fixture_audit_job_budget(spark):
+    """Row counts and placeholder checks read the driver-side parse, so
+    Spark runs only the stanza aggregations and the scoring. The fixture
+    audit ran 62 jobs when every entry was counted with `df.count()` and
+    placeholders were checked with `orderBy().first()`; it runs 23 now."""
+    sc = spark.sparkContext
+    group = "test_fixture_audit_job_budget"
+    sc.setJobGroup(group, "fixture audit job count")
+    try:
+        process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 25
+
+
+@pytest.mark.parametrize(
+    "buf, expected",
+    [
+        pytest.param(b"status,message\nerror,login required", True, id="first_row"),
+        pytest.param(b"status,message\nerror,\nok,fine", False, id="empty_message"),
+        # ragged row: `message` is missing (None), not empty
+        pytest.param(b"status,message\nerror\nok,fine", False, id="ragged_missing_message"),
+        pytest.param(b"status,message\n,\nerror,login required", False, id="second_row_only"),
+        pytest.param(b"Status,Message\nerror,login required", False, id="capitalised_keys"),
+        pytest.param(
+            b"\xff\xfe" + "status\tmessage\nerror\tlogin required".encode("utf-16-le"),
+            True,
+            id="utf16le_bom",
+        ),
+    ],
+)
+def test_is_placeholder(buf, expected):
+    assert stanzas.is_placeholder(parse_csv_smart_rows(buf)) is expected
 
 
 # ---------------------------------------------------------- degradations

@@ -1,10 +1,11 @@
 """Direct ladder of operators/components.connected_components on
 SYNTHETIC edge frames (r8): the corpus-driven clusters ladder turned out
 to exercise an EMPTY verified-pair graph above m1 (the scale generator's
-chance-similarity docs never reach Jaccard >= 0.5 — measured by
-tools/decompose_clusters.py, n_pairs=0 at m1/m316/m1000), so the CC
-iteration term had never been measured at volume. This ladders the
-operator itself with known graph structure, no corpus needed:
+chance-similarity docs never reach Jaccard >= 0.5 — recorded in
+SCALE_STUDY_r08.json "clusters_decomposition", n_pairs=0 at
+m1/m316/m1000), so the CC iteration term had never been measured at
+volume. This ladders the operator itself with known graph structure, no
+corpus needed:
 
   - clique-ish: V vertices in V/10 size-10 cliques via hub edges
     (diameter 2 — the LSH near-dup shape; 9 edges per clique)

@@ -54,14 +54,15 @@ def gen_documents(out_dir: str, m: float, base_dir: str, seed: int = 7) -> int:
     for ln in out_lens:
         docs.append(" ".join(vocab_arr[rng.integers(0, len(vocab_arr), int(ln))]))
     # r8: PLANT scale-invariant near-dup clusters. The r8 decomposition
-    # (tools/decompose_clusters.py) found chance similarity alone never
-    # reaches verified Jaccard >= 0.5 on this fresh-sample scheme, so the
-    # corpus-driven clusters ladder exercised an EMPTY graph above the
-    # driver SFs. Overwrite 1% of docs (in groups of 4: one seed + three
-    # perturbed copies, each with ~10% of word positions resampled —
-    # 3-shingle Jaccard ~ (0.9)^3/(2-(0.9)^3) ~ 0.57 > 0.5 threshold) so
-    # near-dup density is scale-INVARIANT: cluster count grows ~ m,
-    # cluster size stays 4, matching real-corpus dedup shape.
+    # (SCALE_STUDY_r08.json, "clusters_decomposition") found chance
+    # similarity alone never reaches verified Jaccard >= 0.5 on this
+    # fresh-sample scheme, so the corpus-driven clusters ladder exercised
+    # an EMPTY graph above the driver SFs. Overwrite 1% of docs (in groups
+    # of 4: one seed + three perturbed copies, each with ~10% of word
+    # positions resampled — 3-shingle Jaccard ~ (0.9)^3/(2-(0.9)^3) ~ 0.57
+    # > 0.5 threshold) so near-dup density is scale-INVARIANT: cluster
+    # count grows ~ m, cluster size stays 4, matching real-corpus dedup
+    # shape.
     n_groups = n_out // 400  # 1% of docs in 4-doc groups
     for g in range(n_groups):
         s = g * 400  # group anchor: seed doc + 3 copies at s+1..s+3
