@@ -6,12 +6,14 @@ single-row frame (the F5-F9 expression library — JS `||`-zero semantics via
 nonzero_coalesce, clamps via clamp01); the weighted aggregate is the A13
 operator over a long-format (component, weight, raw, avail) frame. Both
 run through Catalyst, so the same expressions serve a million-document
-scoring table unchanged.
+scoring table unchanged. Both frames go to Spark as Arrow tables, which
+the JVM holds as `LocalRelation`s: Catalyst folds the single-row
+projection without running a job, and no Python worker is started.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,10 +57,12 @@ _SCALARS = T.StructType(
 def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
     """Raw 0..1 component scores (src/scoring.js:16-36, 59-68) as one
     single-row Spark projection."""
+    import pyarrow as pa
+
     onsite, local = doc["onsite"], doc["local"]
     errors = onsite["errors"]
     total_err = float(sum(v for v in errors.values() if isinstance(v, int)))
-    scalars = Row(
+    scalars = dict(
         top10=_f(onsite["keywords"]["top10"]),
         top100=_f(onsite["keywords"]["top100"]),
         pass_rate=_f(onsite["cwv"]["pass_rate"]),
@@ -69,7 +73,7 @@ def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
         consistency=_f(local["citations"]["consistency"]),
         avg_rating=_f(local["reviews"]["avg_rating"]),
     )
-    df = spark.createDataFrame([scalars], _SCALARS)
+    df = spark.createDataFrame(pa.Table.from_pylist([scalars]), _SCALARS)
 
     # kw_top10 = min((top10 || 0) / max(top100 || 1, 1), 1)   (:18-20)
     kw = F.least(
@@ -151,14 +155,16 @@ _LONG = T.StructType(
 
 def compute_scores(spark: SparkSession, doc: dict) -> dict:
     """→ the reference's scores document (src/scoring.js:72-76)."""
+    import pyarrow as pa
+
     raw = _raw_components(spark, doc)
     avail = _availability(doc)
     rows = [
-        (fam, comp, float(w), raw[comp], avail[comp])
+        dict(family=fam, component=comp, weight=float(w), raw=raw[comp], avail=avail[comp])
         for fam, weights in (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
         for comp, w in weights.items()
     ]
-    long_df = spark.createDataFrame(rows, _LONG)
+    long_df = spark.createDataFrame(pa.Table.from_pylist(rows), _LONG)
     agg = {
         r["family"]: r
         for r in coverage_weighted_score(long_df, group_cols=["family"]).collect()

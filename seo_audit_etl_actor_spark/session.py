@@ -2,9 +2,11 @@
 
 Tuned for the test harness (local[N], single JVM) but with settings chosen
 for cluster scale: AQE on (runtime shuffle-partition coalescing, dynamic
-broadcast-join conversion, skew-join splitting), Arrow enabled for the few
+broadcast-join conversion, skew-join splitting), Arrow enabled for the
 Pandas-UDF extension paths, and a shuffle-partition default that the harness
-overrides via env.
+overrides via env. Arrow also carries the audit frames: the pipeline hands
+its driver-held rows to `createDataFrame` as `pyarrow` tables, which become
+JVM `LocalRelation`s whatever the Arrow conf says.
 """
 
 from __future__ import annotations

@@ -15,10 +15,12 @@ The decode + parse happens on the driver: these are the reference's
 ZIP-of-small-CSVs inputs, where per-file driver-side parsing is the right
 cost model (SURVEY §3.4). Row counts and placeholder checks read the
 `ParsedCsv` directly. Only a stanza aggregation hands it to Spark, via
-`to_dataframe`: an all-string DataFrame with a `__row_id` ingest-order
-column (H2 determinism — Spark has no implicit file order). For big
-standalone CSVs use `read_csv_distributed`, which pushes the same
-encoding/delimiter decision into Spark's distributed CSV scan.
+`to_dataframe`: the rows go over as one Arrow table, which the JVM holds
+as a `LocalRelation`, so no stanza job waits on a Python worker. The frame
+is all-string with a `__row_id` ingest-order column (H2 determinism —
+Spark has no implicit file order). For big standalone CSVs use
+`read_csv_distributed`, which pushes the same encoding/delimiter decision
+into Spark's distributed CSV scan.
 
 Deliberate divergence: papaparse emits a phantom `{col: ""}` row for a
 trailing newline; Python's csv module does not. We follow csv-module
@@ -58,15 +60,20 @@ class ParsedCsv:
 
 
 def _dedupe_header(header: list[str]) -> list[str]:
-    seen: dict[str, int] = {}
+    """papaparse (>= 5.4) header renaming: the n-th repeat of `h` becomes
+    `h_n`, and while a name is already taken `_{n}` is appended again, so
+    `a,a,a` → `a, a_1, a_2` and `a,a_1,a` → `a, a_1, a_1_1`."""
+    counts: dict[str, int] = {}
+    used: set[str] = set()
     out = []
     for h in header:
-        if h in seen:
-            seen[h] += 1
-            out.append(f"{h}_{seen[h]}")
-        else:
-            seen[h] = 0
-            out.append(h)
+        n = counts.get(h, 0)
+        counts[h] = n + 1
+        name = f"{h}_{n}" if n else h
+        while name in used:
+            name = f"{name}_{n}"
+        used.add(name)
+        out.append(name)
     return out
 
 
@@ -108,15 +115,28 @@ def parse_csv_smart_rows(buf: bytes) -> ParsedCsv:
 
 def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     """All-string DataFrame + ingest-order `__row_id` (H2: deterministic
-    first/collect need an explicit order column)."""
+    first/collect need an explicit order column).
+
+    The driver-held rows are built column by column into one Arrow table
+    (a missing cell stays null, distinct from ''), which Spark turns into a
+    JVM `LocalRelation` (above `spark.sql.execution.arrow.
+    localRelationThreshold`, a JVM-side RDD of Arrow batches): no row is
+    pickled and no stanza job starts a Python worker to read it."""
     if not parsed.header:
         return None
+    import pyarrow as pa
+
     schema = T.StructType(
         [T.StructField(ROW_ID, T.LongType(), False)]
         + [T.StructField(h, T.StringType(), True) for h in parsed.header]
     )
-    data = [(i, *row) for i, row in enumerate(parsed.rows)]
-    return spark.createDataFrame(data, schema)
+    columns = list(zip(*parsed.rows)) or [()] * len(parsed.header)
+    table = pa.Table.from_arrays(
+        [pa.array(range(len(parsed.rows)), pa.int64())]
+        + [pa.array(c, pa.string()) for c in columns],
+        names=[ROW_ID, *parsed.header],
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_csv_distributed(

@@ -1,0 +1,81 @@
+"""Driver-side CSV parse → Spark hand-off (sources/csv_smart.py):
+header renaming and the Arrow-backed `to_dataframe` frame."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import types as T
+
+from seo_audit_etl_actor_spark.sources.csv_smart import (
+    ROW_ID,
+    ParsedCsv,
+    _dedupe_header,
+    parse_csv_smart_rows,
+    to_dataframe,
+)
+
+
+@pytest.mark.parametrize(
+    "header, expected",
+    [
+        pytest.param("a,a,a", "a,a_1,a_2", id="plain_duplicates"),
+        # the old rule emitted `a, a_1, a_1`: a pick on `a_1` was ambiguous
+        pytest.param("a,a_1,a", "a,a_1,a_1_1", id="suffix_collision"),
+    ],
+)
+def test_dedupe_header(header, expected):
+    assert _dedupe_header(header.split(",")) == expected.split(",")
+
+
+def _leaf(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    while plan.children().size() > 0:
+        plan = plan.children().apply(0)
+    return plan.nodeName()
+
+
+def test_frame_is_a_local_table_scan(spark):
+    # Built from a list of tuples, the frame planned `Scan ExistingRDD` over
+    # a PythonRDD, and every job over it started a Python worker.
+    df = to_dataframe(spark, parse_csv_smart_rows(b"url,status\n/a,200\n/b,404\n"))
+    assert _leaf(df) == "LocalTableScan"
+
+
+def test_ragged_row_keeps_none_apart_from_empty(spark):
+    parsed = parse_csv_smart_rows(b"x,y,z\n1,,3\n4,5\n")
+    assert parsed.rows == [["1", "", "3"], ["4", "5", None]]
+    rows = to_dataframe(spark, parsed).orderBy(ROW_ID).collect()
+    assert [tuple(r) for r in rows] == [(0, "1", "", "3"), (1, "4", "5", None)]
+
+
+def test_row_id_is_ingest_index_across_arrow_batches(spark):
+    # 25,000 rows span three Arrow batches at the default
+    # arrowMaxRecordsPerBatch of 10,000
+    n = 25_000
+    parsed = ParsedCsv(header=["n"], rows=[[str(i)] for i in range(n)])
+    df = to_dataframe(spark, parsed)
+    mismatched = df.where(df[ROW_ID] != df["n"].cast("bigint")).count()
+    assert (df.count(), mismatched) == (n, 0)
+
+
+def test_header_only_gives_empty_frame(spark):
+    df = to_dataframe(spark, ParsedCsv(header=["a", "b"], rows=[]))
+    assert df.columns == [ROW_ID, "a", "b"]
+    assert df.count() == 0
+
+
+def test_schema_is_row_id_then_nullable_strings(spark):
+    df = to_dataframe(spark, parse_csv_smart_rows(b"a;b;a\n1;2;3\n"))
+    # select("*") reads the schema back from the JVM plan
+    assert df.select("*").schema == T.StructType(
+        [
+            T.StructField(ROW_ID, T.LongType(), False),
+            T.StructField("a", T.StringType(), True),
+            T.StructField("b", T.StringType(), True),
+            T.StructField("a_1", T.StringType(), True),
+        ]
+    )
+
+
+def test_no_header_gives_no_frame(spark):
+    assert to_dataframe(spark, ParsedCsv()) is None
