@@ -1,26 +1,40 @@
-"""Driver-visible oracle for the Structured Streaming surface (VERDICT r5
-task 8): run the streaming rate-anomaly monitor over a BOUNDED file feed
-cut from the events table and emit a one-row stream≡batch differential
-summary the DuckDB oracle predicts from the batch SQL alone.
+"""Stream≡batch differentials: nine catalog queries, each of which drains
+one streaming operator over a BOUNDED file feed cut from a table and
+emits a one-row summary the DuckDB oracle predicts from the batch SQL
+alone — the streaming analog of the oracle-differential strategy
+(SURVEY §5.2), condensed to oracle-checkable BIGINTs.
 
-The streaming form (streaming/anomaly.py, applyInPandasWithState) closes
-an hour when a strictly later hour appears for that type, so draining an
-hour-aligned feed reproduces the batch `event_rate_anomalies` rows for
-every hour except each type's final (never-closed) one — the same
-differential the local test asserts (tests/test_streaming_anomaly.py),
-here condensed to oracle-checkable BIGINTs: closed-row count, anomaly
-count, an event-count checksum, and the equality flag itself.
+All nine share one harness:
 
-Scale: the monitor's state is O(trailing window) longs per event_type
-(low cardinality); each micro-batch pre-aggregates to one row per
-(type, hour) before the stateful stage. The feed build is two passes over
-events (hour bounds + partitioned write); everything the stream emits is
-hours × types, inherently tiny at any corpus size.
+- feed: `_cut_feed` writes the table as 3 parquet files over ascending
+  key ranges (event hour or doc_id) with pinned arrival order, so
+  micro-batches arrive in key order with zero late data — the
+  configuration under which stream closure ≡ batch semantics. It is a
+  session-cached fixture shared by every differential on the same table
+  and user sample;
+- drain: `streaming/events.py::drain` writes each micro-batch to
+  per-epoch parquet in a per-call temp dir and returns the drained rows
+  as a DataFrame;
+- compare: one Spark aggregate gives the summary and the
+  `stream_equals_batch` flag — `_compare` for a batch twin, `_latest`
+  first for operators that re-emit their current value per key;
+- `_summary` hands the scalars back as a one-row Arrow-backed frame.
+
+Only scalars reach the driver (`.first()`): driver memory is O(1) in the
+drained output at any corpus size. Double values are compared
+cents-quantized with `F.round(x * 100)` — HALF_UP, like the oracle's
+ROUND.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import os
+import shutil
+import tempfile
+import time
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark import fixture_cache as fc
@@ -29,71 +43,39 @@ from seo_audit_etl_actor_spark.queries.events_ext import (
     q_event_rate_anomalies,
 )
 from seo_audit_etl_actor_spark.session import load_table
+from seo_audit_etl_actor_spark.streaming import events as se
 
 
-import contextlib
+def _hour_id() -> Column:
+    return F.floor(F.unix_micros("ts") / F.lit(3_600_000_000))
 
 
-@contextlib.contextmanager
-def _drain_partitions(spark: SparkSession, n: int = 8):
-    """Size streaming STATE partitioning to the bounded audit feed for the
-    duration of a drain. `spark.sql.shuffle.partitions` at first-checkpoint
-    time fixes the number of state-store instances for the query's life;
-    the differentials' feeds are a few MB, so the session default (32)
-    buys nothing but 32 per-operator checkpoint directories' worth of
-    fsync per micro-batch — the dominant cost of a warm drain. At
-    production scale the knob goes UP with load instead; each audit owns a
-    fresh checkpoint, so the setting is per-drain, restored in finally."""
-    conf = spark.conf
-    old = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old)
+def _cents(c: Column) -> Column:
+    return F.round(c * 100).cast("long")
 
 
-def _write_hour_cut_feed(
-    spark: SparkSession, sf_dir: str, out_dir: str, user_mod: int | None = None
-) -> None:
-    """Write events as 3 hour-aligned parquet files (ascending hour ranges)
-    so micro-batch arrival order matches event-time order — zero late data,
-    the configuration under which stream closure ≡ batch semantics.
-
-    user_mod: keep only user_id % user_mod == 0 — a deterministic user
-    sample for differentials whose semantics are PER-USER (sessionization):
-    every kept user's event history is complete, so the operator sees
-    identical semantics at a fraction of the state/feed cost."""
-    import glob
-    import shutil
-
-    ev = load_table(spark, sf_dir, "events")
-    if user_mod is not None:
-        ev = ev.where(F.col("user_id") % user_mod == 0)
-    ev = ev.withColumn(
-        "hour_id", F.floor(F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long")
-    )
-    lo, hi = ev.agg(F.min("hour_id"), F.max("hour_id")).first()
+def _write_cut_feed(df: DataFrame, key: Column, out_dir: str) -> None:
+    """Write `df` as 3 parquet files over ascending `key` ranges, file
+    names and arrival order ascending with the range, so micro-batch
+    arrival order matches key order: zero late data for event-time
+    operators, and first-arrival keep-first dedup coincides with the
+    batch funnel's min-doc_id keep-first. An empty `df` gives ONE empty
+    parquet file, so the file-source stream still sees a schema'd feed
+    and the drain yields zero rows."""
+    lo, hi = df.agg(F.min(key), F.max(key)).first()
     if lo is None:
-        # empty sample (tiny SF × user_mod): emit ONE empty parquet file so
-        # the file-source stream still sees a schema'd feed and the drain
-        # yields zero rows instead of crashing on None hour bounds
-        tmp = f"{out_dir}.part0"
-        ev.drop("hour_id").limit(0).coalesce(1).write.mode("overwrite").parquet(tmp)
-        for p in sorted(glob.glob(f"{tmp}/*.parquet")):
-            shutil.copy(p, f"{out_dir}/part-0000.parquet")
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    cut1 = lo + (hi - lo) // 3
-    cut2 = lo + 2 * (hi - lo) // 3
-    preds = [
-        F.col("hour_id") <= cut1,
-        (F.col("hour_id") > cut1) & (F.col("hour_id") <= cut2),
-        F.col("hour_id") > cut2,
-    ]
-    for i, pred in enumerate(preds):
+        cuts = [df.limit(0)]
+    else:
+        cut1 = lo + (hi - lo) // 3
+        cut2 = lo + 2 * (hi - lo) // 3
+        cuts = [
+            df.where(key <= cut1),
+            df.where((key > cut1) & (key <= cut2)),
+            df.where(key > cut2),
+        ]
+    for i, cut in enumerate(cuts):
         tmp = f"{out_dir}.part{i}"
-        ev.where(pred).drop("hour_id").coalesce(1).write.mode("overwrite").parquet(tmp)
+        cut.coalesce(1).write.mode("overwrite").parquet(tmp)
         for j, p in enumerate(sorted(glob.glob(f"{tmp}/*.parquet"))):
             shutil.copy(p, f"{out_dir}/part-{i:02d}{j:02d}.parquet")
         shutil.rmtree(tmp, ignore_errors=True)
@@ -104,105 +86,144 @@ def _stamp_feed_order(out_dir: str) -> None:
     """Pin the feed's micro-batch arrival order: the file source orders by
     modification time at MILLISECOND granularity, so files written
     back-to-back tie and the order becomes arbitrary — a late cut leading
-    would advance the watermark and late-drop earlier cuts wholesale.
-    Distinct whole-second stamps in filename (= cut) order make arrival
-    match event-time order deterministically."""
-    import glob
-    import os
-    import time
-
+    would advance the watermark and late-drop earlier cuts wholesale
+    (measured on the dedup differential's feed: 858 rows lost). Distinct
+    whole-second stamps in filename (= cut) order make arrival match
+    event-time order deterministically."""
     parts = sorted(glob.glob(os.path.join(out_dir, "part-*.parquet")))
     base = time.time() - 3600
     for k, p in enumerate(parts):
         os.utime(p, (base + k, base + k))
 
 
-def _hour_cut_feed_cached(
-    spark: SparkSession, sf_dir: str, user_mod: int | None = None
+def _cut_feed(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    user_mod: int | None = None,
+    df: DataFrame | None = None,
 ) -> str:
-    """Session-cached hour-cut events feed (VERDICT r9 task 2): the six
-    events differentials previously each wrote an IDENTICAL feed per
-    invocation — one shared build per (events fingerprint, user_mod) per
-    session now serves them all. Read-only for consumers; checkpoints
-    stay per-drain."""
-    key = ("hour_cut_feed", fc.table_fingerprint(sf_dir, "events"), user_mod)
-    return fc.cached_dir(
-        key, lambda d: _write_hour_cut_feed(spark, sf_dir, d, user_mod=user_mod)
+    """Session-cached cut feed of `table`: events cut by event hour,
+    documents by doc_id. One build per (table fingerprint, user_mod) per
+    session serves every differential; read-only for consumers,
+    checkpoints stay per-drain. `df` is only read on a cache miss — pass
+    a persisted frame so the build shares its scan.
+
+    user_mod: keep only user_id % user_mod == 0 — a deterministic user
+    sample for differentials whose semantics are PER-USER: every kept
+    user's event history is complete, so the operator sees identical
+    semantics at a fraction of the state/feed cost."""
+
+    def build(out_dir: str) -> None:
+        src = load_table(spark, sf_dir, table) if df is None else df
+        if user_mod is not None:
+            src = src.where(F.col("user_id") % user_mod == 0)
+        key = F.col("doc_id") if table == "documents" else _hour_id()
+        _write_cut_feed(src, key, out_dir)
+
+    return fc.cached_dir(("cut_feed", fc.table_fingerprint(sf_dir, table), user_mod), build)
+
+
+def _work_dir() -> tempfile.TemporaryDirectory:
+    """Per-call scratch for the checkpoint and the drained rows."""
+    return tempfile.TemporaryDirectory(prefix="spark_graft_stream_", ignore_cleanup_errors=True)
+
+
+def _compare(got: DataFrame, want: DataFrame, **aggs: Column) -> DataFrame:
+    """The summary of a differential with a batch twin: compare the
+    drained rows with the twin as multisets in ONE shuffle and summarize
+    them in the same aggregate. Each side is tagged (`_g` = 1 on a stream
+    row, `_w` = 1 on a batch row) and grouped by all of `got`'s columns,
+    so a group's `_g`/`_w` are its multiplicities on each side. `aggs`
+    run over the groups weighted by `_g`, so they summarize the stream
+    side; `stream_equals_batch` is 1 when no group has `_g != _w`. (Two
+    `exceptAll` calls would shuffle both sides twice.)"""
+    cols = got.columns
+
+    def tagged(df: DataFrame, g: int) -> DataFrame:
+        return df.select(*cols, F.lit(g).alias("_g"), F.lit(1 - g).alias("_w"))
+
+    groups = (
+        tagged(got, 1)
+        .unionByName(tagged(want, 0))
+        .groupBy(*cols)
+        .agg(F.sum("_g").alias("_g"), F.sum("_w").alias("_w"))
+    )
+    differ = F.coalesce(F.max((F.col("_g") != F.col("_w")).cast("long")), F.lit(0))
+    row = groups.agg(
+        *(F.coalesce(a, F.lit(0)).alias(k) for k, a in aggs.items()),
+        (1 - differ).alias("stream_equals_batch"),
+    ).first()
+    return _summary(got.sparkSession, row.asDict())
+
+
+def _latest(got: DataFrame, key: str) -> DataFrame:
+    """The rows of each `key`'s highest `_epoch`: the final value of an
+    operator that re-emits its current state for a key in every
+    micro-batch the key appears in (update-mode running totals,
+    per-bucket Misra-Gries summaries)."""
+    last = F.max("_epoch").over(Window.partitionBy(key))
+    got = got.withColumn("_last", last)
+    return got.where(F.col("_epoch") == F.col("_last")).drop("_epoch", "_last")
+
+
+def _summary(spark: SparkSession, row: dict) -> DataFrame:
+    """The differential's result row, every column int64, handed to Spark
+    as an Arrow table: a JVM LocalRelation, so no job over it starts a
+    Python worker."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({k: pa.array([int(v)], pa.int64()) for k, v in row.items()})
     )
 
 
-def _doc_cut_feed_cached(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> str:
-    """Session-cached doc_id-cut documents feed (curation + heavy-hitters
-    differentials share one build). `docs` is only consulted on a cache
-    miss — pass the persisted frame so the build shares its scan."""
-    key = ("doc_cut_feed", fc.table_fingerprint(sf_dir, "documents"))
-    return fc.cached_dir(
-        key, lambda d: _write_doc_cut_feed(spark, sf_dir, d, docs=docs)
-    )
+def _g_sum(c: Column) -> Column:
+    """Sum of `c` over the stream side of `_compare`'s groups."""
+    return F.sum(c * F.col("_g"))
+
+
+def _g_distinct(c: str) -> Column:
+    """Distinct values of `c` on the stream side of `_compare`'s groups."""
+    return F.count_distinct(F.when(F.col("_g") > 0, F.col(c)))
+
+
+# ---------------------------------------------------- anomaly monitor (r5)
 
 
 def q_streaming_anomaly_differential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row summary of the stream-vs-batch differential. Computed
-    eagerly (the stream must drain and its output is hours × types rows)
-    so the checkpoint can be removed before returning; the feed is the
-    session-cached shared fixture."""
-    import os
-    import shutil
-    import tempfile
+    """Stream≡batch differential for the rate-anomaly monitor
+    (streaming/anomaly.py, applyInPandasWithState). The monitor closes an
+    hour when a strictly later hour appears for that type, so draining the
+    hour-cut feed reproduces the batch `event_rate_anomalies` rows for
+    every hour except each type's final (never-closed) one — the same
+    differential the local test asserts (tests/test_streaming_anomaly.py).
+    Summary: closed-row count, anomaly count, an event-count checksum,
+    and the equality flag over full rows.
 
+    Scale: the monitor's state is O(trailing window) longs per event_type
+    (low cardinality); each micro-batch pre-aggregates to one row per
+    (type, hour) before the stateful stage, so the drained rows are
+    hours × types at any corpus size."""
     from seo_audit_etl_actor_spark.streaming import anomaly as sa
 
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_audit_")
-    try:
-        feed = _hour_cut_feed_cached(spark, sf_dir)
-        collected: list[tuple] = []
-
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            collected.extend(tuple(r) for r in batch_df.collect())
-
-        with _drain_partitions(spark):
-            q = (
-                sa.monitor_event_rates(sa.read_event_stream(spark, feed))
-                .writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        hour_id = F.floor(F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long")
-        last_hours = {
-            r["event_type"]: r["mx"]
-            for r in load_table(spark, sf_dir, "events")
-            .groupBy("event_type")
-            .agg(F.max(hour_id).alias("mx"))
-            .collect()
-        }
-        expected = sorted(
-            tuple(r)
-            for r in q_event_rate_anomalies(spark, sf_dir).collect()
-            if r["hour_id"] < last_hours[r["event_type"]]
+    with _work_dir() as work:
+        feed = _cut_feed(spark, sf_dir, "events")
+        got = se.drain(sa.monitor_event_rates(sa.read_event_stream(spark, feed)), work)
+        events = load_table(spark, sf_dir, "events")
+        last = events.groupBy("event_type").agg(F.max(_hour_id()).alias("_mx"))
+        want = (
+            q_event_rate_anomalies(spark, sf_dir)
+            .join(last, "event_type")
+            .where(F.col("hour_id") < F.col("_mx"))
         )
-        got = sorted(collected)
-        # column order: event_type, hour_id, n_events, baseline_mean,
-        # z_score, is_anomaly (both sides share the batch query's schema)
-        n_anom = sum(1 for r in got if r[5])
-        row = (
-            len(got),
-            n_anom,
-            int(sum(r[2] for r in got)),
-            1 if got == expected else 0,
+        return _compare(
+            got.drop("_epoch"),
+            want,
+            n_closed_rows=F.sum("_g"),
+            n_anomalies=F.sum(F.when(F.col("is_anomaly"), F.col("_g"))),
+            sum_events=_g_sum(F.col("n_events")),
         )
-        return spark.createDataFrame(
-            [row],
-            "n_closed_rows long, n_anomalies long, sum_events long, "
-            "stream_equals_batch long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 SQL_STREAMING_ANOMALY_DIFFERENTIAL = f"""
@@ -223,105 +244,54 @@ WHERE batch.hour_id < last_h.mx
 
 # ------------------------------------------- curation differential (r7)
 
-def _write_doc_cut_feed(
-    spark: SparkSession, sf_dir: str, out_dir: str, docs: DataFrame | None = None
-) -> None:
-    """Write documents as 3 doc_id-range parquet files (ascending ranges,
-    ascending file names) so first-arrival keep-first dedup coincides with
-    the batch funnel's min-doc_id keep-first — the configuration under
-    which stream ≡ batch is exact (tests/test_streaming_curation.py).
-
-    `docs`: optionally a pre-loaded (ideally persisted) documents frame —
-    the r9 trim lets the curation differential share ONE cached scan
-    across the bounds agg, the three cut writes, and its batch twin."""
-    import glob
-    import shutil
-
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    cut1 = lo + (hi - lo) // 3
-    cut2 = lo + 2 * (hi - lo) // 3
-    preds = [
-        F.col("doc_id") <= cut1,
-        (F.col("doc_id") > cut1) & (F.col("doc_id") <= cut2),
-        F.col("doc_id") > cut2,
-    ]
-    for i, pred in enumerate(preds):
-        tmp = f"{out_dir}.part{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        for j, p in enumerate(sorted(glob.glob(f"{tmp}/*.parquet"))):
-            shutil.copy(p, f"{out_dir}/part-{i:02d}{j:02d}.parquet")
-        shutil.rmtree(tmp, ignore_errors=True)
-    _stamp_feed_order(out_dir)
-
 
 def q_streaming_curation_differential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible oracle for the streaming curation funnel (VERDICT
-    r6 task 6): drain `streaming/curation.py` over a doc_id-cut file feed
-    of the documents table, accumulate per-(source, stage) funnel stats
-    sink-side, and emit a one-row summary — total docs, per-stage counts,
-    kept-token total, and a flag that the drained stream reproduced the
-    batch funnel (`operators/curation.py`) EXACTLY, including every
-    duplicate verdict across micro-batch boundaries. The oracle states
-    the numbers from the batch funnel SQL alone; the flag is pinned 1.
+    """Driver-visible oracle for the streaming curation funnel: drain
+    `streaming/curation.py` over the doc_id-cut feed of the documents
+    table, group the drained verdicts per (source, stage) and compare
+    them with the batch funnel (`operators/curation.py`). Summary: total
+    docs, per-stage counts, kept-token total, and a flag that the stream
+    reproduced the batch funnel EXACTLY, including every duplicate
+    verdict across micro-batch boundaries. The oracle states the numbers
+    from the batch funnel SQL alone; the flag is pinned 1.
 
     Scale: the stateful stage holds one 16-byte first-seen flag per
     distinct fingerprint (evictable via state timeout at 100 TB); all
     stateless gates are the batch funnel's own codegen'd expressions."""
-    import os
-    import shutil
-    import tempfile
-
     from seo_audit_etl_actor_spark.operators.curation import curation_funnel
     from seo_audit_etl_actor_spark.streaming import curation as sc
 
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_curation_")
     # one cached scan serves the (cache-miss) feed build and the batch
-    # twin (r8 verdict task 4 — previously the twin re-scanned the
-    # table). The stream side still reads the FEED files, as it must.
+    # twin; the stream side still reads the FEED files, as it must
     docs = load_table(spark, sf_dir, "documents").persist()
     try:
-        feed = _doc_cut_feed_cached(spark, sf_dir, docs=docs)
-        verdicts = sc.curate_document_stream(sc.read_document_stream(spark, feed))
-        sink, totals = sc.funnel_stats_sink(spark)
-        with _drain_partitions(spark):
-            q = (
-                verdicts.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
+        with _work_dir() as work:
+            feed = _cut_feed(spark, sf_dir, "documents", df=docs)
+            got = (
+                se.drain(sc.curate_document_stream(sc.read_document_stream(spark, feed)), work)
+                .groupBy("source", "stage")
+                .agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum("n_tokens").cast("long").alias("total_tokens"),
+                )
             )
-            q.awaitTermination()
 
-        batch = {
-            (r["source"], r["stage"]): (int(r["n_docs"]), int(r["total_tokens"]))
-            for r in curation_funnel(docs).collect()
-        }
-        got = {k: (v[0], v[1]) for k, v in totals.items()}
-        stage_n = {}
-        for (_, stage), (n, _t) in got.items():
-            stage_n[stage] = stage_n.get(stage, 0) + n
-        row = (
-            sum(v[0] for v in got.values()),
-            stage_n.get("kept", 0),
-            stage_n.get("duplicate", 0),
-            stage_n.get("lang_filter", 0),
-            stage_n.get("too_short", 0),
-            stage_n.get("low_quality", 0),
-            sum(v[1] for k, v in got.items() if k[1] == "kept"),
-            1 if got == batch else 0,
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_docs long, n_kept long, n_duplicate long, n_lang_filter long, "
-            "n_too_short long, n_low_quality long, kept_tokens long, "
-            "stream_equals_batch long",
-        )
+            def stage(name: str, c: str = "n_docs") -> Column:
+                return _g_sum(F.when(F.col("stage") == name, F.col(c)))
+
+            return _compare(
+                got,
+                curation_funnel(docs),
+                n_docs=_g_sum(F.col("n_docs")),
+                n_kept=stage("kept"),
+                n_duplicate=stage("duplicate"),
+                n_lang_filter=stage("lang_filter"),
+                n_too_short=stage("too_short"),
+                n_low_quality=stage("low_quality"),
+                kept_tokens=stage("kept", "total_tokens"),
+            )
     finally:
         docs.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_streaming_curation_differential() -> str:
@@ -346,13 +316,13 @@ SQL_STREAMING_CURATION_DIFFERENTIAL = _sql_streaming_curation_differential()
 
 # ---------------------------------------- heavy-hitters differential (r7)
 
+
 def q_streaming_heavyhitters_differential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible oracle for the streaming Misra-Gries heavy hitters
-    (VERDICT r6 task 6): drain `streaming/heavyhitters.py` over the same
-    doc_id-cut feed, then verify the MG guarantee differentially against
-    the exact batch token counts IN SPARK (the final summaries are
-    O(buckets × k) rows — they join to the exact counts, nothing
-    unbounded crosses to the driver):
+    """Driver-visible oracle for the streaming Misra-Gries heavy hitters:
+    drain `streaming/heavyhitters.py` over the doc_id-cut feed, keep each
+    bucket's last summary, then verify the MG guarantee differentially
+    against the exact batch token counts IN SPARK (one join of the
+    O(buckets × k) summary rows to the exact counts):
 
       - containment: every token with true_count * k > N appears in the
         drained summary (`heavy_covered` = 1);
@@ -368,83 +338,43 @@ def q_streaming_heavyhitters_differential(spark: SparkSession, sf_dir: str) -> D
     Scale: state is O(k) longs per bucket forever; buckets give the
     stateful stage its parallelism — the bounded-state discipline an exact
     streaming groupBy(token) cannot offer at 100 TB."""
-    import os
-    import shutil
-    import tempfile
-
     from seo_audit_etl_actor_spark.operators.text import tokens
     from seo_audit_etl_actor_spark.queries.scale_ext import HH_K
     from seo_audit_etl_actor_spark.streaming import heavyhitters as hh
 
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_hh_")
-    # same one-cached-scan trim as the curation differential: the
-    # (cache-miss) feed build and the exact-count twin read the persisted
-    # frame
     docs = load_table(spark, sf_dir, "documents").persist()
+    # O(vocab) rows read by two actions (the total, then the summary join)
+    exact = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
+    )
     try:
-        feed = _doc_cut_feed_cached(spark, sf_dir, docs=docs)
-        summaries = hh.stream_heavy_hitters(
-            hh.read_document_stream(spark, feed), HH_K
-        )
-        sink, latest = hh.summary_sink()
-        with _drain_partitions(spark):
-            q = (
-                summaries.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
+        with _work_dir() as work:
+            feed = _cut_feed(spark, sf_dir, "documents", df=docs)
+            summaries = hh.stream_heavy_hitters(hh.read_document_stream(spark, feed), HH_K)
+            summary = _latest(se.drain(summaries, work), "bucket")
+            n_total = exact.agg(F.sum("cnt")).first()[0] or 0
+            cnt, lower = F.col("cnt"), F.col("lower")
+            heavy = cnt * HH_K > F.lit(n_total)
+            out_of_bounds = lower.isNotNull() & (
+                cnt.isNull() | (cnt < lower) | (cnt > lower + F.col("decrements"))
             )
-            q.awaitTermination()
-
-        summary_rows = [
-            (b, tok, int(lower), int(dec))
-            for b, toks_ in latest.items()
-            for tok, lower, dec in toks_
-        ]
-        sdf = spark.createDataFrame(
-            summary_rows, "bucket int, token string, lower long, decrements long"
-        )
-        # O(vocab) rows, consumed by four downstream actions (total agg,
-        # heavy agg, containment anti-join, bounds join) — persist so the
-        # explode+groupBy pass over the corpus runs once
-        exact = (
-            docs
-            .select(F.explode(tokens(F.col("text"))).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .persist()
-        )
-        n_total = exact.agg(F.sum("cnt")).first()[0]
-        heavy = exact.where(F.col("cnt") * HH_K > F.lit(n_total))
-        h = heavy.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("s")
-        ).first()
-        n_missing = heavy.join(sdf, "token", "left_anti").count()
-        n_bound_viol = (
-            sdf.join(exact, "token", "left")
-            .where(
-                F.col("cnt").isNull()
-                | (F.col("cnt") < F.col("lower"))
-                | (F.col("cnt") > F.col("lower") + F.col("decrements"))
+            row = (
+                exact.join(summary, "token", "full_outer")
+                .agg(
+                    F.count(F.when(heavy, 1)).alias("n_true_heavy"),
+                    F.coalesce(F.sum(F.when(heavy, cnt)), F.lit(0)).alias("sum_heavy_occurrences"),
+                    (F.count(F.when(heavy & lower.isNull(), 1)) == 0).alias("heavy_covered"),
+                    (F.count(F.when(out_of_bounds, 1)) == 0).alias("bounds_ok"),
+                )
+                .first()
             )
-            .count()
-        )
-        row = (
-            int(n_total),
-            int(h["n"]),
-            int(h["s"] or 0),
-            1 if n_missing == 0 else 0,
-            1 if n_bound_viol == 0 else 0,
-        )
-        return spark.createDataFrame(
-            [row],
-            "total_occurrences long, n_true_heavy long, "
-            "sum_heavy_occurrences long, heavy_covered long, bounds_ok long",
-        )
+            return _summary(spark, {"total_occurrences": n_total, **row.asDict()})
     finally:
+        exact.unpersist()
         docs.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_streaming_heavyhitters_differential() -> str:
@@ -473,14 +403,16 @@ SQL_STREAMING_HEAVYHITTERS_DIFFERENTIAL = _sql_streaming_heavyhitters_differenti
 SESSIONS_MOD = 4  # deterministic user sample: user_id % 4 == 0
 
 
+def _sampled_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").where(F.col("user_id") % SESSIONS_MOD == 0)
+
+
 def q_streaming_sessions_differential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream≡batch differential for the NATIVE session_window operator
-    (streaming/events.py::user_sessions) — the one stateful streaming
-    surface that had no driver-visible row. The events table is cut into
-    an hour-ordered bounded feed (same helper as the anomaly
-    differential: ascending event-time micro-batches, zero late data),
-    sessionized with `session_window(ts, 30 minutes)` under a 0-second
-    watermark in append mode, and drained with availableNow.
+    (streaming/events.py::user_sessions). The events table is cut into
+    an hour-ordered bounded feed (ascending event-time micro-batches,
+    zero late data), sessionized with `session_window(ts, 30 minutes)`
+    under a 0-second watermark in append mode, and drained.
 
     Closure semantics (probed, then pinned here and in the oracle): with
     delay 0 the final watermark is the corpus max(ts), and append mode
@@ -507,72 +439,33 @@ def q_streaming_sessions_differential(spark: SparkSession, sf_dir: str) -> DataF
     the stream's watermark tracks.
 
     Scale: session_window state is one open session per active user,
-    evicted at watermark; the feed build is two passes over events; the
-    collect is the session list (bounded by sampled users × sessions —
-    the streaming plan itself is the production shape).
+    evicted at watermark; the feed build is two passes over events.
     """
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
     from seo_audit_etl_actor_spark.queries.reshape import SESSION_GAP_MIN, sessionize
-    from seo_audit_etl_actor_spark.streaming import events as se
 
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_sessions_")
-    try:
-        feed = _hour_cut_feed_cached(spark, sf_dir, user_mod=SESSIONS_MOD)
-        out: list = []
-        with _drain_partitions(spark):
-            se.run_to_completion(
-                se.user_sessions(
-                    se.read_event_stream(spark, feed),
-                    gap=f"{SESSION_GAP_MIN} minutes",
-                    watermark="0 seconds",
-                ),
-                out,
-                os.path.join(work, "ck"),
-                output_mode="append",
-            )
-
-        ev = (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("user_id") % SESSIONS_MOD == 0)
-            .select("user_id", "ts", "event_id", "value")
+    with _work_dir() as work:
+        feed = _cut_feed(spark, sf_dir, "events", user_mod=SESSIONS_MOD)
+        stream = se.read_event_stream(spark, feed)
+        gap = f"{SESSION_GAP_MIN} minutes"
+        got = se.drain(se.user_sessions(stream, gap=gap, watermark="0 seconds"), work)
+        ev = _sampled_events(spark, sf_dir).select("user_id", "ts", "event_id", "value")
+        end = F.col("session_end") + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES")
+        want = (
+            sessionize(ev)
+            .crossJoin(ev.agg(F.max("ts").alias("_mx")))
+            .where(end <= F.col("_mx"))
+            .withColumn("session_end", end)
         )
-        mx = ev.agg(F.max("ts")).first()[0]
-        gap = datetime.timedelta(minutes=SESSION_GAP_MIN)
-        closed = [
-            r for r in sessionize(ev).collect() if r["session_end"] + gap <= mx
-        ]
-
-        def key(user, start, end, n, value):
-            return (user, start, end, n, int(round(value * 100)))
-
-        got = sorted(
-            key(r["user_id"], r["session_start"], r["session_end"],
-                r["n_events"], r["session_value"])
-            for r in out
+        cents = _cents(F.col("session_value")).alias("cents")
+        cols = ["user_id", "session_start", "session_end", "n_events", cents]
+        return _compare(
+            got.select(*cols),
+            want.select(*cols),
+            n_closed_sessions=F.sum("_g"),
+            n_multi_event_sessions=F.sum(F.when(F.col("n_events") > 1, F.col("_g"))),
+            sum_events=_g_sum(F.col("n_events")),
+            value_cents=_g_sum(F.col("cents")),
         )
-        want = sorted(
-            key(r["user_id"], r["session_start"], r["session_end"] + gap,
-                r["n_events"], r["session_value"])
-            for r in closed
-        )
-        row = (
-            len(got),
-            sum(1 for r in got if r[3] > 1),
-            int(sum(r[3] for r in got)),
-            int(sum(r[4] for r in got)),
-            1 if got == want else 0,
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_closed_sessions long, n_multi_event_sessions long, "
-            "sum_events long, value_cents long, stream_equals_batch long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_streaming_sessions_differential() -> str:
@@ -611,9 +504,9 @@ ATTR_LOOKBACK_MIN = 60
 def q_streaming_attribution_differential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream≡batch differential for the stream-STREAM interval join
     (streaming/events.py::purchase_view_attribution) — §2.9's
-    two-unbounded-sides case, previously driver-invisible: each purchase
-    inner-joined to the same user's view events in the trailing hour,
-    both sides watermarked so buffered state evicts.
+    two-unbounded-sides case: each purchase inner-joined to the same
+    user's view events in the trailing hour, both sides watermarked so
+    buffered state evicts.
 
     Inner-join emission needs no watermark closure — a pair emits in the
     micro-batch where both sides are present — and the 2-hour watermark
@@ -628,87 +521,42 @@ def q_streaming_attribution_differential(spark: SparkSession, sf_dir: str) -> Da
     the join key is user_id, so per-user join semantics are complete.
 
     Scale: state is O(events per lookback window per side) — watermark
-    eviction keeps both buffers bounded regardless of corpus size; the
-    feed build is two passes; the collect is the attributed-pair list
-    (purchases × views within an hour — sparse by construction).
+    eviction keeps both buffers bounded regardless of corpus size.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from seo_audit_etl_actor_spark.streaming import events as se
-
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_attr_")
-    try:
-        feed = _hour_cut_feed_cached(spark, sf_dir, user_mod=SESSIONS_MOD)
-        out: list = []
-        with _drain_partitions(spark):
-            se.run_to_completion(
-                se.purchase_view_attribution(
-                    se.read_event_stream(spark, feed),
-                    watermark="2 hours",
-                    lookback=f"{ATTR_LOOKBACK_MIN} minutes",
-                ),
-                out,
-                os.path.join(work, "ck"),
-                output_mode="append",
-            )
-
-        ev = load_table(spark, sf_dir, "events").where(
-            F.col("user_id") % SESSIONS_MOD == 0
+    with _work_dir() as work:
+        feed = _cut_feed(spark, sf_dir, "events", user_mod=SESSIONS_MOD)
+        stream = se.read_event_stream(spark, feed)
+        lookback = f"{ATTR_LOOKBACK_MIN} minutes"
+        got = se.drain(
+            se.purchase_view_attribution(stream, watermark="2 hours", lookback=lookback), work
         )
-        p = ev.where(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
+        ev = _sampled_events(spark, sf_dir)
+        p = ev.where(F.col("event_type") == "purchase").selectExpr(
+            "event_id AS purchase_id", "user_id", "ts AS purchase_ts", "value AS purchase_value"
         )
-        v = ev.where(F.col("event_type") == "view").select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("vu"),
-            F.col("ts").alias("view_ts"),
+        v = ev.where(F.col("event_type") == "view").selectExpr(
+            "event_id AS view_id", "user_id AS vu", "ts AS view_ts"
         )
-        batch = (
-            p.join(
-                v,
-                (F.col("user_id") == F.col("vu"))
-                & (F.col("view_ts") <= F.col("purchase_ts"))
-                & (
-                    F.col("view_ts")
-                    >= F.col("purchase_ts") - F.expr(f"INTERVAL {ATTR_LOOKBACK_MIN} MINUTES")
-                ),
-                "inner",
-            )
-            .drop("vu")
-            .collect()
+        want = p.join(
+            v,
+            (F.col("user_id") == F.col("vu"))
+            & (F.col("view_ts") <= F.col("purchase_ts"))
+            & (
+                F.col("view_ts")
+                >= F.col("purchase_ts") - F.expr(f"INTERVAL {ATTR_LOOKBACK_MIN} MINUTES")
+            ),
+            "inner",
         )
-
-        def key(r):
-            return (
-                r["purchase_id"],
-                r["view_id"],
-                r["user_id"],
-                r["purchase_ts"],
-                r["view_ts"],
-                int(round((r["purchase_value"] or 0.0) * 100)),
-            )
-
-        got = sorted(key(r) for r in out)
-        want = sorted(key(r) for r in batch)
-        row = (
-            len(got),
-            len({r[0] for r in got}),
-            len({r[1] for r in got}),
-            int(sum(r[5] for r in got)),
-            1 if got == want else 0,
+        cents = _cents(F.coalesce(F.col("purchase_value"), F.lit(0.0))).alias("cents")
+        cols = ["purchase_id", "view_id", "user_id", "purchase_ts", "view_ts", cents]
+        return _compare(
+            got.select(*cols),
+            want.select(*cols),
+            n_pairs=F.sum("_g"),
+            n_attributed_purchases=_g_distinct("purchase_id"),
+            n_touching_views=_g_distinct("view_id"),
+            pair_value_cents=_g_sum(F.col("cents")),
         )
-        return spark.createDataFrame(
-            [row],
-            "n_pairs long, n_attributed_purchases long, n_touching_views long, "
-            "pair_value_cents long, stream_equals_batch long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_streaming_attribution_differential() -> str:
@@ -758,72 +606,29 @@ def q_streaming_hourly_windows_differential(spark: SparkSession, sf_dir: str) ->
     deterministic subset is equally valid, and the oracle applies the
     same predicate).
     """
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
-    from seo_audit_etl_actor_spark.streaming import events as se
-
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_hourly_")
-    try:
-        feed = _hour_cut_feed_cached(spark, sf_dir, user_mod=SESSIONS_MOD)
-        out: list = []
-        with _drain_partitions(spark):
-            se.run_to_completion(
-                se.hourly_event_windows(
-                    se.read_event_stream(spark, feed), watermark="0 seconds"
-                ),
-                out,
-                os.path.join(work, "ck"),
-                output_mode="append",
-            )
-
-        ev = load_table(spark, sf_dir, "events").where(
-            F.col("user_id") % SESSIONS_MOD == 0
-        )
-        mx = ev.agg(F.max("ts")).first()[0]
-        batch = (
-            ev.groupBy(
-                F.window(F.col("ts"), "1 hour")["start"].alias("hour"),
-                F.col("event_type"),
-            )
+    with _work_dir() as work:
+        feed = _cut_feed(spark, sf_dir, "events", user_mod=SESSIONS_MOD)
+        stream = se.read_event_stream(spark, feed)
+        got = se.drain(se.hourly_event_windows(stream, watermark="0 seconds"), work)
+        ev = _sampled_events(spark, sf_dir)
+        want = (
+            ev.groupBy(F.window(F.col("ts"), "1 hour")["start"].alias("hour"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_value"),
+                F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
             )
-            .collect()
+            .crossJoin(ev.agg(F.max("ts").alias("_mx")))
+            .where(F.col("hour") + F.expr("INTERVAL 1 HOUR") <= F.col("_mx"))
         )
-        closed = [
-            r for r in batch if r["hour"] + datetime.timedelta(hours=1) <= mx
-        ]
-
-        def key(r):
-            return (
-                r["hour"],
-                r["event_type"],
-                r["n_events"],
-                int(round(r["total_value"] * 100)),
-            )
-
-        got = sorted(key(r) for r in out)
-        want = sorted(key(r) for r in closed)
-        row = (
-            len(got),
-            len({r[0] for r in got}),
-            int(sum(r[2] for r in got)),
-            int(sum(r[3] for r in got)),
-            1 if got == want else 0,
+        cols = ["hour", "event_type", "n_events", _cents(F.col("total_value")).alias("cents")]
+        return _compare(
+            got.select(*cols),
+            want.select(*cols),
+            n_closed_windows=F.sum("_g"),
+            n_hours=_g_distinct("hour"),
+            sum_events=_g_sum(F.col("n_events")),
+            value_cents=_g_sum(F.col("cents")),
         )
-        return spark.createDataFrame(
-            [row],
-            "n_closed_windows long, n_hours long, sum_events long, "
-            "value_cents long, stream_equals_batch long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_streaming_hourly_windows_differential() -> str:
@@ -869,78 +674,40 @@ def q_streaming_dedup_differential(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: dropDuplicatesWithinWatermark state is the seen-key set per
     watermark window — O(events per 2h), evicted, never O(corpus).
     """
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-
-    from seo_audit_etl_actor_spark.streaming import events as se
-
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_dedup_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    try:
+    with _work_dir() as work:
         # the only differential that MUTATES its feed (planted duplicate
         # files), so it copies the shared cached feed into its own dir —
         # a handful of small-file copies, not a Spark rebuild
-        src = _hour_cut_feed_cached(spark, sf_dir, user_mod=SESSIONS_MOD)
-        for p in sorted(_glob.glob(os.path.join(src, "part-*.parquet"))):
-            shutil.copy(p, os.path.join(feed, os.path.basename(p)))
-        # plant one duplicate file per cut and pin arrival order with
-        # EXPLICIT mtime stamps (distinct whole seconds): the file source
-        # orders by modification time at MILLISECOND granularity, and
-        # back-to-back copies all land in the same millisecond — the tie
-        # then breaks arbitrarily, a late cut can lead, and the advanced
-        # watermark late-drops entire earlier cuts (measured: 858 rows
-        # lost). Stamped order is orig0, dup0, orig1, dup1, orig2, dup2,
-        # so with maxFilesPerTrigger=1 each duplicate arrives in the
-        # micro-batch AFTER its original: rows in the original's 2-hour
-        # watermark tail are deduplicated BY STATE, older rows are
-        # late-dropped — both exactly-once paths exercised, and every
-        # original emits exactly once.
-        parts = sorted(_glob.glob(os.path.join(feed, "part-*.parquet")))
-        base = os.path.getmtime(parts[0]) - 3600
-        for i, p in enumerate(parts):
-            dup = os.path.join(feed, f"part-{i:02d}50-dup{i}.parquet")
-            shutil.copy(p, dup)
-            os.utime(p, (base + 2 * i, base + 2 * i))
-            os.utime(dup, (base + 2 * i + 1, base + 2 * i + 1))
+        feed = os.path.join(work, "feed")
+        os.makedirs(feed)
+        # plant one duplicate file per cut, named to sort right after its
+        # original, so the stamped arrival order is orig0, dup0, orig1,
+        # dup1, orig2, dup2: with maxFilesPerTrigger=1 each duplicate
+        # arrives in the micro-batch AFTER its original — rows in the
+        # original's 2-hour watermark tail are deduplicated BY STATE, older
+        # rows are late-dropped, both exactly-once paths are exercised, and
+        # every original emits exactly once
+        src = _cut_feed(spark, sf_dir, "events", user_mod=SESSIONS_MOD)
+        for i, p in enumerate(sorted(glob.glob(os.path.join(src, "part-*.parquet")))):
+            shutil.copy(p, feed)
+            shutil.copy(p, os.path.join(feed, f"part-{i:02d}50-dup{i}.parquet"))
+        _stamp_feed_order(feed)
 
-        out: list = []
-        with _drain_partitions(spark):
-            se.run_to_completion(
-                se.dedup_event_stream(
-                    se.read_event_stream(spark, feed, max_files_per_trigger=1)
-                ),
-                out,
-                os.path.join(work, "ck"),
-                output_mode="append",
-            )
-
-        ids = [r["event_id"] for r in out]
+        got = se.drain(
+            se.dedup_event_stream(se.read_event_stream(spark, feed, max_files_per_trigger=1)),
+            work,
+        )
         # decimal-exact value sum (the engine-portable idiom used by every
         # value checksum here): per-event double rounding would diverge
-        # between Python banker's and SQL half-away rounding. Explicit
-        # schema: inference would crash on an empty drain (tiny-SF sample)
-        val = (
-            spark.createDataFrame(out, schema=se.EVENTS_SCHEMA)
-            .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"))
-            .first()[0]
-            or 0.0
-        )
-        row = (
-            len(ids),
-            len(set(ids)),
-            int(sum(ids)),
-            int(round(val * 100)),
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_survivors long, n_distinct_ids long, id_checksum long, "
-            "value_cents long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        # from the oracle's rounding of the exact sum
+        value = F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
+        row = got.agg(
+            F.count(F.lit(1)).alias("n_survivors"),
+            F.count_distinct("event_id").alias("n_distinct_ids"),
+            F.coalesce(F.sum("event_id"), F.lit(0)).alias("id_checksum"),
+            F.coalesce(_cents(value), F.lit(0)).alias("value_cents"),
+        ).first()
+        return _summary(spark, row.asDict())
 
 
 def _sql_streaming_dedup_differential() -> str:
@@ -976,59 +743,32 @@ def q_streaming_running_totals_differential(spark: SparkSession, sf_dir: str) ->
     trade-off of the never-closing operator); emission is one row per
     (user, micro-batch) — bounded by the drain's batch count.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from seo_audit_etl_actor_spark.streaming import events as se
-
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_running_")
-    try:
-        feed = _hour_cut_feed_cached(spark, sf_dir, user_mod=SESSIONS_MOD)
-        out: list = []
-        with _drain_partitions(spark):
-            se.run_to_completion(
+    with _work_dir() as work:
+        feed = _cut_feed(spark, sf_dir, "events", user_mod=SESSIONS_MOD)
+        got = _latest(
+            se.drain(
                 se.running_user_totals(se.read_event_stream(spark, feed)),
-                out,
-                os.path.join(work, "ck"),
+                work,
                 output_mode="update",
-            )
-        # last emission per user wins: foreachBatch appends in epoch order,
-        # so a plain dict overwrite keeps the final cumulative row
-        final: dict = {}
-        for r in out:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-
-        ev = load_table(spark, sf_dir, "events").where(
-            F.col("user_id") % SESSIONS_MOD == 0
+            ),
+            "user_id",
         )
-        batch = {
-            r["user_id"]: (r["n"], r["v"])
-            for r in ev.groupBy("user_id")
+        want = (
+            _sampled_events(spark, sf_dir)
+            .groupBy("user_id")
             .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("v"),
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
             )
-            .collect()
-        }
-        same = set(final) == set(batch) and all(
-            final[u][0] == batch[u][0]
-            and int(round(final[u][1] * 100)) == int(round(batch[u][1] * 100))
-            for u in batch
         )
-        row = (
-            len(final),
-            int(sum(n for n, _ in final.values())),
-            int(sum(int(round(v * 100)) for _, v in final.values())),
-            1 if same else 0,
+        cols = ["user_id", "n_events", _cents(F.col("total_value")).alias("cents")]
+        return _compare(
+            got.select(*cols),
+            want.select(*cols),
+            n_users=F.sum("_g"),
+            sum_events=_g_sum(F.col("n_events")),
+            value_cents=_g_sum(F.col("cents")),
         )
-        return spark.createDataFrame(
-            [row],
-            "n_users long, sum_events long, value_cents long, "
-            "stream_equals_batch long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_streaming_running_totals_differential() -> str:
@@ -1063,49 +803,26 @@ def q_streaming_enrichment_differential(spark: SparkSession, sf_dir: str) -> Dat
     never buffers — the production shape for slowly-changing enrichment;
     a 1000-executor stream pays one small broadcast per trigger.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from seo_audit_etl_actor_spark.streaming import events as se
-
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_enrich_")
-    try:
-        feed = _hour_cut_feed_cached(spark, sf_dir, user_mod=SESSIONS_MOD)
+    with _work_dir() as work:
+        feed = _cut_feed(spark, sf_dir, "events", user_mod=SESSIONS_MOD)
         dim = load_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_nationkey").alias("nation"),
             F.col("c_acctbal").alias("acctbal"),
         )
-        out: list = []
-        with _drain_partitions(spark):
-            se.run_to_completion(
-                se.enrich_with_dimension(
-                    se.read_event_stream(spark, feed), dim
-                ).select("event_id", "user_id", "nation", "acctbal"),
-                out,
-                os.path.join(work, "ck"),
-                output_mode="append",
-            )
-        row = (
-            len(out),
-            sum(1 for r in out if r["nation"] is not None),
-            int(sum(r["nation"] for r in out if r["nation"] is not None)),
-            int(
-                sum(
-                    int(round(r["acctbal"] * 100))
-                    for r in out
-                    if r["acctbal"] is not None
-                )
+        got = se.drain(
+            se.enrich_with_dimension(se.read_event_stream(spark, feed), dim).select(
+                "event_id", "user_id", "nation", "acctbal"
             ),
+            work,
         )
-        return spark.createDataFrame(
-            [row],
-            "n_rows long, n_matched long, nation_checksum long, "
-            "balance_cents long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        row = got.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count("nation").alias("n_matched"),
+            F.coalesce(F.sum("nation"), F.lit(0)).alias("nation_checksum"),
+            F.coalesce(F.sum(_cents(F.col("acctbal"))), F.lit(0)).alias("balance_cents"),
+        ).first()
+        return _summary(spark, row.asDict())
 
 
 def _sql_streaming_enrichment_differential() -> str:

@@ -17,8 +17,8 @@ Design:
   case when files arrive id-sorted);
 - the funnel aggregate (per source/stage counts) stays OUT of the
   streaming query: Spark disallows a streaming aggregation downstream of
-  applyInPandasWithState, and sink-side per-batch aggregation
-  (foreachBatch over the verdict stream) is the standard composition.
+  applyInPandasWithState, so it runs over the drained verdicts
+  (`streaming/events.py::drain`).
 
 Scale: state grows by one row per DISTINCT fingerprint — at 100 TB use
 GroupStateTimeout.ProcessingTimeTimeout (swap NoTimeout below) to evict
@@ -86,7 +86,8 @@ def mark_duplicates(key, pdfs, state):
     The body is sized for the COMMON case — a single 1-row chunk per key
     (distinct fingerprints dominate real corpora), invoked once per key
     per micro-batch: skip the concat/sort for singleton groups and emit
-    by dropping/assigning columns on the existing frame instead of
+    by selecting the output columns of the existing frame (by name, so
+    an extra upstream column never leaks into the output) instead of
     rebuilding one from per-column numpy copies (r13; ~30% off the
     per-key Python cost, which is the stateful stage's floor). State is
     only written on FIRST sight — re-upserting an existing True flag per
@@ -105,10 +106,12 @@ def mark_duplicates(key, pdfs, state):
     if not seen and n > 0:
         is_dup[0] = False  # first arrival for this fingerprint wins
     if not seen:
+        # first sight only. A ProcessingTimeTimeout variant must instead
+        # update the state and set its timeout on EVERY call: otherwise a
+        # hot fingerprint expires while still arriving and is admitted
+        # again as a first sight.
         state.update((True,))
-    out = batch.drop(columns="fp", errors="ignore")
-    out["is_dup"] = is_dup
-    yield out
+    yield batch[["doc_id", "source", "pred_lang", "n_tokens", "q4"]].assign(is_dup=is_dup)
 
 
 def curate_document_stream(stream: DataFrame) -> DataFrame:
@@ -141,28 +144,3 @@ def curate_document_stream(stream: DataFrame) -> DataFrame:
         .otherwise("kept")
     )
     return verdicts.select("doc_id", "source", "n_tokens", stage.alias("stage"))
-
-
-def funnel_stats_sink(spark: SparkSession) -> tuple:
-    """foreachBatch sink accumulating funnel stats across micro-batches:
-    returns (sink_fn, totals dict keyed by (source, stage) →
-    [n_docs, total_tokens]). Per-batch aggregation happens in Spark (the
-    batch_df is a regular DataFrame); only the per-(source, stage) partial
-    counts cross to the driver."""
-    totals: dict[tuple[str, str], list[int]] = {}
-
-    def sink(batch_df: DataFrame, _epoch: int) -> None:
-        rows = (
-            batch_df.groupBy("source", "stage")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("total_tokens"),
-            )
-            .collect()
-        )
-        for r in rows:
-            acc = totals.setdefault((r["source"], r["stage"]), [0, 0])
-            acc[0] += r["n_docs"]
-            acc[1] += r["total_tokens"]
-
-    return sink, totals

@@ -9,10 +9,15 @@ Design notes for scale:
   active (user, session), closed by watermark, no custom code;
 - the per-user running aggregate shows the applyInPandasWithState path for
   semantics Spark lacks natively: Arrow-batched, one state row per user,
-  GroupStateTimeout-managed.
+  GroupStateTimeout-managed;
+- `drain` is the one harness that runs a bounded stream to completion for
+  the tests and the stream≡batch differentials: drained rows land in
+  per-epoch parquet and stay in Spark.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -153,23 +158,50 @@ def dedup_event_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFra
     )
 
 
-def run_to_completion(
-    query_df: DataFrame, out_rows: list, checkpoint: str, output_mode: str = "update"
-) -> None:
-    """Drain a bounded stream with availableNow into `out_rows` via
-    foreachBatch (test/bench harness helper)."""
+def drain(query_df: DataFrame, work_dir: str, output_mode: str = "append") -> DataFrame:
+    """Drain a bounded stream with availableNow and return everything it
+    emitted as a batch DataFrame — the one harness behind every
+    stream≡batch differential and streaming test.
 
-    def sink(batch_df: DataFrame, _epoch: int) -> None:
-        out_rows.extend(batch_df.collect())
+    Each micro-batch is written to `work_dir/rows/_epoch=<id>` as parquet,
+    so drained rows stay in Spark (driver memory is O(1) in output size)
+    and a replayed epoch overwrites its own directory (idempotent sink).
+    The result is the stream's columns plus `_epoch` (bigint); `rows/` is
+    created up front and read with a declared schema, so an empty drain is
+    a 0-row frame, not a schema-inference error. The checkpoint lives in
+    `work_dir/ck`: a second call on the same `work_dir` resumes from it,
+    and returns the rows of both calls (epoch ids keep counting).
 
-    q = (
-        query_df.writeStream.foreachBatch(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    The drain runs with 8 shuffle partitions, restored afterwards.
+    `spark.sql.shuffle.partitions` at first-checkpoint time fixes the
+    number of state-store instances for the query's life; the bounded
+    feeds here are a few MB, so the session default (32) buys nothing but
+    32 per-operator checkpoint directories' worth of fsync per micro-batch
+    — the dominant cost of a warm drain. At production scale the setting
+    goes UP with load instead."""
+    spark = query_df.sparkSession
+    rows = os.path.join(work_dir, "rows")
+    os.makedirs(rows, exist_ok=True)
+
+    def sink(batch_df: DataFrame, epoch: int) -> None:
+        batch_df.write.mode("overwrite").parquet(os.path.join(rows, f"_epoch={epoch}"))
+
+    conf = spark.conf
+    old = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        (
+            query_df.writeStream.foreachBatch(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(work_dir, "ck"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        conf.set("spark.sql.shuffle.partitions", old)
+    schema = T.StructType(query_df.schema.fields + [T.StructField("_epoch", T.LongType())])
+    return spark.read.schema(schema).parquet(rows)
 
 
 def purchase_view_attribution(

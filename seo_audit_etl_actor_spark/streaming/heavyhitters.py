@@ -16,9 +16,10 @@ answer, with its classic ε-guarantee instead of exactness:
   total). Weighted update: add the chunk's value_counts, then while more
   than k-1 counters live, subtract the current minimum from ALL counters
   and add it to `decrements` — the standard weighted Misra-Gries step;
-- each micro-batch the bucket emits its full current summary; a
-  replace-per-bucket sink keeps the latest emission, so after a drain the
-  sink holds the summary of everything each bucket ever saw.
+- each micro-batch the bucket emits its full current summary, so after
+  a drain each bucket's latest emission (highest `_epoch` of
+  `streaming/events.py::drain`) is the summary of everything that bucket
+  ever saw.
 
 Guarantee (tested differentially against the batch operator): for every
 token whose TRUE global count · k > N, the token is present in its
@@ -40,7 +41,7 @@ from __future__ import annotations
 import json
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -51,7 +52,7 @@ from seo_audit_etl_actor_spark.streaming.curation import read_document_stream
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-__all__ = ["read_document_stream", "stream_heavy_hitters", "summary_sink"]
+__all__ = ["read_document_stream", "stream_heavy_hitters"]
 
 N_BUCKETS = 32
 
@@ -117,20 +118,3 @@ def stream_heavy_hitters(stream: DataFrame, k: int) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def summary_sink() -> tuple:
-    """foreachBatch sink: replace-per-bucket retention of the latest
-    summary emission. Only O(buckets × k) rows ever cross to the driver."""
-    latest: dict[int, list[tuple[str, int, int]]] = {}
-
-    def sink(batch_df: DataFrame, _epoch: int) -> None:
-        rows = batch_df.collect()
-        by_bucket: dict[int, list[tuple[str, int, int]]] = {}
-        for r in rows:
-            by_bucket.setdefault(r["bucket"], []).append(
-                (r["token"], r["lower"], r["decrements"])
-            )
-        latest.update(by_bucket)
-
-    return sink, latest

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.session import load_table
 from seo_audit_etl_actor_spark.streaming import events as se
@@ -26,12 +27,23 @@ def _batch(spark, event_dir):
     return spark.read.schema(se.EVENTS_SCHEMA).parquet(event_dir)
 
 
+def test_drain_of_empty_feed_is_an_empty_frame(spark, tmp_path):
+    """An empty feed drains to 0 rows with the stream's schema plus
+    `_epoch` — not a schema-inference error on an empty rows dir."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    got = se.drain(se.read_event_stream(spark, str(feed)), str(tmp_path / "drain"))
+    assert got.schema == T.StructType(
+        se.EVENTS_SCHEMA.fields + [T.StructField("_epoch", T.LongType())]
+    )
+    assert got.count() == 0
+
+
 def test_hourly_windows_match_batch(spark, event_dir, tmp_path):
     stream = se.read_event_stream(spark, event_dir)
-    got: list = []
-    se.run_to_completion(
-        se.hourly_event_windows(stream), got, str(tmp_path / "ck1"), output_mode="complete"
-    )
+    got = se.drain(
+        se.hourly_event_windows(stream), str(tmp_path / "drain"), output_mode="complete"
+    ).collect()
     batch = (
         _batch(spark, event_dir)
         .groupBy(F.window("ts", "1 hour")["start"].alias("hour"), "event_type")
@@ -49,10 +61,9 @@ def test_hourly_windows_match_batch(spark, event_dir, tmp_path):
 
 def test_sessionization_matches_batch(spark, event_dir, tmp_path):
     stream = se.read_event_stream(spark, event_dir)
-    got: list = []
-    se.run_to_completion(
-        se.user_sessions(stream), got, str(tmp_path / "ck2"), output_mode="complete"
-    )
+    got = se.drain(
+        se.user_sessions(stream), str(tmp_path / "drain"), output_mode="complete"
+    ).collect()
     batch = (
         _batch(spark, event_dir)
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -65,10 +76,9 @@ def test_sessionization_matches_batch(spark, event_dir, tmp_path):
 
 def test_running_user_totals_state(spark, event_dir, tmp_path):
     stream = se.read_event_stream(spark, event_dir)
-    got: list = []
-    se.run_to_completion(
-        se.running_user_totals(stream), got, str(tmp_path / "ck3"), output_mode="update"
-    )
+    got = se.drain(
+        se.running_user_totals(stream), str(tmp_path / "drain"), output_mode="update"
+    ).collect()
     # last emission per user must equal the batch cumulative totals
     final: dict[int, tuple] = {}
     for r in got:
@@ -99,10 +109,7 @@ def test_stream_static_enrichment(spark, event_dir, tmp_path):
         .withColumn("segment", F.when(F.col("user_id") % 2 == 0, "even").otherwise("odd"))
     )
     stream = se.read_event_stream(spark, event_dir)
-    got: list = []
-    se.run_to_completion(
-        se.enrich_with_dimension(stream, dim), got, str(tmp_path / "ck4"), output_mode="append"
-    )
+    got = se.drain(se.enrich_with_dimension(stream, dim), str(tmp_path / "drain")).collect()
     assert len(got) == batch.count()
     assert all(r["segment"] == ("even" if r["user_id"] % 2 == 0 else "odd") for r in got)
 
@@ -114,10 +121,7 @@ def test_streaming_dedup_within_watermark(spark, event_dir, tmp_path):
     b = _batch(spark, event_dir)
     b.unionAll(b).repartition(2).write.mode("overwrite").parquet(doubled)
     stream = se.read_event_stream(spark, doubled)
-    got: list = []
-    se.run_to_completion(
-        se.dedup_event_stream(stream), got, str(tmp_path / "ck5"), output_mode="append"
-    )
+    got = se.drain(se.dedup_event_stream(stream), str(tmp_path / "drain")).collect()
     assert len(got) == b.count()
     ids = [r["event_id"] for r in got]
     assert len(ids) == len(set(ids))
@@ -132,10 +136,9 @@ def test_batch_sessionize_matches_streaming_session_count(spark, event_dir, tmp_
     from seo_audit_etl_actor_spark.queries.reshape import q_sessionize_events
 
     stream = se.read_event_stream(spark, event_dir)
-    got: list = []
-    se.run_to_completion(
-        se.user_sessions(stream), got, str(tmp_path / "ck6"), output_mode="complete"
-    )
+    got = se.drain(
+        se.user_sessions(stream), str(tmp_path / "drain"), output_mode="complete"
+    ).collect()
     import os
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     batch_sessions = q_sessionize_events(spark, sf_dir).collect()
@@ -149,13 +152,7 @@ def test_stream_stream_interval_join_matches_batch(spark, event_dir, tmp_path):
     """purchase_view_attribution (stream-stream interval join) must emit
     exactly the pairs the equivalent batch self-join produces."""
     stream = se.read_event_stream(spark, event_dir)
-    out: list = []
-    se.run_to_completion(
-        se.purchase_view_attribution(stream),
-        out,
-        str(tmp_path / "ck_ssj"),
-        output_mode="append",
-    )
+    out = se.drain(se.purchase_view_attribution(stream), str(tmp_path / "drain")).collect()
     got = sorted((r["purchase_id"], r["view_id"]) for r in out)
 
     b = _batch(spark, event_dir)

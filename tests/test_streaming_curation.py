@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from seo_audit_etl_actor_spark.operators.curation import curation_funnel
 from seo_audit_etl_actor_spark.session import load_table
 from seo_audit_etl_actor_spark.streaming import curation as sc
-from seo_audit_etl_actor_spark.streaming.events import run_to_completion
+from seo_audit_etl_actor_spark.streaming.events import drain
 
 
 @pytest.fixture(scope="module")
@@ -45,24 +45,27 @@ def doc_stream_dir(spark, sf_dir, tmp_path_factory):
     return str(final)
 
 
+def _funnel(verdicts):
+    """Per-(source, stage) [n_docs, total_tokens] of drained verdicts."""
+    return {
+        (r["source"], r["stage"]): (r["n_docs"], r["total_tokens"])
+        for r in verdicts.groupBy("source", "stage")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("total_tokens"),
+        )
+        .collect()
+    }
+
+
 def test_stream_funnel_matches_batch(spark, sf_dir, doc_stream_dir, tmp_path):
     stream = sc.read_document_stream(spark, doc_stream_dir)
-    verdicts = sc.curate_document_stream(stream)
-    sink, totals = sc.funnel_stats_sink(spark)
-    q = (
-        verdicts.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got = _funnel(drain(sc.curate_document_stream(stream), str(tmp_path)))
 
     batch = {
         (r["source"], r["stage"]): (r["n_docs"], r["total_tokens"])
         for r in curation_funnel(load_table(spark, sf_dir, "documents")).collect()
     }
-    got = {k: (v[0], v[1]) for k, v in totals.items()}
     assert got == batch
     assert sum(v[0] for v in got.values()) == load_table(
         spark, sf_dir, "documents"
@@ -84,30 +87,17 @@ def test_resent_documents_flag_duplicate_across_restarts(spark, doc_stream_dir, 
 
     stream = sc.read_document_stream(spark, str(live))
     verdicts = sc.curate_document_stream(stream)
-    ck = str(tmp_path / "ck2")
+    work = str(tmp_path / "drain")
 
-    sink1, totals1 = sc.funnel_stats_sink(spark)
-    q1 = (
-        verdicts.writeStream.foreachBatch(sink1)
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination()
+    first = drain(verdicts, work)
+    totals1 = _funnel(first)
+    last_epoch = first.agg(F.max("_epoch")).first()[0]
     n_docs = sum(v[0] for v in totals1.values())
 
     for p in sorted(src.glob("*.parquet")):
         shutil.copy(p, live / f"resend-{p.name}")
-    sink2, totals2 = sc.funnel_stats_sink(spark)
-    q2 = (
-        verdicts.writeStream.foreachBatch(sink2)
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
+    # the resumed drain returns both runs' rows; keep the second run's
+    totals2 = _funnel(drain(verdicts, work).where(F.col("_epoch") > last_epoch))
 
     dup_only = {k: v for k, v in totals2.items() if k[1] == "duplicate"}
     assert sum(v[0] for v in totals2.values()) == n_docs
@@ -139,9 +129,11 @@ def test_mark_duplicates_group_spanning_chunks():
         )
 
     state = FakeState()
-    (out,) = list(
-        sc.mark_duplicates(("fp",), iter([chunk([50, 70]), chunk([10, 60])]), state)
-    )
+    # the second chunk carries an extra upstream column, which must not
+    # reach the output
+    chunks = [chunk([50, 70]), chunk([10, 60]).assign(text="x")]
+    (out,) = list(sc.mark_duplicates(("fp",), iter(chunks), state))
+    assert list(out.columns) == ["doc_id", "source", "pred_lang", "n_tokens", "q4", "is_dup"]
     kept = out.loc[~out["is_dup"], "doc_id"].tolist()
     assert kept == [10]  # global min across chunks, not 50
     assert out["is_dup"].sum() == 3

@@ -18,8 +18,10 @@ from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark.operators.heavyhitters import exact_heavy_hitters
 from seo_audit_etl_actor_spark.operators.text import tokens
+from seo_audit_etl_actor_spark.queries.streaming_ext import _latest
 from seo_audit_etl_actor_spark.session import load_table
 from seo_audit_etl_actor_spark.streaming import heavyhitters as shh
+from seo_audit_etl_actor_spark.streaming.events import drain
 
 K = 40
 
@@ -46,18 +48,14 @@ def doc_stream_dir(spark, sf_dir, tmp_path_factory):
     return str(out)
 
 
-def _drain(spark, doc_stream_dir, ck):
+def _drain(spark, doc_stream_dir, work):
+    """{bucket: [(token, lower, decrements)]} of each bucket's latest
+    summary after draining the stream under `work`."""
     stream = shh.read_document_stream(spark, doc_stream_dir)
-    summaries = shh.stream_heavy_hitters(stream, k=K)
-    sink, latest = shh.summary_sink()
-    q = (
-        summaries.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    summaries = drain(shh.stream_heavy_hitters(stream, k=K), work)
+    latest: dict[int, list] = {}
+    for r in _latest(summaries, "bucket").collect():
+        latest.setdefault(r["bucket"], []).append((r["token"], r["lower"], r["decrements"]))
     return latest
 
 
@@ -73,7 +71,7 @@ def _true_counts(spark, sf_dir):
 
 
 def test_stream_summary_brackets_truth(spark, sf_dir, doc_stream_dir, tmp_path):
-    latest = _drain(spark, doc_stream_dir, str(tmp_path / "ck"))
+    latest = _drain(spark, doc_stream_dir, str(tmp_path))
     true = _true_counts(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     hitters = {
@@ -104,15 +102,15 @@ def test_summary_accumulates_across_restarts(spark, sf_dir, doc_stream_dir, tmp_
     import shutil
     from pathlib import Path
 
-    ck = str(tmp_path / "ck2")
+    work = str(tmp_path / "drain")
     src = tmp_path / "stream2"
     src.mkdir()
     for p in sorted(Path(doc_stream_dir).glob("*.parquet")):
         shutil.copy(p, src / p.name)
-    _drain(spark, str(src), ck)
+    _drain(spark, str(src), work)
     for p in sorted(Path(doc_stream_dir).glob("*.parquet")):
         shutil.copy(p, src / f"again-{p.name}")
-    latest = _drain(spark, str(src), ck)
+    latest = _drain(spark, str(src), work)
 
     true = _true_counts(spark, sf_dir)
     for _bucket, rows in latest.items():
