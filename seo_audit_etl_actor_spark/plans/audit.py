@@ -12,7 +12,21 @@ import contextlib
 import io
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+@contextlib.contextmanager
+def aqe_off(spark: SparkSession):
+    """AQE disabled for the block, the caller's setting restored after.
+    AQE wraps the static plan until execution, hiding the exchanges, joins
+    and codegen stages a plan check inspects."""
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:

@@ -1,20 +1,35 @@
-"""Driver-visible audit queries for the operator-only surface (round 5):
-the chunker's text extraction, the table profiler, and the FFD packer's
-invariants — upgrading operators that previously had only local pytest
-evidence (operators/chunking.py, operators/profiling.py,
-operators/packing.py) to externally-oracled catalog rows.
+"""Driver-visible audit queries: each upgrades a surface that otherwise
+has only local pytest evidence — the chunker, profiler and FFD packer,
+the versioned lake and incremental MV, the media decoders, the ZIP
+sources, the sink/source round trips, and the bucketing, pruning,
+broadcast and pushdown plans — to an externally-oracled catalog row.
 
 Engine extension surface beyond the reference (whose only profiling is
 per-row predicates, src/etl.js:183-222). Each query keeps the repo's
 exact-arithmetic discipline so DuckDB hash-matches bit-for-bit: chunk
 text compares by md5, profiler lengths are integer SUMs (not float
 averages), packer invariants are integer flags provable without
-re-running FFD oracle-side.
+re-running FFD oracle-side, money is an exact DECIMAL sum rounded to
+cents.
+
+No result is a frame built from a Python list (that plans `Scan
+ExistingRDD` over a PythonRDD, and every job over it starts a Python
+worker). An audit hands its result back in one of three shapes:
+
+- one-row scalars read on the driver go through
+  `session.summary_frame`, an int64 Arrow table;
+- a bounded multi-row result that must exist before its temp dir is
+  removed is returned as `spark.createDataFrame(agg.toArrow())`;
+- an audit that needs no temp dir returns a lazy aggregate, with any
+  flag read from the plan attached as `F.lit(flag).cast("long")`.
+
+The first two are JVM LocalRelations. The decode fixtures enter Spark the
+same way, through `_blob_frame`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark.operators.chunking import chunk_documents
@@ -25,7 +40,11 @@ from seo_audit_etl_actor_spark.queries.llm_ext import (
     CHUNK_TOKENS,
     _TOKS,
 )
-from seo_audit_etl_actor_spark.session import ensure_parallelism, load_table
+from seo_audit_etl_actor_spark.session import (
+    ensure_parallelism,
+    load_table,
+    summary_frame,
+)
 
 # ------------------------------------------------------ chunk extraction
 
@@ -257,9 +276,10 @@ def q_mv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules alone — if snapshot publish, time travel, the diff classifier,
     or the delta merge drifted, some BIGINT here moves.
 
-    The result is computed eagerly (three small collects: class counts, a
-    mismatch count, one summary row) so the temp lake can be removed
-    before returning — the returned frame is a one-row local relation
+    The result is computed eagerly, in one `.first()` over the cross join
+    of three one-row aggregates (CDC class counts, the merged view's sums,
+    the merge-vs-recompute mismatch count), so the temp lake can be
+    removed before returning — the returned frame is a `summary_frame`
     with no disk dependency.
 
     Scale: publish is two parquet writes; the diff is ONE full-outer
@@ -309,39 +329,26 @@ def q_mv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         recomputed = grouped_sum_view(
             lm.read_lake(spark, lake_dir, 2), "o_orderpriority", MV_MEASURES
         )
-        changes = {
-            r["change"]: r["n"]
-            for r in cdc.groupBy("change").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        cols = ["n_rows", *MV_MEASURES]
+        classes = cdc.agg(
+            *(
+                F.count(F.when(F.col("change") == c, 1)).alias(f"n_{c}")
+                for c in ("added", "removed", "changed", "unchanged")
+            )
+        )
+        view = merged.agg(
+            F.count(F.lit(1)).alias("n_groups"),
+            F.sum("n_rows").alias("view_rows"),
+            F.sum("sum_cust").alias("view_sum_cust"),
+            F.sum("n_f_status").alias("view_n_f_status"),
+        )
         eq = merged.alias("m").join(recomputed.alias("r"), "o_orderpriority", "full_outer")
         same = F.lit(True)
-        for c in cols:
+        for c in ["n_rows", *MV_MEASURES]:
             same = same & F.col(f"m.{c}").eqNullSafe(F.col(f"r.{c}"))
-        n_mismatch = eq.where(~same).count()
-        summary = merged.agg(
-            F.count(F.lit(1)).alias("g"),
-            F.sum("n_rows").alias("vr"),
-            F.sum("sum_cust").alias("sc"),
-            F.sum("n_f_status").alias("nf"),
-        ).collect()[0]
-        row = (
-            int(changes.get("added", 0)),
-            int(changes.get("removed", 0)),
-            int(changes.get("changed", 0)),
-            int(changes.get("unchanged", 0)),
-            int(summary["g"]),
-            int(summary["vr"]),
-            int(summary["sc"]),
-            int(summary["nf"]),
-            1 if n_mismatch == 0 else 0,
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_added long, n_removed long, n_changed long, n_unchanged long, "
-            "n_groups long, view_rows long, view_sum_cust long, "
-            "view_n_f_status long, merge_equals_recompute long",
-        )
+        mismatch = eq.agg(F.count(F.when(~same, 1)).alias("n_mismatch"))
+        row = classes.crossJoin(view).crossJoin(mismatch).first().asDict()
+        row["merge_equals_recompute"] = row.pop("n_mismatch") == 0
+        return summary_frame(spark, row)
     finally:
         shutil.rmtree(lake_dir, ignore_errors=True)
 
@@ -369,6 +376,48 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM orders WHERE o_orderkey % 7 = 3) AS
 
 
 # ----------------------------------------------- media decode audit (r7)
+
+
+def _blob_frame(spark: SparkSession, blobs: list[tuple[str, bytes]]) -> DataFrame:
+    """`(path string, content binary)` rows — the shape of a `binaryFile`
+    scan — handed to Spark as an Arrow table."""
+    import pyarrow as pa
+
+    paths, contents = zip(*blobs)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "path": pa.array(paths, pa.string()),
+                "content": pa.array(contents, pa.binary()),
+            }
+        )
+    )
+
+
+def _thumb_audit(spark: SparkSession, blobs: list[tuple[str, bytes]]) -> DataFrame:
+    """Decode image `blobs` through the real thumbnail path and summarize
+    them in one row: `n_blobs`, `n_real` (real decodes), `thumb_checksum`
+    = sum over real decodes of weight * sum(thumb), and `dims_checksum` =
+    sum over ALL blobs of weight * (width*1000 + height). A blob's weight
+    is the number its path starts with."""
+    from seo_audit_etl_actor_spark.multimodal import binary_ops as B
+
+    thumbs = B.decode_image_thumbs(_blob_frame(spark, blobs))
+    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
+    return thumbs.agg(
+        F.count(F.lit(1)).alias("n_blobs"),
+        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
+        F.sum(
+            F.when(
+                F.col("real_decode"),
+                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
+            ).otherwise(F.lit(0))
+        ).alias("thumb_checksum"),
+        F.sum(weight * (F.col("width").cast("long") * 1000 + F.col("height"))).alias(
+            "dims_checksum"
+        ),
+    )
+
 
 def q_media_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible oracle for the multimodal decode surface (VERDICT
@@ -458,64 +507,31 @@ def q_media_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("9_png_trunc.png", png_g8[:-30]),
         ("10_jpeg_prog.jpg", FX.encode_jpeg_progressive(quad)[0]),
     ]
-    img_df = spark.createDataFrame(
-        [(n, bytearray(b)) for n, b in images], "path string, content binary"
-    )
-    thumbs = B.decode_image_thumbs(img_df)
-    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
-    img_row = thumbs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
-        F.sum(
-            F.when(
-                F.col("real_decode"),
-                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
-            ).otherwise(F.lit(0))
-        ).alias("checksum"),
-    ).collect()[0]
+    img = _thumb_audit(spark, images).first()
 
     samples = np.where(np.arange(8000) % 2 == 0, 1000, -1000).astype("<i2")
-    wav_df = spark.createDataFrame(
-        [("a.wav", bytearray(FX.encode_wav(8000, 1, samples)))],
-        "path string, content binary",
-    )
-    wav = B.decode_audio_meta(wav_df).collect()[0]
+    wav_df = _blob_frame(spark, [("a.wav", FX.encode_wav(8000, 1, samples))])
+    wav = B.decode_audio_meta(wav_df).first()
 
-    mp4_df = spark.createDataFrame(
-        [
-            (
-                "v.mp4",
-                bytearray(
-                    FX.encode_mp4(
-                        timescale=90000, duration=315000, mvhd_version=1, largesize_moov=True
-                    )
-                ),
-            )
-        ],
-        "path string, content binary",
-    )
-    vid = B.decode_video_meta(mp4_df).collect()[0]
+    mp4 = FX.encode_mp4(timescale=90000, duration=315000, mvhd_version=1, largesize_moov=True)
+    vid = B.decode_video_meta(_blob_frame(spark, [("v.mp4", mp4)])).first()
 
-    row = (
-        int(img_row["n"]),
-        int(img_row["n_real"]),
-        int(img_row["checksum"]),
-        int(wav["rms_q"]),
-        int(wav["zero_crossings"]),
-        int(wav["duration_ms"]),
-        int(wav["n_samples"]),
-        int(bool(wav["real_decode"])),
-        int(vid["duration_ms"]),
-        int(vid["n_tracks"]),
-        int(vid["width"]) * 100000 + int(vid["height"]),
-        int(bool(vid["real_decode"])),
-    )
-    return spark.createDataFrame(
-        [row],
-        "n_images long, n_image_real long, thumb_checksum long, "
-        "wav_rms_q long, wav_zero_crossings long, wav_duration_ms long, "
-        "wav_n_samples long, wav_real long, mp4_duration_ms long, "
-        "mp4_n_tracks long, mp4_dims long, mp4_real long",
+    return summary_frame(
+        spark,
+        {
+            "n_images": img["n_blobs"],
+            "n_image_real": img["n_real"],
+            "thumb_checksum": img["thumb_checksum"],
+            "wav_rms_q": wav["rms_q"],
+            "wav_zero_crossings": wav["zero_crossings"],
+            "wav_duration_ms": wav["duration_ms"],
+            "wav_n_samples": wav["n_samples"],
+            "wav_real": bool(wav["real_decode"]),
+            "mp4_duration_ms": vid["duration_ms"],
+            "mp4_n_tracks": vid["n_tracks"],
+            "mp4_dims": vid["width"] * 100000 + vid["height"],
+            "mp4_real": bool(vid["real_decode"]),
+        },
     )
 
 
@@ -572,6 +588,7 @@ def q_zip_source_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
     import zipfile
+    from collections import Counter
 
     from seo_audit_etl_actor_spark.sources.zip_datasource import register_zip_datasource
     from seo_audit_etl_actor_spark.sources.zip_distributed import explode_zip_entries
@@ -635,28 +652,20 @@ def q_zip_source_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_diff = joined.where(~same).count()
 
         rows = a.collect()
-        byte_sum = sum(
-            sum(bytes(r["content"])) for r in rows if r["content"] is not None
-        )
-        n_status = {}
-        for r in rows:
-            n_status[r["status"]] = n_status.get(r["status"], 0) + 1
-        row = (
-            len(rows),
-            n_status.get("ok", 0),
-            sum(1 for r in rows if r["is_nested"]),
-            n_status.get("not_a_zip", 0),
-            n_status.get("nested_unreadable", 0),
-            n_status.get("entry_unreadable", 0),
-            sum(r["entry_size"] for r in rows if r["entry_size"] is not None),
-            byte_sum,
-            1 if n_diff == 0 else 0,
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_rows long, n_ok long, n_nested long, n_not_a_zip long, "
-            "n_nested_unreadable long, n_entry_unreadable long, "
-            "sum_entry_size long, byte_sum long, ds_equals_mapinpandas long",
+        n_status = Counter(r["status"] for r in rows)
+        return summary_frame(
+            spark,
+            {
+                "n_rows": len(rows),
+                "n_ok": n_status["ok"],
+                "n_nested": sum(1 for r in rows if r["is_nested"]),
+                "n_not_a_zip": n_status["not_a_zip"],
+                "n_nested_unreadable": n_status["nested_unreadable"],
+                "n_entry_unreadable": n_status["entry_unreadable"],
+                "sum_entry_size": sum(r["entry_size"] or 0 for r in rows),
+                "byte_sum": sum(sum(r["content"] or b"") for r in rows),
+                "ds_equals_mapinpandas": n_diff == 0,
+            },
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -707,12 +716,11 @@ def q_lossless_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames carry dimensions like any SOFn:
                   = 8008*(1+2+3+4+6) + 16016*5 = 208208.
 
-    Scale: identical plumbing to q_media_decode_audit — the fixture
-    corpus is local by construction; the exercised operator is the
-    100 TB decode path itself."""
+    Scale: the fixture corpus is local by construction (`_thumb_audit`,
+    shared with q_media_decode_audit); the exercised operator is the
+    100 TB Arrow-batched decode path itself."""
     import numpy as np
 
-    from seo_audit_etl_actor_spark.multimodal import binary_ops as B
     from seo_audit_etl_actor_spark.multimodal import fixtures as FX
 
     flat = np.full((8, 8), 77, dtype=np.int64)
@@ -740,24 +748,7 @@ def q_lossless_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ("6_ll_dri.jpg", ll_flat[:sof] + b"\xff\xdd\x00\x04\x00\x02" + ll_flat[sof:]),
     ]
-    df = spark.createDataFrame(
-        [(n, bytearray(b)) for n, b in blobs], "path string, content binary"
-    )
-    thumbs = B.decode_image_thumbs(df)
-    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
-    return thumbs.agg(
-        F.count(F.lit(1)).alias("n_blobs"),
-        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
-        F.sum(
-            F.when(
-                F.col("real_decode"),
-                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
-            ).otherwise(F.lit(0))
-        ).alias("thumb_checksum"),
-        F.sum(weight * (F.col("width").cast("long") * 1000 + F.col("height"))).alias(
-            "dims_checksum"
-        ),
-    )
+    return _thumb_audit(spark, blobs)
 
 
 SQL_LOSSLESS_DECODE_AUDIT = """
@@ -807,12 +798,11 @@ def q_extended_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOFn in C0-CF minus C4/C8/CC carries dimensions):
                   = 8008*(1+3+4+5+6) + 16016*2 = 184184.
 
-    Scale: identical plumbing to q_media_decode_audit — the fixture
-    corpus is local by construction; the exercised operator is the
-    100 TB decode path itself."""
+    Scale: the fixture corpus is local by construction (`_thumb_audit`,
+    shared with q_media_decode_audit); the exercised operator is the
+    100 TB Arrow-batched decode path itself."""
     import numpy as np
 
-    from seo_audit_etl_actor_spark.multimodal import binary_ops as B
     from seo_audit_etl_actor_spark.multimodal import fixtures as FX
 
     x12_flat = FX.encode_jpeg(np.full((8, 8), 3210, dtype=np.int64), precision=12)[0]
@@ -845,24 +835,7 @@ def q_extended_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("5_x12_sof0.jpg", x12_flat.replace(b"\xff\xc1", b"\xff\xc0", 1)),
         ("6_x10_sof1.jpg", bytes(ten)),
     ]
-    df = spark.createDataFrame(
-        [(n, bytearray(b)) for n, b in blobs], "path string, content binary"
-    )
-    thumbs = B.decode_image_thumbs(df)
-    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
-    return thumbs.agg(
-        F.count(F.lit(1)).alias("n_blobs"),
-        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
-        F.sum(
-            F.when(
-                F.col("real_decode"),
-                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
-            ).otherwise(F.lit(0))
-        ).alias("thumb_checksum"),
-        F.sum(weight * (F.col("width").cast("long") * 1000 + F.col("height"))).alias(
-            "dims_checksum"
-        ),
-    )
+    return _thumb_audit(spark, blobs)
 
 
 SQL_EXTENDED_DECODE_AUDIT = """
@@ -905,12 +878,11 @@ def q_arith_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SOF9 carries dimensions like any SOFn, fake path included):
                   = 8008*(1+2+4+5) + 16016*3 = 144144.
 
-    Scale: identical plumbing to q_media_decode_audit — the fixture
-    corpus is local by construction; the exercised operator is the
-    100 TB decode path itself."""
+    Scale: the fixture corpus is local by construction (`_thumb_audit`,
+    shared with q_media_decode_audit); the exercised operator is the
+    100 TB Arrow-batched decode path itself."""
     import numpy as np
 
-    from seo_audit_etl_actor_spark.multimodal import binary_ops as B
     from seo_audit_etl_actor_spark.multimodal import fixtures as FX
 
     ar_flat = FX.encode_jpeg_arith(np.full((8, 8), 200, dtype=np.uint8))[0]
@@ -934,24 +906,7 @@ def q_arith_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("4_ar_dri.jpg", ar_flat[:sof_at] + b"\xff\xdd\x00\x04\x00\x02" + ar_flat[sof_at:]),
         ("5_ar10_prec.jpg", bytes(ten)),
     ]
-    df = spark.createDataFrame(
-        [(n, bytearray(b)) for n, b in blobs], "path string, content binary"
-    )
-    thumbs = B.decode_image_thumbs(df)
-    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
-    return thumbs.agg(
-        F.count(F.lit(1)).alias("n_blobs"),
-        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
-        F.sum(
-            F.when(
-                F.col("real_decode"),
-                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
-            ).otherwise(F.lit(0))
-        ).alias("thumb_checksum"),
-        F.sum(weight * (F.col("width").cast("long") * 1000 + F.col("height"))).alias(
-            "dims_checksum"
-        ),
-    )
+    return _thumb_audit(spark, blobs)
 
 
 SQL_ARITH_DECODE_AUDIT = """
@@ -993,11 +948,11 @@ def q_arith_progressive_decode_audit(spark: SparkSession, sf_dir: str) -> DataFr
     (any SOFn carries dimensions; fake path header parsing is real):
                   = 8008*(1+2+4+5) + 24016*3 = 168144.
 
-    Scale: identical plumbing to q_media_decode_audit — the exercised
-    operator is the 100 TB Arrow-batched decode path itself."""
+    Scale: the fixture corpus is local by construction (`_thumb_audit`,
+    shared with q_media_decode_audit); the exercised operator is the
+    100 TB Arrow-batched decode path itself."""
     import numpy as np
 
-    from seo_audit_etl_actor_spark.multimodal import binary_ops as B
     from seo_audit_etl_actor_spark.multimodal import fixtures as FX
 
     arp_flat = FX.encode_jpeg_arith_progressive(np.full((8, 8), 200, dtype=np.uint8))[0]
@@ -1026,24 +981,7 @@ def q_arith_progressive_decode_audit(spark: SparkSession, sf_dir: str) -> DataFr
         ),
         ("5_arp11_sof.jpg", bytes(sof11)),
     ]
-    df = spark.createDataFrame(
-        [(n, bytearray(b)) for n, b in blobs], "path string, content binary"
-    )
-    thumbs = B.decode_image_thumbs(df)
-    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
-    return thumbs.agg(
-        F.count(F.lit(1)).alias("n_blobs"),
-        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
-        F.sum(
-            F.when(
-                F.col("real_decode"),
-                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
-            ).otherwise(F.lit(0))
-        ).alias("thumb_checksum"),
-        F.sum(weight * (F.col("width").cast("long") * 1000 + F.col("height"))).alias(
-            "dims_checksum"
-        ),
-    )
+    return _thumb_audit(spark, blobs)
 
 
 SQL_ARITH_PROGRESSIVE_DECODE_AUDIT = """
@@ -1085,11 +1023,11 @@ def q_arith_lossless_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     (header dimension sniffing is real even on the fake path):
                   = 8008*(1+2+3+4+6) + 24016*5 = 248208.
 
-    Scale: identical plumbing to q_media_decode_audit — the exercised
-    operator is the 100 TB Arrow-batched decode path itself."""
+    Scale: the fixture corpus is local by construction (`_thumb_audit`,
+    shared with q_media_decode_audit); the exercised operator is the
+    100 TB Arrow-batched decode path itself."""
     import numpy as np
 
-    from seo_audit_etl_actor_spark.multimodal import binary_ops as B
     from seo_audit_etl_actor_spark.multimodal import fixtures as FX
 
     flat = np.full((8, 8), 77, dtype=np.int64)
@@ -1118,24 +1056,7 @@ def q_arith_lossless_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         ("6_al_dri.jpg", al_flat[:sof] + b"\xff\xdd\x00\x04\x00\x02" + al_flat[sof:]),
     ]
-    df = spark.createDataFrame(
-        [(n, bytearray(b)) for n, b in blobs], "path string, content binary"
-    )
-    thumbs = B.decode_image_thumbs(df)
-    weight = F.regexp_extract("path", r"^(\d+)_", 1).cast("long")
-    return thumbs.agg(
-        F.count(F.lit(1)).alias("n_blobs"),
-        F.sum(F.col("real_decode").cast("long")).alias("n_real"),
-        F.sum(
-            F.when(
-                F.col("real_decode"),
-                weight * F.aggregate("thumb", F.lit(0).cast("long"), lambda a, x: a + x),
-            ).otherwise(F.lit(0))
-        ).alias("thumb_checksum"),
-        F.sum(weight * (F.col("width").cast("long") * 1000 + F.col("height"))).alias(
-            "dims_checksum"
-        ),
-    )
+    return _thumb_audit(spark, blobs)
 
 
 SQL_ARITH_LOSSLESS_DECODE_AUDIT = """
@@ -1149,15 +1070,41 @@ SELECT CAST(6 AS BIGINT)      AS n_blobs,
 # ------------------------------------ JSONL sink/source round-trip audit
 
 
-def q_jsonl_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-lines sink + source parity audit: write the documents table
-    to JSONL with the native sink, read it back with the native source
+def _roundtrip_by_lang(spark: SparkSession, docs: DataFrame, fmt: str, path: str) -> DataFrame:
+    """Write `docs` to `path` with the native `fmt` sink, read it back
     under the ORIGINAL schema (no inference — inference is a separate
-    concern and nondeterministic under sampling), full-outer join the
-    round trip against the original on doc_id, and report per-lang
-    counts, volumes, and mismatch tallies. The volume columns
-    (sum_chars, sum_text_len) are computed from the ROUND-TRIPPED side,
-    so any silent corruption (escaping, truncation, type mangling)
+    concern and nondeterministic under sampling; CSV with a header),
+    full-outer join the round trip against the original on doc_id, and
+    aggregate per lang: counts, volumes from the ROUND-TRIPPED side, and
+    the only-one-side and field-mismatch tallies the oracles pin at zero."""
+    opts = {"header": "true"} if fmt == "csv" else {}
+    docs.write.mode("overwrite").format(fmt).options(**opts).save(path)
+    rt = spark.read.schema(docs.schema).format(fmt).options(**opts).load(path)
+
+    o, r = docs.alias("o"), rt.alias("r")
+    j = o.join(r, "doc_id", "full_outer")
+    both = F.col("o.lang").isNotNull() & F.col("r.lang").isNotNull()
+    same = F.lit(True)
+    for c in ("text", "lang", "source", "n_chars"):
+        same = same & F.col(f"o.{c}").eqNullSafe(F.col(f"r.{c}"))
+    return j.groupBy(F.coalesce("o.lang", "r.lang").alias("lang")).agg(
+        F.sum(F.col("o.doc_id").isNotNull().cast("long")).alias("n_docs"),
+        F.sum(F.coalesce(F.col("r.n_chars"), F.lit(0))).alias("sum_chars"),
+        F.sum(F.coalesce(F.length("r.text"), F.lit(0))).alias("sum_text_len"),
+        F.sum(
+            (F.col("o.doc_id").isNotNull() & F.col("r.text").isNull() & ~both).cast("long")
+        ).alias("n_only_original"),
+        F.sum(F.col("o.lang").isNull().cast("long")).alias("n_only_roundtrip"),
+        F.sum((both & ~same).cast("long")).alias("n_field_mismatch"),
+    )
+
+
+def q_jsonl_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON-lines sink + source parity audit: round-trip the documents
+    table through the native JSON sink and source (`_roundtrip_by_lang`)
+    and report per-lang counts, volumes, and mismatch tallies. The volume
+    columns (sum_chars, sum_text_len) are computed from the ROUND-TRIPPED
+    side, so any silent corruption (escaping, truncation, type mangling)
     surfaces as a value mismatch against the parquet-derived oracle, and
     any row loss/duplication surfaces in the only_* tallies the oracle
     pins at zero.
@@ -1169,8 +1116,8 @@ def q_jsonl_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the sink is a parallel per-partition write, the source a
     splittable parallel scan; the join shuffles on the uniform doc_id.
-    The collect here is ≤ n_langs rows (bounded by construction). The
-    temp dir is removed in finally, so results materialize before return.
+    The result is ≤ n_langs rows (bounded by construction), collected as
+    Arrow before the temp dir is removed in finally.
     """
     import os
     import shutil
@@ -1179,39 +1126,8 @@ def q_jsonl_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tmp = tempfile.mkdtemp(prefix="spark_graft_jsonl_audit_")
     try:
-        path = os.path.join(tmp, "docs_jsonl")
-        docs.write.mode("overwrite").json(path)
-        rt = spark.read.schema(docs.schema).json(path)
-
-        o, r = docs.alias("o"), rt.alias("r")
-        j = o.join(r, "doc_id", "full_outer")
-        both = F.col("o.lang").isNotNull() & F.col("r.lang").isNotNull()
-        same = F.lit(True)
-        for c in ("text", "lang", "source", "n_chars"):
-            same = same & F.col(f"o.{c}").eqNullSafe(F.col(f"r.{c}"))
-        rows = (
-            j.groupBy(F.coalesce("o.lang", "r.lang").alias("lang"))
-            .agg(
-                F.sum(F.col("o.doc_id").isNotNull().cast("long")).alias("n_docs"),
-                F.sum(F.coalesce(F.col("r.n_chars"), F.lit(0))).alias("sum_chars"),
-                F.sum(F.coalesce(F.length("r.text"), F.lit(0))).alias("sum_text_len"),
-                F.sum(
-                    (F.col("o.doc_id").isNotNull() & F.col("r.text").isNull() & ~both)
-                    .cast("long")
-                ).alias("n_only_original"),
-                F.sum(
-                    (F.col("o.lang").isNull()).cast("long")
-                ).alias("n_only_roundtrip"),
-                F.sum((both & ~same).cast("long")).alias("n_field_mismatch"),
-            )
-            .orderBy("lang")
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "lang string, n_docs long, sum_chars long, sum_text_len long, "
-            "n_only_original long, n_only_roundtrip long, n_field_mismatch long",
-        )
+        agg = _roundtrip_by_lang(spark, docs, "json", os.path.join(tmp, "docs_jsonl"))
+        return spark.createDataFrame(agg.orderBy("lang").toArrow())
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1236,17 +1152,16 @@ ORDER BY lang
 def q_format_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC + CSV sink/source parity audit — the columnar and the
     text-delimited siblings of `jsonl_roundtrip_audit`, one row per
-    (format, lang). Each format: write documents with the native sink,
-    read back under the ORIGINAL schema (CSV with header, explicit
-    schema — inference is a separate concern), full-outer join on
-    doc_id, report per-lang counts/volumes from the ROUND-TRIPPED side
-    plus only-one-side and field-mismatch tallies the oracle pins at
-    zero. A lossy hop (CSV quoting/escaping, ORC type mangling, row
-    loss) breaks the hash against the parquet-derived oracle.
+    (format, lang): each format round-trips documents through
+    `_roundtrip_by_lang` (CSV with header, explicit schema), and the two
+    per-format aggregates are unioned, tagged with their format. A lossy
+    hop (CSV quoting/escaping, ORC type mangling, row loss) breaks the
+    hash against the parquet-derived oracle.
 
     Scale: both sinks write per-partition in parallel and both sources
     are splittable scans; the joins shuffle on the uniform doc_id; the
-    collect is ≤ formats × langs rows.
+    result is ≤ formats × langs rows, collected as Arrow before the temp
+    dir is removed.
     """
     import os
     import shutil
@@ -1255,57 +1170,14 @@ def q_format_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tmp = tempfile.mkdtemp(prefix="spark_graft_fmt_audit_")
     try:
-        collected = []
-        for fmt in ("csv", "orc"):
-            path = os.path.join(tmp, fmt)
-            w = docs.write.mode("overwrite")
-            if fmt == "csv":
-                w.option("header", "true").csv(path)
-                rt = (
-                    spark.read.schema(docs.schema)
-                    .option("header", "true")
-                    .csv(path)
-                )
-            else:
-                w.orc(path)
-                rt = spark.read.schema(docs.schema).orc(path)
-
-            o, r = docs.alias("o"), rt.alias("r")
-            j = o.join(r, "doc_id", "full_outer")
-            both = F.col("o.lang").isNotNull() & F.col("r.lang").isNotNull()
-            same = F.lit(True)
-            for c in ("text", "lang", "source", "n_chars"):
-                same = same & F.col(f"o.{c}").eqNullSafe(F.col(f"r.{c}"))
-            rows = (
-                j.groupBy(F.coalesce("o.lang", "r.lang").alias("lang"))
-                .agg(
-                    F.sum(F.col("o.doc_id").isNotNull().cast("long")).alias("n_docs"),
-                    F.sum(F.coalesce(F.col("r.n_chars"), F.lit(0))).alias("sum_chars"),
-                    F.sum(F.coalesce(F.length("r.text"), F.lit(0))).alias(
-                        "sum_text_len"
-                    ),
-                    F.sum(
-                        (
-                            F.col("o.doc_id").isNotNull()
-                            & F.col("r.text").isNull()
-                            & ~both
-                        ).cast("long")
-                    ).alias("n_only_original"),
-                    F.sum((F.col("o.lang").isNull()).cast("long")).alias(
-                        "n_only_roundtrip"
-                    ),
-                    F.sum((both & ~same).cast("long")).alias("n_field_mismatch"),
-                )
-                .collect()
+        csv, orc = (
+            _roundtrip_by_lang(spark, docs, fmt, os.path.join(tmp, fmt)).select(
+                F.lit(fmt).alias("format"), "*"
             )
-            collected.extend((fmt, r2["lang"], *tuple(r2)[1:]) for r2 in rows)
-        collected.sort(key=lambda t: (t[0], t[1]))
-        return spark.createDataFrame(
-            collected,
-            "format string, lang string, n_docs long, sum_chars long, "
-            "sum_text_len long, n_only_original long, n_only_roundtrip long, "
-            "n_field_mismatch long",
+            for fmt in ("csv", "orc")
         )
+        agg = csv.unionByName(orc).orderBy("format", "lang")
+        return spark.createDataFrame(agg.toArrow())
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1349,8 +1221,8 @@ def q_lake_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: publish = one parquet write per version; time travel = pruned
     scans of immutable snapshot dirs; compact repartitions (keeps the
-    upstream scan parallel); vacuum is metadata-only. The collects here
-    are per-version one-row aggregates.
+    upstream scan parallel); vacuum is metadata-only. The `.first()` reads
+    here are per-version one-row aggregates.
     """
     import glob as _glob
     import os
@@ -1368,7 +1240,7 @@ def q_lake_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo_key = ("lake_maintenance_row", fc.table_fingerprint(sf_dir, "documents"))
     hit = fc.peek_value(memo_key)
     if hit is not None:
-        return spark.createDataFrame([hit], _LAKE_AUDIT_SCHEMA)
+        return summary_frame(spark, hit)
 
     docs = load_table(spark, sf_dir, "documents")
     # coalesce(4): the filtered base is a few thousand rows, but it inherits
@@ -1423,29 +1295,22 @@ def q_lake_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         except FileNotFoundError:
             evicted_raises = 1
 
-        row = (
-            n1,
-            n2,
-            n3,
-            chars3,
-            1 if (n4, chars4) == (n3, chars3) else 0,
-            n_files4,
-            len(removed),
-            int(sum(removed)),
-            retained_ok,
-            evicted_raises,
-        )
+        row = {
+            "n_v1": n1,
+            "n_v2": n2,
+            "n_v3": n3,
+            "chars_v3": chars3,
+            "compact_preserves": (n4, chars4) == (n3, chars3),
+            "compact_files": n_files4,
+            "n_vacuumed": len(removed),
+            "vacuumed_sum": sum(removed),
+            "retained_reads_ok": retained_ok,
+            "evicted_raises": evicted_raises,
+        }
         fc.store_value(memo_key, row)
-        return spark.createDataFrame([row], _LAKE_AUDIT_SCHEMA)
+        return summary_frame(spark, row)
     finally:
         shutil.rmtree(lake, ignore_errors=True)
-
-
-_LAKE_AUDIT_SCHEMA = (
-    "n_v1 long, n_v2 long, n_v3 long, chars_v3 long, "
-    "compact_preserves long, compact_files long, n_vacuumed long, "
-    "vacuumed_sum long, retained_reads_ok long, evicted_raises long"
-)
 
 
 SQL_LAKE_MAINTENANCE_AUDIT = f"""
@@ -1472,6 +1337,13 @@ FROM v3
 
 
 # ------------------------------------ bucketed co-located join audit (r9)
+
+
+def _sum_cents(c: str) -> Column:
+    """A money column's total in cents, as the oracles compute it: the
+    exact DECIMAL(18,2) sum as a double, times 100, rounded HALF_UP."""
+    total = F.sum(F.col(c).cast("decimal(18,2)")).cast("double")
+    return F.round(total * 100, 0).cast("long")
 
 
 _BUCKET_AUDIT_TABLES: dict[tuple, tuple[str, str]] = {}
@@ -1521,10 +1393,11 @@ def q_bucketed_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle_free = 1 — if Spark ever stopped eliding the Exchanges (spec
     mismatch, catalog regression), the flag flips and the row goes red.
 
-    The plan is inspected with AQE disabled (restored in finally) because
-    AQE wraps the static plan until execution; the aggregate itself SHOULD
-    shuffle (one exchange for the groupBy) so the flag is measured on the
-    bare join, not the rollup.
+    The plan is inspected under `aqe_off` (the caller's setting restored)
+    because AQE wraps the static plan until execution; the aggregate itself
+    SHOULD shuffle (one exchange for the groupBy) so the flag is measured
+    on the bare join, not the rollup. The flag rides on the lazy aggregate
+    as a literal column.
 
     Scale: bucketing trades ONE write-time shuffle for zero shuffles on
     every subsequent join of the two tables — the 100 TB recurring-join
@@ -1540,34 +1413,19 @@ def q_bucketed_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the aggregates still run fresh per call.
     lt, rt = _bucket_audit_tables(spark, sf_dir)
 
-    # restore the CALLER's AQE setting, not a hardcoded 'true' — a
-    # session that had AQE off must not leave here with it on
-    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with plan_audit.aqe_off(spark):
         bare = bucketing.bucketed_join(spark, lt, rt, "custkey")
         shuffle_free = 1 if plan_audit.num_shuffles(bare) == 0 else 0
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prior)
 
-    joined = bucketing.bucketed_join(spark, lt, rt, "custkey")
-    rows = (
-        joined.groupBy("c_mktsegment")
+    return (
+        bucketing.bucketed_join(spark, lt, rt, "custkey")
+        .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            _sum_cents("o_totalprice").alias("price_cents"),
         )
-        .withColumn("price_cents", F.round(F.col("total_price") * 100, 0).cast("long"))
-        .select("c_mktsegment", "n_orders", "price_cents")
-        .collect()
-    )
-    out = sorted((r[0], r[1], r[2], shuffle_free) for r in rows)
-    return spark.createDataFrame(
-        out,
-        "c_mktsegment string, n_orders long, price_cents long, "
-        "shuffle_free long",
+        .withColumn("shuffle_free", F.lit(shuffle_free).cast("long"))
+        .orderBy("c_mktsegment")
     )
 
 
@@ -1597,7 +1455,10 @@ def q_partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       * every file the scan actually touched (input_file_name) lives
         under the matching partition directory.
     If pruning regressed to a full scan + post-filter, the first and
-    third flags flip and the row goes red.
+    third flags flip and the row goes red. The first two are read from the
+    plan and ride on the lazy aggregate as literal columns; the third is
+    aggregated over `input_file_name` by the same scan that computes the
+    values.
 
     Scale: partition pruning is THE first-order 100 TB lever — a pruned
     scan lists one directory of a date/type-partitioned lake instead of
@@ -1624,34 +1485,18 @@ def q_partition_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed = plan_audit.pushed_filters(rd)
     has_partition_filter = 1 if any("purchase" in f for f in pf) else 0
     not_pushed_to_rows = 0 if any("purchase" in f for f in pushed) else 1
-    files = [
-        r[0]
-        for r in rd.select(F.input_file_name()).distinct().collect()
-    ]
-    only_matching_dir = (
-        1
-        if files and all("event_type=purchase" in f for f in files)
-        else 0
-    )
-
-    agg = rd.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("v"),
-        F.countDistinct("user_id").alias("u"),
-    ).first()
-    row = (
-        int(agg["n"]),
-        int(round((agg["v"] or 0.0) * 100)),
-        int(agg["u"]),
-        has_partition_filter,
-        not_pushed_to_rows,
-        only_matching_dir,
-    )
-    return spark.createDataFrame(
-        [row],
-        "n_rows long, value_cents long, n_users long, "
-        "partition_filter_present long, not_pushed_to_rowgroups long, "
-        "only_matching_partition_read long",
+    # input_file_name is nondeterministic, so it is projected before the
+    # aggregate rather than passed to one
+    in_dir = F.input_file_name().contains("event_type=purchase")
+    return rd.withColumn("_in_dir", in_dir).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        _sum_cents("value").alias("value_cents"),
+        F.countDistinct("user_id").alias("n_users"),
+        F.lit(has_partition_filter).cast("long").alias("partition_filter_present"),
+        F.lit(not_pushed_to_rows).cast("long").alias("not_pushed_to_rowgroups"),
+        F.coalesce(F.bool_and("_in_dir").cast("long"), F.lit(0)).alias(
+            "only_matching_partition_read"
+        ),
     )
 
 
@@ -1679,8 +1524,8 @@ def q_broadcast_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     size estimate regression) turns the driver row red instead of
     shipping a full two-sided shuffle at 100 TB.
 
-    Plan inspected with AQE disabled (restored in finally) — AQE wraps
-    the static plan until execution.
+    Plan inspected under `aqe_off` (the caller's setting restored) — AQE
+    wraps the static plan until execution.
     """
     from seo_audit_etl_actor_spark.plans import audit as plan_audit
 
@@ -1691,25 +1536,14 @@ def q_broadcast_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with plan_audit.aqe_off(spark):
         p = plan_audit.plan_string(joined)
-        broadcast_planned = (
-            1 if "BroadcastHashJoin" in p and "SortMergeJoin" not in p else 0
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prior)
+    broadcast_planned = 1 if "BroadcastHashJoin" in p and "SortMergeJoin" not in p else 0
     return (
         joined.groupBy(F.col("r_name").alias("region"))
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.round(
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double") * 100,
-                0,
-            )
-            .cast("long")
-            .alias("acctbal_cents"),
+            _sum_cents("c_acctbal").alias("acctbal_cents"),
         )
         .withColumn("broadcast_planned", F.lit(broadcast_planned).cast("long"))
         .orderBy("region")
@@ -1748,19 +1582,11 @@ def q_scan_pushdown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cols = plan_audit.read_schema_columns(q)
     pruned_ok = 1 if cols == {"l_quantity", "l_extendedprice"} else 0
-    agg = q.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-            * 100,
-            0,
-        )
-        .cast("long")
-        .alias("cents"),
-    ).first()
-    return spark.createDataFrame(
-        [(int(agg["n"]), int(agg["cents"]), pushed_ok, pruned_ok)],
-        "n_rows long, price_cents long, filter_pushed long, columns_pruned long",
+    return q.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        _sum_cents("l_extendedprice").alias("price_cents"),
+        F.lit(pushed_ok).cast("long").alias("filter_pushed"),
+        F.lit(pruned_ok).cast("long").alias("columns_pruned"),
     )
 
 

@@ -18,7 +18,8 @@ All nine share one harness:
 - compare: one Spark aggregate gives the summary and the
   `stream_equals_batch` flag — `_compare` for a batch twin, `_latest`
   first for operators that re-emit their current value per key;
-- `_summary` hands the scalars back as a one-row Arrow-backed frame.
+- `session.summary_frame` hands the scalars back as a one-row
+  Arrow-backed frame.
 
 Only scalars reach the driver (`.first()`): driver memory is O(1) in the
 drained output at any corpus size. Double values are compared
@@ -42,7 +43,7 @@ from seo_audit_etl_actor_spark.queries.events_ext import (
     SQL_EVENT_RATE_ANOMALIES,
     q_event_rate_anomalies,
 )
-from seo_audit_etl_actor_spark.session import load_table
+from seo_audit_etl_actor_spark.session import load_table, summary_frame
 from seo_audit_etl_actor_spark.streaming import events as se
 
 
@@ -154,7 +155,7 @@ def _compare(got: DataFrame, want: DataFrame, **aggs: Column) -> DataFrame:
         *(F.coalesce(a, F.lit(0)).alias(k) for k, a in aggs.items()),
         (1 - differ).alias("stream_equals_batch"),
     ).first()
-    return _summary(got.sparkSession, row.asDict())
+    return summary_frame(got.sparkSession, row.asDict())
 
 
 def _latest(got: DataFrame, key: str) -> DataFrame:
@@ -165,17 +166,6 @@ def _latest(got: DataFrame, key: str) -> DataFrame:
     last = F.max("_epoch").over(Window.partitionBy(key))
     got = got.withColumn("_last", last)
     return got.where(F.col("_epoch") == F.col("_last")).drop("_epoch", "_last")
-
-
-def _summary(spark: SparkSession, row: dict) -> DataFrame:
-    """The differential's result row, every column int64, handed to Spark
-    as an Arrow table: a JVM LocalRelation, so no job over it starts a
-    Python worker."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(
-        pa.table({k: pa.array([int(v)], pa.int64()) for k, v in row.items()})
-    )
 
 
 def _g_sum(c: Column) -> Column:
@@ -371,7 +361,7 @@ def q_streaming_heavyhitters_differential(spark: SparkSession, sf_dir: str) -> D
                 )
                 .first()
             )
-            return _summary(spark, {"total_occurrences": n_total, **row.asDict()})
+            return summary_frame(spark, {"total_occurrences": n_total, **row.asDict()})
     finally:
         exact.unpersist()
         docs.unpersist()
@@ -707,7 +697,7 @@ def q_streaming_dedup_differential(spark: SparkSession, sf_dir: str) -> DataFram
             F.coalesce(F.sum("event_id"), F.lit(0)).alias("id_checksum"),
             F.coalesce(_cents(value), F.lit(0)).alias("value_cents"),
         ).first()
-        return _summary(spark, row.asDict())
+        return summary_frame(spark, row.asDict())
 
 
 def _sql_streaming_dedup_differential() -> str:
@@ -822,7 +812,7 @@ def q_streaming_enrichment_differential(spark: SparkSession, sf_dir: str) -> Dat
             F.coalesce(F.sum("nation"), F.lit(0)).alias("nation_checksum"),
             F.coalesce(F.sum(_cents(F.col("acctbal"))), F.lit(0)).alias("balance_cents"),
         ).first()
-        return _summary(spark, row.asDict())
+        return summary_frame(spark, row.asDict())
 
 
 def _sql_streaming_enrichment_differential() -> str:

@@ -5,8 +5,10 @@ for cluster scale: AQE on (runtime shuffle-partition coalescing, dynamic
 broadcast-join conversion, skew-join splitting), Arrow enabled for the
 Pandas-UDF extension paths, and a shuffle-partition default that the harness
 overrides via env. Arrow also carries the audit frames: the pipeline hands
-its driver-held rows to `createDataFrame` as `pyarrow` tables, which become
-JVM `LocalRelation`s whatever the Arrow conf says.
+its driver-held rows to `createDataFrame` as `pyarrow` tables, and the
+catalog's one-row audit and differential results go through
+`summary_frame`; both become JVM `LocalRelation`s whatever the Arrow conf
+says, so no job over them starts a Python worker.
 """
 
 from __future__ import annotations
@@ -206,6 +208,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
+
+
+def summary_frame(spark: SparkSession, row: dict) -> DataFrame:
+    """A one-row result, every column int64 in `row`'s order, handed to
+    Spark as an Arrow table: a JVM LocalRelation, so no job over it starts
+    a Python worker."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({k: pa.array([int(v)], pa.int64()) for k, v in row.items()})
+    )
 
 
 # Keyed by (path, size, mtime_ns) per file so an in-place rewrite (same

@@ -28,12 +28,9 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     lt, rt = bucketed_tables
     joined = bucketing.bucketed_join(spark, lt, rt, "custkey")
     # disable AQE for a statically-inspectable plan
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with audit.aqe_off(spark):
         joined2 = bucketing.bucketed_join(spark, lt, rt, "custkey")
         assert audit.num_shuffles(joined2) == 0, audit.plan_string(joined2)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert joined.count() > 0
 
 

@@ -37,12 +37,9 @@ def test_flagship_is_single_pass_no_python(spark, sf_dir):
     assert not audit.uses_python_udf(df)
     # AQE defers codegen planning until execution; disable it to make the
     # codegen coverage statically visible
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with audit.aqe_off(spark):
         df2 = SPECS["keyword_position_buckets"].fn(spark, sf_dir)
         assert audit.num_codegen_subtrees(df2) >= 1
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 @pytest.mark.parametrize(
@@ -80,14 +77,11 @@ def test_sessionize_single_data_shuffle(spark, sf_dir):
     hashpartitioning(user_id) exchange — hashpartitioning on a key subset
     satisfies the aggregate's clustered distribution. Extra exchanges here
     would dominate cost on a 100 TB event log."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with audit.aqe_off(spark):
         df = SPECS["sessionize_events"].fn(spark, sf_dir)
         # 2 = one hashpartitioning(user_id) + the presentation-order range sort
         assert audit.num_shuffles(df) <= 2, audit.plan_string(df)
         assert "hashpartitioning(user_id" in audit.plan_string(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_pivot_is_single_pass_conditional_agg(spark, sf_dir):
@@ -96,13 +90,10 @@ def test_pivot_is_single_pass_conditional_agg(spark, sf_dir):
     aggregate phases — the full-data reduction to (status, priority) pairs,
     then PivotFirst over ~15 rows — plus the presentation sort; only the
     first shuffle scales with data."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with audit.aqe_off(spark):
         df = SPECS["pivot_status_priority"].fn(spark, sf_dir)
         assert audit.num_shuffles(df) <= 3, audit.plan_string(df)
         assert not audit.uses_python_udf(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_above_nation_avg_broadcasts_aggregate(spark, sf_dir):
@@ -175,13 +166,10 @@ def test_cooccurrence_distributed_topk(spark, sf_dir):
 def test_trailing_hour_single_data_shuffle(spark, sf_dir):
     """The RANGE-frame window must ride ONE hashpartitioning(user_id)
     exchange plus the presentation sort."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with audit.aqe_off(spark):
         df = SPECS["trailing_hour_value"].fn(spark, sf_dir)
         assert audit.num_shuffles(df) <= 2, audit.plan_string(df)
         assert "hashpartitioning(user_id" in audit.plan_string(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_tpch_q1_pushes_date_filter_and_prunes(spark, sf_dir):

@@ -62,11 +62,8 @@ def main() -> None:
         sf = sys.argv[sys.argv.index("--sf") + 1]
     spark = get_spark("catalog-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with audit.aqe_off(spark):
         rows = [audit_one(spec, spark, sf) for spec in QUERIES]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
     w = max(len(r[0]) for r in rows)
     for name, stats, flag in rows:
         print(f"{name:<{w}}  {stats:<28} {flag}")
