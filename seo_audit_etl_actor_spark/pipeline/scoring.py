@@ -8,7 +8,9 @@ operator over a long-format (component, weight, raw, avail) frame. Both
 run through Catalyst, so the same expressions serve a million-document
 scoring table unchanged. Both frames go to Spark as Arrow tables, which
 the JVM holds as `LocalRelation`s: Catalyst folds the single-row
-projection without running a job, and no Python worker is started.
+projection without running a job, and no Python worker is started. The
+20-row long frame is one partition, so the per-family aggregate needs no
+shuffle: the whole scoring is one single-stage job.
 """
 
 from __future__ import annotations
@@ -164,7 +166,7 @@ def compute_scores(spark: SparkSession, doc: dict) -> dict:
         for fam, weights in (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
         for comp, w in weights.items()
     ]
-    long_df = spark.createDataFrame(pa.Table.from_pylist(rows), _LONG)
+    long_df = spark.createDataFrame(pa.Table.from_pylist(rows), _LONG).coalesce(1)
     agg = {
         r["family"]: r
         for r in coverage_weighted_score(long_df, group_cols=["family"]).collect()

@@ -1,13 +1,19 @@
 """Per-source stanzas (SURVEY §3.2): each takes the parsed all-string
-DataFrame for one ZIP entry and mutates the normalized document via ONE
-Spark aggregation pass (multi-aggregate fusion — the reference's
-hand-fused loops become one `agg()` each, so every stanza is a single job
-with map-side partials no matter how large the export grows).
+DataFrame for one ZIP entry, runs ONE Spark aggregation pass over it
+(multi-aggregate fusion — the reference's hand-fused loops become one
+`agg()` each) and returns an `apply(doc)` closure that writes the result
+into the normalized document. A stanza never touches the document itself,
+so `run.process_zip` can run the aggregations concurrently and still apply
+them in reference order, which settles every shared field (pages_total
+`??=`, errors `+=`, the photos_total overwrite). Over a single-partition
+frame each aggregation is one single-stage job.
 
 Citations are `file:line` into /root/reference/.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -19,6 +25,12 @@ from seo_audit_etl_actor_spark.operators.aggregates import (
 )
 from seo_audit_etl_actor_spark.pipeline.resolve import pick_col
 from seo_audit_etl_actor_spark.sources.csv_smart import ROW_ID, ParsedCsv
+
+Apply = Callable[[dict], None]
+
+
+def _skip(doc: dict) -> None:
+    """The applier of a stanza whose columns are missing: no change."""
 
 
 def _cols(df: DataFrame) -> list[str]:
@@ -32,13 +44,13 @@ def _finite(c):
     return F.when(n.isNotNull(), n)
 
 
-def ahrefs_keywords(df: DataFrame, doc: dict) -> None:
+def ahrefs_keywords(df: DataFrame) -> Apply:
     """Position buckets top3/top10/top100 (src/etl.js:115-151, A3/P3/P6)."""
     pos_col = pick_col(_cols(df), ["Current position"]) or pick_col(
         _cols(df), ["Previous position"]
     )
     if pos_col is None:
-        return  # warning path: no position column (src/etl.js:142-144)
+        return _skip  # warning path: no position column (src/etl.js:142-144)
     pos = _finite(F.col(pos_col))
     valid = pos.isNotNull() & (pos > 0)
     row = df.agg(
@@ -47,25 +59,32 @@ def ahrefs_keywords(df: DataFrame, doc: dict) -> None:
         conditional_count(valid & (pos <= 10)).alias("top10"),
         conditional_count(valid & (pos <= 100)).alias("top100"),
     ).first()
-    if row["n"] > 0:
-        doc["onsite"]["keywords"]["top3"] = row["top3"]
-        doc["onsite"]["keywords"]["top10"] = row["top10"]
-        doc["onsite"]["keywords"]["top100"] = row["top100"]
+
+    def apply(doc: dict) -> None:
+        if row["n"] > 0:
+            doc["onsite"]["keywords"]["top3"] = row["top3"]
+            doc["onsite"]["keywords"]["top10"] = row["top10"]
+            doc["onsite"]["keywords"]["top100"] = row["top100"]
+
+    return apply
 
 
-def ahrefs_top_pages(df: DataFrame, doc: dict) -> None:
-    """pages_total ??= distinct URLs (A2/A12, src/etl.js:153-165)."""
+def ahrefs_top_pages(df: DataFrame) -> Apply:
+    """pages_total ??= distinct URLs, or the row count without a URL column
+    (A2/A12, src/etl.js:153-165)."""
     url_col = pick_col(_cols(df), ["Current URL", "url", "page url", "address"])
-    if doc["onsite"]["content"]["pages_total"] is not None:
-        return  # ?? coalesce: first source wins (src/etl.js:159-161)
-    if url_col:
-        n = df.agg(F.countDistinct(F.col(url_col)).alias("n")).first()["n"]
-    else:
-        n = df.count()
-    doc["onsite"]["content"]["pages_total"] = n
+    count = F.countDistinct(F.col(url_col)) if url_col else F.count(F.lit(1))
+    n = df.agg(count.alias("n")).first()["n"]
+
+    def apply(doc: dict) -> None:
+        content = doc["onsite"]["content"]
+        if content["pages_total"] is None:  # ?? coalesce: first source wins (src/etl.js:159-161)
+            content["pages_total"] = n
+
+    return apply
 
 
-def ahrefs_backlinks(df: DataFrame, doc: dict) -> None:
+def ahrefs_backlinks(df: DataFrame) -> Apply:
     """ref_domains = row count; dr = mean Domain Rating (A1/A4,
     src/etl.js:168-181)."""
     dr_col = pick_col(_cols(df), ["dr", "domain rating"])
@@ -73,9 +92,13 @@ def ahrefs_backlinks(df: DataFrame, doc: dict) -> None:
     if dr_col:
         aggs.append(F.avg(_finite(F.col(dr_col))).alias("dr"))
     row = df.agg(*aggs).first()
-    doc["backlinks"]["ref_domains"] = row["n"]
-    if dr_col and row["dr"] is not None:
-        doc["backlinks"]["dr"] = row["dr"]
+
+    def apply(doc: dict) -> None:
+        doc["backlinks"]["ref_domains"] = row["n"]
+        if dr_col and row["dr"] is not None:
+            doc["backlinks"]["dr"] = row["dr"]
+
+    return apply
 
 
 # issue-category → inner CSV files (src/etl.js:188-196)
@@ -101,7 +124,7 @@ def site_audit_issue_counts(inner_row_counts: dict[str, int], doc: dict) -> None
         doc["onsite"]["errors"][key] += sum(inner_row_counts.get(f, 0) for f in files)
 
 
-def sf_internal(df: DataFrame, doc: dict) -> None:
+def sf_internal(df: DataFrame) -> Apply:
     """Status-code range counts += and pages_total fallback (P5/A11/A12,
     src/etl.js:216-230)."""
     sc_col = pick_col(_cols(df), ["status code", "status"])
@@ -111,11 +134,15 @@ def sf_internal(df: DataFrame, doc: dict) -> None:
         aggs.append(conditional_count((sc >= 400) & (sc < 500)).alias("c4"))
         aggs.append(conditional_count(sc >= 500).alias("c5"))
     row = df.agg(*aggs).first()
-    if sc_col:
-        doc["onsite"]["errors"]["4xx"] += row["c4"]
-        doc["onsite"]["errors"]["5xx"] += row["c5"]
-    if doc["onsite"]["content"]["pages_total"] is None:
-        doc["onsite"]["content"]["pages_total"] = row["n"]
+
+    def apply(doc: dict) -> None:
+        if sc_col:
+            doc["onsite"]["errors"]["4xx"] += row["c4"]
+            doc["onsite"]["errors"]["5xx"] += row["c5"]
+        if doc["onsite"]["content"]["pages_total"] is None:
+            doc["onsite"]["content"]["pages_total"] = row["n"]
+
+    return apply
 
 
 def sf_structured_data(doc: dict) -> str:
@@ -157,12 +184,12 @@ def lighthouse_rollup(metrics: list[dict], doc: dict) -> None:
     cwv["pass_rate"] = passed / total if total else None
 
 
-def brightlocal_ranks(df: DataFrame, doc: dict) -> None:
+def brightlocal_ranks(df: DataFrame) -> Apply:
     """avg_pos (rounded 0.1), pct_top3, keywords_tracked (A4/A7,
     src/etl.js:307-328)."""
     pos_col = pick_col(_cols(df), ["position", "rank", "serp position", "pos"])
     if pos_col is None:
-        return
+        return _skip
     pos = _finite(F.col(pos_col))
     valid = pos.isNotNull() & (pos > 0)
     row = df.agg(
@@ -171,16 +198,20 @@ def brightlocal_ranks(df: DataFrame, doc: dict) -> None:
         (F.round(F.avg(F.when(valid, pos)) * 10) / 10).alias("avg_pos"),
         conditional_count(valid & (pos <= 3)).alias("t3"),
     ).first()
-    rank = doc["local"]["rank"]
-    if row["n"] > 0:
-        rank["avg_pos"] = row["avg_pos"]
-        rank["pct_top3"] = row["t3"] / row["n"]
-        rank["keywords_tracked"] = row["n"]
-    else:
-        rank["keywords_tracked"] = row["rows"]
+
+    def apply(doc: dict) -> None:
+        rank = doc["local"]["rank"]
+        if row["n"] > 0:
+            rank["avg_pos"] = row["avg_pos"]
+            rank["pct_top3"] = row["t3"] / row["n"]
+            rank["keywords_tracked"] = row["n"]
+        else:
+            rank["keywords_tracked"] = row["rows"]
+
+    return apply
 
 
-def brightlocal_citations(df: DataFrame, doc: dict) -> None:
+def brightlocal_citations(df: DataFrame) -> Apply:
     """Liveness-proxy consistency ratio (P9/A7, src/etl.js:332-366).
 
     Bug-for-bug parity on ragged rows: the reference's `String(r[col])`
@@ -215,8 +246,12 @@ def brightlocal_citations(df: DataFrame, doc: dict) -> None:
         conditional_count(counted).alias("total"),
         conditional_count(counted & looks_live).alias("good"),
     ).first()
-    if row["total"] > 0:
-        doc["local"]["citations"]["consistency"] = row["good"] / row["total"]
+
+    def apply(doc: dict) -> None:
+        if row["total"] > 0:
+            doc["local"]["citations"]["consistency"] = row["good"] / row["total"]
+
+    return apply
 
 
 def is_placeholder(parsed: ParsedCsv) -> bool:
@@ -230,7 +265,7 @@ def is_placeholder(parsed: ParsedCsv) -> bool:
     return bool(first[header.index("status")]) and bool(first[header.index("message")])
 
 
-def brightlocal_gbp_insights(df: DataFrame, doc: dict) -> None:
+def brightlocal_gbp_insights(df: DataFrame) -> Apply:
     """max-of-coerced public listing metrics (A5 maxNum,
     src/etl.js:382-397)."""
     cols = _cols(df)
@@ -245,27 +280,28 @@ def brightlocal_gbp_insights(df: DataFrame, doc: dict) -> None:
     if col_photos:
         aggs["photos_total"] = F.max(_finite(F.col(col_photos)))
     if not aggs:
-        return
+        return _skip
     row = df.agg(*[c.alias(k) for k, c in aggs.items()]).first()
-    if col_reviews:
-        doc["local"]["reviews"]["count_total"] = row["count_total"]
-    if col_rating:
-        doc["local"]["reviews"]["avg_rating"] = row["avg_rating"]
-    if col_photos:
-        doc["local"]["gbp"]["photos_total"] = row["photos_total"]
+
+    def apply(doc: dict) -> None:
+        if col_reviews:
+            doc["local"]["reviews"]["count_total"] = row["count_total"]
+        if col_rating:
+            doc["local"]["reviews"]["avg_rating"] = row["avg_rating"]
+        if col_photos:  # gbp_photos, applied later, overwrites (src/etl.js:414-421)
+            doc["local"]["gbp"]["photos_total"] = row["photos_total"]
+
+    return apply
 
 
-def gbp_categories(df: DataFrame, doc: dict) -> None:
+def gbp_categories(df: DataFrame) -> Apply:
     """First primary category + ordered secondary list (A9/A10 with the H2
     ingest-order discipline, src/etl.js:400-412). Exact keys, no fuzzy
     match. One aggregation pass: conditional collect_sorted per type, nulls
     compacted out."""
     cols = _cols(df)
-    gbp = doc["local"]["gbp"]
     if "category_type" not in cols or "category_name" not in cols:
-        gbp["primary_category"] = None
-        gbp["secondary_categories"] = []
-        return
+        return _skip  # the document keeps its None / []
     ctype = F.lower(F.coalesce(F.col("category_type").cast("string"), F.lit("")))
     name = F.col("category_name")
     truthy = name.isNotNull() & (name != "")
@@ -276,21 +312,30 @@ def gbp_categories(df: DataFrame, doc: dict) -> None:
         )
 
     row = df.agg(picked("primary").alias("prim"), picked("secondary").alias("sec")).first()
-    gbp["primary_category"] = row["prim"][0] if row["prim"] else None
-    gbp["secondary_categories"] = list(row["sec"])
+
+    def apply(doc: dict) -> None:
+        gbp = doc["local"]["gbp"]
+        gbp["primary_category"] = row["prim"][0] if row["prim"] else None
+        gbp["secondary_categories"] = list(row["sec"])
+
+    return apply
 
 
-def gbp_photos(df: DataFrame, doc: dict) -> None:
+def gbp_photos(df: DataFrame) -> Apply:
     """photos_total from the first `photo_type == 'total'` row (P8/A9,
     src/etl.js:414-421)."""
     cols = _cols(df)
     if "photo_type" not in cols or "count" not in cols:
-        return
+        return _skip
     ptype = F.lower(F.coalesce(F.col("photo_type").cast("string"), F.lit("")))
     row = df.agg(
         F.array_compact(
             collect_sorted(F.when(ptype == "total", F.struct(to_num_js("count").alias("n"))), F.col(ROW_ID))
         ).alias("hits")
     ).first()
-    if row["hits"]:
-        doc["local"]["gbp"]["photos_total"] = row["hits"][0]["n"]
+
+    def apply(doc: dict) -> None:
+        if row["hits"]:
+            doc["local"]["gbp"]["photos_total"] = row["hits"][0]["n"]
+
+    return apply

@@ -18,9 +18,11 @@ cost model (SURVEY §3.4). Row counts and placeholder checks read the
 `to_dataframe`: the rows go over as one Arrow table, which the JVM holds
 as a `LocalRelation`, so no stanza job waits on a Python worker. The frame
 is all-string with a `__row_id` ingest-order column (H2 determinism —
-Spark has no implicit file order). For big standalone CSVs use
-`read_csv_distributed`, which pushes the same encoding/delimiter decision
-into Spark's distributed CSV scan.
+Spark has no implicit file order), and it is a single partition: the rows
+already sit on the driver, so slicing them only bought a shuffle, and a
+global aggregation over one partition is one single-stage, one-task job.
+For big standalone CSVs use `read_csv_distributed`, which pushes the same
+encoding/delimiter decision into Spark's distributed CSV scan.
 
 Deliberate divergence: papaparse emits a phantom `{col: ""}` row for a
 trailing newline; Python's csv module does not. We follow csv-module
@@ -121,7 +123,8 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     (a missing cell stays null, distinct from ''), which Spark turns into a
     JVM `LocalRelation` (above `spark.sql.execution.arrow.
     localRelationThreshold`, a JVM-side RDD of Arrow batches): no row is
-    pickled and no stanza job starts a Python worker to read it."""
+    pickled and no stanza job starts a Python worker to read it. The frame
+    is coalesced to one partition, so an `agg` over it plans no Exchange."""
     if not parsed.header:
         return None
     import pyarrow as pa
@@ -136,7 +139,7 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
         + [pa.array(c, pa.string()) for c in columns],
         names=[ROW_ID, *parsed.header],
     )
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def read_csv_distributed(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -38,3 +39,29 @@ def duck(sf_dir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     yield con
     con.close()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """`jobs_of(fn)` → (fn(), the ids of the jobs fn ran in a job group of
+    its own, the ids of jobs that started with no group meanwhile)."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"jobs_of-{uuid.uuid4().hex}"
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+        return (
+            result,
+            list(tracker.getJobIdsForGroup(group)),
+            set(tracker.getJobIdsForGroup(None)) - ungrouped,
+        )
+
+    return run

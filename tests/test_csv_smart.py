@@ -1,11 +1,16 @@
 """Driver-side CSV parse → Spark hand-off (sources/csv_smart.py):
-header renaming and the Arrow-backed `to_dataframe` frame."""
+header renaming and the Arrow-backed, single-partition `to_dataframe`
+frame (and scoring's long frame, built the same way)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seo_audit_etl_actor_spark.pipeline.document import empty_normalized
+from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
+from seo_audit_etl_actor_spark.plans.audit import aqe_off
 from seo_audit_etl_actor_spark.sources.csv_smart import (
     ROW_ID,
     ParsedCsv,
@@ -79,3 +84,23 @@ def test_schema_is_row_id_then_nullable_strings(spark):
 
 def test_no_header_gives_no_frame(spark):
     assert to_dataframe(spark, ParsedCsv()) is None
+
+
+def test_frame_is_one_partition_and_aggregates_without_exchange(spark):
+    # The rows are on the driver already: sliced into defaultParallelism
+    # partitions, every global aggregate paid a shuffle and a second stage.
+    df = to_dataframe(spark, parse_csv_smart_rows(b"url\n/a\n/b\n/a\n/c\n/d\n/e\n"))
+    assert df.rdd.getNumPartitions() == 1
+    assert _leaf(df) == "LocalTableScan"
+    agg = df.agg(F.countDistinct("url").alias("urls"), F.count(F.lit(1)).alias("n"))
+    with aqe_off(spark):
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert agg.first().asDict() == {"urls": 5, "n": 6}
+
+
+def test_scoring_runs_one_job(jobs_of, spark):
+    doc = empty_normalized("c", "example.com", "2025-01-01")
+    scores, jobs, _ = jobs_of(lambda: compute_scores(spark, doc))
+    assert len(jobs) == 1
+    assert (scores["oss_weight_used"], scores["lss_weight_used"]) == (20, 40)

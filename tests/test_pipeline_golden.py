@@ -9,7 +9,10 @@ see the arithmetic notes inline.
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark.pipeline import stanzas
 from seo_audit_etl_actor_spark.pipeline.document import to_reference_json
@@ -151,22 +154,83 @@ def test_write_outputs(result, tmp_path):
     assert "etl_manifest.json" in paths and "OUTPUT.json" in paths
 
 
-def test_fixture_audit_job_budget(spark):
+def test_fixture_audit_job_budget(spark, jobs_of):
     """Row counts and placeholder checks read the driver-side parse, so
     Spark runs only the stanza aggregations and the scoring. The fixture
     audit ran 62 jobs when every entry was counted with `df.count()` and
     placeholders were checked with `orderBy().first()`; 23 once they read
-    the parse; 21 now that the frames are Arrow-backed `LocalRelation`s,
-    over which Catalyst folds scoring's single-row projection."""
-    sc = spark.sparkContext
-    group = "test_fixture_audit_job_budget"
-    sc.setJobGroup(group, "fixture audit job count")
-    try:
+    the parse; 21 once the frames were Arrow-backed `LocalRelation`s, over
+    which Catalyst folds scoring's single-row projection; 10 now that every
+    frame is one partition, so each stanza aggregation and the scoring is a
+    single-stage job. The stanzas run in pool threads, which must take the
+    caller's job group with them: no job of the call may start outside it."""
+    _, jobs, ungrouped = jobs_of(
+        lambda: process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip())
+    )
+    assert len(jobs) <= 10
+    assert ungrouped == set()
+
+
+def test_apply_order_is_reference_order_not_completion_order(spark, monkeypatch):
+    """The stanzas run concurrently, but shared fields keep the reference's
+    winner. Here each earlier writer finishes only after the later one:
+    top pages after sf_internal (pages_total ??=), GBP insights after
+    gbp_photos (photos_total overwrite). The errors totals are the
+    site audit's and sf_internal's `+=` together."""
+    finished: list[str] = []
+    done = {name: threading.Event() for name in ("sf_internal", "gbp_photos")}
+
+    def patch(name: str, wait_for: str | None = None) -> None:
+        original = getattr(stanzas, name)
+
+        def stanza(df):
+            apply = original(df)
+            if wait_for is not None:
+                assert done[wait_for].wait(timeout=120), f"{wait_for} never finished"
+            finished.append(name)
+            if name in done:
+                done[name].set()
+            return apply
+
+        monkeypatch.setattr(stanzas, name, stanza)
+
+    patch("sf_internal")
+    patch("gbp_photos")
+    patch("ahrefs_top_pages", wait_for="sf_internal")
+    patch("brightlocal_gbp_insights", wait_for="gbp_photos")
+
+    res = process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip())
+
+    assert finished.index("sf_internal") < finished.index("ahrefs_top_pages")
+    assert finished.index("gbp_photos") < finished.index("brightlocal_gbp_insights")
+    doc = res["normalized_audit"]
+    assert doc["onsite"]["content"]["pages_total"] == 3  # not sf's 7 rows
+    assert doc["local"]["gbp"]["photos_total"] == pytest.approx(42)  # not the max 35
+    assert doc["onsite"]["errors"] == {
+        "4xx": 5,
+        "5xx": 2,
+        "redirect_chains": 2,
+        "canonical": 0,
+        "thin": 0,
+        "duplicate_titles": 1,
+        "orphan_pages": 2,
+    }
+
+
+class StanzaFailed(Exception):
+    pass
+
+
+def test_stanza_failure_raises_and_leaves_no_thread(spark, monkeypatch):
+    def failing(df):
+        df.agg(F.count(F.lit(1))).first()  # fail inside the pool, after a job
+        raise StanzaFailed("citations")
+
+    monkeypatch.setattr(stanzas, "brightlocal_citations", failing)
+    before = set(threading.enumerate())
+    with pytest.raises(StanzaFailed, match="citations"):
         process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip())
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 21
+    assert set(threading.enumerate()) - before == set()
 
 
 @pytest.mark.parametrize(
