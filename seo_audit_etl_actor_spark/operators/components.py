@@ -9,18 +9,16 @@ label(v) := min(label(v), min over neighbors' labels) to fixpoint. Each
 iteration is one shuffle join + one aggregate, and the iteration count is
 the graph DIAMETER, not the vertex count; near-dup graphs are clique-ish
 (LSH verification connects most of each cluster directly), so 2-4
-iterations close real corpora. For adversarially long path graphs the
-known refinement is alternating large-star/small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14), which squares
-the label-jump per round; the API contract here doesn't change.
+iterations close real corpora. A long-diameter graph costs one round per
+hop; no catalog input has one, so this is the one convergence loop.
 
 Scale notes:
 - `localCheckpoint` after every iteration truncates lineage — without it
   the plan doubles per round and planning time explodes by iteration 10;
 - labels are (long, long) rows — the shuffle moves 16 bytes per vertex
   per round regardless of document size;
-- convergence check is one count() per round on the changed subset, the
-  standard driver-side fixpoint test for iterative DataFrame algorithms.
+- convergence check is one label-sum scan per round of the just-
+  checkpointed labels (see the loop), a driver-side fixpoint test.
 """
 
 from __future__ import annotations
@@ -112,104 +110,6 @@ def connected_components(
         if converged:
             return labels.select(F.col("v").alias("vertex"), F.col("label").alias("component"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SOCC'14) — the
-    long-diameter refinement of `connected_components`.
-
-    Min-label propagation needs DIAMETER rounds (a 1000-vertex path takes
-    999 shuffles); the star algorithm squares label jumps per round and
-    closes the same path in ~log2(n) rounds. Contract is identical:
-    (vertex, component=min id in component). Kept as the opt-in variant —
-    near-dup graphs are clique-ish (diameter 2-4) where min-label's
-    cheaper per-round plan (one join + one agg vs two join+agg phases)
-    wins; use this one for chain-shaped graphs (citation chains, linked
-    sessions).
-
-    Both phases are expressed as groupBy-min + join — NO collect_list of
-    neighborhoods, so a high-degree hub never materializes its neighbor
-    set in one task (the same bounded-bucket discipline as the LSH
-    hot-bucket guard). Per round the edge set only shrinks toward the
-    star form, and `localCheckpoint` truncates lineage exactly as in
-    min-label.
-    """
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    ).where(F.col("a") != F.col("b"))
-    verts = (
-        e.select(F.col("a").alias("v"))
-        .unionByName(e.select(F.col("b").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # canonical (hi, lo) with hi > lo — the directed "points at smaller" form
-    cur = (
-        e.select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # lineage truncated — release any cache the edge pipeline pinned (see
-    # connected_components)
-    release = getattr(edges, "_spark_graft_release", None)
-    if release is not None:
-        release()
-    import gc
-
-    for _ in range(max_iter):
-        # LARGE-STAR: for each node u, connect every strictly-larger
-        # neighbor v to m = min(N(u) ∪ {u}). Over the symmetric edge list
-        # each undirected edge {u,v} (u<v) contributes exactly one output
-        # (v, m(u)); m ≤ u < v keeps the (hi, lo) canonical form.
-        sym = cur.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            cur.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        mn = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-        large = (
-            sym.join(mn, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .distinct()
-        )
-        # SMALL-STAR: for each node u over its smaller neighbors N, with
-        # m = min(N) (< u by canonical form): rewire every other small
-        # neighbor to m and keep (u, m).
-        mn2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        rewired = (
-            large.join(mn2, "hi")
-            .where(F.col("lo") != F.col("m"))
-            .select(F.greatest("lo", "m").alias("hi"), F.least("lo", "m").alias("lo"))
-        )
-        new_cur = (
-            rewired.unionByName(mn2.select("hi", F.col("m").alias("lo")))
-            .where(F.col("hi") != F.col("lo"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_cur.join(cur, ["hi", "lo"], "left_anti").count()
-            + cur.join(new_cur, ["hi", "lo"], "left_anti").count()
-        )
-        old = cur
-        cur = new_cur
-        del sym, mn, large, mn2, rewired, new_cur, old
-        gc.collect()
-        if changed == 0:
-            # fixpoint = forest of depth-1 stars centered at component mins
-            labels = cur.groupBy("hi").agg(F.min("lo").alias("component")).select(
-                F.col("hi").alias("vertex"), "component"
-            )
-            roots = verts.join(
-                cur.select(F.col("hi").alias("v")), "v", "left_anti"
-            ).select(F.col("v").alias("vertex"), F.col("v").alias("component"))
-            return labels.unionByName(roots)
-    raise RuntimeError(f"connected_components_star did not converge in {max_iter} iterations")
 
 
 def near_dup_cluster_assignments(

@@ -12,13 +12,9 @@ Design for 100 TB:
   shingle sets driver-side;
 - SimHash reduces each doc to one 48-bit integer; near-dup candidates come
   from band equality on the fingerprint — again a uniform-key join;
-- token/shingle hashing defaults to md5 so every step is reproducible in
-  the DuckDB oracle. md5 IS the production recommendation (r8 revision):
-  the xxhash64 swap's "~5× faster hash pass" held only in isolation —
-  at the big rungs its band-collision volume is corpus-dependent and
-  measured 3-5× md5's on the synthetic ladder, which at m1000 turns the
-  verification/refinement stages into the bottleneck (the simhash probe
-  fills the 65 GB disk and dies). See _hash64 and SURVEY §6 round-8.
+- token/shingle hashing is md5 (`md5_long`), so every step is
+  reproducible in the DuckDB oracle; the retracted xxhash64 alternative's
+  measurements are in SCALE_STUDY_r08.json.
 """
 
 from __future__ import annotations
@@ -133,43 +129,6 @@ def exact_dedup_keep_first(
     return docs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
-# Token/shingle hash families. "md5" (default) is ENGINE-PORTABLE — every
-# oracle-checked catalog value reproduces bit-for-bit in DuckDB — and is
-# what all catalog queries use, AND the production recommendation.
-#
-# "xxhash64" is kept as a MEASURED-UNSAFE alternative, not a production
-# swap (r8 retraction of the r5 claim; VERDICT r7 task 2). The r5 "~5×
-# faster" number was the hash pass in isolation (43.7 s md5 vs 9.0 s
-# xxhash64 for 85.6M tokens at m316). Pipeline-level, the committed r8
-# probes show the candidate volume is hypersensitive to the hash
-# family's values on the corpus's dominant tokens/shingles, and on the
-# synthetic ladder xxhash64 drew badly at every big rung:
-#   - minhash m1000 (tier 3, r=4): 5.48M raw band pairs vs md5's 1.29M
-#     (4.2×), hot buckets 2560 vs 400; the high-32-bit selection probes
-#     4.11M — NOT a bit-selection defect (tools/probe_minhash_hash.py);
-#   - simhash m316: 74.97M verified Hamming≤3 pairs vs md5's 16.21M
-#     (4.6×) — lower effective fingerprint entropy, attributed offline:
-#     the 31-token vocabulary leaves xxhash64 30 near-balanced vote bits
-#     vs md5's 37 (tools/probe_simhash_entropy.py);
-#   - simhash m1000: the xxhash64 COUNT-ONLY probe dies on disk (>58 GB
-#     refinement spill, "No space left on device") where md5 completes —
-#     reproducing the r7 shared-session death in a fresh JVM.
-# The mechanism is luck-of-the-draw on a tiny support, not an xxhash64
-# defect — but that is exactly why the swap cannot be CLAIMED safe:
-# swap only after probing the target corpus (the probe tools are the
-# gate). Only the md5 default is DuckDB-checkable.
-def _hash64(col, hash_fn: str = "md5"):
-    if hash_fn == "md5":
-        return md5_long(col)
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    raise ValueError(
-        f"unknown hash_fn {hash_fn!r} (use 'md5' or 'xxhash64'; 'xxhash64_hi' "
-        "is a minhash-probe-only bit selection handled inside "
-        "hashed_shingle_set and is not a full 64-bit hash family)"
-    )
-
-
 def shingle_set(text_col, k: int = SHINGLE_K):
     """Distinct k-word shingles as an array of strings.
 
@@ -207,33 +166,26 @@ MASK32 = 0xFFFFFFFF
 MOD32 = 1 << 32
 
 
-def hashed_shingle_set(text_col, k: int = SHINGLE_K, hash_fn: str = "md5"):
+# md5 is the one token/shingle hash: DuckDB reproduces it bit for bit, and
+# xxhash64 drew 3-5× md5's band-collision volume at scale (SCALE_STUDY_r08.json).
+def hashed_shingle_set(text_col, k: int = SHINGLE_K):
     """Distinct k-word shingles as 32-bit hashes (array<long>).
 
     The shingle STRINGS never leave the expression: each k-gram is hashed
-    (md5 → 32-bit by default; _hash64's decision table covers why md5 IS
-    production) and deduplicated as an integer — 4-10× smaller rows through
-    every downstream shuffle, and set ops on longs instead of strings.
-    Hash collisions (~n²/2³³ per doc) merge identically in any
-    hash-agreeing engine, so oracle parity holds exactly for "md5".
+    (md5 → 32-bit) and deduplicated as an integer — 4-10× smaller rows
+    through every downstream shuffle, and set ops on longs instead of
+    strings. Hash collisions (~n²/2³³ per doc) merge identically in any
+    md5-agreeing engine, so oracle parity holds exactly.
     """
     toks = tokens(text_col)
     n = F.size(toks)
-
-    def h32(col):
-        if hash_fn == "xxhash64_hi":
-            # diagnostic bit selection (r8 hash study): the HIGH 32 bits
-            # of xxhash64 instead of the low 32 — distinguishes "low-bit
-            # correlation over overlapping shingle strings" from
-            # "xxhash64 unsuitable" in the m1000 candidate-volume probe
-            return F.shiftrightunsigned(F.xxhash64(col), 32)
-        return _hash64(col, hash_fn).bitwiseAND(F.lit(MASK32))
-
     return F.when(n < k, F.array().cast("array<long>")).otherwise(
         F.array_distinct(
             F.transform(
                 F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: h32(F.concat_ws(" ", F.slice(toks, i, k))),
+                lambda i: md5_long(F.concat_ws(" ", F.slice(toks, i, k))).bitwiseAND(
+                    F.lit(MASK32)
+                ),
             )
         )
     )
@@ -243,7 +195,6 @@ def shingle_projection(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """(id, shingles) with the 32-bit hashed shingle set — the one
     md5-bearing pass every minhash consumer shares. Docs with no shingles
@@ -256,7 +207,7 @@ def shingle_projection(
     the repartition to the scan, recomputing every shingle hash at scan
     parallelism (measured 10× the whole pass's cost at m=10; the
     filter-over-derived-column trap from the verify notes)."""
-    sh = hashed_shingle_set(F.col(text_col), hash_fn=hash_fn)
+    sh = hashed_shingle_set(F.col(text_col))
     return docs.where(F.size(tokens(F.col(text_col))) >= SHINGLE_K).select(
         F.col(id_col), sh.alias("shingles")
     )
@@ -289,24 +240,6 @@ def _signatures_from_shingles(
         for i, (a, b) in enumerate(_affine_constants(n_hashes))
     ]
     return exploded.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_HASHES,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Per-doc MinHash signature (id, mh0..mhN) via universal hashing: one
-    base hash per shingle (md5 — production per _hash64's decision table)
-    giving a 32-bit value, then sig[i] = min over shingles of
-    (a_i·h + b_i) mod 2^32 — n_hashes cheap affine maps instead of
-    n_hashes full hash passes (the base hash dominates the hash work).
-    See _signatures_from_shingles for the codegen-friendly shape."""
-    return _signatures_from_shingles(
-        shingle_projection(docs, text_col, id_col, hash_fn), id_col, n_hashes
-    )
 
 
 # Bounds the HOF pair path's IN-MEMORY pair array, which is O(members²)/2
@@ -479,7 +412,6 @@ def minhash_near_dup_pairs(
     max_bucket_members: int = MAX_BUCKET_MEMBERS,
     n_hashes: int | None = None,
     n_bands: int | None = None,
-    hash_fn: str = "md5",
     compact_band_keys: bool | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → band buckets →
@@ -536,7 +468,7 @@ def minhash_near_dup_pairs(
     if compact_band_keys is None:
         compact_band_keys = n_bands > BANDING_LADDER[0][2]
     # the one md5-bearing corpus pass, shared by signatures + verification
-    base = shingle_projection(docs, text_col, id_col, hash_fn).persist(
+    base = shingle_projection(docs, text_col, id_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sigs = _signatures_from_shingles(base, id_col, n_hashes)
@@ -640,7 +572,6 @@ def simhash_fingerprints(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = SIMHASH_BITS,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-doc SimHash fingerprint: tokens hashed to 60-bit ints; each of
     `bits` positions votes ±1 per token occurrence (tf-weighted); bit set
@@ -660,7 +591,7 @@ def simhash_fingerprints(
     """
     th = docs.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t")
-    ).select(F.col(id_col), _hash64(F.col("t"), hash_fn).alias("h"))
+    ).select(F.col(id_col), md5_long(F.col("t")).alias("h"))
     # Expressions assembled as SQL strings (r13): the per-bit Python
     # Column-operator loops cost one py4j round-trip per operator
     # (~6 calls × bits for the votes plus ~4 × bits for the fingerprint
@@ -692,22 +623,19 @@ def simhash_near_dup_pairs(
     bits: int = SIMHASH_BITS,
     n_bands: int = 4,
     max_bucket_members: int = MAX_BUCKET_MEMBERS,
-    hash_fn: str = "md5",
-    early_verify: bool = True,
 ) -> DataFrame:
     """SimHash near-dup candidates via fingerprint banding (pigeonhole: any
     pair within `max_hamming` ≤ n_bands-1 bit flips shares ≥1 exact band),
     verified by popcount of XOR ≤ max_hamming. Single scan of the corpus
     (bucket-grouping, no self-join — see _bucket_pairs).
 
-    `early_verify` (r10, default on): the hamming predicate is pushed into
-    _bucket_pairs as its pair_filter, so the cross-band distinct shuffles
-    only VERIFIED pairs (x band multiplicity <= n_bands) instead of every
-    candidate — the member payload (fp) is all the verification needs, so
-    unlike minhash the check costs no join. Output set identical either
-    way (row-wise filter commutes with distinct); the flag exists so the
-    r10 A/B (tools/decompose_simhash.py) can measure the shipped order
-    against the r9 one on the same corpus.
+    The hamming predicate is pushed into _bucket_pairs as its pair_filter
+    (r10), so the cross-band distinct shuffles only VERIFIED pairs (x band
+    multiplicity <= n_bands) instead of every candidate — the member
+    payload (fp) is all the verification needs, so unlike minhash the check
+    costs no join. Output set identical to verifying after the distinct
+    (row-wise filter commutes with distinct); that order lost the r10 A/B
+    (SCALE_STUDY_r10.json).
 
     Hot buckets refine by SECOND-LEVEL pigeonhole (r5; found by the 316×
     ladder where one 15-bit band bucket held 19k members and band-level
@@ -720,7 +648,7 @@ def simhash_near_dup_pairs(
     cutting their m² to Σ sub-bucket² with ZERO recall loss for the
     verified (hamming ≤ max_hamming) output; duplicates across chunks
     collapse in the existing distinct."""
-    fps = simhash_fingerprints(docs, text_col, id_col, bits, hash_fn)
+    fps = simhash_fingerprints(docs, text_col, id_col, bits)
     width = bits // n_bands
     n_sub = max_hamming + 1
 
@@ -774,18 +702,13 @@ def simhash_near_dup_pairs(
     exploded = fps.select(member.alias("m"), F.explode(bands).alias("band")).select(
         "m", "band.band_idx", "band.band_key"
     )
-    pair_filter = (
-        (lambda a, b: F.bit_count(a["fp"].bitwiseXOR(b["fp"])) <= max_hamming)
-        if early_verify
-        else None
-    )
     pairs = _bucket_pairs(
         exploded,
         ["band_idx", "band_key"],
         "m",
         max_bucket_members,
         refine=_refine,
-        pair_filter=pair_filter,
+        pair_filter=lambda a, b: F.bit_count(a["fp"].bitwiseXOR(b["fp"])) <= max_hamming,
     )
     hamming = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
     out = (
@@ -805,10 +728,10 @@ def simhash_near_dup_pairs(
 
 
 # --- wide (multi-word) SimHash (round 11) ----------------------------------
-# The r10 decomposition (SCALE_STUDY_r10.json:simhash_decomposition,
-# tools/decompose_simhash.py) attributed the family-worst scaling exponent
-# to the 60-bit fingerprint itself: with 4 bands the 15-bit band keyspace
-# saturates (~77k occupied of 131k possible buckets at 5M docs), and 60-bit
+# The r10 decomposition (SCALE_STUDY_r10.json:simhash_decomposition)
+# attributed the family-worst scaling exponent to the 60-bit fingerprint
+# itself: with 4 bands the 15-bit band keyspace saturates (~77k occupied
+# of 131k possible buckets at 5M docs), and 60-bit
 # CHANCE collisions make the verified hamming<=3 output grow ~n² (16.1M ->
 # 160.6M pairs m316 -> m1000) — the operator's documented 100 TB boundary
 # said ">=96-bit fingerprints needed at corpus scale". This is that fix:
@@ -920,7 +843,6 @@ def simhash_wide_near_dup_pairs(
     bits: int = SIMHASH_WIDE_BITS,
     n_bands: int = 4,
     max_bucket_members: int = MAX_BUCKET_MEMBERS,
-    early_verify: bool = True,
 ) -> DataFrame:
     """simhash_near_dup_pairs over the wide fingerprint: same pigeonhole
     (any hamming<=n_bands-1 pair shares >=1 exact band), same hot-bucket
@@ -1011,16 +933,13 @@ def simhash_wide_near_dup_pairs(
             h = h + F.bit_count(a[f"fp{w}"].bitwiseXOR(b[f"fp{w}"])).cast("int")
         return h
 
-    pair_filter = (
-        (lambda a, b: _hamming(a, b) <= max_hamming) if early_verify else None
-    )
     pairs = _bucket_pairs(
         exploded,
         ["band_idx", "band_key"],
         "m",
         max_bucket_members,
         refine=_refine,
-        pair_filter=pair_filter,
+        pair_filter=lambda a, b: _hamming(a, b) <= max_hamming,
     )
     out = (
         pairs.select(
@@ -1065,7 +984,6 @@ def simhash_near_dup_pairs_auto(
     max_hamming: int = 3,
     n_bands: int = 4,
     max_bucket_members: int = MAX_BUCKET_MEMBERS,
-    early_verify: bool = True,
 ) -> DataFrame:
     """Width-routed simhash near-dup pairs: probe the corpus size (cached
     `_probe_count`, same probe the minhash tiers use) and dispatch to the
@@ -1076,27 +994,8 @@ def simhash_near_dup_pairs_auto(
     (that is the point — the narrow form's chance-collision pair volume
     grows ~n² past saturation, SCALE_STUDY_r10)."""
     width = choose_simhash_width(_probe_count(docs))
-    if width == SIMHASH_BITS:
-        return simhash_near_dup_pairs(
-            docs,
-            text_col,
-            id_col,
-            max_hamming,
-            width,
-            n_bands,
-            max_bucket_members,
-            early_verify=early_verify,
-        )
-    return simhash_wide_near_dup_pairs(
-        docs,
-        text_col,
-        id_col,
-        max_hamming,
-        width,
-        n_bands,
-        max_bucket_members,
-        early_verify,
-    )
+    near_dup = simhash_near_dup_pairs if width == SIMHASH_BITS else simhash_wide_near_dup_pairs
+    return near_dup(docs, text_col, id_col, max_hamming, width, n_bands, max_bucket_members)
 
 
 def ngram_jaccard_sample_pairs(

@@ -181,44 +181,6 @@ def lsh_bucket(vec_sql: str, dim: int, n_planes: int = 8) -> Column:
     return F.expr("CAST((" + " + ".join(bits) + ") AS INT)")
 
 
-def cosine_scores_pandas(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized cosine scoring via pandas_udf (SURVEY §2.10's
-    sanctioned Python path: Arrow batch transfer + NumPy matrix math, never
-    row-at-a-time).
-
-    The HOF expression path (cosine/dot above) is the default — it stays in
-    the JVM. This variant exists for workloads where the per-vector math
-    outgrows what expressions express well (learned projections, quantized
-    codes): one (batch × dim) NumPy matmul per Arrow batch amortizes the
-    Python boundary to ~nothing.
-    """
-    # module-level pd import below: pandas_udf resolves the stringified
-    # type hints (PEP 563) against module globals
-    ensure_package_on_executors(embeddings.sparkSession)
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    @pandas_udf("double")
-    def score(vecs: pd.Series) -> pd.Series:
-        # vectorized stack: Arrow hands back ndarray elements; one 2D
-        # stack + exact float32->float64 widening beats a per-row
-        # lambda (~2 us/row x corpus) by ~10x
-        m = np.stack(vecs.values).astype(np.float64, copy=False)
-        norms = np.sqrt((m * m).sum(axis=1))
-        return pd.Series((m @ q) / (norms * qn))
-
-    return embeddings.select(F.col(id_col), score(F.col(vec_col)).alias("cosine_sim"))
-
-
 def rep_collapse(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -633,14 +595,10 @@ def embedding_near_dup_ivf_pairs(
 # relation — comfortably inside executor memory and far from the 8 GB /
 # 512M-row broadcast cap). Above it — the all-distinct-corpus case where
 # reps ≈ corpus — the join falls back to a shuffled equi-join on the
-# embedding key, which scales instead of OOMing driver+executors. Env
-# knob for cluster sizing; the tier TEST (both branches differential-
-# equal) is tests/test_rep_collapse.py.
-import os as _os
-
-SEMANTIC_BCAST_MAX_REPS = int(
-    _os.environ.get("SPARK_GRAFT_SEMANTIC_BCAST_MAX_REPS", "100000")
-)
+# embedding key, which scales instead of OOMing driver+executors. The
+# tier TEST (both branches differential-equal, via max_broadcast_reps) is
+# tests/test_rep_collapse.py.
+SEMANTIC_BCAST_MAX_REPS = 100_000
 
 
 def semantic_dedup_flags(

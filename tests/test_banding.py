@@ -144,9 +144,8 @@ def test_default_band_key_representation_by_tier(spark):
 
 def test_tier_selection_is_hash_independent(spark, monkeypatch):
     """VERDICT r5 task 6 contract: the BANDING_LADDER tier is chosen from
-    the corpus COUNT alone — switching hash_fn must feed choose_banding
-    the identical probe value (tier drift between audit md5 and
-    production xxhash64 would silently change recall between the two)."""
+    the corpus COUNT alone — choose_banding sees the plain row count,
+    never a value derived from the shingle hashes."""
     rows = [(i, f"some text body number {i} with shared tokens") for i in range(30)]
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
     seen: list[int] = []
@@ -157,57 +156,24 @@ def test_tier_selection_is_hash_independent(spark, monkeypatch):
         return orig(n)
 
     monkeypatch.setattr(dedup, "choose_banding", spy)
-    dedup.minhash_near_dup_pairs(docs, hash_fn="md5").collect()
-    dedup.minhash_near_dup_pairs(docs, hash_fn="xxhash64").collect()
-    assert len(seen) == 2 and seen[0] == seen[1] == 30
+    dedup.minhash_near_dup_pairs(docs).collect()
+    assert seen == [30]
 
 
-def test_xxhash64_production_hash_variant(spark):
-    """hash_fn="xxhash64" (a measured-unsafe ALTERNATIVE since the r8
-    retraction — see operators/dedup._hash64; the r5 "~5x faster" claim
-    held only for the hash pass in isolation) must still run both
-    near-dup pipelines end-to-end with the same contracts as md5:
-    symmetric-free ordered pairs, thresholds respected, and exact
-    duplicates still found (identical texts have identical shingle
-    sets / fingerprints under ANY hash)."""
+def test_exact_clones_pair_up(spark):
+    """Both near-dup pipelines on the md5 hash: ordered pairs, thresholds
+    respected, and exact duplicates all found (identical texts have
+    identical shingle sets and fingerprints)."""
     rows = [(i, "the exact same duplicated text appears here always") for i in range(6)]
     rows += [(10 + i, f"entirely different content number {i} here") for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
 
-    mh = dedup.minhash_near_dup_pairs(docs, hash_fn="xxhash64").collect()
+    mh = dedup.minhash_near_dup_pairs(docs).collect()
     assert all(r["id_a"] < r["id_b"] and r["jaccard"] >= 0.5 for r in mh)
     dup_pairs = {(r["id_a"], r["id_b"]) for r in mh if r["id_a"] < 10 and r["id_b"] < 10}
     assert len(dup_pairs) == 6 * 5 // 2  # all clones pair up, jaccard = 1
 
-    sh = dedup.simhash_near_dup_pairs(docs, hash_fn="xxhash64").collect()
+    sh = dedup.simhash_near_dup_pairs(docs).collect()
     assert all(r["id_a"] < r["id_b"] and r["hamming"] <= 3 for r in sh)
     clone_pairs = {(r["id_a"], r["id_b"]) for r in sh if r["id_a"] < 10 and r["id_b"] < 10}
     assert len(clone_pairs) == 6 * 5 // 2  # identical fp -> hamming 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup._hash64(None, "sha9000")
-
-
-def test_pure_python_xxh64_matches_spark(spark):
-    """tools/probe_simhash_entropy.py's offline attribution hashes with a
-    pure-Python XXH64(seed=42); it must be bit-exact vs Spark's
-    F.xxhash64 or the analysis speaks for a different function."""
-    import sys
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from probe_simhash_entropy import xxh64
-
-    vals = ["order", "hash", "spark", "the quick brown fox jumps over xyz", "a", "", "é↑🙂"]
-    df = spark.createDataFrame([(v,) for v in vals], "s string").select(
-        "s", F.xxhash64("s").alias("h")
-    )
-    for r in df.collect():
-        mine = xxh64(r["s"].encode(), 42)
-        if mine >= 1 << 63:
-            mine -= 1 << 64
-        assert mine == r["h"], r["s"]

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark.operators.components import (
     connected_components,
-    connected_components_star,
     near_dup_cluster_assignments,
 )
 
@@ -51,39 +50,6 @@ def test_matches_union_find(spark, edges):
     df = spark.createDataFrame(edges, "id_a: long, id_b: long")
     got = {r["vertex"]: r["component"] for r in connected_components(df).collect()}
     assert got == _uf_components(edges)
-
-
-@pytest.mark.parametrize(
-    "edges",
-    [
-        [(i, i + 1) for i in range(20)],
-        [(a, b) for a in range(5) for b in range(a + 1, 5)]
-        + [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
-        + [(4, 10), (100, 101)],
-        [(0, i) for i in range(1, 30)],
-        [(i + 1, i) for i in range(30, 50)],
-    ],
-)
-def test_star_matches_union_find(spark, edges):
-    df = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    got = {r["vertex"]: r["component"] for r in connected_components_star(df).collect()}
-    assert got == _uf_components(edges)
-
-
-def test_star_converges_in_log_rounds_on_path(spark):
-    """The SOCC'14 refinement's reason to exist: a 1000-vertex path has
-    diameter 999 (min-label would need 999 rounds), but alternating
-    large-star/small-star squares label jumps per round — it must close
-    in ≤ ceil(log2(n)) + 4 rounds (the function raises at max_iter, so
-    passing max_iter=14 IS the round-count assertion)."""
-    n = 1000
-    edges = [(i, i + 1) for i in range(n - 1)]
-    df = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components_star(df, max_iter=14).collect()
-    }
-    assert got == {v: 0 for v in range(n)}
 
 
 def test_cluster_assignments_shape(spark):

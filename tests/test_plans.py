@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from seo_audit_etl_actor_spark.operators import similarity
 from seo_audit_etl_actor_spark.plans import audit
 from seo_audit_etl_actor_spark.queries import QUERIES
 from seo_audit_etl_actor_spark.session import load_table
@@ -67,6 +68,14 @@ def test_no_python_udf_anywhere(spark, sf_dir, name):
     assert not audit.uses_python_udf(SPECS[name].fn(spark, sf_dir))
 
 
+def test_arrow_udf_is_visible_in_plan(spark, sf_dir):
+    """The detector's positive case: every other call site asserts its
+    absence, so a broken detector would pass them all vacuously."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    df = emb.select("vec_id", similarity.lsh_bucket_pandas(64, 8).alias("bucket"))
+    assert audit.uses_python_udf(df)
+
+
 def test_cosine_topk_plans_distributed_topk(spark, sf_dir):
     p = audit.plan_string(SPECS["cosine_topk_bruteforce"].fn(spark, sf_dir))
     assert "TakeOrderedAndProject" in p
@@ -123,8 +132,6 @@ def test_prebucketed_ann_prunes_partitions(spark, sf_dir, tmp_path_factory):
     """Persisted-bucket ANN path: the per-query scan must show non-empty
     PartitionFilters (hamming-ball IN list pruned at plan time) and return
     the identical top-k as the self-contained recompute form."""
-    from seo_audit_etl_actor_spark.operators import similarity
-
     emb = load_table(spark, sf_dir, "embeddings")
     lake = str(tmp_path_factory.mktemp("ann") / "corpus")
     similarity.write_lsh_bucketed_corpus(emb, lake, dim=64)
