@@ -8,14 +8,24 @@ them in reference order, which settles every shared field (pages_total
 `??=`, errors `+=`, the photos_total overwrite). Over a single-partition
 frame each aggregation is one single-stage job.
 
+Two first-use costs of a fresh JVM are kept out of the stanzas. Case
+folding is `_fold` (a `translate` over ASCII A-Z and the Kelvin sign), not
+`lower`: Spark's `lower` goes through ICU, whose one-time class
+initialisation stalls the first audit's folding stanzas by 1.4-1.7 s, and
+for the predicates here the fold is exact (see its docstring). And a
+numeric column used by several aggregates is coerced once, in a
+projection under the `agg` (`_coerced`), so its `regexp_replace` tree is
+generated and compiled once instead of once per reference.
+
 Citations are `file:line` into /root/reference/.
 """
 
 from __future__ import annotations
 
+import string
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark.functions.coercion import to_num_js
@@ -37,11 +47,52 @@ def _cols(df: DataFrame) -> list[str]:
     return [c for c in df.columns if c != ROW_ID]
 
 
-def _finite(c):
-    """toNum(...) kept when finite (JS Number.isFinite ≍ non-null after
-    to_num_js — see coercion.to_num_js for the ''→0 quirk)."""
+def _finite(c: Column) -> Column:
+    """toNum(...) kept when finite (JS Number.isFinite): null for an
+    unparsable cell and for one past the double range ('9' * 400 parses to
+    Infinity). See coercion.to_num_js for the ''→0 quirk."""
     n = to_num_js(c)
-    return F.when(n.isNotNull(), n)
+    return F.when(F.abs(n) < F.lit(float("inf")), n)
+
+
+def _coerced(df: DataFrame, col: str, name: str) -> DataFrame:
+    """`df` reduced to `_finite(col)` as `name`. The aggregates then refer
+    to the column, so the coercion is evaluated (and code-generated) once
+    per row rather than once per reference; CollapseProject keeps the
+    projection because the expression is not cheap and is used more than
+    once."""
+    return df.select(_finite(F.col(col)).alias(name))
+
+
+# the words `_fold` results are compared with or searched for: ASCII
+# lowercase letters, none ending in 'i' (`_fold`'s precondition)
+CATEGORY_TYPES = ("primary", "secondary")
+PHOTO_TOTAL = "total"
+LIVE_PATTERN = "(live|present|ok)"
+# ASCII A-Z and U+212A KELVIN SIGN, whose lowercase is ASCII 'k'
+_FOLD_FROM = string.ascii_uppercase + "\u212a"
+_FOLD_TO = string.ascii_lowercase + "k"
+
+
+def _fold(c: Column) -> Column:
+    """JS `toLowerCase()` for the stanzas' predicates, without Spark's
+    ICU-backed `lower` (whose first evaluation in a JVM pays a one-time
+    ICU class initialisation).
+
+    Precondition: the result is only compared with '' and, for equality
+    or a regex search, with words of ASCII lowercase letters none of which
+    ends in 'i' (`CATEGORY_TYPES`, `PHOTO_TOTAL`, `LIVE_PATTERN`). Under it
+    the fold and the full Unicode lowercase give the same answer:
+    - neither maps a non-empty string to '';
+    - a match of such a word is made of ASCII letters. The fold maps A-Z
+      and U+212A as the lowercase does, and leaves every other code point
+      as it is. Of the other non-ASCII code points only U+0130 has a
+      lowercase that holds an ASCII letter: 'i' + U+0307. That 'i' is
+      followed by U+0307, so it could only end a match, and no word ends
+      in 'i'. Every other code point is an ASCII letter under neither
+      mapping or under both alike.
+    """
+    return F.translate(c, _FOLD_FROM, _FOLD_TO)
 
 
 def ahrefs_keywords(df: DataFrame) -> Apply:
@@ -51,9 +102,9 @@ def ahrefs_keywords(df: DataFrame) -> Apply:
     )
     if pos_col is None:
         return _skip  # warning path: no position column (src/etl.js:142-144)
-    pos = _finite(F.col(pos_col))
+    pos = F.col("pos")
     valid = pos.isNotNull() & (pos > 0)
-    row = df.agg(
+    row = _coerced(df, pos_col, "pos").agg(
         conditional_count(valid).alias("n"),
         conditional_count(valid & (pos <= 3)).alias("top3"),
         conditional_count(valid & (pos <= 10)).alias("top10"),
@@ -130,7 +181,8 @@ def sf_internal(df: DataFrame) -> Apply:
     sc_col = pick_col(_cols(df), ["status code", "status"])
     aggs = [F.count(F.lit(1)).alias("n")]
     if sc_col:
-        sc = _finite(F.col(sc_col))
+        df = _coerced(df, sc_col, "sc")
+        sc = F.col("sc")
         aggs.append(conditional_count((sc >= 400) & (sc < 500)).alias("c4"))
         aggs.append(conditional_count(sc >= 500).alias("c5"))
     row = df.agg(*aggs).first()
@@ -190,9 +242,9 @@ def brightlocal_ranks(df: DataFrame) -> Apply:
     pos_col = pick_col(_cols(df), ["position", "rank", "serp position", "pos"])
     if pos_col is None:
         return _skip
-    pos = _finite(F.col(pos_col))
+    pos = F.col("pos")
     valid = pos.isNotNull() & (pos > 0)
-    row = df.agg(
+    row = _coerced(df, pos_col, "pos").agg(
         F.count(F.lit(1)).alias("rows"),
         conditional_count(valid).alias("n"),
         (F.round(F.avg(F.when(valid, pos)) * 10) / 10).alias("avg_pos"),
@@ -228,7 +280,7 @@ def brightlocal_citations(df: DataFrame) -> Apply:
 
     def lowered(c):
         return (
-            F.lower(F.coalesce(F.col(c).cast("string"), F.lit("undefined")))
+            _fold(F.coalesce(F.col(c).cast("string"), F.lit("undefined")))
             if c
             else F.lit("")
         )
@@ -239,8 +291,7 @@ def brightlocal_citations(df: DataFrame) -> Apply:
         if link_col
         else F.lit("")
     )
-    live_pat = "(live|present|ok)"
-    looks_live = s.rlike(live_pat) | gs.rlike(live_pat) | (F.length(link) > 0)
+    looks_live = s.rlike(LIVE_PATTERN) | gs.rlike(LIVE_PATTERN) | (F.length(link) > 0)
     counted = (s != "") | (gs != "") | (link != "")
     row = df.agg(
         conditional_count(counted).alias("total"),
@@ -302,7 +353,7 @@ def gbp_categories(df: DataFrame) -> Apply:
     cols = _cols(df)
     if "category_type" not in cols or "category_name" not in cols:
         return _skip  # the document keeps its None / []
-    ctype = F.lower(F.coalesce(F.col("category_type").cast("string"), F.lit("")))
+    ctype = _fold(F.coalesce(F.col("category_type").cast("string"), F.lit("")))
     name = F.col("category_name")
     truthy = name.isNotNull() & (name != "")
 
@@ -311,7 +362,8 @@ def gbp_categories(df: DataFrame) -> Apply:
             collect_sorted(F.when((ctype == kind) & truthy, name), F.col(ROW_ID))
         )
 
-    row = df.agg(picked("primary").alias("prim"), picked("secondary").alias("sec")).first()
+    primary, secondary = CATEGORY_TYPES
+    row = df.agg(picked(primary).alias("prim"), picked(secondary).alias("sec")).first()
 
     def apply(doc: dict) -> None:
         gbp = doc["local"]["gbp"]
@@ -327,10 +379,10 @@ def gbp_photos(df: DataFrame) -> Apply:
     cols = _cols(df)
     if "photo_type" not in cols or "count" not in cols:
         return _skip
-    ptype = F.lower(F.coalesce(F.col("photo_type").cast("string"), F.lit("")))
+    ptype = _fold(F.coalesce(F.col("photo_type").cast("string"), F.lit("")))
     row = df.agg(
         F.array_compact(
-            collect_sorted(F.when(ptype == "total", F.struct(to_num_js("count").alias("n"))), F.col(ROW_ID))
+            collect_sorted(F.when(ptype == PHOTO_TOTAL, F.struct(to_num_js("count").alias("n"))), F.col(ROW_ID))
         ).alias("hits")
     ).first()
 

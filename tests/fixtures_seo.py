@@ -34,6 +34,8 @@ def inner_site_audit_zip() -> bytes:
 
 
 PLACEHOLDER = _csv("status,message", "error,login required")
+# 400 digits: parses to Infinity (JS Number, Python float, Spark double)
+HUGE = "9" * 400
 
 
 def build_fixture_zip(
@@ -41,7 +43,11 @@ def build_fixture_zip(
     omit: set[str] | None = None,
     corrupt_site_audit: bool = False,
     keywords_no_position_col: bool = False,
+    huge_numbers: bool = False,
 ) -> bytes:
+    """`huge_numbers` appends one row with a 400-digit number to the
+    keywords (position), backlinks (DR), Screaming Frog internal (status
+    code) and BrightLocal ranks (position) exports."""
     omit = omit or set()
     entries: dict[str, bytes] = {}
 
@@ -62,21 +68,22 @@ def build_fixture_zip(
             "kw10\t-2\t5",
         ]
     )
+    if huge_numbers:
+        kw_rows.append(f"kw11\t{HUGE}\t5")
     entries["ahrefs_keywords.csv"] = _utf16le(_csv(kw_header, *kw_rows), bom=True)
 
     entries["ahrefs_top_pages.csv"] = _utf16le(
         _csv("Current URL\tTraffic", "/a\t10", "/b\t8", "/a\t7", "/c\t5"), bom=False
     )
-    entries["ahrefs_backlinks.csv"] = _utf16le(
-        _csv("Referring domain\tDR", "d1.com\t50", "d2.com\t70", "d3.com\t", "d4.com\t30"),
-        bom=True,
-    )
+    backlinks = ["d1.com\t50", "d2.com\t70", "d3.com\t", "d4.com\t30"]
+    if huge_numbers:
+        backlinks.append(f"d5.com\t{HUGE}")
+    entries["ahrefs_backlinks.csv"] = _utf16le(_csv("Referring domain\tDR", *backlinks), bom=True)
     entries["ahrefs_site_audit.zip"] = (
         b"NOT A ZIP AT ALL" if corrupt_site_audit else inner_site_audit_zip()
     )
 
-    entries["sf_internal_all.csv"] = _csv(
-        "Address,Status Code,Title 1",
+    sf_rows = [
         "/p1,200,Home",
         "/p2,200,About",
         "/p3,301,Old",
@@ -84,7 +91,10 @@ def build_fixture_zip(
         "/p5,404,Gone2",
         "/p6,500,Err",
         "/p7,abc,Weird",
-    ).encode()
+    ]
+    if huge_numbers:
+        sf_rows.append(f"/p8,{HUGE},Huge")
+    entries["sf_internal_all.csv"] = _csv("Address,Status Code,Title 1", *sf_rows).encode()
 
     entries["sf_structured_data.csv"] = _csv(
         "Address,Errors,Warnings,Total Types,Unique Types",
@@ -111,9 +121,10 @@ def build_fixture_zip(
     )
     # lighthouse_city.json deliberately missing
 
-    entries["brightlocal_ranks.csv"] = _csv(
-        "Keyword,Position", "kw1,1", "kw2,3", "kw3,4", "kw4,20"
-    ).encode()
+    ranks = ["kw1,1", "kw2,3", "kw3,4", "kw4,20"]
+    if huge_numbers:
+        ranks.append(f"kw5,{HUGE}")
+    entries["brightlocal_ranks.csv"] = _csv("Keyword,Position", *ranks).encode()
 
     entries["brightlocal_citations.csv"] = _csv(
         "Status,General Status,Citation Link",

@@ -9,6 +9,7 @@ see the arithmetic notes inline.
 
 from __future__ import annotations
 
+import json
 import threading
 
 import pytest
@@ -145,8 +146,6 @@ def test_missing_sentinels_serialized(result):
 
 def test_write_outputs(result, tmp_path):
     paths = write_outputs(result, str(tmp_path / "out"))
-    import json
-
     audit = json.loads(open(paths["normalized_audit.json"]).read())
     assert audit["provenance"]["gsc"] == "present"
     scores = json.loads(open(paths["scores.json"]).read())
@@ -290,6 +289,36 @@ def test_keywords_without_position_column(spark):
     # warning path: file present with rows, but buckets stay null
     assert res["manifest"]["ahrefs_keywords.csv"]["rows"] == 10
     assert res["normalized_audit"]["onsite"]["keywords"]["top10"] is None
+
+
+def test_non_finite_cells_are_dropped(spark, tmp_path):
+    """A 400-digit cell parses to Infinity, which JS `Number.isFinite`
+    drops. Each export below gets one such row on top of the fixture's,
+    so every value is the fixture's own, apart from the row counts."""
+    res = process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip(huge_numbers=True))
+    doc = res["normalized_audit"]
+    assert res["manifest"]["ahrefs_keywords.csv"]["rows"] == 11
+    assert doc["onsite"]["keywords"] == {"top3": 3, "top10": 5, "top100": 7}
+    # 5 rows, DR mean over [50, 70, 0, 30] only
+    assert doc["backlinks"]["ref_domains"] == 5
+    assert doc["backlinks"]["dr"] == pytest.approx(37.5)
+    # the huge status code is neither a 4xx nor a 5xx
+    assert doc["onsite"]["errors"]["4xx"] == 5 and doc["onsite"]["errors"]["5xx"] == 2
+    # 5 rows, 4 finite positions: (1+3+4+20)/4, 1 and 3 of 4 in the top 3
+    assert doc["local"]["rank"] == {
+        "avg_pos": pytest.approx(7.0),
+        "pct_top3": pytest.approx(0.5),
+        "keywords_tracked": 4,
+    }
+    assert res["scores"]["oss"] == pytest.approx(39.6)
+    assert res["scores"]["lss"] == pytest.approx(63.5)
+
+    def no_constant(name):
+        raise ValueError(f"{name} is not JSON")
+
+    paths = write_outputs(res, str(tmp_path / "out"))
+    for path in paths.values():
+        json.loads(open(path).read(), parse_constant=no_constant)
 
 
 def test_validation_rejects_blank_input():
