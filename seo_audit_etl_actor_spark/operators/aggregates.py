@@ -82,6 +82,19 @@ def collect_sorted(value: Column, order: Column) -> Column:
     return F.transform(pairs, lambda s: s["v"])
 
 
+def weighted_score(acc: Column, used: Column, total: Column) -> tuple[Column, Column]:
+    """(score, coverage) of a coverage-weighted composite from its sums
+    (A13; reference src/scoring.js:38-46, 73-74): `acc` = Σ wᵢ·rawᵢ and
+    `used` = Σ wᵢ over the available, non-null components, `total` = Σ wᵢ.
+
+    score = round(acc / used × 1000) / 10 ; degenerate used=0 → 0
+    (src/scoring.js:44). coverage = used / total, rounded to 0.01.
+    JS Math.round is half-away-from-zero on the non-negative values seen
+    here == Spark HALF_UP `round`."""
+    score = F.coalesce(F.round(acc / F.nullif(used, F.lit(0.0)) * 1000) / 10, F.lit(0.0))
+    return score, F.round(used / total, 2)
+
+
 def coverage_weighted_score(
     df: DataFrame,
     component: str = "component",
@@ -91,23 +104,16 @@ def coverage_weighted_score(
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Coverage-weighted composite score over a long-format component frame
-    (A13; reference src/scoring.js:38-46).
-
-    score = round(Σ wᵢ·rawᵢ / Σ wᵢ over available & non-null components
-            × 1000) / 10 ; degenerate used=0 → 0 (src/scoring.js:44).
-    coverage = used_weight / total_weight, rounded to 0.01
-    (src/scoring.js:73-74). JS Math.round is half-away-from-zero on the
-    non-negative values seen here == Spark HALF_UP `round`.
-    """
+    (A13): `weighted_score` over per-group sums."""
     usable = F.col(avail) & F.col(raw).isNotNull()
     w, r = F.col(weight), F.col(raw)
     used = F.sum(F.when(usable, w).otherwise(F.lit(0.0)))
     acc = F.sum(F.when(usable, w * r).otherwise(F.lit(0.0)))
     total = F.sum(w)
-    score = F.coalesce(F.round(acc / F.nullif(used, F.lit(0.0)) * 1000) / 10, F.lit(0.0))
+    score, coverage = weighted_score(acc, used, total)
     return df.groupBy(*group_cols).agg(
         score.alias("score"),
-        F.round(used / total, 2).alias("coverage"),
+        coverage.alias("coverage"),
         used.cast("double").alias("weight_used"),
         total.cast("double").alias("weight_total"),
     )

@@ -272,9 +272,24 @@ def process_zip(
     return {"normalized_audit": doc, "scores": scores, "manifest": manifest}
 
 
+def _js_numbers(obj):
+    """`obj` with every integral double that JS holds exactly (|x| < 2^53)
+    as an int, so `json.dumps` spells it as `JSON.stringify` does: `271`,
+    not `271.0`, and `0` for -0.0. Other floats stay floats; their
+    exponent spelling still differs (SURVEY S7)."""
+    if isinstance(obj, float):
+        return int(obj) if obj.is_integer() and abs(obj) < 2**53 else obj
+    if isinstance(obj, dict):
+        return {k: _js_numbers(v) for k, v in obj.items()}
+    if isinstance(obj, list):
+        return [_js_numbers(v) for v in obj]
+    return obj
+
+
 def write_outputs(result: dict, out_dir: str) -> dict[str, str]:
     """KV-sink analog (S7, src/main.js:30-38): three JSON artifacts + the
-    OUTPUT index, reference-shaped (sentinels restored by the serializer)."""
+    OUTPUT index, reference-shaped (sentinels restored by the serializer),
+    UTF-8 text with non-ASCII characters written as themselves."""
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     artifacts = {
@@ -282,12 +297,10 @@ def write_outputs(result: dict, out_dir: str) -> dict[str, str]:
         "scores.json": result["scores"],
         "etl_manifest.json": result["manifest"],
     }
-    paths = {}
-    for name, obj in artifacts.items():
-        p = out / name
-        p.write_text(json.dumps(obj, indent=2, ensure_ascii=False))
-        paths[name] = str(p)
     index = {"artifacts": sorted(artifacts), "client": result["normalized_audit"]["meta"]["client"]}
-    (out / "OUTPUT.json").write_text(json.dumps(index, indent=2))
-    paths["OUTPUT.json"] = str(out / "OUTPUT.json")
+    paths = {}
+    for name, obj in {**artifacts, "OUTPUT.json": index}.items():
+        p = out / name
+        p.write_text(json.dumps(_js_numbers(obj), indent=2, ensure_ascii=False), encoding="utf-8")
+        paths[name] = str(p)
     return paths

@@ -3,24 +3,26 @@
 
 The raw component derivations are Spark Column expressions over a
 single-row frame (the F5-F9 expression library — JS `||`-zero semantics via
-nonzero_coalesce, clamps via clamp01); the weighted aggregate is the A13
-operator over a long-format (component, weight, raw, avail) frame. Both
-run through Catalyst, so the same expressions serve a million-document
-scoring table unchanged. Both frames go to Spark as Arrow tables, which
-the JVM holds as `LocalRelation`s: Catalyst folds the single-row
-projection without running a job, and no Python worker is started. The
-20-row long frame is one partition, so the per-family aggregate needs no
-shuffle: the whole scoring is one single-stage job.
+nonzero_coalesce, clamps via clamp01). The A13 weighted aggregate is one
+more projection over the same row: per family, `used` and `acc` add up
+`when(rawᵢ IS NOT NULL, …)` terms of the available components in weight
+order (availability is known on the driver), and `weighted_score` — the
+formula the grouped `coverage_weighted_score` operator uses too — turns
+them into the score and the coverage. The frame goes to Spark as an Arrow
+table, which the JVM holds as a `LocalRelation`, so Catalyst folds the
+whole projection on the driver: scoring runs no Spark job and starts no
+Python worker, and the same expressions serve a million-document scoring
+table unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.functions.coercion import clamp01, nonzero_coalesce
-from seo_audit_etl_actor_spark.operators.aggregates import coverage_weighted_score
+from seo_audit_etl_actor_spark.operators.aggregates import weighted_score
 
 OSS_WEIGHTS = {
     "gsc_clicks": 30,
@@ -56,9 +58,9 @@ _SCALARS = T.StructType(
 )
 
 
-def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
+def _components(spark: SparkSession, doc: dict) -> DataFrame:
     """Raw 0..1 component scores (src/scoring.js:16-36, 59-68) as one
-    single-row Spark projection."""
+    single-row Spark projection, a column per component."""
     import pyarrow as pa
 
     onsite, local = doc["onsite"], doc["local"]
@@ -94,8 +96,9 @@ def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
     reviews = F.when(
         F.col("avg_rating").isNotNull(), clamp01((F.col("avg_rating") - 3.5) / 1.5)
     )
-
-    row = df.select(
+    # gsc_clicks, indexed_valid and gbp_actions have no source yet: they
+    # are never available (src/scoring.js:7-13, 51-57) and get no column
+    return df.select(
         kw.alias("kw_top10"),
         F.col("pass_rate").alias("cwv_pass"),
         health.alias("site_health"),
@@ -103,20 +106,7 @@ def _raw_components(spark: SparkSession, doc: dict) -> dict[str, float | None]:
         F.coalesce(F.col("pct_top3"), F.lit(0.0)).alias("pct_top3"),
         F.col("consistency").alias("citations"),
         reviews.alias("reviews"),
-    ).first()
-
-    return {
-        "kw_top10": row["kw_top10"],
-        "cwv_pass": row["cwv_pass"],
-        "site_health": row["site_health"],
-        "gsc_clicks": None,
-        "indexed_valid": None,
-        "avg_local_rank": row["avg_local_rank"],
-        "pct_top3": row["pct_top3"],
-        "citations": row["citations"],
-        "reviews": row["reviews"],
-        "gbp_actions": None,
-    }
+    )
 
 
 def _f(v) -> float | None:
@@ -144,45 +134,50 @@ def _availability(doc: dict) -> dict[str, bool]:
     }
 
 
-_LONG = T.StructType(
-    [
-        T.StructField("family", T.StringType(), False),
-        T.StructField("component", T.StringType(), False),
-        T.StructField("weight", T.DoubleType(), False),
-        T.StructField("raw", T.DoubleType(), True),
-        T.StructField("avail", T.BooleanType(), False),
+def _family_columns(family: str, weights: dict[str, int], avail: dict[str, bool]) -> list[Column]:
+    """score, coverage and weight used of one family over the component
+    columns. The terms are added in weight order, starting from 0.0 — the
+    order a single-partition `sum` over the long-format rows added them in,
+    so the doubles are the grouped operator's to the bit. An unavailable
+    component's term is the literal 0.0, and adding 0.0 to a sum that
+    starts at +0.0 leaves it unchanged, so it is left out on the driver."""
+    zero = F.lit(0.0)
+    used, acc = zero, zero
+    for comp, w in weights.items():
+        if not avail[comp]:
+            continue
+        raw, weight = F.col(comp), F.lit(float(w))
+        usable = raw.isNotNull()
+        used = used + F.when(usable, weight).otherwise(zero)
+        acc = acc + F.when(usable, weight * raw).otherwise(zero)
+    score, coverage = weighted_score(acc, used, F.lit(float(sum(weights.values()))))
+    return [
+        score.alias(family),
+        coverage.alias(f"{family}_coverage"),
+        used.alias(f"{family}_weight_used"),
     ]
-)
 
 
 def compute_scores(spark: SparkSession, doc: dict) -> dict:
     """→ the reference's scores document (src/scoring.js:72-76)."""
-    import pyarrow as pa
-
-    raw = _raw_components(spark, doc)
+    comps = _components(spark, doc)
     avail = _availability(doc)
-    rows = [
-        dict(family=fam, component=comp, weight=float(w), raw=raw[comp], avail=avail[comp])
-        for fam, weights in (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
-        for comp, w in weights.items()
-    ]
-    long_df = spark.createDataFrame(pa.Table.from_pylist(rows), _LONG).coalesce(1)
-    agg = {
-        r["family"]: r
-        for r in coverage_weighted_score(long_df, group_cols=["family"]).collect()
-    }
-    oss, lss = agg["oss"], agg["lss"]
+    row = comps.select(
+        *comps.columns,
+        *_family_columns("oss", OSS_WEIGHTS, avail),
+        *_family_columns("lss", LSS_WEIGHTS, avail),
+    ).first().asDict()
     return {
-        "oss": oss["score"],
-        "oss_coverage": oss["coverage"],
-        "oss_weight_used": int(oss["weight_used"]),
-        "oss_weight_total": int(oss["weight_total"]),
-        "lss": lss["score"],
-        "lss_coverage": lss["coverage"],
-        "lss_weight_used": int(lss["weight_used"]),
-        "lss_weight_total": int(lss["weight_total"]),
+        "oss": row["oss"],
+        "oss_coverage": row["oss_coverage"],
+        "oss_weight_used": int(row["oss_weight_used"]),
+        "oss_weight_total": sum(OSS_WEIGHTS.values()),
+        "lss": row["lss"],
+        "lss_coverage": row["lss_coverage"],
+        "lss_weight_used": int(row["lss_weight_used"]),
+        "lss_weight_total": sum(LSS_WEIGHTS.values()),
         "components": {
-            "oss": {"raw": {k: raw[k] for k in OSS_WEIGHTS}},
-            "lss": {"raw": {k: raw[k] for k in LSS_WEIGHTS}},
+            "oss": {"raw": {k: row.get(k) for k in OSS_WEIGHTS}},
+            "lss": {"raw": {k: row.get(k) for k in LSS_WEIGHTS}},
         },
     }

@@ -14,19 +14,14 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from seo_audit_etl_actor_spark.session import scoped_conf
 
-@contextlib.contextmanager
+
 def aqe_off(spark: SparkSession):
     """AQE disabled for the block, the caller's setting restored after.
     AQE wraps the static plan until execution, hiding the exchanges, joins
     and codegen stages a plan check inspects."""
-    key = "spark.sql.adaptive.enabled"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prior)
+    return scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:

@@ -7,12 +7,17 @@ Pandas-UDF extension paths, and a shuffle-partition default that the harness
 overrides via env. Arrow also carries the audit frames: the pipeline hands
 its driver-held rows to `createDataFrame` as `pyarrow` tables, and the
 catalog's one-row audit and differential results go through
-`summary_frame`; both become JVM `LocalRelation`s whatever the Arrow conf
-says, so no job over them starts a Python worker.
+`summary_frame`. A table below `spark.sql.execution.arrow.
+localRelationThreshold` becomes a JVM `LocalRelation`, a bigger one a JVM
+RDD of Arrow batches; `csv_smart.to_dataframe` lowers the threshold to
+64 KiB for its own call (`scoped_conf`), so an audit's 20k-row exports
+take the RDD path, while the session keeps Spark's default. Neither form
+starts a Python worker in a job over it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -161,6 +166,23 @@ def get_spark(app_name: str = "seo-audit-etl-actor-spark") -> SparkSession:
             active.conf.set(k, v)
         return active
     return builder.master(f"local[{cpus}]").getOrCreate()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """`key` set to `value` for the block, the caller's setting restored
+    after, also when the block raises; a key the caller never set is unset
+    again, so it keeps following its default. The conf is the session's,
+    so other threads see the value while the block runs."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}

@@ -15,8 +15,11 @@ The decode + parse happens on the driver: these are the reference's
 ZIP-of-small-CSVs inputs, where per-file driver-side parsing is the right
 cost model (SURVEY §3.4). Row counts and placeholder checks read the
 `ParsedCsv` directly. Only a stanza aggregation hands it to Spark, via
-`to_dataframe`: the rows go over as one Arrow table, which the JVM holds
-as a `LocalRelation`, so no stanza job waits on a Python worker. The frame
+`to_dataframe`: the rows go over as one Arrow table. A table of more than
+64 KiB of Arrow batches (the 20k-row exports) stays a JVM RDD of those
+batches, decoded in the task, so its rows are not part of any Catalyst
+plan; a smaller one becomes a `LocalRelation`, the cheaper hand-off for a
+few rows. Either way no stanza job waits on a Python worker. The frame
 is all-string with a `__row_id` ingest-order column (H2 determinism —
 Spark has no implicit file order), and it is a single partition: the rows
 already sit on the driver, so slicing them only bought a shuffle, and a
@@ -38,6 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from seo_audit_etl_actor_spark.session import scoped_conf
 from seo_audit_etl_actor_spark.sources.sniff import (
     looks_utf16,
     sniff_delimiter,
@@ -46,6 +50,9 @@ from seo_audit_etl_actor_spark.sources.sniff import (
 
 MAX_ROW_ERRORS = 5
 ROW_ID = "__row_id"
+# Arrow bytes above which `to_dataframe`'s frame stays an RDD of Arrow
+# batches instead of becoming a `LocalRelation`
+ARROW_RDD_THRESHOLD = 64 * 1024
 
 
 @dataclass
@@ -120,11 +127,16 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     first/collect need an explicit order column).
 
     The driver-held rows are built column by column into one Arrow table
-    (a missing cell stays null, distinct from ''), which Spark turns into a
-    JVM `LocalRelation` (above `spark.sql.execution.arrow.
-    localRelationThreshold`, a JVM-side RDD of Arrow batches): no row is
-    pickled and no stanza job starts a Python worker to read it. The frame
-    is coalesced to one partition, so an `agg` over it plans no Exchange."""
+    (a missing cell stays null, distinct from ''). `createDataFrame` runs
+    with `spark.sql.execution.arrow.localRelationThreshold` at
+    `ARROW_RDD_THRESHOLD`, the caller's value restored after: above it
+    Spark keeps the batches as a JVM RDD (`Scan ExistingRDD arrow`) that
+    the task decodes, so the analyser, the optimiser and every job's task
+    skip a 20k-row `LocalRelation`; below it the few rows become a
+    `LocalRelation`. No row is pickled and no job over the frame starts a
+    Python worker. The frame is coalesced to one partition, so an `agg`
+    over it plans no Exchange (an Arrow-RDD scan reports no partitioning,
+    so without the coalesce even a one-batch frame would get one)."""
     if not parsed.header:
         return None
     import pyarrow as pa
@@ -139,7 +151,10 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
         + [pa.array(c, pa.string()) for c in columns],
         names=[ROW_ID, *parsed.header],
     )
-    return spark.createDataFrame(table, schema).coalesce(1)
+    threshold = "spark.sql.execution.arrow.localRelationThreshold"
+    with scoped_conf(spark, threshold, str(ARROW_RDD_THRESHOLD)):
+        df = spark.createDataFrame(table, schema)
+    return df.coalesce(1)
 
 
 def read_csv_distributed(

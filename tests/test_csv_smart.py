@@ -1,6 +1,7 @@
 """Driver-side CSV parse → Spark hand-off (sources/csv_smart.py):
-header renaming and the Arrow-backed, single-partition `to_dataframe`
-frame (and scoring's long frame, built the same way)."""
+header renaming, the Arrow-backed, single-partition `to_dataframe` frame
+(a `LocalRelation` when small, an RDD of Arrow batches when big), and
+scoring's single-row frame, which Catalyst folds without a job."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from seo_audit_etl_actor_spark.pipeline.document import empty_normalized
 from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
 from seo_audit_etl_actor_spark.plans.audit import aqe_off
 from seo_audit_etl_actor_spark.sources.csv_smart import (
+    ARROW_RDD_THRESHOLD,
     ROW_ID,
     ParsedCsv,
     _dedupe_header,
@@ -41,7 +43,8 @@ def _leaf(df) -> str:
 
 def test_frame_is_a_local_table_scan(spark):
     # Built from a list of tuples, the frame planned `Scan ExistingRDD` over
-    # a PythonRDD, and every job over it started a Python worker.
+    # a PythonRDD, and every job over it started a Python worker. A few
+    # rows stay a LocalRelation under `to_dataframe`'s lowered threshold.
     df = to_dataframe(spark, parse_csv_smart_rows(b"url,status\n/a,200\n/b,404\n"))
     assert _leaf(df) == "LocalTableScan"
 
@@ -99,8 +102,49 @@ def test_frame_is_one_partition_and_aggregates_without_exchange(spark):
     assert agg.first().asDict() == {"urls": 5, "n": 6}
 
 
-def test_scoring_runs_one_job(jobs_of, spark):
+def test_big_frame_is_an_arrow_rdd_scan_without_python(spark):
+    # 20,000 rows are ~0.5 MB of Arrow: as a LocalRelation they were walked
+    # by the analyser and optimiser of every plan over them, and shipped
+    # inside every task
+    csv = b"url,status\n" + b"".join(b"/p%d,200\n" % i for i in range(20_000))
+    df = to_dataframe(spark, parse_csv_smart_rows(csv))
+    assert _leaf(df) == "Scan ExistingRDD arrow"
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    agg = df.agg(F.countDistinct("url").alias("urls"), F.count(F.lit(1)).alias("n"))
+    with aqe_off(spark):
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert agg.first().asDict() == {"urls": 20_000, "n": 20_000}
+
+
+@pytest.mark.parametrize("caller", ["1m", None], ids=["set", "unset"])
+def test_to_dataframe_restores_the_callers_threshold(spark, monkeypatch, caller):
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    if caller is not None:
+        spark.conf.set(key, caller)
+    seen = []
+
+    def failing_create(*args, **kwargs):
+        seen.append(spark.conf.get(key))
+        raise RuntimeError("createDataFrame failed")
+
+    try:
+        parsed = parse_csv_smart_rows(b"a\n1\n")
+        to_dataframe(spark, parsed)
+        assert spark.conf.get(key, None) == caller
+        monkeypatch.setattr(spark, "createDataFrame", failing_create)
+        with pytest.raises(RuntimeError):
+            to_dataframe(spark, parsed)
+        assert spark.conf.get(key, None) == caller
+        assert seen == [str(ARROW_RDD_THRESHOLD)]
+    finally:
+        spark.conf.unset(key)
+
+
+def test_scoring_runs_no_job(jobs_of, spark):
+    # Scoring used to aggregate a 20-row long frame in one job; now it is a
+    # projection over a one-row LocalRelation, which Catalyst folds
     doc = empty_normalized("c", "example.com", "2025-01-01")
     scores, jobs, _ = jobs_of(lambda: compute_scores(spark, doc))
-    assert len(jobs) == 1
+    assert len(jobs) == 0
     assert (scores["oss_weight_used"], scores["lss_weight_used"]) == (20, 40)

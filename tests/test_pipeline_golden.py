@@ -10,13 +10,14 @@ see the arithmetic notes inline.
 from __future__ import annotations
 
 import json
+import re
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from seo_audit_etl_actor_spark.pipeline import stanzas
-from seo_audit_etl_actor_spark.pipeline.document import to_reference_json
+from seo_audit_etl_actor_spark.pipeline.document import empty_normalized, to_reference_json
 from seo_audit_etl_actor_spark.pipeline.run import JobInput, process_zip, write_outputs
 from seo_audit_etl_actor_spark.sources.csv_smart import parse_csv_smart_rows
 from seo_audit_etl_actor_spark.sources.zip_io import NotAZipError
@@ -153,20 +154,54 @@ def test_write_outputs(result, tmp_path):
     assert "etl_manifest.json" in paths and "OUTPUT.json" in paths
 
 
+def test_write_outputs_spells_numbers_and_text_as_json_stringify(tmp_path):
+    """JSON.stringify writes an integral double without `.0` (and -0 as 0),
+    and the reference's files are UTF-8 with names written as themselves."""
+    doc = empty_normalized("Café", "cafe.example", "2025-06-01")
+    doc["local"]["reviews"]["count_total"] = 271.0
+    doc["local"]["citations"]["consistency"] = 1.0
+    doc["local"]["gbp"]["photos_total"] = -0.0
+    doc["local"]["gbp"]["primary_category"] = "Bäckerei"
+    doc["local"]["rank"]["pct_top3"] = 0.5
+    result = {
+        "normalized_audit": doc,
+        "scores": {"components": {"oss": {"raw": {"site_health": 0.0}}}},
+        "manifest": {"entries": []},
+    }
+    paths = write_outputs(result, str(tmp_path / "out"))
+    raw = {name: open(p, "rb").read() for name, p in paths.items()}
+    text = {name: b.decode("utf-8") for name, b in raw.items()}
+    audit = text["normalized_audit.json"]
+    for field, spelled in [
+        ("count_total", "271"),
+        ("consistency", "1"),
+        ("photos_total", "0"),
+        ("pct_top3", "0.5"),
+    ]:
+        assert re.search(rf'"{field}": {spelled}[,\n]', audit), field
+    assert re.search(r'"site_health": 0\n', text["scores.json"])
+    assert "Café".encode() in raw["normalized_audit.json"]
+    assert "Café".encode() in raw["OUTPUT.json"]
+    assert "Bäckerei".encode() in raw["normalized_audit.json"]
+    assert not any("\\u00" in t for t in text.values())
+    assert json.loads(audit)["local"]["reviews"]["count_total"] == 271
+
+
 def test_fixture_audit_job_budget(spark, jobs_of):
     """Row counts and placeholder checks read the driver-side parse, so
     Spark runs only the stanza aggregations and the scoring. The fixture
     audit ran 62 jobs when every entry was counted with `df.count()` and
     placeholders were checked with `orderBy().first()`; 23 once they read
     the parse; 21 once the frames were Arrow-backed `LocalRelation`s, over
-    which Catalyst folds scoring's single-row projection; 10 now that every
-    frame is one partition, so each stanza aggregation and the scoring is a
-    single-stage job. The stanzas run in pool threads, which must take the
+    which Catalyst folds scoring's single-row projection; 10 once every
+    frame was one partition, so each stanza aggregation and the scoring is
+    a single-stage job; 9 now that scoring is one folded projection and
+    runs no job. The stanzas run in pool threads, which must take the
     caller's job group with them: no job of the call may start outside it."""
     _, jobs, ungrouped = jobs_of(
         lambda: process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip())
     )
-    assert len(jobs) <= 10
+    assert len(jobs) <= 9
     assert ungrouped == set()
 
 

@@ -17,9 +17,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.functions.coercion import to_num, to_num_js
-from seo_audit_etl_actor_spark.operators.aggregates import percentile_nearest_rank
+from seo_audit_etl_actor_spark.operators.aggregates import (
+    coverage_weighted_score,
+    percentile_nearest_rank,
+)
 from seo_audit_etl_actor_spark.pipeline.document import empty_normalized
-from seo_audit_etl_actor_spark.pipeline.scoring import compute_scores
+from seo_audit_etl_actor_spark.pipeline.scoring import (
+    LSS_WEIGHTS,
+    OSS_WEIGHTS,
+    _availability,
+    compute_scores,
+)
 from seo_audit_etl_actor_spark.sources.csv_smart import parse_csv_smart_rows
 from seo_audit_etl_actor_spark.sources.sniff import looks_utf16
 
@@ -213,6 +221,75 @@ def test_scoring_invariants(spark):
             assert s[f"{fam}_weight_used"] <= s[f"{fam}_weight_total"] == 100
             if s[f"{fam}_weight_used"] == 0:
                 assert s[fam] == 0.0
+
+
+def _edge_docs() -> list[dict]:
+    def doc(**leaves) -> dict:
+        d = empty_normalized("c", "d", "2025-01-01")
+        for path, v in leaves.items():
+            section, group, key = path.split("__")
+            d[section][group][key] = v
+        return d
+
+    zero_errors = doc(onsite__content__pages_total=40, onsite__keywords__top10=3,
+                      onsite__keywords__top100=9)
+    for k in zero_errors["onsite"]["errors"]:
+        zero_errors["onsite"]["errors"][k] = 0
+    return [
+        # every optional component unavailable
+        empty_normalized("c", "d", "2025-01-01"),
+        # the `|| fallback` zeros
+        doc(onsite__keywords__top10=0, onsite__keywords__top100=0,
+            onsite__content__pages_total=0, local__rank__avg_pos=0.0),
+        # the reviews clamp's two ends
+        doc(local__reviews__avg_rating=3.5),
+        doc(local__reviews__avg_rating=5.0, local__reviews__count_total=12),
+        zero_errors,
+    ]
+
+
+def test_scoring_projection_matches_the_long_frame_aggregate(spark):
+    """compute_scores folds each family's sums into one projection; the
+    long-format path it replaced put one row per (family, component) into
+    a single-partition frame and ran `coverage_weighted_score` over it.
+    Both add the same terms in the same order, so the results must be
+    equal, not approximately equal. Every doc's rows go into one frame,
+    grouped by (doc, family): a single partition keeps each group's rows in
+    weight order, as the per-doc frame did."""
+    import pyarrow as pa
+
+    rng = random.Random(20251017)
+    docs = _edge_docs() + [_random_doc(rng) for _ in range(300)]
+    scores = [compute_scores(spark, d) for d in docs]
+    rows = [
+        dict(doc=i, family=fam, component=comp, weight=float(w),
+             raw=s["components"][fam]["raw"][comp], avail=_availability(d)[comp])
+        for i, (d, s) in enumerate(zip(docs, scores))
+        for fam, weights in (("oss", OSS_WEIGHTS), ("lss", LSS_WEIGHTS))
+        for comp, w in weights.items()
+    ]
+    schema = T.StructType(
+        [
+            T.StructField("doc", T.LongType(), False),
+            T.StructField("family", T.StringType(), False),
+            T.StructField("component", T.StringType(), False),
+            T.StructField("weight", T.DoubleType(), False),
+            T.StructField("raw", T.DoubleType(), True),
+            T.StructField("avail", T.BooleanType(), False),
+        ]
+    )
+    long_df = spark.createDataFrame(pa.Table.from_pylist(rows), schema).coalesce(1)
+    expected = {
+        (r["doc"], r["family"]): r
+        for r in coverage_weighted_score(long_df, group_cols=["doc", "family"]).collect()
+    }
+    assert len(expected) == 2 * len(docs)
+    for i, s in enumerate(scores):
+        for fam in ("oss", "lss"):
+            e = expected[(i, fam)]
+            got = (s[fam], s[f"{fam}_coverage"], s[f"{fam}_weight_used"], s[f"{fam}_weight_total"])
+            want = (e["score"], e["coverage"], int(e["weight_used"]), int(e["weight_total"]))
+            assert got == want, (i, fam)
 
 
 # ---------------------------------------------------------- sessionization
