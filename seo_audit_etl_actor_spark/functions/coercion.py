@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _NUMERIC_STRIP = r"[^0-9.\-]"
 
@@ -30,10 +31,12 @@ def to_num(c: Column | str) -> Column:
     stays in codegen — never a Python UDF.
     """
     c = F.col(c) if isinstance(c, str) else c
-    stripped = F.regexp_replace(c.cast("string"), _NUMERIC_STRIP, "")
+    stripped = F.regexp_replace(c.cast(T.StringType()), _NUMERIC_STRIP, "")
     # try_cast, not cast: ANSI mode (Spark 4 default) makes a plain cast
-    # THROW on malformed numerics; null-on-failure is the required semantic
-    return F.nullif(stripped, F.lit("")).try_cast("double")
+    # THROW on malformed numerics; null-on-failure is the required semantic.
+    # The types are DataType objects, not names: a name goes through Spark's
+    # SQL parser, whose first use in a JVM costs ~0.3 s (ANTLR set-up)
+    return F.nullif(stripped, F.lit("")).try_cast(T.DoubleType())
 
 
 def to_num_js(c: Column | str) -> Column:
@@ -47,9 +50,9 @@ def to_num_js(c: Column | str) -> Column:
     catalog.
     """
     c = F.col(c) if isinstance(c, str) else c
-    stripped = F.regexp_replace(F.coalesce(c.cast("string"), F.lit("")), _NUMERIC_STRIP, "")
+    stripped = F.regexp_replace(F.coalesce(c.cast(T.StringType()), F.lit("")), _NUMERIC_STRIP, "")
     # try_cast: ANSI-safe null on malformed ('1.2.3', '--1'), matching NaN
-    return F.when(stripped == "", F.lit(0.0)).otherwise(stripped.try_cast("double"))
+    return F.when(stripped == "", F.lit(0.0)).otherwise(stripped.try_cast(T.DoubleType()))
 
 
 def clamp01(c: Column) -> Column:

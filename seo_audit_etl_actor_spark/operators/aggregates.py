@@ -12,12 +12,13 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def conditional_count(pred: Column) -> Column:
     """count of rows matching pred in one aggregate pass (A3;
     reference src/etl.js:136-138, 225-226)."""
-    return F.sum(F.when(pred, 1).otherwise(0)).cast("long")
+    return F.sum(F.when(pred, 1).otherwise(0)).cast(T.LongType())
 
 
 def ratio(pred: Column) -> Column:

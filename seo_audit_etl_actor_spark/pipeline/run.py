@@ -4,7 +4,7 @@ driver orchestration over per-source Spark stanzas (SURVEY §3.2, §3.4).
 Flow: fetch → PK validation → unzip → per-source stanzas in reference
 order → coverage-weighted scoring → {normalized_audit, scores, manifest}.
 Every CSV entry is parsed once on the driver (`read_csv` → `ParsedCsv`);
-manifest row counts (`len(rows)`) and placeholder checks read that parse
+manifest row counts (`n_rows`) and placeholder checks read that parse
 and run no Spark job. Spark runs the stanza aggregations and the scoring.
 Each stanza's frame is built on the main thread and its aggregation is
 submitted to a driver thread pool as soon as the frame exists, so the
@@ -94,7 +94,7 @@ class JobInput:
 
 def _n_rows(parsed: ParsedCsv | None) -> int:
     """Manifest row count: the data rows, 0 for a missing or header-less entry."""
-    return len(parsed.rows) if parsed is not None and parsed.header else 0
+    return parsed.n_rows if parsed is not None and parsed.header else 0
 
 
 def process_zip(
@@ -163,7 +163,7 @@ def process_zip(
                 inner = open_nested_zip(buf)
                 names = set(inner.namelist())
                 counts = {
-                    f: len(parse_csv_smart_rows(inner.read(f)).rows)
+                    f: parse_csv_smart_rows(inner.read(f)).n_rows
                     for files in stanzas.SITE_AUDIT_ISSUES.values()
                     for f in files
                     if f in names
@@ -189,7 +189,7 @@ def process_zip(
         for name in ("sf_duplicates.csv", "sf_images.csv"):
             parsed = read_csv(name)
             if parsed is not None:
-                manifest[name]["rows"] = len(parsed.rows)
+                manifest[name]["rows"] = parsed.n_rows
 
         # ---- Lighthouse JSONs (src/etl.js:259-304)
         lh_metrics = []

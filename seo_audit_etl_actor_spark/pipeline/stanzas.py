@@ -27,6 +27,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.functions.coercion import to_num_js
 from seo_audit_etl_actor_spark.operators.aggregates import (
@@ -280,14 +281,14 @@ def brightlocal_citations(df: DataFrame) -> Apply:
 
     def lowered(c):
         return (
-            _fold(F.coalesce(F.col(c).cast("string"), F.lit("undefined")))
+            _fold(F.coalesce(F.col(c).cast(T.StringType()), F.lit("undefined")))
             if c
             else F.lit("")
         )
 
     s, gs = lowered(s_col), lowered(gs_col)
     link = (
-        F.trim(F.coalesce(F.col(link_col).cast("string"), F.lit("undefined")))
+        F.trim(F.coalesce(F.col(link_col).cast(T.StringType()), F.lit("undefined")))
         if link_col
         else F.lit("")
     )
@@ -310,7 +311,7 @@ def is_placeholder(parsed: ParsedCsv) -> bool:
     `message` fields — exact lowercase keys, no fuzzy match (P10,
     src/etl.js:372). Reads the driver-side parse; runs no Spark job."""
     header = parsed.header
-    if "status" not in header or "message" not in header or not parsed.rows:
+    if "status" not in header or "message" not in header or not parsed.n_rows:
         return False
     first = parsed.rows[0]
     return bool(first[header.index("status")]) and bool(first[header.index("message")])
@@ -353,7 +354,7 @@ def gbp_categories(df: DataFrame) -> Apply:
     cols = _cols(df)
     if "category_type" not in cols or "category_name" not in cols:
         return _skip  # the document keeps its None / []
-    ctype = _fold(F.coalesce(F.col("category_type").cast("string"), F.lit("")))
+    ctype = _fold(F.coalesce(F.col("category_type").cast(T.StringType()), F.lit("")))
     name = F.col("category_name")
     truthy = name.isNotNull() & (name != "")
 
@@ -379,7 +380,7 @@ def gbp_photos(df: DataFrame) -> Apply:
     cols = _cols(df)
     if "photo_type" not in cols or "count" not in cols:
         return _skip
-    ptype = _fold(F.coalesce(F.col("photo_type").cast("string"), F.lit("")))
+    ptype = _fold(F.coalesce(F.col("photo_type").cast(T.StringType()), F.lit("")))
     row = df.agg(
         F.array_compact(
             collect_sorted(F.when(ptype == PHOTO_TOTAL, F.struct(to_num_js("count").alias("n"))), F.col(ROW_ID))

@@ -55,58 +55,7 @@ class QuerySpec:
 # Never append below position 50 — that silently exempts the entry from the
 # driver's rows+schema+hash check forever.
 QUERIES: list[QuerySpec] = [
-    # --- latest green: r9 ---
-    QuerySpec("streaming_hourly_windows_differential", stx.q_streaming_hourly_windows_differential, stx.SQL_STREAMING_HOURLY_WINDOWS_DIFFERENTIAL),
-    QuerySpec("streaming_running_totals_differential", stx.q_streaming_running_totals_differential, stx.SQL_STREAMING_RUNNING_TOTALS_DIFFERENTIAL),
-    QuerySpec("streaming_sessions_differential", stx.q_streaming_sessions_differential, stx.SQL_STREAMING_SESSIONS_DIFFERENTIAL),
-    QuerySpec("user_ewma_profile", ev.q_user_ewma_profile, ev.SQL_USER_EWMA_PROFILE),
     # --- latest green: r10 ---
-    QuerySpec("cosine_topk_bruteforce", ext.q_cosine_topk_bruteforce, ext.SQL_COSINE_TOPK),
-    QuerySpec("coverage_weighted_score", r.q_coverage_weighted_score, r.SQL_COVERAGE_WEIGHTED_SCORE),
-    QuerySpec("cwv_pass_rate", r.q_cwv_pass_rate, r.SQL_CWV_PASS_RATE),
-    QuerySpec("doc_quality_by_source", ext.q_doc_quality_by_source, ext.SQL_DOC_QUALITY_BY_SOURCE),
-    QuerySpec("exact_dedup_stats", ext.q_exact_dedup_stats, ext.SQL_EXACT_DEDUP_STATS),
-    QuerySpec("first_and_collect", r.q_first_and_collect, r.SQL_FIRST_AND_COLLECT),
-    QuerySpec("keyword_position_buckets", r.q_keyword_position_buckets, r.SQL_KEYWORD_POSITION_BUCKETS),
-    QuerySpec("lang_id_confusion", ext.q_lang_id_confusion, ext.SQL_LANG_ID_CONFUSION),
-    QuerySpec("liveness_ratio", r.q_liveness_ratio, r.SQL_LIVENESS_RATIO),
-    QuerySpec("ngram_jaccard_sample", ext.q_ngram_jaccard_sample, ext.SQL_NGRAM_JACCARD_SAMPLE),
-    QuerySpec("numeric_coercion", r.q_numeric_coercion, r.SQL_NUMERIC_COERCION),
-    QuerySpec("p75_nearest_rank", r.q_p75_nearest_rank, r.SQL_P75_NEAREST_RANK),
-    QuerySpec("pages_total_coalesce", r.q_pages_total_coalesce, r.SQL_PAGES_TOTAL_COALESCE),
-    QuerySpec("price_band_theta_join", rel.q_price_band_theta_join, rel.SQL_PRICE_BAND_THETA_JOIN),
-    QuerySpec("ratio_high_value", r.q_ratio_high_value, r.SQL_RATIO_HIGH_VALUE),
-    QuerySpec("simhash_fingerprints", ext.q_simhash_fingerprints, ext.SQL_SIMHASH_FINGERPRINTS),
-    QuerySpec("status_code_bands", r.q_status_code_bands, r.SQL_STATUS_CODE_BANDS),
-    QuerySpec("balance_outliers", qx.q_balance_outliers, qx.SQL_BALANCE_OUTLIERS),
-    QuerySpec("bpe_pair_stats", px.q_bpe_pair_stats, px.SQL_BPE_PAIR_STATS),
-    QuerySpec("conversion_funnel", ev.q_conversion_funnel, ev.SQL_CONVERSION_FUNNEL),
-    QuerySpec("cosine_topk_rerank", ext.q_cosine_topk_rerank, ext.SQL_COSINE_TOPK_RERANK),
-    QuerySpec("data_quality_checks", qx.q_data_quality_checks, qx.SQL_DATA_QUALITY_CHECKS),
-    QuerySpec("dedup_within_window", ev.q_dedup_within_window, ev.SQL_DEDUP_WITHIN_WINDOW),
-    QuerySpec("embedding_near_dup_ivf", ext.q_embedding_near_dup_ivf, ext.SQL_EMBEDDING_NEAR_DUP_IVF),
-    QuerySpec("event_rate_anomalies", ev.q_event_rate_anomalies, ev.SQL_EVENT_RATE_ANOMALIES),
-    QuerySpec("event_transitions", ev.q_event_transitions, ev.SQL_EVENT_TRANSITIONS),
-    QuerySpec("fuzzy_name_pairs", qx.q_fuzzy_name_pairs, qx.SQL_FUZZY_NAME_PAIRS),
-    QuerySpec("gap_fill_hourly", ev.q_gap_fill_hourly, ev.SQL_GAP_FILL_HOURLY),
-    QuerySpec("heavy_hitter_tokens", sx.q_heavy_hitter_tokens, sx.SQL_HEAVY_HITTER_TOKENS),
-    QuerySpec("incremental_admission", px.q_incremental_admission, px.SQL_INCREMENTAL_ADMISSION),
-    QuerySpec("incremental_agg_merge", sx.q_incremental_agg_merge, sx.SQL_INCREMENTAL_AGG_MERGE),
-    QuerySpec("json_props_stats", ev.q_json_props_stats, ev.SQL_JSON_PROPS_STATS),
-    QuerySpec("approx_distinct_users_prod", ext.q_approx_distinct_users_prod, None),
-    QuerySpec("bigram_lm_scores", px.q_bigram_lm_scores, px.SQL_BIGRAM_LM_SCORES),
-    QuerySpec("chunk_text_extraction", ax.q_chunk_text_extraction, ax.SQL_CHUNK_TEXT_EXTRACTION),
-    QuerySpec("ffd_packing_audit", ax.q_ffd_packing_audit, ax.SQL_FFD_PACKING_AUDIT),
-    QuerySpec("table_profile_audit", ax.q_table_profile_audit, ax.SQL_TABLE_PROFILE_AUDIT),
-    QuerySpec( "token_budget_apportionment", px.q_token_budget_apportionment, px.SQL_TOKEN_BUDGET_APPORTIONMENT, ),
-    QuerySpec("token_rarity_stats", px.q_token_rarity_stats, px.SQL_TOKEN_RARITY_STATS),
-    QuerySpec("tpch_q18_large_volume_customer", rel.q_tpch_q18_large_volume_customer, rel.SQL_TPCH_Q18_LARGE_VOLUME_CUSTOMER),
-    QuerySpec("tpch_q19_discounted_revenue", tq.q_tpch_q19_discounted_revenue, tq.SQL_TPCH_Q19_DISCOUNTED_REVENUE),
-    QuerySpec("tpch_q20_potential_promotion", tq.q_tpch_q20_potential_promotion, tq.SQL_TPCH_Q20_POTENTIAL_PROMOTION),
-    QuerySpec("tpch_q21_waiting_supplier", rel.q_tpch_q21_waiting_supplier, rel.SQL_TPCH_Q21_WAITING_SUPPLIER),
-    QuerySpec("tpch_q22_sales_opportunity", tq.q_tpch_q22_sales_opportunity, tq.SQL_TPCH_Q22_SALES_OPPORTUNITY),
-    QuerySpec("media_decode_audit", ax.q_media_decode_audit, ax.SQL_MEDIA_DECODE_AUDIT),
-    QuerySpec("streaming_curation_differential", stx.q_streaming_curation_differential, stx.SQL_STREAMING_CURATION_DIFFERENTIAL),
     QuerySpec("streaming_heavyhitters_differential", stx.q_streaming_heavyhitters_differential, stx.SQL_STREAMING_HEAVYHITTERS_DIFFERENTIAL),
     QuerySpec("zip_source_audit", ax.q_zip_source_audit, ax.SQL_ZIP_SOURCE_AUDIT),
     QuerySpec("arith_lossless_decode_audit", ax.q_arith_lossless_decode_audit, ax.SQL_ARITH_LOSSLESS_DECODE_AUDIT),
@@ -213,6 +162,57 @@ QUERIES: list[QuerySpec] = [
     QuerySpec("streaming_dedup_differential", stx.q_streaming_dedup_differential, stx.SQL_STREAMING_DEDUP_DIFFERENTIAL),
     QuerySpec("streaming_enrichment_differential", stx.q_streaming_enrichment_differential, stx.SQL_STREAMING_ENRICHMENT_DIFFERENTIAL),
     QuerySpec("simhash_auto_near_dup", ext.q_simhash_auto_near_dup, ext.SQL_SIMHASH_AUTO_NEAR_DUP),
+    # --- latest green: r13 ---
+    QuerySpec("cosine_topk_bruteforce", ext.q_cosine_topk_bruteforce, ext.SQL_COSINE_TOPK),
+    QuerySpec("coverage_weighted_score", r.q_coverage_weighted_score, r.SQL_COVERAGE_WEIGHTED_SCORE),
+    QuerySpec("cwv_pass_rate", r.q_cwv_pass_rate, r.SQL_CWV_PASS_RATE),
+    QuerySpec("doc_quality_by_source", ext.q_doc_quality_by_source, ext.SQL_DOC_QUALITY_BY_SOURCE),
+    QuerySpec("exact_dedup_stats", ext.q_exact_dedup_stats, ext.SQL_EXACT_DEDUP_STATS),
+    QuerySpec("first_and_collect", r.q_first_and_collect, r.SQL_FIRST_AND_COLLECT),
+    QuerySpec("keyword_position_buckets", r.q_keyword_position_buckets, r.SQL_KEYWORD_POSITION_BUCKETS),
+    QuerySpec("lang_id_confusion", ext.q_lang_id_confusion, ext.SQL_LANG_ID_CONFUSION),
+    QuerySpec("liveness_ratio", r.q_liveness_ratio, r.SQL_LIVENESS_RATIO),
+    QuerySpec("ngram_jaccard_sample", ext.q_ngram_jaccard_sample, ext.SQL_NGRAM_JACCARD_SAMPLE),
+    QuerySpec("numeric_coercion", r.q_numeric_coercion, r.SQL_NUMERIC_COERCION),
+    QuerySpec("p75_nearest_rank", r.q_p75_nearest_rank, r.SQL_P75_NEAREST_RANK),
+    QuerySpec("pages_total_coalesce", r.q_pages_total_coalesce, r.SQL_PAGES_TOTAL_COALESCE),
+    QuerySpec("price_band_theta_join", rel.q_price_band_theta_join, rel.SQL_PRICE_BAND_THETA_JOIN),
+    QuerySpec("ratio_high_value", r.q_ratio_high_value, r.SQL_RATIO_HIGH_VALUE),
+    QuerySpec("simhash_fingerprints", ext.q_simhash_fingerprints, ext.SQL_SIMHASH_FINGERPRINTS),
+    QuerySpec("status_code_bands", r.q_status_code_bands, r.SQL_STATUS_CODE_BANDS),
+    QuerySpec("balance_outliers", qx.q_balance_outliers, qx.SQL_BALANCE_OUTLIERS),
+    QuerySpec("bpe_pair_stats", px.q_bpe_pair_stats, px.SQL_BPE_PAIR_STATS),
+    QuerySpec("conversion_funnel", ev.q_conversion_funnel, ev.SQL_CONVERSION_FUNNEL),
+    QuerySpec("cosine_topk_rerank", ext.q_cosine_topk_rerank, ext.SQL_COSINE_TOPK_RERANK),
+    QuerySpec("data_quality_checks", qx.q_data_quality_checks, qx.SQL_DATA_QUALITY_CHECKS),
+    QuerySpec("dedup_within_window", ev.q_dedup_within_window, ev.SQL_DEDUP_WITHIN_WINDOW),
+    QuerySpec("embedding_near_dup_ivf", ext.q_embedding_near_dup_ivf, ext.SQL_EMBEDDING_NEAR_DUP_IVF),
+    QuerySpec("event_rate_anomalies", ev.q_event_rate_anomalies, ev.SQL_EVENT_RATE_ANOMALIES),
+    QuerySpec("event_transitions", ev.q_event_transitions, ev.SQL_EVENT_TRANSITIONS),
+    QuerySpec("fuzzy_name_pairs", qx.q_fuzzy_name_pairs, qx.SQL_FUZZY_NAME_PAIRS),
+    QuerySpec("gap_fill_hourly", ev.q_gap_fill_hourly, ev.SQL_GAP_FILL_HOURLY),
+    QuerySpec("heavy_hitter_tokens", sx.q_heavy_hitter_tokens, sx.SQL_HEAVY_HITTER_TOKENS),
+    QuerySpec("incremental_admission", px.q_incremental_admission, px.SQL_INCREMENTAL_ADMISSION),
+    QuerySpec("incremental_agg_merge", sx.q_incremental_agg_merge, sx.SQL_INCREMENTAL_AGG_MERGE),
+    QuerySpec("json_props_stats", ev.q_json_props_stats, ev.SQL_JSON_PROPS_STATS),
+    QuerySpec("approx_distinct_users_prod", ext.q_approx_distinct_users_prod, None),
+    QuerySpec("bigram_lm_scores", px.q_bigram_lm_scores, px.SQL_BIGRAM_LM_SCORES),
+    QuerySpec("chunk_text_extraction", ax.q_chunk_text_extraction, ax.SQL_CHUNK_TEXT_EXTRACTION),
+    QuerySpec("ffd_packing_audit", ax.q_ffd_packing_audit, ax.SQL_FFD_PACKING_AUDIT),
+    QuerySpec("table_profile_audit", ax.q_table_profile_audit, ax.SQL_TABLE_PROFILE_AUDIT),
+    QuerySpec( "token_budget_apportionment", px.q_token_budget_apportionment, px.SQL_TOKEN_BUDGET_APPORTIONMENT, ),
+    QuerySpec("token_rarity_stats", px.q_token_rarity_stats, px.SQL_TOKEN_RARITY_STATS),
+    QuerySpec("tpch_q18_large_volume_customer", rel.q_tpch_q18_large_volume_customer, rel.SQL_TPCH_Q18_LARGE_VOLUME_CUSTOMER),
+    QuerySpec("tpch_q19_discounted_revenue", tq.q_tpch_q19_discounted_revenue, tq.SQL_TPCH_Q19_DISCOUNTED_REVENUE),
+    QuerySpec("tpch_q20_potential_promotion", tq.q_tpch_q20_potential_promotion, tq.SQL_TPCH_Q20_POTENTIAL_PROMOTION),
+    QuerySpec("tpch_q21_waiting_supplier", rel.q_tpch_q21_waiting_supplier, rel.SQL_TPCH_Q21_WAITING_SUPPLIER),
+    QuerySpec("tpch_q22_sales_opportunity", tq.q_tpch_q22_sales_opportunity, tq.SQL_TPCH_Q22_SALES_OPPORTUNITY),
+    QuerySpec("media_decode_audit", ax.q_media_decode_audit, ax.SQL_MEDIA_DECODE_AUDIT),
+    QuerySpec("streaming_curation_differential", stx.q_streaming_curation_differential, stx.SQL_STREAMING_CURATION_DIFFERENTIAL),
+    QuerySpec("streaming_hourly_windows_differential", stx.q_streaming_hourly_windows_differential, stx.SQL_STREAMING_HOURLY_WINDOWS_DIFFERENTIAL),
+    QuerySpec("streaming_running_totals_differential", stx.q_streaming_running_totals_differential, stx.SQL_STREAMING_RUNNING_TOTALS_DIFFERENTIAL),
+    QuerySpec("streaming_sessions_differential", stx.q_streaming_sessions_differential, stx.SQL_STREAMING_SESSIONS_DIFFERENTIAL),
+    QuerySpec("user_ewma_profile", ev.q_user_ewma_profile, ev.SQL_USER_EWMA_PROFILE),
 ]
 
 

@@ -37,6 +37,16 @@ TABLES = (
     "embeddings",
 )
 
+# PySpark reads this once per process, from whichever thread builds the
+# first Column: left on by default, it makes every Column and `functions`
+# call capture its Python call site over a few py4j round trips (errors
+# keep only the JVM-side context without it), and it is on only when a
+# thread holding an active session happens to build first, so the driver's
+# py4j traffic would depend on thread timing (a warm audit: ~2,200-3,000
+# round trips off, ~4,000-4,500 on). A static conf: a reused session keeps
+# the value it was started with.
+NO_DATAFRAME_DEBUGGING = ("spark.python.sql.dataFrameDebugging.enabled", "false")
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -143,6 +153,7 @@ def get_spark(app_name: str = "seo-audit-etl-actor-spark") -> SparkSession:
         # scale shrinks shuffle I/O on the same reasoning.
         .config("spark.io.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        .config(*NO_DATAFRAME_DEBUGGING)
         # progress-bar escape codes would interleave with bench.py's
         # machine-parseable stdout (static conf: must be set pre-start)
         .config("spark.ui.showConsoleProgress", "false")

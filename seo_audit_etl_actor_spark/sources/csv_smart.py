@@ -11,11 +11,25 @@ Parse chain, exactly the reference's (/root/reference/src/etl.js:23-41):
 papaparse TooFewFields/TooManyFields analog) OR zero data rows
 (src/etl.js:23).
 
+Each parse attempt has two paths with one result. When the text has at
+least 64 Ki characters, no `"`, no CR outside a CRLF pair and a non-empty
+first line, `pyarrow.csv` (C++, GIL released) reads the data rows
+straight into the Arrow string columns Spark receives, with quoting off
+and every column a non-null string. If Arrow sees a row wider or
+narrower than the header, or cannot read the text, the attempt falls
+back to the `csv`-module parse, which pads a short row with None and
+counts it as an error; a quoted text always takes that exact path,
+because the two parsers treat malformed quoting differently, and so does
+a short text, for which the csv module is the cheaper parse. Both paths
+give a `ParsedCsv` of the same header, columns, row count and error
+count; `tests/test_csv_smart.py` checks the two against each other over
+random texts.
+
 The decode + parse happens on the driver: these are the reference's
 ZIP-of-small-CSVs inputs, where per-file driver-side parsing is the right
 cost model (SURVEY §3.4). Row counts and placeholder checks read the
 `ParsedCsv` directly. Only a stanza aggregation hands it to Spark, via
-`to_dataframe`: the rows go over as one Arrow table. A table of more than
+`to_dataframe`: its columns go over as one Arrow table. A table of more than
 64 KiB of Arrow batches (the 20k-row exports) stays a JVM RDD of those
 batches, decoded in the task, so its rows are not part of any Catalyst
 plan; a smaller one becomes a `LocalRelation`, the cheaper hand-off for a
@@ -35,9 +49,14 @@ semantics (no phantom row) — recorded here per SURVEY §5.2.
 from __future__ import annotations
 
 import csv
+import functools
 import io
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.csv as pcsv
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -53,19 +72,69 @@ ROW_ID = "__row_id"
 # Arrow bytes above which `to_dataframe`'s frame stays an RDD of Arrow
 # batches instead of becoming a `LocalRelation`
 ARROW_RDD_THRESHOLD = 64 * 1024
+# Characters from which a parse attempt tries `pyarrow.csv`. Below it the
+# csv module is the cheaper parse: it takes ~20 µs for a few-row export,
+# while `read_csv` releases the GIL and, with the stanza threads running,
+# waits 1-12 ms to take it back
+ARROW_PARSE_MIN_CHARS = 64 * 1024
 
 
-@dataclass
+class _Rows(Sequence):
+    """Read-only row view of a parse's columns: the length is the row
+    count, and the rows (lists, a missing field None) are built from the
+    columns on first access and kept."""
+
+    def __init__(self, columns: list[pa.StringArray], n_rows: int) -> None:
+        self._columns = columns
+        self._n_rows = n_rows
+        self._rows: list[list[str | None]] | None = None
+
+    def _materialised(self) -> list[list[str | None]]:
+        if self._rows is None:
+            cells = [c.to_pylist() for c in self._columns]
+            self._rows = [list(r) for r in zip(*cells)] if cells else [[] for _ in range(self._n_rows)]
+        return self._rows
+
+    def __len__(self) -> int:
+        return self._n_rows
+
+    def __getitem__(self, i):
+        return self._materialised()[i]
+
+    def __eq__(self, other: object) -> bool:
+        if isinstance(other, (list, _Rows)):
+            return self._materialised() == list(other)
+        return NotImplemented
+
+    __hash__ = None
+
+
+@dataclass(frozen=True)
 class ParsedCsv:
-    """Driver-side parse result: header + string rows + error count."""
+    """Driver-side parse result: the header, one Arrow string column per
+    header name (a missing field is null, apart from ''), the data-row
+    count and the field-count error count."""
 
     header: list[str] = field(default_factory=list)
-    rows: list[list[str | None]] = field(default_factory=list)
+    columns: list[pa.StringArray] = field(default_factory=list)
+    n_rows: int = 0
     n_errors: int = 0
+
+    @classmethod
+    def from_rows(
+        cls, header: list[str], rows: list[list[str | None]], n_errors: int = 0
+    ) -> ParsedCsv:
+        """From rows of `len(header)` cells each."""
+        cells = list(zip(*rows)) or [()] * len(header)
+        return cls(header, [pa.array(c, pa.string()) for c in cells], len(rows), n_errors)
+
+    @functools.cached_property
+    def rows(self) -> _Rows:
+        return _Rows(self.columns, self.n_rows)
 
     @property
     def bad(self) -> bool:
-        return self.n_errors > MAX_ROW_ERRORS or not self.rows
+        return self.n_errors > MAX_ROW_ERRORS or not self.n_rows
 
 
 def _dedupe_header(header: list[str]) -> list[str]:
@@ -86,7 +155,41 @@ def _dedupe_header(header: list[str]) -> list[str]:
     return out
 
 
-def _parse_text(text: str, delimiter: str) -> ParsedCsv:
+def _longest_field(header: list[str], columns: list[pa.StringArray]) -> int:
+    return max([len(h) for h in header] + [pc.max(pc.utf8_length(c)).as_py() or 0 for c in columns])
+
+
+def _parse_arrow(text: str, delimiter: str) -> ParsedCsv | None:
+    """The parse by `pyarrow.csv`, for a text whose csv-module parse it
+    reproduces exactly: no quote character, no CR outside a CRLF pair, a
+    non-empty first line, and every data row as wide as the header. None
+    for any other text."""
+    first = text.partition("\n")[0].removesuffix("\r")
+    if not first or '"' in text or text.count("\r") != text.count("\r\n"):
+        return None
+    header = first.split(delimiter)
+    names = [f"c{i}" for i in range(len(header))]
+    try:
+        table = pcsv.read_csv(
+            pa.py_buffer(text.encode("utf-8", "surrogatepass")),
+            read_options=pcsv.ReadOptions(column_names=names, skip_rows=1, use_threads=False),
+            parse_options=pcsv.ParseOptions(delimiter=delimiter, quote_char=False),
+            convert_options=pcsv.ConvertOptions(
+                column_types=dict.fromkeys(names, pa.string()), strings_can_be_null=False
+            ),
+        )
+    except pa.ArrowInvalid:
+        # a row wider or narrower than the header, a header-only text with
+        # no newline, or a lone surrogate
+        return None
+    columns = [c.combine_chunks() for c in table.columns]
+    limit = csv.field_size_limit()
+    if len(text) >= limit and _longest_field(header, columns) >= limit:
+        return None  # the csv module raises on a field this long
+    return ParsedCsv(_dedupe_header(header), columns, table.num_rows)
+
+
+def _parse_csv_module(text: str, delimiter: str) -> ParsedCsv:
     reader = csv.reader(io.StringIO(text), delimiter=delimiter)
     try:
         header = next(reader)
@@ -104,7 +207,14 @@ def _parse_text(text: str, delimiter: str) -> ParsedCsv:
         # pad missing fields with None / drop extras — papaparse row shape
         row: list[str | None] = list(raw[:width]) + [None] * max(0, width - len(raw))
         rows.append(row)
-    return ParsedCsv(header=header, rows=rows, n_errors=n_errors)
+    return ParsedCsv.from_rows(header, rows, n_errors)
+
+
+def _parse_text(text: str, delimiter: str) -> ParsedCsv:
+    """One parse attempt: Arrow's C++ reader for a long text where it gives
+    the csv module's result, the csv module itself everywhere else."""
+    parsed = _parse_arrow(text, delimiter) if len(text) >= ARROW_PARSE_MIN_CHARS else None
+    return parsed if parsed is not None else _parse_csv_module(text, delimiter)
 
 
 def parse_csv_smart_rows(buf: bytes) -> ParsedCsv:
@@ -126,8 +236,8 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     """All-string DataFrame + ingest-order `__row_id` (H2: deterministic
     first/collect need an explicit order column).
 
-    The driver-held rows are built column by column into one Arrow table
-    (a missing cell stays null, distinct from ''). `createDataFrame` runs
+    The parse's Arrow columns, with `__row_id` prepended, are one Arrow
+    table (a missing cell stays null, distinct from ''). `createDataFrame` runs
     with `spark.sql.execution.arrow.localRelationThreshold` at
     `ARROW_RDD_THRESHOLD`, the caller's value restored after: above it
     Spark keeps the batches as a JVM RDD (`Scan ExistingRDD arrow`) that
@@ -139,16 +249,12 @@ def to_dataframe(spark: SparkSession, parsed: ParsedCsv) -> DataFrame | None:
     so without the coalesce even a one-batch frame would get one)."""
     if not parsed.header:
         return None
-    import pyarrow as pa
-
     schema = T.StructType(
         [T.StructField(ROW_ID, T.LongType(), False)]
         + [T.StructField(h, T.StringType(), True) for h in parsed.header]
     )
-    columns = list(zip(*parsed.rows)) or [()] * len(parsed.header)
     table = pa.Table.from_arrays(
-        [pa.array(range(len(parsed.rows)), pa.int64())]
-        + [pa.array(c, pa.string()) for c in columns],
+        [pa.array(range(parsed.n_rows), pa.int64()), *parsed.columns],
         names=[ROW_ID, *parsed.header],
     )
     threshold = "spark.sql.execution.arrow.localRelationThreshold"

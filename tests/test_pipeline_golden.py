@@ -205,6 +205,38 @@ def test_fixture_audit_job_budget(spark, jobs_of):
     assert ungrouped == set()
 
 
+def test_audit_names_no_type_for_the_sql_parser(spark, monkeypatch):
+    """A type given by name goes through Spark's SQL parser, whose first
+    use in a fresh JVM initialises ANTLR; the audit passes DataTypes."""
+    column = type(F.lit(0))  # the classic Column, which overrides both
+
+    for name in ("cast", "try_cast"):
+        original = getattr(column, name)
+
+        def typed_only(self, data_type, _original=original, _name=name):
+            assert not isinstance(data_type, str), f"{_name}({data_type!r})"
+            return _original(self, data_type)
+
+        monkeypatch.setattr(column, name, typed_only)
+    res = process_zip(spark, JOB, fetch_impl=lambda url: build_fixture_zip())
+    assert res["normalized_audit"]["onsite"]["keywords"] == {"top3": 3, "top10": 5, "top100": 7}
+
+
+def test_get_spark_turns_dataframe_debugging_off(spark, monkeypatch):
+    """PySpark caches the setting from the thread that builds the first
+    Column; pinned off, the main thread reads the same as a pool thread."""
+    import pyspark.errors.utils as errors_utils
+
+    from seo_audit_etl_actor_spark.session import NO_DATAFRAME_DEBUGGING, get_spark
+
+    key, value = NO_DATAFRAME_DEBUGGING
+    assert get_spark() is spark  # the reuse path sets no static conf
+    assert spark.conf.get(key) == value
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    F.col("url")
+    assert errors_utils._enable_debugging_cache is False
+
+
 def test_apply_order_is_reference_order_not_completion_order(spark, monkeypatch):
     """The stanzas run concurrently, but shared fields keep the reference's
     winner. Here each earlier writer finishes only after the later one:
