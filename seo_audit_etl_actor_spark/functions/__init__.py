@@ -7,9 +7,8 @@ plain-JS helpers (reference `src/etl.js:44-91`, `src/scoring.js:17-68`).
 
 from seo_audit_etl_actor_spark.functions.coercion import (
     clamp01,
-    linear_rescale,
     nonzero_coalesce,
     to_num,
 )
 
-__all__ = ["to_num", "clamp01", "nonzero_coalesce", "linear_rescale"]
+__all__ = ["to_num", "clamp01", "nonzero_coalesce"]

@@ -65,12 +65,3 @@ def nonzero_coalesce(c: Column, default) -> Column:
     default = default if isinstance(default, Column) else F.lit(default)
     return F.coalesce(F.nullif(c, F.lit(0)), default)
 
-
-def linear_rescale(c: Column, lo: float, hi: float, invert: bool = False) -> Column:
-    """Linear rescale of ``c`` from [lo, hi] to [0, 1], clamped.
-
-    ``invert=True`` maps lo→1, hi→0 (the reference's position rescale,
-    src/scoring.js:60-61: ``clamp(1 - (avgPos - 1) / 19)``).
-    """
-    scaled = (c - F.lit(lo)) / F.lit(hi - lo)
-    return clamp01(F.lit(1.0) - scaled if invert else scaled)

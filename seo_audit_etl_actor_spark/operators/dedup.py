@@ -10,8 +10,9 @@ Design for 100 TB:
   bucket key (band index + band hash) is uniform, so the join shuffles
   evenly; signatures are O(n_docs × n_hashes), never materializing the
   shingle sets driver-side;
-- SimHash reduces each doc to one 48-bit integer; near-dup candidates come
-  from band equality on the fingerprint — again a uniform-key join;
+- SimHash reduces each doc to one 60-bit integer (two at 120 bits);
+  near-dup candidates come from band equality on the fingerprint — again
+  a uniform-key join;
 - token/shingle hashing is md5 (`md5_long`), so every step is
   reproducible in the DuckDB oracle; the retracted xxhash64 alternative's
   measurements are in SCALE_STUDY_r08.json.
@@ -100,6 +101,17 @@ SHINGLE_K = 3
 # Σ bucket_size² and bucket occupancy is data-dependent (see SURVEY §6
 # round-4 scaling study).
 SIMHASH_BITS = 60
+# Wide SimHash (round 11): the r10 decomposition
+# (SCALE_STUDY_r10.json:simhash_decomposition) attributed the family-worst
+# scaling exponent to the 60-bit fingerprint itself — with 4 bands the
+# 15-bit band keyspace saturates (~77k occupied of 131k possible buckets at
+# 5M docs), and 60-bit CHANCE collisions make the verified hamming<=3
+# output grow ~n² (16.1M -> 160.6M pairs m316 -> m1000). 120 bits carried
+# as two 60-bit BIGINT words give 30-bit band keys (2^30 ≈ 1.07e9 — no
+# saturation below a billion docs), and chance hamming<=3 collisions are
+# ~2^-60 rarer. `choose_simhash_width` picks the width.
+SIMHASH_WIDE_BITS = 120
+_SIMHASH_WORD_BITS = 60
 
 
 def exact_dedup_stats(docs: DataFrame, text_col: str = "text", group_col: str = "source") -> DataFrame:
@@ -573,200 +585,22 @@ def simhash_fingerprints(
     id_col: str = "doc_id",
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """Per-doc SimHash fingerprint: tokens hashed to 60-bit ints; each of
-    `bits` positions votes ±1 per token occurrence (tf-weighted); bit set
-    iff the vote is positive.
+    """Per-doc SimHash: each of `bits` (60 or 120) positions votes ±1 per
+    token occurrence (tf-weighted); bit set iff the vote is positive.
+    Emitted as 60-bit BIGINT words fp_w0[, fp_w1] (low word first). Both
+    words come from ONE md5 per token — hex chars 1-15 / 16-30 of the
+    digest (Spark conv == DuckDB CAST('0x'||substring(...))) — so word 0
+    is the same at either width.
 
-    Explode tokens → hash as a PLAIN column expression → groupBy(doc) with
-    `bits` conditional sums: both the md5 and every vote ride whole-stage
-    codegen. The md5 must hash the EXPLODED column, not run inside
-    `F.transform(toks, md5_long)` — higher-order functions are
-    CodegenFallback, one interpreted lambda eval per token, which the r5
-    316× ladder measured as the dominant cost of this operator (same
-    lesson as the minhash signature explode). The shuffle the groupBy adds
-    is tiny — partial aggregation sends one `bits`-long vote row per doc
-    per map partition, a few hundred bytes against the kilobytes of text
-    scanned. Docs with no tokens produce no rows — dropped, matching the
-    HOF formulation.
-    """
-    th = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t")
-    ).select(F.col(id_col), md5_long(F.col("t")).alias("h"))
-    # Expressions assembled as SQL strings (r13): the per-bit Python
-    # Column-operator loops cost one py4j round-trip per operator
-    # (~6 calls × bits for the votes plus ~4 × bits for the fingerprint
-    # chain), which bench_one measured as ~1.4 s of pure DataFrame BUILD
-    # per invocation — more than the query's execution. One F.expr parse
-    # per column yields the IDENTICAL expression tree (same operators,
-    # same integer types, left-assoc +), so plan and results are
-    # unchanged; only driver-side construction time drops.
-    vote_cols = [
-        F.expr(f"SUM((SHIFTRIGHT(h, {i}) & 1) * 2 - 1)").alias(f"v{i}")
-        for i in range(bits)
-    ]
-    g = th.groupBy(id_col).agg(*vote_cols)
-    fp_sql = " + ".join(
-        f"(CASE WHEN v{i} > 0 THEN CAST({1 << i} AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END)"
-        for i in range(bits)
-    )
-    return g.select(
-        F.col(id_col), F.expr(f"CAST(0 AS BIGINT) + {fp_sql}").alias("simhash")
-    )
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-    n_bands: int = 4,
-    max_bucket_members: int = MAX_BUCKET_MEMBERS,
-) -> DataFrame:
-    """SimHash near-dup candidates via fingerprint banding (pigeonhole: any
-    pair within `max_hamming` ≤ n_bands-1 bit flips shares ≥1 exact band),
-    verified by popcount of XOR ≤ max_hamming. Single scan of the corpus
-    (bucket-grouping, no self-join — see _bucket_pairs).
-
-    The hamming predicate is pushed into _bucket_pairs as its pair_filter
-    (r10), so the cross-band distinct shuffles only VERIFIED pairs (x band
-    multiplicity <= n_bands) instead of every candidate — the member
-    payload (fp) is all the verification needs, so unlike minhash the check
-    costs no join. Output set identical to verifying after the distinct
-    (row-wise filter commutes with distinct); that order lost the r10 A/B
-    (SCALE_STUDY_r10.json).
-
-    Hot buckets refine by SECOND-LEVEL pigeonhole (r5; found by the 316×
-    ladder where one 15-bit band bucket held 19k members and band-level
-    candidate volume hit Σ m² ≈ 4.3e9/band against 16M true pairs): a pair
-    in bucket (b, key) matches band b exactly, so its ≤ max_hamming
-    differing bits all lie in the OTHER bits of the fingerprint —
-    partitioning those bits into max_hamming+1 disjoint chunks guarantees
-    at least one chunk with no differing bit. Over-cap buckets therefore
-    self-join on the additional (chunk index, fp & chunk mask) key,
-    cutting their m² to Σ sub-bucket² with ZERO recall loss for the
-    verified (hamming ≤ max_hamming) output; duplicates across chunks
-    collapse in the existing distinct."""
-    fps = simhash_fingerprints(docs, text_col, id_col, bits)
-    width = bits // n_bands
-    n_sub = max_hamming + 1
-
-    def _submask(b: int, j: int) -> int:
-        """Mask selecting the j-th (of n_sub) round-robin chunk of the
-        fingerprint bits OUTSIDE band b."""
-        m, pos = 0, 0
-        for i in range(bits):
-            if b * width <= i < (b + 1) * width:
-                continue
-            if pos % n_sub == j:
-                m |= 1 << i
-            pos += 1
-        return m
-
-    def _refine(big: DataFrame) -> DataFrame:
-        subs = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("sub_idx"),
-                    F.col("m.fp")
-                    .bitwiseAND(
-                        F.element_at(
-                            F.array(*[F.lit(_submask(b, j)) for b in range(n_bands)]),
-                            F.col("band_idx") + 1,
-                        )
-                    )
-                    .alias("sub_key"),
-                )
-                for j in range(n_sub)
-            ]
-        )
-        cols = big.columns
-        return big.select("*", F.explode(subs).alias("__s")).select(
-            *cols,
-            F.col("__s.sub_idx").alias("sub_idx"),
-            F.col("__s.sub_key").alias("sub_key"),
-        )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.shiftright(F.col("simhash"), b * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    member = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("fp"))
-    exploded = fps.select(member.alias("m"), F.explode(bands).alias("band")).select(
-        "m", "band.band_idx", "band.band_key"
-    )
-    pairs = _bucket_pairs(
-        exploded,
-        ["band_idx", "band_key"],
-        "m",
-        max_bucket_members,
-        refine=_refine,
-        pair_filter=lambda a, b: F.bit_count(a["fp"].bitwiseXOR(b["fp"])) <= max_hamming,
-    )
-    hamming = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-    out = (
-        pairs.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .orderBy("id_a", "id_b")
-    )
-    # propagate _bucket_pairs' cache-release hook (see minhash_near_dup_pairs)
-    release = getattr(pairs, "_spark_graft_release", None)
-    if release is not None:
-        out._spark_graft_release = release  # type: ignore[attr-defined]
-    return out
-
-
-# --- wide (multi-word) SimHash (round 11) ----------------------------------
-# The r10 decomposition (SCALE_STUDY_r10.json:simhash_decomposition)
-# attributed the family-worst scaling exponent to the 60-bit fingerprint
-# itself: with 4 bands the 15-bit band keyspace saturates (~77k occupied
-# of 131k possible buckets at 5M docs), and 60-bit
-# CHANCE collisions make the verified hamming<=3 output grow ~n² (16.1M ->
-# 160.6M pairs m316 -> m1000) — the operator's documented 100 TB boundary
-# said ">=96-bit fingerprints needed at corpus scale". This is that fix:
-# fingerprints of `bits` = 120 carried as TWO 60-bit BIGINT words (both
-# words come from ONE md5 per token — hex chars 1-15 and 16-30 of the same
-# digest, so the hash pass costs nothing extra and stays engine-portable
-# for the DuckDB oracle). Bands cover the full wider keyspace (120/4 ->
-# 30-bit band keys: 2^30 ≈ 1.07e9 — no saturation below a billion docs),
-# and chance hamming<=3 collisions at 120 bits are ~2^-60 rarer. The
-# 60-bit single-word functions above are BYTE-UNTOUCHED — tier-0 catalog
-# rows (simhash_fingerprints / simhash_near_dup) keep their exact oracle.
-SIMHASH_WIDE_BITS = 120
-_SIMHASH_WORD_BITS = 60
-
-
-def md5_word(col, word: int):
-    """60-bit word `word` (0 or 1) of md5(col): hex chars 1-15 / 16-30 of
-    the one digest — Spark conv == DuckDB CAST('0x'||substring(...))."""
-    if word not in (0, 1):
-        raise ValueError("md5_word: md5 has 32 hex chars -> words 0 and 1 only")
-    return F.conv(F.substring(F.md5(col), 1 + 15 * word, 15), 16, 10).cast("long")
-
-
-def simhash_fingerprints_wide(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = SIMHASH_WIDE_BITS,
-) -> DataFrame:
-    """Per-doc wide SimHash: `bits` tf-weighted ±1 bit votes, emitted as
-    fp_w0 / fp_w1 BIGINT words (low word first). Same codegen shape as the
-    60-bit form — explode tokens, hash as plain column expressions, one
-    groupBy with `bits` conditional sums; the md5 is materialized ONCE per
-    token in its own projection (CollapseProject's multi-reference guard
-    keeps both conv() words reading the same digest)."""
+    Explode tokens → hash as PLAIN column expressions → one groupBy(doc):
+    the md5 and every vote ride whole-stage codegen. The md5 must hash the
+    EXPLODED column, not run inside `F.transform(toks, md5_long)` —
+    higher-order functions are CodegenFallback, one interpreted lambda
+    eval per token, which the r5 316× ladder measured as the dominant cost
+    of this operator (same lesson as the minhash signature explode). The
+    md5 is materialized once per token in its own projection
+    (CollapseProject's multi-reference guard keeps both conv() words
+    reading the same digest). Docs with no tokens produce no rows."""
     n_words = bits // _SIMHASH_WORD_BITS
     if bits % _SIMHASH_WORD_BITS or not 1 <= n_words <= 2:
         raise ValueError("bits must be 60 or 120 (one md5 = two 60-bit words)")
@@ -782,86 +616,96 @@ def simhash_fingerprints_wide(
             for w in range(n_words)
         ],
     )
-    # Lane-packed vote aggregation: the +-1 vote for bit i is 2*cnt_i - n
-    # where cnt_i counts SET bits (0/1, never negative — no cross-lane
-    # borrows), so 4 independent 16-bit counters ride ONE long and the
-    # aggregate carries bits/4 + 1 columns instead of `bits` (120 -> 31;
-    # measured 6.6 s -> the dominant HashAggregate cost drops ~4x at
-    # sf0.1). Lane capacity 65,535 tokens per doc — far above any real
-    # document; the 60-bit single-word operator keeps its original
-    # unpacked form (byte-frozen alongside its driver evidence).
-    # Expression trees assembled as SQL strings (r13): the packed-lane
-    # aggregate and the two 60-CASE fingerprint chains previously went
-    # through one py4j round-trip per Python Column operator (~hundreds
-    # per build), which bench_one measured at ~2.8-3.3 s of DataFrame
-    # BUILD per invocation — twice the query's execution time. One
-    # F.expr parse per output column yields the IDENTICAL tree (same
-    # operators, same integer types, Python sum()'s leading 0 and the
-    # left-assoc + preserved), so plan and results are unchanged.
-    LANES, LANE_W = 4, 16
+    # Lane-packed vote aggregation: the ±1 vote for bit i is 2*cnt_i - n,
+    # where cnt_i counts the tokens with bit i SET (never negative — no
+    # borrows), so two 32-bit counters ride ONE long and the aggregate
+    # carries bits/2 + 1 columns instead of `bits`. A document's tokens are
+    # one Spark array (< 2^31 elements), so no lane carries into the next
+    # and the top lane stays below 2^63 at any document length; 16-bit
+    # lanes do not: they carry at 65,536 tokens and leave the BIGINT range
+    # (ANSI ARITHMETIC_OVERFLOW) at 32,768.
+    # Expressions are assembled as SQL strings (r13): one F.expr parse per
+    # output column instead of one py4j round-trip per Python Column
+    # operator, which bench_one measured at ~1.4-3.3 s of DataFrame BUILD
+    # per invocation — more than the query's execution.
+    LANES, LANE_W = 2, 32
     packed = []
-    for g_idx in range((bits + LANES - 1) // LANES):
+    for g_idx in range(bits // LANES):
         terms = " + ".join(
-            f"(SHIFTRIGHT(h{(g_idx * LANES + l) // _SIMHASH_WORD_BITS},"
-            f" {(g_idx * LANES + l) % _SIMHASH_WORD_BITS}) & 1)"
-            f" * CAST({1 << (LANE_W * l)} AS BIGINT)"
-            for l in range(LANES)
-            if g_idx * LANES + l < bits
+            f"(SHIFTRIGHT(h{i // _SIMHASH_WORD_BITS}, {i % _SIMHASH_WORD_BITS}) & 1)"
+            f" * CAST({1 << (LANE_W * (i % LANES))} AS BIGINT)"
+            for i in range(g_idx * LANES, (g_idx + 1) * LANES)
         )
-        packed.append(F.expr(f"SUM(0 + {terms})").alias(f"p{g_idx}"))
+        packed.append(F.expr(f"SUM({terms})").alias(f"p{g_idx}"))
     g = th.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"), *packed)
     lane_mask = (1 << LANE_W) - 1
 
-    def cnt_sql(i: int) -> str:
+    def bit_sql(w: int, j: int) -> str:
+        i = w * _SIMHASH_WORD_BITS + j
+        cnt = f"(SHIFTRIGHT(p{i // LANES}, {LANE_W * (i % LANES)}) & {lane_mask})"
+        # vote > 0  <=>  2*cnt_i > n_tokens (ties -> bit unset)
         return (
-            f"(SHIFTRIGHT(p{i // LANES}, {LANE_W * (i % LANES)}) & {lane_mask})"
+            f"(CASE WHEN {cnt} * 2 > __n THEN"
+            f" CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         )
 
-    words = []
-    for w in range(n_words):
-        cases = []
-        for j in range(_SIMHASH_WORD_BITS):
-            i = w * _SIMHASH_WORD_BITS + j
-            if i >= bits:
-                break
-            # vote > 0  <=>  2*cnt_i > n_tokens (ties -> bit unset)
-            cases.append(
-                f"(CASE WHEN {cnt_sql(i)} * 2 > __n THEN"
-                f" CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            )
-        words.append(
-            F.expr("CAST(0 AS BIGINT) + " + " + ".join(cases)).alias(f"fp_w{w}")
-        )
+    words = [
+        F.expr(
+            "CAST(0 AS BIGINT) + "
+            + " + ".join(bit_sql(w, j) for j in range(_SIMHASH_WORD_BITS))
+        ).alias(f"fp_w{w}")
+        for w in range(n_words)
+    ]
     return g.select(F.col(id_col), *words)
 
 
-def simhash_wide_near_dup_pairs(
+def simhash_near_dup_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    bits: int = SIMHASH_WIDE_BITS,
+    bits: int = SIMHASH_BITS,
     n_bands: int = 4,
     max_bucket_members: int = MAX_BUCKET_MEMBERS,
 ) -> DataFrame:
-    """simhash_near_dup_pairs over the wide fingerprint: same pigeonhole
-    (any hamming<=n_bands-1 pair shares >=1 exact band), same hot-bucket
-    second-level pigeonhole refinement, same early-verify pair_filter —
-    but band keys are bits/n_bands wide over the full 120-bit keyspace and
-    hamming is the SUM of per-word popcounts. Bands must not straddle the
-    60-bit words (width divides 60), which 120/4 satisfies."""
+    """SimHash near-dup candidates via fingerprint banding (pigeonhole: any
+    pair within `max_hamming` ≤ n_bands-1 bit flips shares ≥1 exact band),
+    verified by hamming ≤ max_hamming — the SUM of the per-word popcounts
+    of the XOR. Single scan of the corpus (bucket-grouping, no self-join —
+    see _bucket_pairs). Band keys are bits/n_bands wide and must not
+    straddle the 60-bit words (the width divides 60): 15 bits at 60, 30
+    at 120.
+
+    The hamming predicate is pushed into _bucket_pairs as its pair_filter
+    (r10), so the cross-band distinct shuffles only VERIFIED pairs (x band
+    multiplicity <= n_bands) instead of every candidate — the member
+    payload (fp words) is all the verification needs, so unlike minhash
+    the check costs no join. Output set identical to verifying after the
+    distinct (row-wise filter commutes with distinct); that order lost the
+    r10 A/B (SCALE_STUDY_r10.json).
+
+    Hot buckets refine by SECOND-LEVEL pigeonhole (r5; found by the 316×
+    ladder where one 15-bit band bucket held 19k members and band-level
+    candidate volume hit Σ m² ≈ 4.3e9/band against 16M true pairs): a pair
+    in bucket (b, key) matches band b exactly, so its ≤ max_hamming
+    differing bits all lie in the OTHER bits of the fingerprint —
+    partitioning those bits into max_hamming+1 disjoint chunks guarantees
+    at least one chunk with no differing bit. Over-cap buckets therefore
+    self-join on the additional (chunk index, fp & chunk mask) key,
+    cutting their m² to Σ sub-bucket² with ZERO recall loss for the
+    verified (hamming ≤ max_hamming) output; duplicates across chunks
+    collapse in the existing distinct."""
     width = bits // n_bands
     if bits % n_bands or _SIMHASH_WORD_BITS % width:
         raise ValueError("band width must divide the 60-bit word")
     bands_per_word = _SIMHASH_WORD_BITS // width
     n_sub = max_hamming + 1
-    fps = simhash_fingerprints_wide(docs, text_col, id_col, bits)
+    fps = simhash_fingerprints(docs, text_col, id_col, bits)
     n_words = bits // _SIMHASH_WORD_BITS
 
     def _submask(b: int, j: int, word: int) -> int:
-        """Word-`word` slice of the j-th round-robin chunk of the bits
-        outside band b (same zero-recall-loss guarantee as the 60-bit
-        refine: <=max_hamming differing bits -> >=1 chunk untouched)."""
+        """Word-`word` slice of the j-th (of n_sub) round-robin chunk of
+        the fingerprint bits OUTSIDE band b."""
         m, pos = 0, 0
         for i in range(bits):
             if b * width <= i < (b + 1) * width:
@@ -986,16 +830,16 @@ def simhash_near_dup_pairs_auto(
     max_bucket_members: int = MAX_BUCKET_MEMBERS,
 ) -> DataFrame:
     """Width-routed simhash near-dup pairs: probe the corpus size (cached
-    `_probe_count`, same probe the minhash tiers use) and dispatch to the
-    60-bit operator below SIMHASH_WIDTH_BOUND or the 120-bit wide
-    operator at or above it. Both branches emit the same
-    (id_a, id_b, hamming) schema; hamming is measured over the chosen
-    fingerprint width. Semantics across the boundary follow the width
+    `_probe_count`, same probe the minhash tiers use) and run
+    simhash_near_dup_pairs at 60 bits below SIMHASH_WIDTH_BOUND or at 120
+    bits at or above it; hamming is measured over the chosen fingerprint
+    width. Semantics across the boundary follow the width
     (that is the point — the narrow form's chance-collision pair volume
     grows ~n² past saturation, SCALE_STUDY_r10)."""
-    width = choose_simhash_width(_probe_count(docs))
-    near_dup = simhash_near_dup_pairs if width == SIMHASH_BITS else simhash_wide_near_dup_pairs
-    return near_dup(docs, text_col, id_col, max_hamming, width, n_bands, max_bucket_members)
+    bits = choose_simhash_width(_probe_count(docs))
+    return simhash_near_dup_pairs(
+        docs, text_col, id_col, max_hamming, bits, n_bands, max_bucket_members
+    )
 
 
 def ngram_jaccard_sample_pairs(

@@ -20,9 +20,6 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType)
-
-
 def profile_table(df: DataFrame) -> DataFrame:
     """Long-format profile: one row per column with
     (column, dtype, n_rows, n_nulls, null_pct, approx_distinct,

@@ -127,16 +127,6 @@ def dot_cols_sql(a_sql: str, b_sql: str, dim: int) -> str:
     return "(0.0D + " + " + ".join(terms) + ")"
 
 
-def cosine_cols(a_sql: str, b_sql: str, dim: int) -> Column:
-    """Codegen-chain cosine between two array columns (bit-identical to
-    `cosine`; see dot_cols_sql)."""
-    return F.expr(
-        f"{dot_cols_sql(a_sql, b_sql, dim)}"
-        f" / (SQRT({dot_cols_sql(a_sql, a_sql, dim)})"
-        f" * SQRT({dot_cols_sql(b_sql, b_sql, dim)}))"
-    )
-
-
 def cosine_query_cols(vec_sql: str, qvec: list[float]) -> Column:
     """Cosine of an array column against a DRIVER-SIDE query vector,
     emitted as one literal-weight codegen chain (the lsh_bucket pattern).
@@ -210,8 +200,8 @@ def rep_collapse(
 # DuckDB oracle stays exact at every driver correctness SF; above it the
 # modulus doubles until the sampled-rep count is bounded, keeping the
 # all-pairs verification quadratic at a constant ~EMB_SAMPLE_TARGET² work
-# regardless of corpus size.
-EMB_SAMPLE_TIER0_MAX_REPS = 20_000
+# regardless of corpus size. The tier-0 bound is implied: modulus 5 holds
+# up to 5 × EMB_SAMPLE_TARGET = 20,000 reps.
 EMB_SAMPLE_TARGET = 4_000
 
 

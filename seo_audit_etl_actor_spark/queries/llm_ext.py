@@ -446,79 +446,100 @@ SQL_VOCAB_OOV_STATS = _sql_vocab_oov_stats()
 
 # ------------------------------------------------------------- SimHash
 def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 48-bit SimHash fingerprints (tf-weighted bit votes over
+    """Per-doc 60-bit SimHash fingerprints (tf-weighted bit votes over
     md5-hashed tokens) — the whole per-doc state is one BIGINT."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    return dedup.simhash_fingerprints(docs).orderBy("doc_id")
+    fps = dedup.simhash_fingerprints(docs)
+    return fps.select("doc_id", F.col("fp_w0").alias("simhash")).orderBy("doc_id")
 
 
-def _sql_simhash(bits: int = dedup.SIMHASH_BITS) -> str:
+def _sql_md5_word(expr: str, word: int) -> str:
+    return f"CAST(('0x' || substring(md5({expr}), {1 + 15 * word}, 15)) AS BIGINT)"
+
+
+def _sql_simhash(bits: int) -> str:
+    """(doc_id, fp_w0[, fp_w1]) from unpacked ±1 votes, so the oracle does
+    not share the operator's lane packing. No ORDER BY: it is also a CTE."""
     toks = _TOKS.format(c="text")
+    wb = 60
+    n_words = bits // wb
+    hashes = ",\n         ".join(f"{_sql_md5_word('s', w)} AS h{w}" for w in range(n_words))
     votes = ",\n    ".join(
-        f"SUM((((h >> {i}) & 1) * 2) - 1) AS v{i}" for i in range(bits)
+        f"SUM((((h{i // wb} >> {i % wb}) & 1) * 2) - 1) AS v{i}" for i in range(bits)
     )
-    fp = " + ".join(f"(CASE WHEN v{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE 0 END)" for i in range(bits))
+    words = []
+    for w in range(n_words):
+        fp = " + ".join(
+            f"(CASE WHEN v{w * wb + j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
+            for j in range(wb)
+        )
+        words.append(f"CAST({fp} AS BIGINT) AS fp_w{w}")
     return f"""
 WITH toks AS (
   SELECT doc_id, {toks} AS t FROM documents
 ),
 th AS (
-  SELECT doc_id, unnest(list_transform(t, s -> {_sql_md5_long('s')})) AS h
-  FROM toks WHERE len(t) > 0
+  SELECT doc_id,
+         {hashes}
+  FROM (SELECT doc_id, unnest(t) AS s FROM toks WHERE len(t) > 0)
 ),
 votes AS (
   SELECT doc_id,
     {votes}
   FROM th GROUP BY doc_id
 )
-SELECT doc_id, CAST({fp} AS BIGINT) AS simhash
-FROM votes
+SELECT doc_id, {', '.join(words)}
+FROM votes"""
+
+
+SQL_SIMHASH_FINGERPRINTS = f"""
+SELECT doc_id, fp_w0 AS simhash
+FROM ({_sql_simhash(dedup.SIMHASH_BITS)})
 ORDER BY doc_id
 """
 
 
-SQL_SIMHASH_FINGERPRINTS = _sql_simhash()
-
-
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 4-band pigeonhole candidates, verified at
-    hamming ≤ 3 over the 48-bit fingerprints."""
+    hamming ≤ 3 over the 60-bit fingerprints."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     return dedup.simhash_near_dup_pairs(docs)
 
 
-def _sql_simhash_near_dup(
-    bits: int = dedup.SIMHASH_BITS, n_bands: int = 4, max_hamming: int = 3
-) -> str:
+def _sql_simhash_near_dup(bits: int, n_bands: int = 4, max_hamming: int = 3) -> str:
     width = bits // n_bands
+    wb = 60
+    n_words = bits // wb
+    bands_per_word = wb // width
     mask = (1 << width) - 1
+    fp_cols = ", ".join(f"fp_w{w}" for w in range(n_words))
     band_selects = "\n  UNION ALL ".join(
-        f"SELECT doc_id, simhash, {b} AS band_idx, (simhash >> {b * width}) & {mask} AS band_key FROM fps"
+        f"SELECT doc_id, {fp_cols}, {b} AS band_idx,"
+        f" (fp_w{b // bands_per_word} >> {(b % bands_per_word) * width}) & {mask} AS band_key FROM fps"
         for b in range(n_bands)
     )
-    base = _sql_simhash(bits).strip().removesuffix("ORDER BY doc_id\n").rstrip()
-    # reuse the fingerprint SQL as a CTE body
+    fp_pairs = ", ".join(f"a.fp_w{w} AS a_w{w}, b.fp_w{w} AS b_w{w}" for w in range(n_words))
+    ham = " + ".join(f"bit_count(xor(a_w{w}, b_w{w}))" for w in range(n_words))
     return f"""
 WITH fps AS (
-  {base}
+  {_sql_simhash(bits)}
 ),
 bands AS (
   {band_selects}
 ),
 cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.simhash AS fp_a, b.simhash AS fp_b
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, {fp_pairs}
   FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 )
-SELECT id_a, id_b, CAST(bit_count(xor(fp_a, fp_b)) AS INT) AS hamming
+SELECT id_a, id_b, CAST({ham} AS INT) AS hamming
 FROM cand
-WHERE bit_count(xor(fp_a, fp_b)) <= {max_hamming}
+WHERE {ham} <= {max_hamming}
 ORDER BY id_a, id_b
 """
 
 
-SQL_SIMHASH_NEAR_DUP = _sql_simhash_near_dup()
+SQL_SIMHASH_NEAR_DUP = _sql_simhash_near_dup(dedup.SIMHASH_BITS)
 
 
 def q_simhash_auto_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,99 +565,24 @@ def q_simhash_wide_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions, SCALE_STUDY_r10 simhash_decomposition); word 0 is
     bit-identical to the 60-bit `simhash_fingerprints`."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    return dedup.simhash_fingerprints_wide(docs).orderBy("doc_id")
+    return dedup.simhash_fingerprints(docs, bits=dedup.SIMHASH_WIDE_BITS).orderBy("doc_id")
 
 
-def _sql_md5_word(expr: str, word: int) -> str:
-    return f"CAST(('0x' || substring(md5({expr}), {1 + 15 * word}, 15)) AS BIGINT)"
-
-
-def _sql_simhash_wide(bits: int = dedup.SIMHASH_WIDE_BITS) -> str:
-    toks = _TOKS.format(c="text")
-    wb = 60
-    votes = ",\n    ".join(
-        f"SUM((((h{i // wb} >> {i % wb}) & 1) * 2) - 1) AS v{i}" for i in range(bits)
-    )
-    words = []
-    for w in range(bits // wb):
-        fp = " + ".join(
-            f"(CASE WHEN v{w * wb + j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
-            for j in range(wb)
-        )
-        words.append(f"CAST({fp} AS BIGINT) AS fp_w{w}")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {toks} AS t FROM documents
-),
-th AS (
-  SELECT doc_id,
-         {_sql_md5_word('s', 0)} AS h0,
-         {_sql_md5_word('s', 1)} AS h1
-  FROM (SELECT doc_id, unnest(t) AS s FROM toks WHERE len(t) > 0)
-),
-votes AS (
-  SELECT doc_id,
-    {votes}
-  FROM th GROUP BY doc_id
-)
-SELECT doc_id, {', '.join(words)}
-FROM votes
-ORDER BY doc_id
-"""
-
-
-SQL_SIMHASH_WIDE_FINGERPRINTS = _sql_simhash_wide()
+SQL_SIMHASH_WIDE_FINGERPRINTS = _sql_simhash(dedup.SIMHASH_WIDE_BITS) + "\nORDER BY doc_id\n"
 
 
 def q_simhash_wide_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs over the 120-bit fingerprint: 4-band pigeonhole with
     30-bit band keys (keyspace 2^30 — no saturation below ~1e9 docs),
-    verified at hamming <= 3 summed across both words. Same banding
-    machinery (hot-bucket second-level pigeonhole, early-verify) as the
-    60-bit operator; its output is provably a SUBSET of the 60-bit pairs
-    on any corpus (extra bits only ADD hamming), with the difference being
-    exactly the chance collisions the width is there to kill."""
+    verified at hamming <= 3 summed across both words. Its output is
+    provably a SUBSET of the 60-bit pairs on any corpus (extra bits only
+    ADD hamming), with the difference being exactly the chance collisions
+    the width is there to kill."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    return dedup.simhash_wide_near_dup_pairs(docs)
+    return dedup.simhash_near_dup_pairs(docs, bits=dedup.SIMHASH_WIDE_BITS)
 
 
-def _sql_simhash_wide_near_dup(
-    bits: int = dedup.SIMHASH_WIDE_BITS, n_bands: int = 4, max_hamming: int = 3
-) -> str:
-    width = bits // n_bands
-    wb = 60
-    bands_per_word = wb // width
-    mask = (1 << width) - 1
-    band_selects = "\n  UNION ALL ".join(
-        f"SELECT doc_id, fp_w0, fp_w1, {b} AS band_idx,"
-        f" (fp_w{b // bands_per_word} >> {(b % bands_per_word) * width}) & {mask} AS band_key FROM fps"
-        for b in range(n_bands)
-    )
-    base = _sql_simhash_wide(bits).strip().removesuffix("ORDER BY doc_id\n").rstrip()
-    ham = (
-        "bit_count(xor(a_w0, b_w0)) + bit_count(xor(a_w1, b_w1))"
-    )
-    return f"""
-WITH fps AS (
-  {base}
-),
-bands AS (
-  {band_selects}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.fp_w0 AS a_w0, a.fp_w1 AS a_w1, b.fp_w0 AS b_w0, b.fp_w1 AS b_w1
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, CAST({ham} AS INT) AS hamming
-FROM cand
-WHERE {ham} <= {max_hamming}
-ORDER BY id_a, id_b
-"""
-
-
-SQL_SIMHASH_WIDE_NEAR_DUP = _sql_simhash_wide_near_dup()
+SQL_SIMHASH_WIDE_NEAR_DUP = _sql_simhash_near_dup(dedup.SIMHASH_WIDE_BITS)
 
 
 # ------------------------------------------------------------- n-gram Jaccard

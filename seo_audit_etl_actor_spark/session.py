@@ -47,8 +47,6 @@ TABLES = (
 # the value it was started with.
 NO_DATAFRAME_DEBUGGING = ("spark.python.sql.dataFrameDebugging.enabled", "false")
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via `addPyFile`.
@@ -141,10 +139,7 @@ def get_spark(app_name: str = "seo-audit-etl-actor-spark") -> SparkSession:
         # long-lived Spark app serving a query library larger than 100
         # shapes pays the same recompile tax; the entry count is
         # shape-count-, not scale- or core-count-dependent.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # shuffle/spill block codec (static conf). zstd over the lz4
         # default: the dedup family's scale boundary is scratch DISK, not
         # CPU (minhash m3160 died at ~70 GB spill on lz4 — r8 scale study);
@@ -237,10 +232,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast(TimestampType()))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def summary_frame(spark: SparkSession, row: dict) -> DataFrame:

@@ -69,6 +69,3 @@ def open_nested_zip(buf: bytes) -> zipfile.ZipFile:
     Raises on corrupt payloads — callers downgrade to 'partial'."""
     return zipfile.ZipFile(io.BytesIO(buf))
 
-
-def entry_names(zf: zipfile.ZipFile) -> list[str]:
-    return zf.namelist()

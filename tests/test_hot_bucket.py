@@ -6,10 +6,13 @@ streaming self-join branch instead of a single collect_list state
 
 from __future__ import annotations
 
+import duckdb
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from seo_audit_etl_actor_spark.operators import dedup
+from seo_audit_etl_actor_spark.queries import llm_ext
 
 
 def _exploded(spark, n_hot=50, n_small_buckets=8):
@@ -150,8 +153,9 @@ def test_simhash_wide_pipeline_capped_equals_uncapped(spark):
     rows = [(i, boiler) for i in range(40)]
     rows += [(100 + i, f"wholly distinct text number {i} about topic {i}") for i in range(10)]
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-    uncapped = dedup.simhash_wide_near_dup_pairs(docs, max_bucket_members=10**9)
-    capped = dedup.simhash_wide_near_dup_pairs(docs, max_bucket_members=5)
+    wide = dedup.SIMHASH_WIDE_BITS
+    uncapped = dedup.simhash_near_dup_pairs(docs, bits=wide, max_bucket_members=10**9)
+    capped = dedup.simhash_near_dup_pairs(docs, bits=wide, max_bucket_members=5)
     a = [(r["id_a"], r["id_b"], r["hamming"]) for r in uncapped.collect()]
     b = [(r["id_a"], r["id_b"], r["hamming"]) for r in capped.collect()]
     assert a == b
@@ -161,12 +165,25 @@ def test_simhash_wide_pipeline_capped_equals_uncapped(spark):
 def test_simhash_wide_word0_is_the_narrow_fingerprint(spark):
     """Word 0 of the 120-bit fingerprint reads the SAME md5 hex chars as
     the 60-bit fingerprint, so it must be bit-identical — the tier-0
-    compatibility contract of the widening."""
+    compatibility contract of the widening — and equal to the DuckDB
+    oracle's unpacked votes. The two long documents (65,536 and 65,538
+    tokens) would overflow 16-bit vote lanes; 32-bit lanes hold any
+    document."""
     rows = [(i, f"some text about topic {i} with shared words") for i in range(30)]
+    rows += [(30, " ".join(["a"] * 65_536)), (31, " ".join(["b c a"] * 21_846))]
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-    wide = {r["doc_id"]: r["fp_w0"] for r in dedup.simhash_fingerprints_wide(docs).collect()}
-    narrow = {r["doc_id"]: r["simhash"] for r in dedup.simhash_fingerprints(docs).collect()}
-    assert wide == narrow
+
+    def word0(bits):
+        return {r["doc_id"]: r["fp_w0"] for r in dedup.simhash_fingerprints(docs, bits=bits).collect()}
+
+    wide, narrow = word0(120), word0(60)
+    assert wide == narrow and len(narrow) == len(rows)
+    con = duckdb.connect()
+    documents = pa.table({"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]})
+    con.register("documents", documents)
+    oracle = dict(con.execute(llm_ext.SQL_SIMHASH_FINGERPRINTS).fetchall())
+    con.close()
+    assert narrow == oracle
 
 
 def test_simhash_wide_pairs_subset_of_narrow(spark):
@@ -175,7 +192,8 @@ def test_simhash_wide_pairs_subset_of_narrow(spark):
     the 60-bit chance-collision volume the widening exists to kill."""
     rows = [(i, f"document {i % 7} body repeated words alpha beta gamma {i % 3}") for i in range(60)]
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-    wide = {(r["id_a"], r["id_b"]) for r in dedup.simhash_wide_near_dup_pairs(docs).collect()}
+    wide_pairs = dedup.simhash_near_dup_pairs(docs, bits=dedup.SIMHASH_WIDE_BITS)
+    wide = {(r["id_a"], r["id_b"]) for r in wide_pairs.collect()}
     narrow = {(r["id_a"], r["id_b"]) for r in dedup.simhash_near_dup_pairs(docs).collect()}
     assert wide <= narrow
 
@@ -188,7 +206,7 @@ def test_simhash_wide_submask_partition_property():
     width = bits // n_bands
     n_sub = max_hamming + 1
 
-    def submask(b, j, word):  # mirror of simhash_wide_near_dup_pairs
+    def submask(b, j, word):  # mirror of simhash_near_dup_pairs
         m, pos = 0, 0
         for i in range(bits):
             if b * width <= i < (b + 1) * width:
@@ -247,5 +265,6 @@ def test_simhash_auto_routes_wide_above_bound(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
     monkeypatch.setattr(dedup, "SIMHASH_WIDTH_BOUND", 10)
     auto = [tuple(r) for r in dedup.simhash_near_dup_pairs_auto(docs).collect()]
-    wide = [tuple(r) for r in dedup.simhash_wide_near_dup_pairs(docs).collect()]
+    wide_pairs = dedup.simhash_near_dup_pairs(docs, bits=dedup.SIMHASH_WIDE_BITS)
+    wide = [tuple(r) for r in wide_pairs.collect()]
     assert auto == wide and len(auto) > 0

@@ -5,6 +5,8 @@ UDFs in reference-parity queries."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -305,17 +307,20 @@ def test_ann_probe_policy_audit_checkpoints_and_broadcasts(spark, sf_dir):
     assert not audit.uses_python_udf(df)
 
 
-def test_simhash_wide_single_fingerprint_aggregate(spark, sf_dir):
-    """The lane-packed wide fingerprint must stay ONE partial/final
-    HashAggregate pair over the token explode (one exchange on doc_id),
-    with no Python eval — the 120-votes-in-31-columns packing is an
-    expression-level change, not a plan-shape change."""
-    df = SPECS["simhash_wide_fingerprints"].fn(spark, sf_dir)
+@pytest.mark.parametrize("name", ["simhash_fingerprints", "simhash_wide_fingerprints"])
+def test_simhash_wide_single_fingerprint_aggregate(spark, sf_dir, name):
+    """The lane-packed fingerprint, at 60 and at 120 bits, must stay ONE
+    partial/final HashAggregate pair over the token explode (one exchange
+    on doc_id), with no Python eval — packing two 32-bit vote counters per
+    long (bits/2 + 1 aggregate columns) is an expression-level change, not
+    a plan-shape change."""
+    df = SPECS[name].fn(spark, sf_dir)
     p = audit.plan_string(df)
     assert not audit.uses_python_udf(df)
     # ensure_parallelism round-robin + the doc_id aggregate + final sort
     assert audit.num_shuffles(df) <= 3, p[:400]
-    assert "HashAggregate" in p
+    # one "(n) HashAggregate" node section per aggregate in the formatted plan
+    assert len(re.findall(r"^\(\d+\) HashAggregate$", p, re.M)) == 2, p[:1500]
     # the md5 must be materialized ONCE per token in its own projection —
     # both conv() words read hx, not two inlined md5 calls
     assert p.count("md5(") == 1, p[:1500]

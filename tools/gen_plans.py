@@ -183,12 +183,11 @@ COMMENT = {
         "120-bit SimHash banding (round 11). What to check: ONE corpus scan into the "
         "token explode, md5 materialized once per token in its own Project (both 60-bit "
         "words read the same digest — no second hash pass), one partial/final "
-        "HashAggregate pair carrying the LANE-PACKED votes (4 non-negative 16-bit "
-        "bit-counters per long: 31 aggregate columns instead of 120 — measured ~2.5x "
-        "on the aggregate-dominated wall), then the same single band-explode shuffle "
-        "as the 60-bit operator with 30-bit band keys; hamming verification (two "
-        "bit_count XORs) sits BELOW the cross-band distinct (early-verify), so only "
-        "verified pairs reach the dedup exchange."
+        "HashAggregate pair carrying the LANE-PACKED votes (2 non-negative 32-bit "
+        "bit-counters per long: 61 aggregate columns instead of 120, and no lane can "
+        "overflow), then the single band-explode shuffle with 30-bit band keys; "
+        "hamming verification (two bit_count XORs) sits BELOW the cross-band distinct "
+        "(early-verify), so only verified pairs reach the dedup exchange."
     ),
 }
 
