@@ -11,7 +11,9 @@ Layout:
   functions/  — scalar expression library (coercion, clamps, rescales)
   operators/  — aggregate/relational operator builders + extensions
   sources/    — ingestion (encoding-sniffing CSV, ZIP, fuzzy schema resolve)
-  plans/      — the end-to-end SEO pipeline, scoring, serialization
+  pipeline/   — the end-to-end SEO audit: stanzas, scoring, serialization
+  plans/      — physical-plan introspection and assertions
+  multimodal/ — binary blobs: image/audio/video decode (incl. T.81 JPEG)
   queries/    — the named query catalog + DuckDB oracle SQL (driver contract)
   streaming/  — Structured Streaming variants of the event operators
 """

@@ -1,65 +1,29 @@
 """Binary-column (image/audio/video) plumbing for LLM-data pipelines.
 
 The Spark-side design is fully real — schemas, partitioning, Arrow batch
-shapes, mapInPandas signatures. The codec story (round 4) is split by
-format:
+shapes, mapInPandas signatures. Decoding needs no codec library:
 
-- CODEC-FREE formats decode FOR REAL: BMP (24-bit BI_RGB) and PPM/PGM
-  (P6/P5 binary) are pure struct + numpy byte math; PNG is fully decoded
-  with stdlib zlib — inflate + all five scanline filters + palette/alpha
-  handling (round 5), and since round 6 every legal layout: bit depths
-  1/2/4/8/16 and Adam7 interlace; baseline JPEG (round 5) is fully
-  decoded in pure numpy — marker walk, canonical Huffman entropy decode,
-  dequantize, separable IDCT of the Y plane, restart markers and
-  arbitrary sampling factors included; MP4/ISO-BMFF video metadata
-  (round 6) is a pure-struct box walk. For all of these the decode
-  functions produce true pixels/metadata (`real_decode = true`);
-- progressive JPEG (SOF2) joined the real decoders in round 7 — spectral
-  selection + successive approximation over the same Huffman/IDCT
-  machinery (`_decode_jpeg_progressive`) — lossless JPEG (SOF3, T.81
-  Annex H predictor decode, precision 8-16) in round 8
-  (`_decode_jpeg_lossless`), 12-bit DCT (SOF1 extended sequential +
-  12-bit progressive: wider level shift, top 8 bits emitted) in round 9,
-  and arithmetic-coded sequential DCT (SOF9 — T.81 Annex D QM-coder +
-  F.1.4.4 statistics model, `multimodal/jpeg_arith.py`) also in round 9,
-  with arithmetic-coded progressive DCT (SOF10 — the Annex G.2 scan
-  procedures over the same QM machinery) and arithmetic-coded lossless
-  (SOF11 — the H.1.2.2 two-dimensional conditioning model over the same
-  QM coder, `jpeg_arith.decode_jpeg_arith_lossless`) joining in
-  round 10;
-- the REMAINING variants still use the deterministic byte-sampling fake:
-  header parsing for dimensions is real, the pixel inner loop is the
-  documented stand-in (`real_decode = false`; swap point noted at the
-  function). Status per variant (r11):
-  * SOF9 restart intervals: LIVE by default since r12
-    (`jpeg_arith.decode_jpeg_arith` defaults `allow_restart=True`; the
-    flip landed with arith_decode_audit's rotation into the r12 driver
-    window). SOF10 restart intervals: implemented and round-trip tested
-    (`decode_jpeg_arith_progressive(allow_restart=True)`) but still
-    gated off here until arith_progressive_decode_audit rotates in
-    (r13; see the jpeg_arith docstrings);
-  * SOF11 restart intervals: stay documented — T.81's lossless restart
-    is genuinely ambiguous about post-restart neighbor availability
-    (jpeg_arith module header), matching the SOF3 Huffman-lossless
-    rationale;
-  * hierarchical JPEG (DHP + SOF5-7/13-15 frames, T.81 Annex J) stays a
-    DOCUMENTED CLOSE rather than a build: a hierarchical stream is a
-    SEQUENCE of differential frames, each coding a residual against an
-    upsampled reference of the previous frame's full reconstruction, with
-    EXP frame-expansion segments between them. Every per-frame entropy
-    layer is machinery this repo already has (Huffman/arithmetic
-    sequential + progressive + lossless), but correctness of the PYRAMID
-    depends on the Annex J.1.1.2 upsampling filter and the differential
-    frame accumulation, for which no conforming encoder, reference
-    stream, or second implementation exists in this container to check
-    against — a from-spec build would be validated only by a same-repo
-    encoder twin sharing every convention, the exact evidence circularity
-    the SOF11 header already flags for its stats-bin layout. Hierarchical
-    JPEG is also a patent-era rarity absent from the synthetic corpus and
-    from every real-world corpus profile this engine targets (libjpeg
-    never shipped an encoder for it). Cost/benefit recorded: ~600 LoC of
-    unverifiable pyramid plumbing vs zero corpus coverage — fake-routing
-    with real header dims is the correct production behavior.
+- BMP (24-bit BI_RGB) and PPM/PGM (P6/P5 binary) are struct + numpy byte
+  math; PNG is decoded with stdlib zlib — inflate, all five scanline
+  filters, palette/alpha, bit depths 1/2/4/8/16 and Adam7 interlace;
+- JPEG is decoded by `multimodal/jpeg.py`, one T.81 frame layer over the
+  Huffman (`jpeg.py`) and arithmetic (`multimodal/jpeg_arith.py`) entropy
+  procedures: sequential DCT (SOF0/1/9, 8/12-bit), progressive DCT
+  (SOF2/10) and lossless (SOF3/11, 8-16 bit), any sampling factors,
+  restart intervals in every DCT process (SOF10's behind a default-off
+  gate until its audit's DRI leg moves to the real decode);
+- MP4/ISO-BMFF video metadata is a pure-struct box walk; 16-bit PCM WAV
+  is raw sample math.
+
+These produce true pixels/metadata (`real_decode = true`). What stays on
+the deterministic byte-sampling fake (`real_decode = false`, real header
+dimensions) is structurally corrupt input and the JPEG variants outside
+the frame layer: hierarchical frames (DHP + SOF5-7/13-15, T.81 Annex J),
+restart intervals in the lossless processes, and SOF10 restart intervals
+while gated. The reasons are recorded in `multimodal/jpeg.py`: a
+hierarchical pyramid, and lossless restart semantics, could only be
+checked against an encoder twin sharing every convention, and neither
+occurs in the corpora this engine targets.
 
 Scale design:
 - binary payloads ride `spark.read.format("binaryFile")` (one row per
@@ -84,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seo_audit_etl_actor_spark.multimodal import jpeg
 from seo_audit_etl_actor_spark.session import ensure_package_on_executors
 
 IMAGE_META_SCHEMA = T.StructType(
@@ -111,21 +76,8 @@ def _sniff_image_header(data: bytes) -> tuple[str | None, int | None, int | None
     if data[:8] == b"\x89PNG\r\n\x1a\n" and len(data) >= 24:
         w, h = struct.unpack(">II", data[16:24])
         return "png", int(w), int(h)
-    if data[:2] == b"\xff\xd8":  # JPEG SOI; walk segments to SOF0/2
-        i = 2
-        while i + 9 < len(data):
-            if data[i] != 0xFF:
-                break
-            marker = data[i + 1]
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            # any SOFn (C0-CF except DHT C4 / JPG-reserved C8 / DAC CC)
-            # carries dimensions; 0xC8 is reserved for extensions per
-            # T.81 Table B.1 — its payload is NOT a frame header
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", data[i + 5 : i + 9])
-                return "jpeg", int(w), int(h)
-            i += 2 + seg_len
-        return "jpeg", None, None
+    if data[:2] == b"\xff\xd8":
+        return ("jpeg", *jpeg.frame_dims(data))
     if data[:2] == b"BM" and len(data) >= 30:
         w = struct.unpack("<i", data[18:22])[0]
         h = struct.unpack("<i", data[22:26])[0]
@@ -357,871 +309,19 @@ def _decode_png_gray_unsafe(data: bytes):
     return ((r * 299 + g * 587 + b * 114) // 1000).astype(np.uint8)
 
 
-# JPEG zigzag order: _JPEG_ZIGZAG[k] = natural-order index of the k-th
-# zigzag-scanned coefficient (ITU-T T.81 Figure A.6).
-_JPEG_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-class _JpegBits:
-    """MSB-first bit reader over a de-stuffed entropy-coded segment."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        if self.pos >= len(self.data):
-            raise EOFError
-        b = (self.data[self.pos] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1
-        return b
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the t-bit magnitude to its signed value."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def _jpeg_huff_decode(bits: _JpegBits, table: dict) -> int:
-    """Canonical Huffman decode: read bits until (length, code) hits."""
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | bits.read_bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid huffman code")
-
-
-def _decode_jpeg_gray(data: bytes):
-    """REAL baseline JPEG decode in pure numpy (no codec library): marker
-    walk (DQT/DHT/SOF0/SOS/DRI), canonical-Huffman entropy decode of the
-    scan, dequantize + de-zigzag, separable float IDCT, level shift. Only
-    the Y component is dequantized/transformed — JPEG's Y channel IS the
-    BT.601 luma this module's contract emits — but chroma blocks are still
-    entropy-decoded to keep the bitstream position honest.
-
-    Scope (returns None outside it, routing to the documented fake):
-    baseline sequential DCT (SOF0, 8-bit), extended sequential DCT
-    (SOF1, 8/12-bit — round 9: the same Huffman decode with a wider
-    level shift, top 8 bits emitted), progressive DCT (SOF2, 8/12-bit;
-    round 7 — spectral selection + successive approximation,
-    _decode_jpeg_progressive), Huffman coding, 1-4 components, any
-    sampling factors, restart markers supported; lossless (SOF3, round
-    8 — Annex H predictor decode, precision 8-16,
-    _decode_jpeg_lossless); arithmetic-coded sequential (SOF9, round 9 —
-    Annex D QM-coder + F.1.4.4 statistics model,
-    jpeg_arith.decode_jpeg_arith); arithmetic-coded progressive (SOF10,
-    round 10 — Annex G.2 scan procedures,
-    jpeg_arith.decode_jpeg_arith_progressive); arithmetic-coded
-    lossless (SOF11, round 10 — H.1.2.2 two-dimensional conditioning,
-    jpeg_arith.decode_jpeg_arith_lossless). Restart intervals decode
-    real in the Huffman DCT paths and (since r12) in SOF9; hierarchical
-    JPEG and restart intervals in the SOF10/lossless paths are out of
-    scope."""
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        return None
-    qtables: dict[int, "np.ndarray"] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    sof = None
-    restart_interval = 0
-    i, n = 2, len(data)
-    try:
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                return None
-            marker = data[i + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:  # SOI / RSTn
-                i += 2
-                continue
-            if marker == 0xD9:  # EOI before SOS
-                return None
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xDB:  # DQT
-                j = 0
-                while j < len(body):
-                    pq, tq = body[j] >> 4, body[j] & 15
-                    j += 1
-                    if pq == 0:
-                        vals = np.frombuffer(body[j : j + 64], dtype=np.uint8)
-                        j += 64
-                    else:
-                        vals = np.frombuffer(body[j : j + 128], dtype=">u2")
-                        j += 128
-                    if len(vals) < 64:
-                        return None
-                    tbl = np.zeros(64, dtype=np.int64)
-                    tbl[_JPEG_ZIGZAG] = vals.astype(np.int64)
-                    qtables[tq] = tbl.reshape(8, 8)
-            elif marker == 0xC4:  # DHT
-                j = 0
-                while j + 17 <= len(body):
-                    tc, th = body[j] >> 4, body[j] & 15
-                    counts = body[j + 1 : j + 17]
-                    j += 17
-                    table: dict[tuple[int, int], int] = {}
-                    code = 0
-                    for length in range(1, 17):
-                        for _ in range(counts[length - 1]):
-                            if j >= len(body):
-                                return None
-                            table[(length, code)] = body[j]
-                            j += 1
-                            code += 1
-                        code <<= 1
-                    htables[(tc, th)] = table
-            elif marker in (0xC0, 0xC1):  # SOF0 baseline / SOF1 extended sequential
-                _prec, ih, iw, ncomp = struct.unpack(">BHHB", body[:6])
-                # T.81 B.2.2: baseline is 8-bit only; extended sequential
-                # (Huffman) allows 8 or 12 — the same decode procedure with
-                # a wider level shift (r9: the 12-bit DCT generalization)
-                ok_prec = _prec == 8 if marker == 0xC0 else _prec in (8, 12)
-                if not ok_prec or ncomp == 0 or ncomp > 4 or iw == 0 or ih == 0:
-                    return None
-                comps = []
-                for c in range(ncomp):
-                    cid, hv, tq = body[6 + c * 3 : 9 + c * 3]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                sof = (iw, ih, comps, _prec)
-            elif marker == 0xC2:  # SOF2 progressive (round 7: real decode)
-                return _decode_jpeg_progressive(data)
-            elif marker == 0xC3:  # SOF3 lossless (round 8: real decode)
-                return _decode_jpeg_lossless(data)
-            elif marker == 0xC9:  # SOF9 arithmetic sequential (round 9)
-                from seo_audit_etl_actor_spark.multimodal.jpeg_arith import (
-                    decode_jpeg_arith,
-                )
-
-                return decode_jpeg_arith(data)
-            elif marker == 0xCA:  # SOF10 arithmetic progressive (round 10)
-                from seo_audit_etl_actor_spark.multimodal.jpeg_arith import (
-                    decode_jpeg_arith_progressive,
-                )
-
-                return decode_jpeg_arith_progressive(data)
-            elif marker == 0xCB:  # SOF11 arithmetic lossless (round 10)
-                from seo_audit_etl_actor_spark.multimodal.jpeg_arith import (
-                    decode_jpeg_arith_lossless,
-                )
-
-                return decode_jpeg_arith_lossless(data)
-            elif marker in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
-                return None  # remaining non-decodable SOFs (hierarchical)
-            elif marker == 0xDD:  # DRI
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS
-                if sof is None:
-                    return None
-                ns = body[0]
-                scan = []
-                for c in range(ns):
-                    cs, tda = body[1 + c * 2 : 3 + c * 2]
-                    scan.append((cs, tda >> 4, tda & 15))
-                ecs_start = i + 2 + seg_len
-                return _jpeg_decode_scan(
-                    data[ecs_start:], sof, scan, qtables, htables, restart_interval
-                )
-            i += 2 + seg_len
-    except (IndexError, ValueError, struct.error):
-        return None
-    return None
-
-
-def _jpeg_decode_scan(ecs, sof, scan, qtables, htables, restart_interval):
-    """Decode the first sequential scan into the Y plane. Interleaved scans
-    (ns > 1) walk the usual hmax x vmax MCU grid; a single-component scan
-    is NON-interleaved per T.81 (MCU = one data unit over the component's
-    own block grid) — which also makes multi-scan baseline files decode
-    correctly, since their first scan is the Y component. `sof` carries
-    the frame precision (8 baseline, 8/12 extended sequential): the level
-    shift is 2^(P-1), clipping [0, 2^P-1], and the emitted luma is the
-    top 8 bits (>> (P-8)) — the same output contract as the lossless
-    path."""
-    import numpy as np
-
-    iw, ih, comps, precision = sof
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax == 0 or vmax == 0:
-        return None
-    mcux = (iw + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (ih + 8 * vmax - 1) // (8 * vmax)
-
-    # entropy-coded segments: strip trailing EOI, split on RSTn, de-stuff
-    end = ecs.find(b"\xff\xd9")
-    body = ecs[:end] if end >= 0 else ecs
-    import re
-
-    segments = [
-        seg.replace(b"\xff\x00", b"\xff")
-        for seg in re.split(b"\xff[\xd0-\xd7]", body)
-    ]
-
-    # scan order follows SOF component order restricted to the scan list
-    scan_by_id = {cs: (td, ta) for cs, td, ta in scan}
-    order = [(cid, h, v, tq) for cid, h, v, tq in comps if cid in scan_by_id]
-    if len(order) != len(scan):
-        return None
-    y_cid, y_h, y_v, y_tq = order[0]
-    true_h, true_v = y_h, y_v  # component sampling, kept for crop/upsample
-    if len(order) == 1:
-        # non-interleaved: one data unit per MCU, component's own grid
-        comp_w = (iw * true_h + hmax - 1) // hmax
-        comp_h = (ih * true_v + vmax - 1) // vmax
-        mcux, mcuy = (comp_w + 7) // 8, (comp_h + 7) // 8
-        y_h = y_v = 1
-        order = [(y_cid, 1, 1, y_tq)]
-    if y_tq not in qtables:
-        return None
-    yq = qtables[y_tq]
-
-    # separable IDCT basis: A[x, u] = c(u)/2 * cos((2x+1) u pi / 16)
-    u = np.arange(8)
-    x = np.arange(8)
-    A = 0.5 * np.cos((2 * x[:, None] + 1) * u[None, :] * np.pi / 16)
-    A[:, 0] *= 1 / np.sqrt(2)
-
-    plane = np.zeros((mcuy * 8 * y_v, mcux * 8 * y_h), dtype=np.uint8)
-    pred = {cid: 0 for cid, _, _, _ in order}
-    mcu_idx = 0
-    total_mcus = mcux * mcuy
-    per_seg = restart_interval if restart_interval else total_mcus
-    try:
-        for seg in segments:
-            bits = _JpegBits(seg)
-            for cid in pred:
-                pred[cid] = 0
-            seg_mcus = min(per_seg, total_mcus - mcu_idx)
-            for _ in range(seg_mcus):
-                my, mx = divmod(mcu_idx, mcux)
-                for cid, ch, cv, _tq in order:
-                    td, ta = scan_by_id[cid]
-                    dc_tbl = htables.get((0, td))
-                    ac_tbl = htables.get((1, ta))
-                    if dc_tbl is None or ac_tbl is None:
-                        return None
-                    for by in range(cv):
-                        for bx in range(ch):
-                            coef = np.zeros(64, dtype=np.int64)
-                            t = _jpeg_huff_decode(bits, dc_tbl)
-                            pred[cid] += _jpeg_extend(bits.receive(t), t)
-                            coef[0] = pred[cid]
-                            k = 1
-                            while k < 64:
-                                rs = _jpeg_huff_decode(bits, ac_tbl)
-                                r, s = rs >> 4, rs & 15
-                                if s == 0:
-                                    if r == 15:
-                                        k += 16
-                                        continue
-                                    break  # EOB
-                                k += r
-                                if k > 63:
-                                    return None
-                                coef[_JPEG_ZIGZAG[k]] = _jpeg_extend(
-                                    bits.receive(s), s
-                                )
-                                k += 1
-                            if cid != y_cid:
-                                continue  # chroma: bitstream advanced, done
-                            block = coef.reshape(8, 8) * yq
-                            spatial = A @ block.astype(np.float64) @ A.T
-                            pix = np.clip(
-                                np.round(spatial) + (1 << (precision - 1)),
-                                0,
-                                (1 << precision) - 1,
-                            )
-                            r0 = (my * y_v + by) * 8
-                            c0 = (mx * y_h + bx) * 8
-                            plane[r0 : r0 + 8, c0 : c0 + 8] = (
-                                pix.astype(np.int64) >> (precision - 8)
-                            ).astype(np.uint8)
-                mcu_idx += 1
-        if mcu_idx < total_mcus:
-            return None
-    except (EOFError, ValueError, IndexError):
-        return None
-
-    return _jpeg_upsample_y(plane, true_h, true_v, hmax, vmax, iw, ih)
-
-
-
-def _jpeg_upsample_y(plane, true_h, true_v, hmax, vmax, iw, ih):
-    """Crop the decoded Y block grid to the component's true resolution
-    and upsample to image resolution when Y itself is subsampled (legal
-    but rare). Shared by the baseline and progressive paths so the
-    non-integer-ratio guard cannot diverge between them: for a Y whose
-    sampling does not divide hmax/vmax evenly (e.g. Y=(2,2) beside a
-    (3,3) component) an integer-floor repeat would silently emit a
-    wrong-scale plane, so return None to route to the documented fake."""
-    import numpy as np
-
-    y_w = (iw * true_h + hmax - 1) // hmax
-    y_hh = (ih * true_v + vmax - 1) // vmax
-    plane = plane[:y_hh, :y_w]
-    if true_h != hmax or true_v != vmax:
-        if vmax % true_v or hmax % true_h:
-            return None
-        plane = np.repeat(
-            np.repeat(plane, vmax // true_v, axis=0), hmax // true_h, axis=1
-        )
-        plane = plane[:ih, :iw]
-    return plane
-
-
-def _decode_jpeg_lossless(data: bytes):
-    """REAL lossless JPEG (SOF3) decode — T.81 Annex H over the same
-    canonical-Huffman machinery as the DCT paths (round 8; closes the
-    r7 verdict's decode-completeness stretch). The data unit is ONE
-    SAMPLE: each is a DC-class-coded magnitude category SSSS plus SSSS
-    raw bits giving a difference (SSSS=16 means diff=32768, no bits),
-    added modulo 2^16 to a neighbor prediction Px selected by Ss (H.1,
-    Table H.1): 1=Ra 2=Rb 3=Rc 4=Ra+Rb-Rc 5=Ra+((Rb-Rc)>>1)
-    6=Rb+((Ra-Rc)>>1) 7=(Ra+Rb)>>1. Boundary rules: very first sample
-    predicts 2^(P-Pt-1); rest of the first line uses Ra; first column
-    uses Rb. The point transform Al=Pt is restored by << Pt.
-
-    Scope (None routes to the documented fake): precision 8-16 (output
-    reduced to uint8 by >> (P-8), the PNG-16-bit high-byte discipline),
-    interleaved and single-component scans, any sampling factors.
-    Restart intervals are out of scope — T.81 H.2.2's reset interacts
-    with the first-line predictor rules ambiguously enough that real
-    decoders disagree, and lossless-with-DRI files are vanishingly rare.
-    Only the FIRST scan's components are decoded (Y is scan component 0,
-    same contract as the baseline path)."""
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        return None
-    htables: dict[tuple[int, int], dict] = {}
-    sof = None
-    precision = 0
-    restart_interval = 0
-    scan = None
-    band = None
-    ecs_start = 0
-    i, n = 2, len(data)
-    try:
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                return None
-            marker = data[i + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                return None
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xC4:  # DHT — same canonical build as baseline
-                j = 0
-                while j + 17 <= len(body):
-                    tc, th = body[j] >> 4, body[j] & 15
-                    counts = body[j + 1 : j + 17]
-                    j += 17
-                    table: dict[tuple[int, int], int] = {}
-                    code = 0
-                    for length in range(1, 17):
-                        for _ in range(counts[length - 1]):
-                            if j >= len(body):
-                                return None
-                            table[(length, code)] = body[j]
-                            j += 1
-                            code += 1
-                        code <<= 1
-                    htables[(tc, th)] = table
-            elif marker == 0xC3:  # SOF3 lossless
-                precision, ih, iw, ncomp = struct.unpack(">BHHB", body[:6])
-                if not 8 <= precision <= 16 or ncomp == 0 or ncomp > 4 or iw == 0 or ih == 0:
-                    return None
-                comps = []
-                for c in range(ncomp):
-                    cid, hv, _tq = body[6 + c * 3 : 9 + c * 3]
-                    comps.append((cid, hv >> 4, hv & 15))
-                sof = (iw, ih, comps)
-            elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None
-            elif marker == 0xDD:
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:
-                if sof is None:
-                    return None
-                ns = body[0]
-                scan = []
-                for c in range(ns):
-                    cs, tda = body[1 + c * 2 : 3 + c * 2]
-                    scan.append((cs, tda >> 4))
-                band = (body[1 + ns * 2], body[2 + ns * 2], body[3 + ns * 2])
-                ecs_start = i + 2 + seg_len
-                break
-            i += 2 + seg_len
-        if scan is None or restart_interval:
-            return None
-        psv, _se, ahal = band
-        pt = ahal & 15
-        if not 1 <= psv <= 7 or pt >= precision:
-            return None
-
-        iw, ih, comps = sof
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        if hmax == 0 or vmax == 0:
-            return None
-        scan_by_id = {cs: td for cs, td in scan}
-        order = [(cid, h, v) for cid, h, v in comps if cid in scan_by_id]
-        if len(order) != len(scan):
-            return None
-        y_cid, y_h, y_v = order[0]
-        true_h, true_v = y_h, y_v
-        if len(order) == 1:
-            # non-interleaved (H.2): MCU = one sample on the component grid
-            mcux = (iw * true_h + hmax - 1) // hmax
-            mcuy = (ih * true_v + vmax - 1) // vmax
-            order = [(y_cid, 1, 1)]
-        else:
-            mcux = (iw + hmax - 1) // hmax
-            mcuy = (ih + vmax - 1) // vmax
-        for cid, _h, _v in order:
-            if (0, scan_by_id[cid]) not in htables:
-                return None
-
-        grids = {
-            cid: np.zeros((mcuy * v, mcux * h), dtype=np.int64)
-            for cid, h, v in order
-        }
-        default = 1 << (precision - pt - 1)
-        body = data[ecs_start : _jpeg_ecs_end(data, ecs_start)]
-        bits = _JpegBits(body.replace(b"\xff\x00", b"\xff"))
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for cid, h, v in order:
-                    table = htables[(0, scan_by_id[cid])]
-                    g = grids[cid]
-                    for dy in range(v):
-                        for dx in range(h):
-                            ssss = _jpeg_huff_decode(bits, table)
-                            if ssss == 16:
-                                diff = 32768
-                            elif ssss > 16:
-                                return None
-                            elif ssss:
-                                diff = _jpeg_extend(bits.receive(ssss), ssss)
-                            else:
-                                diff = 0
-                            row, col = my * v + dy, mx * h + dx
-                            if row == 0 and col == 0:
-                                px = default
-                            elif row == 0:
-                                px = int(g[0, col - 1])
-                            elif col == 0:
-                                px = int(g[row - 1, 0])
-                            else:
-                                a = int(g[row, col - 1])
-                                b = int(g[row - 1, col])
-                                c = int(g[row - 1, col - 1])
-                                px = (
-                                    a if psv == 1 else b if psv == 2 else c
-                                    if psv == 3 else a + b - c if psv == 4
-                                    else a + ((b - c) >> 1) if psv == 5
-                                    else b + ((a - c) >> 1) if psv == 6
-                                    else (a + b) >> 1
-                                )
-                            g[row, col] = (px + diff) & 0xFFFF
-    except (EOFError, ValueError, IndexError, struct.error):
-        return None
-
-    full = np.clip(grids[y_cid] << pt, 0, (1 << precision) - 1)
-    plane = (full >> (precision - 8)).astype(np.uint8)
-    return _jpeg_upsample_y(plane, true_h, true_v, hmax, vmax, iw, ih)
-
-
-def _jpeg_ecs_end(data: bytes, start: int) -> int:
-    """Index of the byte that ends an entropy-coded segment: the first
-    0xFF followed by anything that is neither a stuffed 0x00 nor an RSTn
-    (T.81 B.1.1.5). Returns len(data) if no such marker exists."""
-    i = start
-    n = len(data)
-    while True:
-        j = data.find(b"\xff", i)
-        if j < 0 or j + 1 >= n:
-            return n
-        nxt = data[j + 1]
-        if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-            i = j + 2
-            continue
-        return j
-
-
-def _decode_jpeg_progressive(data: bytes):
-    """REAL progressive JPEG (SOF2) decode in pure numpy — T.81 Annex G:
-    spectral selection + successive approximation over the same canonical
-    Huffman / dequant / separable-IDCT machinery as the baseline path.
-
-    Per-scan semantics implemented (G.1.2, matching the de-facto libjpeg
-    interpretation):
-    - DC first (Ss=Se=0, Ah=0): baseline DIFF coding of the DC value
-      arithmetic-shifted right by Al; decoder stores pred << Al.
-    - DC refinement (Ah>0): one raw bit per block, OR-ed in at bit Al
-      (two's-complement OR extends negatives correctly).
-    - AC first (Ss>0, Ah=0, always single-component): run/size coding
-      within the spectral band with EOBRUN = (1<<r)-1+receive(r) extra
-      skipped blocks; values are magnitudes shifted left by Al.
-    - AC refinement (Ss>0, Ah>0): newly-significant coefficients arrive
-      as ±1<<Al; every nonzero-history coefficient traversed (including
-      inside ZRL runs and EOB-covered tails) consumes one correction bit
-      that, when set, moves the value one quantum away from zero.
-
-    Only the Y component's coefficients persist (the emitted plane is
-    luma); chroma-only scans are skipped wholesale — each progressive
-    scan is an independent entropy segment, so skipping costs nothing —
-    while interleaved DC scans entropy-decode chroma to keep bit position
-    honest. Restart markers reset DC predictors and EOBRUN per segment.
-    Structurally corrupt input returns None (same contract as baseline).
-    """
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        return None
-    qtables: dict[int, "np.ndarray"] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    sof = None
-    precision = 8
-    restart_interval = 0
-    ycoef = None
-    y_meta = None  # (y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx)
-    i, n = 2, len(data)
-    try:
-        while i + 2 <= n:
-            if data[i] != 0xFF:
-                return None
-            marker = data[i + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:  # EOI
-                break
-            if i + 4 > n:
-                return None
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            if i + 2 + seg_len > n:
-                return None  # truncated segment — corrupt, not degradable
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xDB:  # DQT (tables may arrive between scans)
-                j = 0
-                while j < len(body):
-                    pq, tq = body[j] >> 4, body[j] & 15
-                    j += 1
-                    if pq == 0:
-                        vals = np.frombuffer(body[j : j + 64], dtype=np.uint8)
-                        j += 64
-                    else:
-                        vals = np.frombuffer(body[j : j + 128], dtype=">u2")
-                        j += 128
-                    if len(vals) < 64:
-                        return None
-                    tbl = np.zeros(64, dtype=np.int64)
-                    tbl[_JPEG_ZIGZAG] = vals.astype(np.int64)
-                    qtables[tq] = tbl.reshape(8, 8)
-            elif marker == 0xC4:  # DHT (commonly per-scan in progressive)
-                j = 0
-                while j + 17 <= len(body):
-                    tc, th = body[j] >> 4, body[j] & 15
-                    counts = body[j + 1 : j + 17]
-                    j += 17
-                    table: dict[tuple[int, int], int] = {}
-                    code = 0
-                    for length in range(1, 17):
-                        for _ in range(counts[length - 1]):
-                            if j >= len(body):
-                                return None
-                            table[(length, code)] = body[j]
-                            j += 1
-                            code += 1
-                        code <<= 1
-                    htables[(tc, th)] = table
-            elif marker == 0xC2:  # SOF2
-                _prec, ih, iw, ncomp = struct.unpack(">BHHB", body[:6])
-                # progressive allows 8 or 12-bit precision (T.81 B.2.2);
-                # the coefficient machinery is precision-free — only the
-                # final level shift / clip / top-8-bit output widens (r9)
-                if _prec not in (8, 12) or ncomp == 0 or ncomp > 4 or iw == 0 or ih == 0:
-                    return None
-                precision = _prec
-                comps = []
-                for c in range(ncomp):
-                    cid, hv, tq = body[6 + c * 3 : 9 + c * 3]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                sof = (iw, ih, comps)
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                if hmax == 0 or vmax == 0:
-                    return None
-                mcux = (iw + 8 * hmax - 1) // (8 * hmax)
-                mcuy = (ih + 8 * vmax - 1) // (8 * vmax)
-                y_cid, y_h, y_v, y_tq = comps[0]
-                comp_w = (iw * y_h + hmax - 1) // hmax
-                comp_h = (ih * y_v + vmax - 1) // vmax
-                nby, nbx = (comp_h + 7) // 8, (comp_w + 7) // 8
-                ycoef = np.zeros((mcuy * y_v, mcux * y_h, 64), dtype=np.int32)
-                y_meta = (y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx)
-            elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # mixed / non-progressive frame in this path
-            elif marker == 0xDD:  # DRI
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS — one progressive scan
-                if sof is None or ycoef is None:
-                    return None
-                ns = body[0]
-                scan = []
-                for c in range(ns):
-                    cs, tda = body[1 + c * 2 : 3 + c * 2]
-                    scan.append((cs, tda >> 4, tda & 15))
-                Ss, Se, ahal = body[1 + ns * 2 : 4 + ns * 2]
-                Ah, Al = ahal >> 4, ahal & 15
-                ecs_start = i + 2 + seg_len
-                ecs_end = _jpeg_ecs_end(data, ecs_start)
-                ok = _jpeg_progressive_scan(
-                    data[ecs_start:ecs_end], sof, scan, (Ss, Se, Ah, Al),
-                    htables, restart_interval, ycoef, y_meta,
-                )
-                if not ok:
-                    return None
-                i = ecs_end
-                continue
-            i += 2 + seg_len
-    except (EOFError, ValueError, IndexError, struct.error):
-        return None
-    if sof is None or ycoef is None:
-        return None
-
-    iw, ih, comps = sof
-    y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx = y_meta
-    if y_tq not in qtables:
-        return None
-    yq = qtables[y_tq].reshape(-1)
-
-    u = np.arange(8)
-    x = np.arange(8)
-    A = 0.5 * np.cos((2 * x[:, None] + 1) * u[None, :] * np.pi / 16)
-    A[:, 0] *= 1 / np.sqrt(2)
-    gy, gx = ycoef.shape[:2]
-    plane = np.zeros((gy * 8, gx * 8), dtype=np.uint8)
-    for by in range(gy):
-        for bx in range(gx):
-            block = (ycoef[by, bx].astype(np.int64) * yq).reshape(8, 8)
-            spatial = A @ block.astype(np.float64) @ A.T
-            pix = np.clip(
-                np.round(spatial) + (1 << (precision - 1)), 0, (1 << precision) - 1
-            )
-            plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                pix.astype(np.int64) >> (precision - 8)
-            ).astype(np.uint8)
-
-    return _jpeg_upsample_y(plane, y_h, y_v, hmax, vmax, iw, ih)
-
-
-def _jpeg_progressive_scan(ecs, sof, scan, band, htables, restart_interval, ycoef, y_meta):
-    """Decode ONE progressive scan into the persistent Y coefficient grid.
-    Returns False on structural corruption. Chroma-only scans return True
-    without touching the bitstream (independent entropy segments)."""
-    import re
-
-    iw, ih, comps = sof
-    Ss, Se, Ah, Al = band
-    y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx = y_meta
-    scan_by_id = {cs: (td, ta) for cs, td, ta in scan}
-    if y_cid not in scan_by_id:
-        return True  # chroma-only scan: skip wholesale
-    if Ss > Se or Se > 63 or (Ss == 0) != (Se == 0):
-        return False
-    if Ss > 0 and len(scan) != 1:
-        return False  # AC scans are single-component per T.81 G.1.1
-
-    segments = [
-        seg.replace(b"\xff\x00", b"\xff")
-        for seg in re.split(b"\xff[\xd0-\xd7]", ecs)
-    ]
-
-    if Ss == 0:
-        # DC scan — interleaved over the MCU grid (or the component grid
-        # when ns == 1)
-        order = [(cid, h, v) for cid, h, v, _tq in comps if cid in scan_by_id]
-        if len(order) != len(scan):
-            return False
-        if len(order) == 1:
-            cid0 = order[0][0]
-            if cid0 == y_cid:
-                grid = [(y_cid, 1, 1)]
-                tx, ty = nbx, nby
-            else:
-                return True  # single non-Y DC scan: skippable
-        else:
-            grid = order
-            tx, ty = mcux, mcuy
-        total = tx * ty
-        per_seg = restart_interval if restart_interval else total
-        idx = 0
-        dc_tbls = {}
-        for cid, _h, _v in grid:
-            td, _ta = scan_by_id[cid]
-            if Ah == 0:
-                t = htables.get((0, td))
-                if t is None:
-                    return False
-                dc_tbls[cid] = t
-        try:
-            for seg in segments:
-                bits = _JpegBits(seg)
-                pred = {cid: 0 for cid, _h, _v in grid}
-                seg_n = min(per_seg, total - idx)
-                for _ in range(seg_n):
-                    my, mx = divmod(idx, tx)
-                    for cid, ch, cv in grid:
-                        for by in range(cv):
-                            for bx in range(ch):
-                                if Ah == 0:
-                                    t = _jpeg_huff_decode(bits, dc_tbls[cid])
-                                    pred[cid] += _jpeg_extend(bits.receive(t), t)
-                                    if cid == y_cid:
-                                        r0 = my * cv + by if len(grid) > 1 else my
-                                        c0 = mx * ch + bx if len(grid) > 1 else mx
-                                        ycoef[r0, c0, 0] = pred[cid] << Al
-                                else:
-                                    bit = bits.read_bit()
-                                    if cid == y_cid and bit:
-                                        r0 = my * cv + by if len(grid) > 1 else my
-                                        c0 = mx * ch + bx if len(grid) > 1 else mx
-                                        ycoef[r0, c0, 0] |= bit << Al
-                    idx += 1
-            return idx == total
-        except (EOFError, ValueError, IndexError):
-            return False
-
-    # AC scan over the Y component's true block grid
-    _td, ta = scan_by_id[y_cid]
-    ac_tbl = htables.get((1, ta))
-    if ac_tbl is None:
-        return False
-    total = nbx * nby
-    per_seg = restart_interval if restart_interval else total
-    idx = 0
-    p1 = 1 << Al
-    m1 = -(1 << Al)
-    try:
-        for seg in segments:
-            bits = _JpegBits(seg)
-            eobrun = 0
-            seg_n = min(per_seg, total - idx)
-            for _ in range(seg_n):
-                by, bx = divmod(idx, nbx)
-                coef = ycoef[by, bx]
-                if Ah == 0:
-                    # AC first pass (G.1.2.2)
-                    if eobrun > 0:
-                        eobrun -= 1
-                    else:
-                        k = Ss
-                        while k <= Se:
-                            rs = _jpeg_huff_decode(bits, ac_tbl)
-                            r, sz = rs >> 4, rs & 15
-                            if sz == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += bits.receive(r)
-                                break
-                            k += r
-                            if k > Se:
-                                return False
-                            coef[_JPEG_ZIGZAG[k]] = (
-                                _jpeg_extend(bits.receive(sz), sz) << Al
-                            )
-                            k += 1
-                else:
-                    # AC refinement pass (G.1.2.3)
-                    k = Ss
-                    if eobrun == 0:
-                        while k <= Se:
-                            rs = _jpeg_huff_decode(bits, ac_tbl)
-                            r, sz = rs >> 4, rs & 15
-                            if sz == 0:
-                                if r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += bits.receive(r)
-                                    break
-                                val = 0  # ZRL: skip 16 zero-history coefs
-                            else:
-                                if sz != 1:
-                                    return False
-                                val = p1 if bits.read_bit() else m1
-                            while k <= Se:
-                                pos = _JPEG_ZIGZAG[k]
-                                if coef[pos] != 0:
-                                    if bits.read_bit() and not (coef[pos] & p1):
-                                        coef[pos] += p1 if coef[pos] > 0 else m1
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if val and k <= Se:
-                                coef[_JPEG_ZIGZAG[k]] = val
-                            k += 1
-                    if eobrun > 0:
-                        while k <= Se:
-                            pos = _JPEG_ZIGZAG[k]
-                            if coef[pos] != 0:
-                                if bits.read_bit() and not (coef[pos] & p1):
-                                    coef[pos] += p1 if coef[pos] > 0 else m1
-                            k += 1
-                        eobrun -= 1
-                idx += 1
-        return idx == total
-    except (EOFError, ValueError, IndexError):
-        return False
-
-
 def _decode_gray_pixels(data: bytes):
     """REAL pixel decode: returns an (H, W) uint8 grayscale numpy array,
-    or None for the formats/variants still outside the pure-python codecs
-    (hierarchical JPEG, restart intervals in the lossless/arithmetic
-    paths).
+    or None for corrupt blobs and the variants the decoders leave to the
+    documented fake (see the module docstring).
 
     - PGM (P5): raster IS the grayscale plane.
     - PPM (P6): RGB raster -> integer BT.601 luma (r*299+g*587+b*114)//1000.
     - BMP: 24-bit uncompressed BI_RGB only — BGR pixels, rows padded to 4
       bytes, bottom-up unless height is negative.
-    - PNG (round 5): full inflate + unfilter decode — stdlib zlib IS the
-      PNG codec, so this needs no external library (_decode_png_gray).
-    - baseline JPEG (round 5): full Huffman + dequant + IDCT decode of the
-      Y plane in pure numpy (_decode_jpeg_gray) — JPEG's Y channel is the
-      same BT.601 luma the other branches compute.
+    - PNG: full inflate + unfilter decode — stdlib zlib IS the PNG codec
+      (_decode_png_gray).
+    - JPEG: the Y plane through `jpeg.decode_jpeg` — JPEG's Y channel is
+      the same BT.601 luma the other branches compute.
     """
     import numpy as np
 
@@ -1229,7 +329,7 @@ def _decode_gray_pixels(data: bytes):
         return _decode_png_gray(data)
 
     if data[:2] == b"\xff\xd8":
-        return _decode_jpeg_gray(data)
+        return jpeg.decode_jpeg(data)
 
     if data[:2] in (b"P5", b"P6"):
         parsed = _parse_pnm_header(data)
@@ -1340,15 +440,14 @@ def decode_image_thumbs(df: DataFrame, content_col: str = "content") -> DataFram
     """Resize/feature-extract step. Decode split (round 5):
 
     - BMP (24-bit BI_RGB), binary PPM/PGM, every legal PNG layout, and
-      baseline/extended-sequential (8/12-bit), progressive, and lossless
-      JPEG decode FOR REAL (`_decode_gray_pixels`
-      — struct+numpy, stdlib zlib as the PNG inflate, pure-numpy
-      Huffman+IDCT as the JPEG codec): true BT.601 luma plane,
-      area-averaged 8x8 thumbnail, exact integer block means.
-      `real_decode = true`.
-    - The remaining variants (hierarchical JPEG, restart intervals in
-      the lossless/arithmetic paths) keep the
-      DETERMINISTIC FAKE byte-sampling decode:
+      the sequential, progressive and lossless JPEG processes (Huffman
+      and arithmetic) decode FOR REAL (`_decode_gray_pixels` —
+      struct+numpy, stdlib zlib as the PNG inflate, `multimodal/jpeg.py`
+      as the JPEG codec): true BT.601 luma plane, area-averaged 8x8
+      thumbnail, exact integer block means. `real_decode = true`.
+    - Corrupt blobs and the remaining JPEG variants (hierarchical frames,
+      restart intervals in the lossless processes and, while gated,
+      SOF10) keep the DETERMINISTIC FAKE byte-sampling decode:
       deterministic per content so downstream thumb-distance dedup behaves
       like a real decoder's output. Swap the `_fake_gray_thumb` branch for
       `PIL.Image.open(...).convert("L").resize(...)` when a codec exists;

@@ -1,84 +1,49 @@
-"""REAL arithmetic-coded sequential JPEG decode (SOF9) — ITU-T T.81
-Annex D QM-coder + §F.1.4.4 statistics model, pure Python/numpy (round 9;
-previously the last major documented fake in the decode family).
+"""Arithmetic-coded JPEG entropy decoding (T.81 Annex D QM coder) for the
+SOF9, SOF10 and SOF11 processes. The frame layer — marker walk, tables,
+MCU geometry, block reconstruction, the lossless predictor — is
+`multimodal/jpeg.py`; this module decodes the entropy-coded data:
 
-What is implemented:
-- the QM binary arithmetic decoder (Annex D.2): 16-bit interval register
-  A, per-context (index, MPS) adaptive state over the Annex D Table D.3
-  transition table, conditional exchange on both paths, renormalization;
-- the sequential DCT statistics model (F.1.4.4): DC diff coding with the
-  5-class previous-diff conditioning (L/U thresholds from DAC, defaults
-  0/1) over a 49-bin state area; AC coding per coefficient index k with
-  the 3-bins-per-k (EOB, significance, first magnitude category) layout,
-  the Kx-conditioned high-magnitude regions at bins 189/217, magnitude
-  bits at category+14, and the non-adaptive fixed bin for AC signs;
-- DAC (0xCC) conditioning parameters; 8/12-bit precision (same top-8-bit
-  output contract as every other decode path); interleaved and
-  single-component scans; 1-4 components with any sampling factors.
+- `QMDecoder`: the Annex D.2 binary arithmetic decoder — 16-bit interval
+  register A, per-context (index, MPS) adaptive state over the Table D.3
+  transitions, conditional exchange on both paths, renormalisation.
+- `sequential` (SOF9): the F.1.4.4 statistics model. DC differences use
+  the 5-class previous-difference conditioning (L/U from DAC, default
+  0/1) over a 49-bin area; AC coefficients use 3 bins per k (EOB,
+  significance, first magnitude category), the Kx-conditioned
+  high-magnitude ladders at bins 189/217, magnitude bits at category+14
+  and the fixed non-adaptive bin for signs.
+- `progressive_scan` (SOF10): the G.2 scan procedures over the same bins.
+  DC first is the sequential DIFF model on DC >> Al; DC refinement one
+  fixed-context decision per block; AC first the sequential band model;
+  AC refinement per-k EOB (decoded only beyond the previous stage's last
+  nonzero coefficient), significance and correction decisions with
+  fixed-context signs. Each scan is an independent segment with fresh
+  statistics.
+- `lossless_diffs` (SOF11): the H.1.2.2 model — each sample difference
+  coded by the DC DIFF decision tree under two-dimensional (Da, Db)
+  conditioning.
 
-Round 10 adds arithmetic-coded PROGRESSIVE decode (SOF10,
-`decode_jpeg_arith_progressive`): the Annex G.2 scan procedures —
-spectral selection + successive approximation — over the same QM coder
-and F.1.4.4 statistics bins (DC first = the sequential DIFF model on
-DC >> Al; DC refinement = fixed-context bits; AC first = the sequential
-band model; AC refinement = per-k EOB/significance/correction decisions
-with fixed-context signs). Each scan is an independent entropy segment
-with fresh statistics.
+Restart intervals (SOF9, SOF10): the strict T.81 arithmetic restart —
+segments of Ri MCUs (Ri blocks in a non-interleaved scan), RSTn cycling
+0..7 and validated, and a fresh QM decoder, statistics, predictions and
+conditioning per segment (E.2.4, F.1.4.0, G.2).
 
-Round 10 also adds arithmetic-coded LOSSLESS decode (SOF11,
-`decode_jpeg_arith_lossless`): the Annex H.1.2.2 statistical model —
-each sample difference coded by the DC DIFF decision tree under
-two-dimensional (Da, Db) conditioning — over the same QM coder.
-
-Restart intervals (round 11): the SOF9 sequential AND SOF10 progressive
-paths implement the strict T.81 arithmetic restart (entropy segments of
-Ri MCUs — or Ri blocks in non-interleaved scans — RSTn cycling 0..7
-strictly validated, per-segment re-init of the QM decoder + statistics +
-predictions + conditioning; E.2.4/F.1.4.0/G.2), round-trip tested
-against the fixtures encoders' restart_interval support. Gate status
-(r12): SOF9's default is now allow_restart=True — the flip landed with
-arith_decode_audit's rotation into the r12 driver window (its DRI leg's
-pinned constants moved from fake-route to the hand-derived real decode).
-SOF10 stays gated OFF (allow_restart=False) until
-arith_progressive_decode_audit rotates in (r13 — its DRI leg still
-carries evidence classifying DRI blobs as fakes). Still out of scope
-(returns None → the
-documented fake): DRI in the LOSSLESS (SOF11) path — T.81's lossless
-restart semantics are genuinely ambiguous about which decoded neighbor
-samples the post-restart predictor may reference (full independence
-would forbid the above-row neighbors every non-restart decoder uses),
-so any implementation here would be a private convention round-tripping
-against itself; it stays documented, matching the SOF3 Huffman-lossless
-path's standing rationale.
-
-Evidence honesty — what "encoder/decoder agreement" covers here: the
-DECODE procedures below and the ENCODE procedures in
+Evidence: the decode procedures here and the encoders in
 `multimodal/fixtures.py` are written separately from the Annex D
 flowcharts, so round-trip agreement evidences the interval arithmetic,
-conditional exchange, renormalization and the whole F.1.4.4 statistics
-model. Two things are SHARED data/conventions and therefore NOT evidenced
-by agreement (same status as the ZIGZAG constant): the Table D.3 state
-table transcription, and the bit-transport framing (this implementation
-initializes the code window with the first 16 entropy bits and applies
-T.81's 0xFF byte-stuffing rule — a zero bit follows every 0xFF byte, a
-post-0xFF byte > 0x8F is a marker, and exhausted streams feed 1-bits —
-rather than reproducing the flowcharts' byte-aligned 32-bit register
-bookkeeping, so bit-exact interop with external codecs is plausible but
-UNVERIFIED in this container, which ships no reference JPEG codec).
-
-Production guidance (r11, from the r10 advisory): the SOF11 stats-bin
-layout (LL_STAT_BINS=158, ladder bases 100/129, +14 magnitude-bit offset)
-is a self-defined convention validated only against this repo's fixture
-encoder. Before trusting real_decode=true SOF11 output from an EXTERNAL
-corpus, validate one externally-generated SOF11 stream against this
-decoder (or at minimum plausibility-check the decoded plane — e.g.
-residual energy vs the fake-thumb baseline); a layout mismatch would
-decode to garbage without fake-routing.
+conditional exchange, renormalisation and the statistics models. Shared
+data and conventions are NOT evidenced by that agreement: the Table D.3
+transcription, and the bit framing (the code window starts with the
+first 16 entropy bits; a zero bit is stuffed after every 0xFF, a
+post-0xFF byte > 0x8F is a marker, and an exhausted stream feeds
+1-bits), so interop with external codecs is plausible but unverified.
+The SOF11 statistics-bin layout (LL_STAT_BINS=158, ladders at 100/129,
++14 magnitude bits) is a self-defined convention checked only against
+this repo's encoder; `lossless_diffs` documents the plausibility gates
+that route a mismatched external stream to the documented fake.
 """
 
 from __future__ import annotations
-
-import struct
 
 # Annex D Table D.3: (Qe, NMPS, NLPS, SWITCH) per state 0..112, plus the
 # non-adaptive "fixed" state 113 (used for AC signs, F.1.4.4.2.1) that
@@ -319,611 +284,179 @@ def decode_ac_block(dec: QMDecoder, stats: list[list[int]], kx: int,
         k += 1
 
 
-def decode_jpeg_arith(data: bytes, allow_restart: bool = True):
-    """Decode an arithmetic-coded sequential JPEG (SOF9) to the uint8 Y
-    luma plane (top 8 bits at 12-bit precision), or None when the stream
-    is structurally corrupt or out of scope (SOF10/SOF11). Mirrors
-    `_decode_jpeg_gray`'s contract so `_decode_gray_pixels` can route to
-    it transparently.
 
-    Restart intervals: the strict T.81 arithmetic restart —
-    ceil(mcus/Ri) entropy segments, RSTn markers cycling 0..7, each
-    segment re-initializing the QM decoder, ALL statistics areas, the DC
-    predictions and the DC conditioning state (E.2.4/F.1.4.0) — was
-    implemented in r11 (see _decode_arith_scan) behind
-    `allow_restart=False` while arith_decode_audit's `4_ar_dri.jpg` leg
-    still carried driver evidence pinning DRI blobs as fakes; the default
-    flipped to True in r12 when that audit rotated back into the driver
-    window with updated real-decode constants. `allow_restart=False` is
-    kept as an explicit opt-out for callers that need the old
-    fake-routing behavior."""
-    import numpy as np
-
-    from seo_audit_etl_actor_spark.multimodal.binary_ops import (
-        _JPEG_ZIGZAG,
-        _jpeg_upsample_y,
-    )
-
-    if data[:2] != b"\xff\xd8":
-        return None
-    qtables: dict[int, "np.ndarray"] = {}
-    # DAC conditioning: DC (L, U) per table id; AC Kx per table id
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    sof = None
-    precision = 8
-    restart_interval = 0
-    i, n = 2, len(data)
-    try:
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                return None
-            marker = data[i + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                return None
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xDB:  # DQT
-                j = 0
-                while j < len(body):
-                    pq, tq = body[j] >> 4, body[j] & 15
-                    j += 1
-                    if pq == 0:
-                        vals = np.frombuffer(body[j : j + 64], dtype=np.uint8)
-                        j += 64
-                    else:
-                        vals = np.frombuffer(body[j : j + 128], dtype=">u2")
-                        j += 128
-                    if len(vals) < 64:
-                        return None
-                    tbl = np.zeros(64, dtype=np.int64)
-                    tbl[_JPEG_ZIGZAG] = vals.astype(np.int64)
-                    qtables[tq] = tbl.reshape(8, 8)
-            elif marker == 0xCC:  # DAC
-                j = 0
-                while j + 2 <= len(body):
-                    tc, tb = body[j] >> 4, body[j] & 15
-                    cs = body[j + 1]
-                    j += 2
-                    if tc == 0:
-                        dc_cond[tb] = (cs & 15, cs >> 4)  # (L, U)
-                    else:
-                        ac_cond[tb] = cs  # Kx
-            elif marker == 0xC9:  # SOF9 arithmetic sequential
-                precision, ih, iw, ncomp = struct.unpack(">BHHB", body[:6])
-                if precision not in (8, 12) or ncomp == 0 or ncomp > 4 or iw == 0 or ih == 0:
-                    return None
-                comps = []
-                for c in range(ncomp):
-                    cid, hv, tq = body[6 + c * 3 : 9 + c * 3]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                sof = (iw, ih, comps)
-            elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                            0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # not arithmetic-sequential — wrong path
-            elif marker == 0xDD:  # DRI
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS
-                if sof is None or (restart_interval and not allow_restart):
-                    return None  # DRI gated off (see docstring)
-                ns = body[0]
-                scan = []
-                for c in range(ns):
-                    cs, tda = body[1 + c * 2 : 3 + c * 2]
-                    scan.append((cs, tda >> 4, tda & 15))
-                ecs = data[i + 2 + seg_len :]
-                return _decode_arith_scan(
-                    ecs, sof, scan, qtables, dc_cond, ac_cond, precision,
-                    restart_interval,
-                )
-            i += 2 + seg_len
-    except (ValueError, IndexError, struct.error):
-        return None
-    return None
-
-
-def _decode_arith_scan(ecs, sof, scan, qtables, dc_cond, ac_cond, precision,
-                       restart_interval=0):
-    """Sequential arithmetic scan → Y plane (same MCU walk as the Huffman
-    `_jpeg_decode_scan`, with QM statistics instead of Huffman tables).
-    With `restart_interval` > 0 the entropy data is ceil(mcus/Ri) segments
-    separated by RSTn markers cycling 0..7 (strictly validated); each
-    segment starts a fresh QM decoder over fresh statistics, predictions
-    and conditioning state."""
-    import numpy as np
-
-    from seo_audit_etl_actor_spark.multimodal.binary_ops import (
-        _JPEG_ZIGZAG,
-        _jpeg_upsample_y,
-    )
-
-    iw, ih, comps = sof
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax == 0 or vmax == 0:
-        return None
-    mcux = (iw + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (ih + 8 * vmax - 1) // (8 * vmax)
-
-    scan_by_id = {cs: (td, ta) for cs, td, ta in scan}
-    order = [(cid, h, v, tq) for cid, h, v, tq in comps if cid in scan_by_id]
-    if len(order) != len(scan):
-        return None
-    y_cid, y_h, y_v, y_tq = order[0]
-    true_h, true_v = y_h, y_v
-    if len(order) == 1:
-        comp_w = (iw * true_h + hmax - 1) // hmax
-        comp_h = (ih * true_v + vmax - 1) // vmax
-        mcux, mcuy = (comp_w + 7) // 8, (comp_h + 7) // 8
-        y_h = y_v = 1
-        order = [(y_cid, 1, 1, y_tq)]
-    if y_tq not in qtables:
-        return None
-    yq = qtables[y_tq]
-
-    u = np.arange(8)
-    x = np.arange(8)
-    A = 0.5 * np.cos((2 * x[:, None] + 1) * u[None, :] * np.pi / 16)
-    A[:, 0] *= 1 / np.sqrt(2)
-
-    dec = QMDecoder(ecs)
-    dc_stats: dict[int, list] = {}
-    ac_stats: dict[int, list] = {}
-    sign_ctx = fixed_ctx()
-    pred = {cid: 0 for cid, _, _, _ in order}
-    dc_ctx_base = {cid: 0 for cid, _, _, _ in order}
-    seg_start = 0
-
-    plane = np.zeros((mcuy * 8 * y_v, mcux * 8 * y_h), dtype=np.uint8)
-    level = 1 << (precision - 1)
-    maxval = (1 << precision) - 1
-    try:
-        for m in range(mcux * mcuy):
-            if restart_interval and m > 0 and m % restart_interval == 0:
-                # end of segment: the first marker at/after seg_start is
-                # the restart (stuffed 0xFFs inside the segment are
-                # followed by <= 0x8F and skipped by _arith_ecs_end)
-                seg_end = _arith_ecs_end(ecs, seg_start)
-                expect = 0xD0 + ((m // restart_interval - 1) % 8)
-                if (
-                    seg_end + 1 >= len(ecs)
-                    or ecs[seg_end] != 0xFF
-                    or ecs[seg_end + 1] != expect
-                ):
-                    return None  # missing / out-of-order RSTn
-                seg_start = seg_end + 2
-                dec = QMDecoder(ecs[seg_start:])
-                dc_stats, ac_stats = {}, {}
-                sign_ctx = fixed_ctx()
-                pred = {cid: 0 for cid, _, _, _ in order}
-                dc_ctx_base = {cid: 0 for cid, _, _, _ in order}
-            my, mx = divmod(m, mcux)
-            for cid, ch, cv, _tq in order:
-                td, ta = scan_by_id[cid]
-                if td not in dc_stats:
-                    dc_stats[td] = _new_stats(DC_STAT_BINS)
-                if ta not in ac_stats:
-                    ac_stats[ta] = _new_stats(AC_STAT_BINS)
-                L, U = dc_cond.get(td, (0, 1))
-                kx = ac_cond.get(ta, 5)
-                for by in range(cv):
-                    for bx in range(ch):
-                        coef = [0] * 64
-                        diff, nxt = decode_dc_diff(
-                            dec, dc_stats[td], dc_ctx_base[cid], L, U
-                        )
-                        dc_ctx_base[cid] = nxt
-                        pred[cid] += diff
-                        coef[0] = pred[cid]
-                        decode_ac_block(dec, ac_stats[ta], kx, sign_ctx, coef)
-                        if cid != y_cid:
-                            continue
-                        cz = np.zeros(64, dtype=np.int64)
-                        cz[_JPEG_ZIGZAG] = np.array(
-                            [coef[k] for k in range(64)], dtype=np.int64
-                        )
-                        block = cz.reshape(8, 8) * yq
-                        spatial = A @ block.astype(np.float64) @ A.T
-                        pix = np.clip(np.round(spatial) + level, 0, maxval)
-                        r0 = (my * y_v + by) * 8
-                        c0 = (mx * y_h + bx) * 8
-                        plane[r0 : r0 + 8, c0 : c0 + 8] = (
-                            pix.astype(np.int64) >> (precision - 8)
-                        ).astype(np.uint8)
-    except (ValueError, IndexError):
-        return None
-    return _jpeg_upsample_y(plane, true_h, true_v, hmax, vmax, iw, ih)
-
-
-# ------------------------------------ arithmetic progressive (SOF10, r10)
-
-
-def _arith_ecs_end(data: bytes, start: int) -> int:
+def ecs_end(data: bytes, start: int, restart: int = 0) -> int:
     """End of an arithmetic-coded entropy segment: the first 0xFF followed
-    by a byte > 0x8F. Within an arithmetic ECS every 0xFF is followed by a
-    stuffed byte <= 0x8F (zero MSB + 7 payload bits), so anything above is
-    a marker (fill bytes 0xFF 0xFF ... resolve to the marker as well)."""
+    by a byte > 0x8F (inside the segment every 0xFF is followed by a
+    stuffed byte <= 0x8F, and fill bytes resolve to the marker as well);
+    len(data) if none. With a restart interval in effect the scan's RSTn
+    markers are crossed."""
     i, n = start, len(data)
     while i + 1 < n:
         if data[i] == 0xFF and data[i + 1] > 0x8F:
-            return i
+            if not (restart and 0xD0 <= data[i + 1] <= 0xD7):
+                return i
+            i += 1
         i += 1
     return n
 
 
-def _arith_scan_end(data: bytes, start: int) -> int:
-    """End of a SCAN's entropy body: like _arith_ecs_end but RSTn markers
-    (0xD0-0xD7) belong to the scan when restart intervals are in effect —
-    skip them and keep scanning for the terminating marker."""
-    i = start
-    while True:
-        j = _arith_ecs_end(data, i)
-        if j + 1 < len(data) and 0xD0 <= data[j + 1] <= 0xD7:
-            i = j + 2
+def _restart(ecs: bytes, seg_start: int, unit: int, restart: int) -> int:
+    """Validate the RSTn that ends the segment starting at `seg_start`
+    before restart unit `unit`; returns where the next segment starts."""
+    seg_end = ecs_end(ecs, seg_start)
+    expect = 0xD0 + ((unit // restart - 1) % 8)
+    if seg_end + 1 >= len(ecs) or ecs[seg_end] != 0xFF or ecs[seg_end + 1] != expect:
+        raise ValueError("missing or out-of-order RSTn")
+    return seg_end + 2
+
+
+def sequential(ecs, order, mcux, mcuy, tables, t, restart, coef) -> None:
+    """SOF9 scan: every MCU of `order` (see jpeg._scan_layout), the
+    emitted component's zigzag coefficients into `coef`."""
+    y_cid, yh, yv, _tq = order[0]
+    seg_start = 0
+    for m in range(mcux * mcuy):
+        if m == 0 or (restart and m % restart == 0):
+            if m:
+                seg_start = _restart(ecs, seg_start, m, restart)
+            dec = QMDecoder(ecs[seg_start:])
+            dc_stats: dict[int, list] = {}
+            ac_stats: dict[int, list] = {}
+            sign_ctx = fixed_ctx()
+            pred = {cid: 0 for cid, _, _, _ in order}
+            ctx_base = {cid: 0 for cid, _, _, _ in order}
+        my, mx = divmod(m, mcux)
+        for cid, ch, cv, _tq in order:
+            td, ta = tables[cid]
+            if td not in dc_stats:
+                dc_stats[td] = _new_stats(DC_STAT_BINS)
+            if ta not in ac_stats:
+                ac_stats[ta] = _new_stats(AC_STAT_BINS)
+            L, U = t.dc_cond.get(td, (0, 1))
+            kx = t.ac_cond.get(ta, 5)
+            for by in range(cv):
+                for bx in range(ch):
+                    block = [0] * 64
+                    diff, ctx_base[cid] = decode_dc_diff(
+                        dec, dc_stats[td], ctx_base[cid], L, U
+                    )
+                    pred[cid] += diff
+                    block[0] = pred[cid]
+                    decode_ac_block(dec, ac_stats[ta], kx, sign_ctx, block)
+                    if cid == y_cid:
+                        coef[my * yv + by, mx * yh + bx] = block
+
+
+def progressive_scan(ecs, units, y_cid, tables, t, restart, coef) -> None:
+    """One SOF10 scan into Y's persistent zigzag coefficient grid. `units`
+    is jpeg._Progressive.units: the band, and either the DC scan's
+    components over its MCU grid or (None) Y's block grid for AC. A
+    restart re-initialises the decoder, statistics, predictions and
+    conditioning; the coefficient grid (and the refinement kex derived
+    from it) is untouched. Raises ValueError on structural corruption."""
+    ss, se, ah, al, grid, tx, ty = units
+    interleaved = grid is not None and len(grid) > 1
+    kx = t.ac_cond.get(tables[y_cid][1], 5)
+    p1 = 1 << al
+    seg_start = 0
+    for idx in range(tx * ty):
+        if idx == 0 or (restart and idx % restart == 0):
+            if idx:
+                seg_start = _restart(ecs, seg_start, idx, restart)
+            dec = QMDecoder(ecs[seg_start:])
+            dc_stats: dict[int, list] = {}
+            stats = _new_stats(AC_STAT_BINS)
+            fixed = fixed_ctx()
+            pred = {cid: 0 for cid, _h, _v in grid or ()}
+            ctx_base = dict(pred)
+        my, mx = divmod(idx, tx)
+        if grid is not None:
+            for cid, ch, cv in grid:
+                td = tables[cid][0]
+                if ah == 0 and td not in dc_stats:
+                    dc_stats[td] = _new_stats(DC_STAT_BINS)
+                L, U = t.dc_cond.get(td, (0, 1))
+                for by in range(cv):
+                    for bx in range(ch):
+                        r0 = my * cv + by if interleaved else my
+                        c0 = mx * ch + bx if interleaved else mx
+                        if ah == 0:  # DC first: the sequential DIFF model
+                            diff, ctx_base[cid] = decode_dc_diff(
+                                dec, dc_stats[td], ctx_base[cid], L, U
+                            )
+                            pred[cid] += diff
+                            if cid == y_cid:
+                                coef[r0, c0, 0] = pred[cid] << al
+                        else:  # DC refinement: one fixed-context bit at Al
+                            bit = dec.decode(fixed)
+                            if cid == y_cid and bit:
+                                coef[r0, c0, 0] |= bit << al
             continue
-        return j
-
-
-def decode_jpeg_arith_progressive(data: bytes, allow_restart: bool = False):
-    """Arithmetic-coded progressive JPEG (SOF10) decode to the uint8 Y
-    plane — T.81 Annex G.2: spectral selection + successive approximation
-    with the QM coder. Retires the r9-documented fake for this variant.
-
-    Restart intervals (r11): implemented per scan — every Ri MCUs
-    (interleaved DC scans) or Ri blocks (non-interleaved DC / AC scans)
-    the entropy segment ends at a strictly-validated RSTn (cycling 0..7
-    per scan) and the QM decoder, statistics areas, DC predictions and
-    conditioning re-initialize; the persistent coefficient grid (and the
-    refinement passes' kex derivation from it) is untouched. Gated OFF by
-    default like the sequential path (`allow_restart=False` → DRI streams
-    return None) until `arith_progressive_decode_audit` rotates back into
-    the driver window (r13); see decode_jpeg_arith's docstring for the
-    evidence-union rationale.
-
-    Scan semantics (the G.2 procedures; each scan is an independent
-    entropy segment with fresh statistics and a fresh QM decoder):
-    - DC first (Ss=0, Ah=0): the sequential F.1.4.4.1 DIFF model applied
-      to DC >> Al; the grid stores pred << Al.
-    - DC refinement (Ah>0): ONE decision per block from the fixed
-      (non-adaptive) context, OR-ed in at bit Al.
-    - AC first (Ss>0, Ah=0, single-component per G.1.1): the sequential
-      F.1.4.4.2 model over the Ss..Se band, values stored << Al.
-    - AC refinement: per-k EOB decision at the k-th EOB bin — decoded
-      only beyond the PREVIOUS stage's last nonzero coefficient (kex) —
-      newly-significant decisions at the significance bin, signs from the
-      fixed context, and correction bits for nonzero-history coefficients
-      at the first-magnitude bin (bins shared with the first-scan layout).
-
-    Like the Huffman progressive path, only Y's coefficients persist;
-    chroma-only scans are skipped wholesale (independent segments) while
-    interleaved DC scans entropy-decode chroma to keep the QM interval
-    honest."""
-    import numpy as np
-
-    from seo_audit_etl_actor_spark.multimodal.binary_ops import (
-        _JPEG_ZIGZAG,
-        _jpeg_upsample_y,
-    )
-
-    if data[:2] != b"\xff\xd8":
-        return None
-    qtables: dict[int, "np.ndarray"] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    sof = None
-    precision = 8
-    restart_interval = 0
-    ycoef = None
-    y_meta = None
-    i, n = 2, len(data)
-    try:
-        while i + 2 <= n:
-            if data[i] != 0xFF:
-                return None
-            marker = data[i + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                break
-            if i + 4 > n:
-                return None
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            if i + 2 + seg_len > n:
-                return None
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xDB:  # DQT
-                j = 0
-                while j < len(body):
-                    pq, tq = body[j] >> 4, body[j] & 15
-                    j += 1
-                    if pq == 0:
-                        vals = np.frombuffer(body[j : j + 64], dtype=np.uint8)
-                        j += 64
-                    else:
-                        vals = np.frombuffer(body[j : j + 128], dtype=">u2")
-                        j += 128
-                    if len(vals) < 64:
-                        return None
-                    tbl = np.zeros(64, dtype=np.int64)
-                    tbl[_JPEG_ZIGZAG] = vals.astype(np.int64)
-                    qtables[tq] = tbl.reshape(8, 8)
-            elif marker == 0xCC:  # DAC (may arrive between scans)
-                j = 0
-                while j + 2 <= len(body):
-                    tc, tb = body[j] >> 4, body[j] & 15
-                    cs = body[j + 1]
-                    j += 2
-                    if tc == 0:
-                        dc_cond[tb] = (cs & 15, cs >> 4)
-                    else:
-                        ac_cond[tb] = cs
-            elif marker == 0xCA:  # SOF10 arithmetic progressive
-                precision, ih, iw, ncomp = struct.unpack(">BHHB", body[:6])
-                if precision not in (8, 12) or ncomp == 0 or ncomp > 4 or iw == 0 or ih == 0:
-                    return None
-                comps = []
-                for c in range(ncomp):
-                    cid, hv, tq = body[6 + c * 3 : 9 + c * 3]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                sof = (iw, ih, comps)
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                if hmax == 0 or vmax == 0:
-                    return None
-                mcux = (iw + 8 * hmax - 1) // (8 * hmax)
-                mcuy = (ih + 8 * vmax - 1) // (8 * vmax)
-                y_cid, y_h, y_v, y_tq = comps[0]
-                comp_w = (iw * y_h + hmax - 1) // hmax
-                comp_h = (ih * y_v + vmax - 1) // vmax
-                nby, nbx = (comp_h + 7) // 8, (comp_w + 7) // 8
-                ycoef = np.zeros((mcuy * y_v, mcux * y_h, 64), dtype=np.int32)
-                y_meta = (y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx)
-            elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                            0xC9, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # not arithmetic-progressive — wrong path
-            elif marker == 0xDD:  # DRI
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS — one progressive scan
-                if sof is None or ycoef is None or (
-                    restart_interval and not allow_restart
-                ):
-                    return None  # DRI gated off (see docstring)
-                ns = body[0]
-                scan = []
-                for c in range(ns):
-                    cs, tda = body[1 + c * 2 : 3 + c * 2]
-                    scan.append((cs, tda >> 4, tda & 15))
-                Ss, Se, ahal = body[1 + ns * 2 : 4 + ns * 2]
-                Ah, Al = ahal >> 4, ahal & 15
-                ecs_start = i + 2 + seg_len
-                ecs_end = (
-                    _arith_scan_end(data, ecs_start)
-                    if restart_interval
-                    else _arith_ecs_end(data, ecs_start)
-                )
-                ok = _arith_progressive_scan(
-                    data[ecs_start:ecs_end], sof, scan, (Ss, Se, Ah, Al),
-                    dc_cond, ac_cond, ycoef, y_meta, restart_interval,
-                )
-                if not ok:
-                    return None
-                i = ecs_end
-                continue
-            i += 2 + seg_len
-    except (ValueError, IndexError, struct.error):
-        return None
-    if sof is None or ycoef is None:
-        return None
-
-    iw, ih, comps = sof
-    y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx = y_meta
-    if y_tq not in qtables:
-        return None
-    yq = qtables[y_tq].reshape(-1)
-
-    u = np.arange(8)
-    x = np.arange(8)
-    A = 0.5 * np.cos((2 * x[:, None] + 1) * u[None, :] * np.pi / 16)
-    A[:, 0] *= 1 / np.sqrt(2)
-    gy, gx = ycoef.shape[:2]
-    plane = np.zeros((gy * 8, gx * 8), dtype=np.uint8)
-    level = 1 << (precision - 1)
-    maxval = (1 << precision) - 1
-    for by in range(gy):
-        for bx in range(gx):
-            block = (ycoef[by, bx].astype(np.int64) * yq).reshape(8, 8)
-            spatial = A @ block.astype(np.float64) @ A.T
-            pix = np.clip(np.round(spatial) + level, 0, maxval)
-            plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                pix.astype(np.int64) >> (precision - 8)
-            ).astype(np.uint8)
-    return _jpeg_upsample_y(plane, y_h, y_v, hmax, vmax, iw, ih)
-
-
-def _arith_progressive_scan(ecs, sof, scan, band, dc_cond, ac_cond, ycoef, y_meta,
-                            restart_interval=0):
-    """Decode ONE SOF10 scan into the persistent Y coefficient grid
-    (decode mirrors of the G.2 coding models; bin layout shared with the
-    sequential F.1.4.4 statistics areas). Returns False on structural
-    corruption; chroma-only scans return True without touching the
-    segment. With `restart_interval` > 0 the segment is cut every Ri
-    MCUs/blocks at a strictly-validated RSTn with full state re-init."""
-    from seo_audit_etl_actor_spark.multimodal.binary_ops import _JPEG_ZIGZAG
-
-    iw, ih, comps = sof
-    Ss, Se, Ah, Al = band
-    y_cid, y_h, y_v, y_tq, hmax, vmax, mcux, mcuy, nby, nbx = y_meta
-    scan_by_id = {cs: (td, ta) for cs, td, ta in scan}
-    if y_cid not in scan_by_id:
-        return True  # chroma-only scan: independent segment, skip wholesale
-    if Ss > Se or Se > 63 or (Ss == 0) != (Se == 0):
-        return False
-    if Ss > 0 and len(scan) != 1:
-        return False  # AC scans are single-component per T.81 G.1.1
-
-    dec = QMDecoder(ecs)
-    seg_start = [0]
-
-    def restart_at(unit_idx: int) -> QMDecoder:
-        """Validate the RSTn ending the current segment, open the next;
-        the caller re-initializes its statistics/prediction state."""
-        seg_end = _arith_ecs_end(ecs, seg_start[0])
-        expect = 0xD0 + ((unit_idx // restart_interval - 1) % 8)
-        if (
-            seg_end + 1 >= len(ecs)
-            or ecs[seg_end] != 0xFF
-            or ecs[seg_end + 1] != expect
-        ):
-            raise ValueError("missing or out-of-order RSTn")
-        seg_start[0] = seg_end + 2
-        return QMDecoder(ecs[seg_start[0]:])
-
-    try:
-        if Ss == 0:
-            order = [(cid, h, v) for cid, h, v, _tq in comps if cid in scan_by_id]
-            if len(order) != len(scan):
-                return False
-            if len(order) == 1:
-                if order[0][0] != y_cid:
-                    return True  # single non-Y DC scan: skippable
-                grid = [(y_cid, 1, 1)]
-                tx, ty = nbx, nby
-            else:
-                grid = order
-                tx, ty = mcux, mcuy
-            interleaved = len(grid) > 1
-            if Ah == 0:
-                dc_stats: dict[int, list] = {}
-                pred = {cid: 0 for cid, _h, _v in grid}
-                ctx_base = {cid: 0 for cid, _h, _v in grid}
-                for idx in range(tx * ty):
-                    if restart_interval and idx and idx % restart_interval == 0:
-                        dec = restart_at(idx)
-                        dc_stats = {}
-                        pred = {cid: 0 for cid, _h, _v in grid}
-                        ctx_base = {cid: 0 for cid, _h, _v in grid}
-                    my, mx = divmod(idx, tx)
-                    for cid, ch, cv in grid:
-                        td, _ta = scan_by_id[cid]
-                        if td not in dc_stats:
-                            dc_stats[td] = _new_stats(DC_STAT_BINS)
-                        L, U = dc_cond.get(td, (0, 1))
-                        for by in range(cv):
-                            for bx in range(ch):
-                                diff, nxt = decode_dc_diff(
-                                    dec, dc_stats[td], ctx_base[cid], L, U
-                                )
-                                ctx_base[cid] = nxt
-                                pred[cid] += diff
-                                if cid == y_cid:
-                                    r0 = my * cv + by if interleaved else my
-                                    c0 = mx * ch + bx if interleaved else mx
-                                    ycoef[r0, c0, 0] = pred[cid] << Al
-            else:
-                # DC refinement: one decision per block from the FIXED
-                # context (G.2.3); OR at bit Al extends negatives via
-                # two's complement exactly like the Huffman path
-                corr = fixed_ctx()
-                for idx in range(tx * ty):
-                    if restart_interval and idx and idx % restart_interval == 0:
-                        dec = restart_at(idx)
-                        corr = fixed_ctx()
-                    my, mx = divmod(idx, tx)
-                    for cid, ch, cv in grid:
-                        for by in range(cv):
-                            for bx in range(ch):
-                                bit = dec.decode(corr)
-                                if cid == y_cid and bit:
-                                    r0 = my * cv + by if interleaved else my
-                                    c0 = mx * ch + bx if interleaved else mx
-                                    ycoef[r0, c0, 0] |= bit << Al
-            return True
-
-        # AC scan over the Y component's true block grid
-        _td, ta = scan_by_id[y_cid]
-        kx = ac_cond.get(ta, 5)
-        stats = _new_stats(AC_STAT_BINS)
-        sign_ctx = fixed_ctx()
-        p1 = 1 << Al
-        for idx in range(nbx * nby):
-            if restart_interval and idx and idx % restart_interval == 0:
-                dec = restart_at(idx)
-                stats = _new_stats(AC_STAT_BINS)
-                sign_ctx = fixed_ctx()
-            gby, gbx = divmod(idx, nbx)
-            coef = ycoef[gby, gbx]
-            if Ah == 0:
-                # AC first pass: the sequential model over the band
-                k = Ss
-                while k <= Se:
-                    base = 3 * (k - 1)
-                    if dec.decode(stats[base]):  # EOB
-                        break
-                    while dec.decode(stats[base + 1]) == 0:
-                        k += 1
-                        if k > Se:
-                            return False
-                        base = 3 * (k - 1)
-                    sign = dec.decode(sign_ctx)
-                    st = base + 2
-                    m = dec.decode(stats[st])
-                    if m != 0:
-                        if dec.decode(stats[st]):
-                            m = 2
-                            st = AC_LOW_BASE if k <= kx else AC_HIGH_BASE
-                            while dec.decode(stats[st]):
-                                m <<= 1
-                                if m == 0x8000:
-                                    return False
-                                st += 1
-                    v = m
-                    st += 14
-                    mm = m
-                    while mm > 1:
-                        mm >>= 1
-                        if dec.decode(stats[st]):
-                            v |= mm
-                    v += 1
-                    coef[_JPEG_ZIGZAG[k]] = (-v if sign else v) << Al
+        block = coef[my, mx]
+        if ah == 0:
+            # AC first pass: the sequential model over the band
+            k = ss
+            while k <= se:
+                base = 3 * (k - 1)
+                if dec.decode(stats[base]):  # EOB
+                    break
+                while dec.decode(stats[base + 1]) == 0:
                     k += 1
-            else:
-                # AC refinement pass: kex = the PREVIOUS stage's last
-                # nonzero index (the accumulated grid holds exactly the
-                # previous stages' value)
-                kex = 0
-                for j in range(Se, 0, -1):
-                    if coef[_JPEG_ZIGZAG[j]] != 0:
-                        kex = j
-                        break
-                k = Ss
-                while k <= Se:
+                    if k > se:
+                        raise ValueError("AC run past Se")
                     base = 3 * (k - 1)
-                    if k > kex and dec.decode(stats[base]):
-                        break  # EOB: nothing further in this band
-                    while True:
-                        pos = _JPEG_ZIGZAG[k]
-                        if coef[pos] != 0:
-                            if dec.decode(stats[base + 2]):
-                                coef[pos] += p1 if coef[pos] > 0 else -p1
-                            break
-                        if dec.decode(stats[base + 1]):
-                            coef[pos] = -p1 if dec.decode(sign_ctx) else p1
-                            break
-                        k += 1
-                        if k > Se:
-                            return False
-                        base = 3 * (k - 1)
+                sign = dec.decode(fixed)
+                st = base + 2
+                m = dec.decode(stats[st])
+                if m != 0:
+                    if dec.decode(stats[st]):
+                        m = 2
+                        st = AC_LOW_BASE if k <= kx else AC_HIGH_BASE
+                        while dec.decode(stats[st]):
+                            m <<= 1
+                            if m == 0x8000:
+                                raise ValueError("AC magnitude overflow")
+                            st += 1
+                v = m
+                st += 14
+                mm = m
+                while mm > 1:
+                    mm >>= 1
+                    if dec.decode(stats[st]):
+                        v |= mm
+                v += 1
+                block[k] = (-v if sign else v) << al
+                k += 1
+        else:
+            # AC refinement pass: kex = the PREVIOUS stage's last
+            # nonzero index (the grid holds exactly those stages)
+            kex = 0
+            for j in range(se, 0, -1):
+                if block[j] != 0:
+                    kex = j
+                    break
+            k = ss
+            while k <= se:
+                base = 3 * (k - 1)
+                if k > kex and dec.decode(stats[base]):
+                    break  # EOB: nothing further in this band
+                while True:
+                    if block[k] != 0:
+                        if dec.decode(stats[base + 2]):
+                            block[k] += p1 if block[k] > 0 else -p1
+                        break
+                    if dec.decode(stats[base + 1]):
+                        block[k] = -p1 if dec.decode(fixed) else p1
+                        break
                     k += 1
-        return True
-    except (ValueError, IndexError):
-        return False
+                    if k > se:
+                        raise ValueError("AC run past Se")
+                    base = 3 * (k - 1)
+                k += 1
 
 
-# ------------------------------------ arithmetic lossless (SOF11, r10)
+# ------------------------------------------------- lossless (SOF11)
 
 # H.1.2.2 statistics layout (shared convention with the fixtures
 # encoder, same epistemic status as the F.1.4.4 bin numbering): the
@@ -987,196 +520,43 @@ def decode_lossless_diff(dec: QMDecoder, stats: list[list[int]], base: int,
     return -v if sign else v
 
 
-def decode_jpeg_arith_lossless(data: bytes):
-    """Arithmetic-coded LOSSLESS JPEG (SOF11) decode to the uint8 Y
-    plane (top 8 bits at precision > 8) — T.81 Annex H.1.2.2: the data
-    unit is one SAMPLE; each difference (to the Annex H predictor
-    selected by Ss, point transform Al=Pt) is coded by the DC DIFF
-    decision tree under 2-D (Da, Db) conditioning over the QM coder.
-    Returns None on structural corruption or out-of-scope features
-    (restart intervals — the one remaining documented fake in the
-    arithmetic family; Ss outside 1-7; precision outside 8-16). Mirrors
-    `_decode_jpeg_lossless`'s MCU walk, predictor boundary rules and
-    output contract exactly.
+def lossless_diffs(dec: QMDecoder, dc_cond: dict):
+    """SOF11 difference decoder for jpeg's lossless sample walk: the
+    (Da, Db) classes of the left and above neighbours' coded differences
+    (zero outside the image) pick the context and magnitude ladder.
 
-    Plausibility gate (r12, ADVICE r11): the H.1.2.2 statistics-bin
-    LAYOUT here is a self-defined convention validated against this
-    repo's own encoder — a real-world stream using a different layout
-    would QM-decode "successfully" into random differences. The gate
-    catches that: for a CONFORMING stream at precision-pt <= 15 every
-    reconstructed sample px+diff lies exactly in [0, 2^(P-pt)) (T.81
-    H.1.1.1 computes differences modulo 2^16, whose minimal signed
-    representative IS the true difference whenever |sample-pred| <
-    2^15), so ANY pre-wrap out-of-range sample proves the decode model
-    mismatched and the stream routes to None (-> the documented fake,
-    real_decode=false) instead of returning garbage flagged real. With
-    random diffs a sample stays in range with probability ~2^(P-pt)/2^16
-    (~0.4% at P=8), so mismatched streams trip within a handful of
-    samples. At precision-pt == 16 the wrap is semantically load-bearing
-    (every value is valid modulo 2^16) and the gate necessarily stands
-    down — 16-bit lossless keeps only the encoder-twin validation."""
-    import numpy as np
+    Plausibility gates: the statistics-bin LAYOUT is a self-defined
+    convention, so a real-world stream using another layout would decode
+    "successfully" into random differences. For a conforming stream at
+    P-Pt <= 15 every sample pred+diff lies in [0, 2^(P-Pt)) before the
+    mod-2^16 wrap (H.1.1.1: the minimal signed representative of the
+    difference IS the true difference while |sample-pred| < 2^15); the
+    sample walk rejects any sample outside it. Random differences stay in
+    range with probability ~2^(P-Pt)/2^16 (~0.4% at P=8), so a mismatched
+    stream trips within a handful of samples. At P-Pt = 16 every value is
+    valid modulo 2^16 and that gate stands down. `lossless_consumed` is
+    the second gate."""
+    stats: dict[int, list] = {}
 
-    from seo_audit_etl_actor_spark.multimodal.binary_ops import _jpeg_upsample_y
+    def next_diff(td, diffs, row, col):
+        if td not in stats:
+            stats[td] = _new_stats(LL_STAT_BINS)
+        L, U = dc_cond.get(td, (0, 1))
+        ca = classify_diff(int(diffs[row, col - 1]) if col > 0 else 0, L, U)
+        cb = classify_diff(int(diffs[row - 1, col]) if row > 0 else 0, L, U)
+        mag_base = LL_MAG_SMALL if cb < 3 else LL_MAG_LARGE
+        return decode_lossless_diff(dec, stats[td], 4 * (5 * cb + ca), mag_base)
 
-    if data[:2] != b"\xff\xd8":
-        return None
-    dc_cond: dict[int, tuple[int, int]] = {}
-    sof = None
-    precision = 0
-    restart_interval = 0
-    scan = None
-    band = None
-    ecs_start = 0
-    i, n = 2, len(data)
-    try:
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                return None
-            marker = data[i + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                return None
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xCC:  # DAC (Tc=0 conditioning only is relevant)
-                j = 0
-                while j + 2 <= len(body):
-                    tc, tb = body[j] >> 4, body[j] & 15
-                    cs = body[j + 1]
-                    j += 2
-                    if tc == 0:
-                        dc_cond[tb] = (cs & 15, cs >> 4)  # (L, U)
-            elif marker == 0xCB:  # SOF11 arithmetic lossless
-                precision, ih, iw, ncomp = struct.unpack(">BHHB", body[:6])
-                if not 8 <= precision <= 16 or ncomp == 0 or ncomp > 4 or iw == 0 or ih == 0:
-                    return None
-                comps = []
-                for c in range(ncomp):
-                    cid, hv, _tq = body[6 + c * 3 : 9 + c * 3]
-                    comps.append((cid, hv >> 4, hv & 15))
-                sof = (iw, ih, comps)
-            elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                            0xC9, 0xCA, 0xCD, 0xCE, 0xCF):
-                return None  # not arithmetic-lossless — wrong path
-            elif marker == 0xDD:  # DRI
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS
-                if sof is None:
-                    return None
-                ns = body[0]
-                scan = []
-                for c in range(ns):
-                    cs, tda = body[1 + c * 2 : 3 + c * 2]
-                    scan.append((cs, tda >> 4))
-                band = (body[1 + ns * 2], body[2 + ns * 2], body[3 + ns * 2])
-                ecs_start = i + 2 + seg_len
-                break
-            i += 2 + seg_len
-        if scan is None or restart_interval:
-            return None  # restart intervals: the documented fake
-        psv, _se, ahal = band
-        pt = ahal & 15
-        if not 1 <= psv <= 7 or pt >= precision:
-            return None
+    return next_diff
 
-        iw, ih, comps = sof
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        if hmax == 0 or vmax == 0:
-            return None
-        scan_by_id = {cs: td for cs, td in scan}
-        order = [(cid, h, v) for cid, h, v in comps if cid in scan_by_id]
-        if len(order) != len(scan):
-            return None
-        y_cid, y_h, y_v = order[0]
-        true_h, true_v = y_h, y_v
-        if len(order) == 1:
-            # non-interleaved (H.2): MCU = one sample on the component grid
-            mcux = (iw * true_h + hmax - 1) // hmax
-            mcuy = (ih * true_v + vmax - 1) // vmax
-            order = [(y_cid, 1, 1)]
-        else:
-            mcux = (iw + hmax - 1) // hmax
-            mcuy = (ih + vmax - 1) // vmax
 
-        grids = {
-            cid: np.zeros((mcuy * v, mcux * h), dtype=np.int64)
-            for cid, h, v in order
-        }
-        # per-component grid of coded differences: the (Da, Db)
-        # conditioning reads the DIFFERENCES of the neighbors, not
-        # their reconstructed values (zero outside the image, H.1.2.2.2)
-        dgrids = {
-            cid: np.zeros((mcuy * v, mcux * h), dtype=np.int64)
-            for cid, h, v in order
-        }
-        default = 1 << (precision - pt - 1)
-        dec = QMDecoder(data[ecs_start:])
-        ll_stats: dict[int, list] = {}
-        # plausibility gate bound (see docstring): exclusive sample
-        # ceiling on the point-transformed domain; None disables the
-        # gate at the 16-bit depth where mod-2^16 wrap is load-bearing
-        sample_ceil = (1 << (precision - pt)) if precision - pt < 16 else None
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for cid, h, v in order:
-                    td = scan_by_id[cid]
-                    if td not in ll_stats:
-                        ll_stats[td] = _new_stats(LL_STAT_BINS)
-                    stats = ll_stats[td]
-                    L, U = dc_cond.get(td, (0, 1))
-                    g = grids[cid]
-                    d = dgrids[cid]
-                    for dy in range(v):
-                        for dx in range(h):
-                            row, col = my * v + dy, mx * h + dx
-                            da = int(d[row, col - 1]) if col > 0 else 0
-                            db = int(d[row - 1, col]) if row > 0 else 0
-                            ca = classify_diff(da, L, U)
-                            cb = classify_diff(db, L, U)
-                            base = 4 * (5 * cb + ca)
-                            mag_base = LL_MAG_SMALL if cb < 3 else LL_MAG_LARGE
-                            diff = decode_lossless_diff(dec, stats, base, mag_base)
-                            if row == 0 and col == 0:
-                                px = default
-                            elif row == 0:
-                                px = int(g[0, col - 1])
-                            elif col == 0:
-                                px = int(g[row - 1, 0])
-                            else:
-                                a = int(g[row, col - 1])
-                                b = int(g[row - 1, col])
-                                c = int(g[row - 1, col - 1])
-                                px = (
-                                    a if psv == 1 else b if psv == 2 else c
-                                    if psv == 3 else a + b - c if psv == 4
-                                    else a + ((b - c) >> 1) if psv == 5
-                                    else b + ((a - c) >> 1) if psv == 6
-                                    else (a + b) >> 1
-                                )
-                            val = px + diff
-                            if sample_ceil is not None and not 0 <= val < sample_ceil:
-                                return None  # plausibility gate (docstring)
-                            g[row, col] = val & 0xFFFF
-                            d[row, col] = diff
-        # plausibility gate, consumption leg: a conforming stream's
-        # entropy data is consumed to within flush slack (this repo's
-        # encoder leaves EXACTLY 4 bytes: 2 flush + the unread EOI;
-        # T.81 fill bytes before a marker are legal, so 0xFF runs are
-        # excused). A mismatched stats-bin layout decodes a different
-        # DECISION COUNT, leaving either a large unconsumed tail
-        # (caught here) or running into the D.2 1-pad, whose all-ones
-        # bits blow up decoded magnitudes and trip the range leg above.
-        ecs = data[ecs_start:]
-        tail = len(ecs) - dec._src._pos
-        if tail > 16 and sum(b != 0xFF for b in ecs[dec._src._pos : -2]) > 4:
-            return None
-    except (ValueError, IndexError, struct.error):
-        return None
-
-    full = np.clip(grids[y_cid] << pt, 0, (1 << precision) - 1)
-    plane = (full >> (precision - 8)).astype(np.uint8)
-    return _jpeg_upsample_y(plane, true_h, true_v, hmax, vmax, iw, ih)
+def lossless_consumed(dec: QMDecoder, ecs: bytes) -> bool:
+    """Whether a decoded SOF11 scan consumed its entropy data to within
+    flush slack (this repo's encoder leaves exactly 4 bytes: 2 flush + the
+    unread EOI; T.81 fill bytes before a marker are legal, so 0xFF runs
+    are excused). A mismatched bin layout decodes a different decision
+    count, leaving either a long unconsumed tail (caught here) or running
+    into the 1-pad, whose all-ones bits blow up the decoded magnitudes
+    and trip the range gate."""
+    pos = dec._src._pos
+    return not (len(ecs) - pos > 16 and sum(b != 0xFF for b in ecs[pos:-2]) > 4)

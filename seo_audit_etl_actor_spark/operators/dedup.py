@@ -659,6 +659,21 @@ def simhash_fingerprints(
     return g.select(F.col(id_col), *words)
 
 
+def _simhash_submask(bits: int, n_bands: int, n_sub: int, b: int, j: int, word: int) -> int:
+    """Word-`word` slice of the j-th (of n_sub) round-robin chunk of the
+    `bits`-bit fingerprint's bits OUTSIDE band b (of n_bands equal bands):
+    the hot-bucket refinement key of simhash_near_dup_pairs."""
+    width = bits // n_bands
+    m, pos = 0, 0
+    for i in range(bits):
+        if b * width <= i < (b + 1) * width:
+            continue
+        if pos % n_sub == j and i // _SIMHASH_WORD_BITS == word:
+            m |= 1 << (i % _SIMHASH_WORD_BITS)
+        pos += 1
+    return m
+
+
 def simhash_near_dup_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -703,18 +718,6 @@ def simhash_near_dup_pairs(
     fps = simhash_fingerprints(docs, text_col, id_col, bits)
     n_words = bits // _SIMHASH_WORD_BITS
 
-    def _submask(b: int, j: int, word: int) -> int:
-        """Word-`word` slice of the j-th (of n_sub) round-robin chunk of
-        the fingerprint bits OUTSIDE band b."""
-        m, pos = 0, 0
-        for i in range(bits):
-            if b * width <= i < (b + 1) * width:
-                continue
-            if pos % n_sub == j and i // _SIMHASH_WORD_BITS == word:
-                m |= 1 << (i % _SIMHASH_WORD_BITS)
-            pos += 1
-        return m
-
     def _refine(big: DataFrame) -> DataFrame:
         subs = F.array(
             *[
@@ -727,7 +730,7 @@ def simhash_near_dup_pairs(
                                 F.element_at(
                                     F.array(
                                         *[
-                                            F.lit(_submask(b, j, w))
+                                            F.lit(_simhash_submask(bits, n_bands, n_sub, b, j, w))
                                             for b in range(n_bands)
                                         ]
                                     ),

@@ -689,7 +689,7 @@ SELECT CAST(9 AS BIGINT)     AS n_rows,
 
 def q_lossless_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-oracle row for the round-8 lossless JPEG decoder (SOF3,
-    T.81 Annex H — multimodal/binary_ops._decode_jpeg_lossless): a
+    T.81 Annex H — the lossless path of multimodal/jpeg.py): a
     6-blob fixture corpus built in-query from the spec-side encoder
     (multimodal/fixtures.encode_jpeg_lossless), decoded through the real
     Spark path (binaryFile-shaped rows -> Arrow-batched mapInPandas),
@@ -765,7 +765,7 @@ SELECT CAST(6 AS BIGINT)      AS n_blobs,
 def q_extended_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-oracle row for the round-9 12-bit DCT decoders (SOF1
     extended sequential + 12-bit SOF2 progressive —
-    multimodal/binary_ops._decode_jpeg_gray/_decode_jpeg_progressive):
+    multimodal/jpeg.py's sequential and progressive DCT paths):
     a 6-blob fixture corpus built in-query from the spec-side encoders
     (multimodal/fixtures.encode_jpeg / encode_jpeg_progressive with
     precision=12), decoded through the real Spark path
@@ -920,7 +920,7 @@ SELECT CAST(5 AS BIGINT)      AS n_blobs,
 def q_arith_progressive_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-oracle row for the round-10 arithmetic-coded PROGRESSIVE
     JPEG decoder (SOF10 — T.81 Annex G.2 scan procedures over the Annex D
-    QM coder, jpeg_arith.decode_jpeg_arith_progressive): same discipline
+    QM coder, jpeg_arith.progressive_scan): same discipline
     as q_arith_decode_audit — a fixture corpus from the spec-side encoder
     (fixtures.encode_jpeg_arith_progressive, 7-scan two-level successive
     approximation script), decoded through the real Spark path, one row
@@ -940,7 +940,7 @@ def q_arith_progressive_decode_audit(spark: SparkSession, sf_dir: str) -> DataFr
                        intervals remain out of scope -> fake
       5_arp11_sof.jpg  blob 1's SOF marker patched to 0xCB (SOF11):
                        arithmetic lossless is REAL as of r10, so this
-                       routes to decode_jpeg_arith_lossless — which
+                       routes to the arithmetic lossless path — which
                        rejects the progressive scan script (Ss=0 is not
                        a lossless predictor) -> fake
     thumb_checksum = 1*12800 + 2*12864 + 3*5760 = 55808; n_real = 3 of 5.
@@ -999,7 +999,7 @@ def q_arith_lossless_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     """Driver-oracle row for the round-10 arithmetic-coded LOSSLESS JPEG
     decoder (SOF11 — T.81 Annex H.1.2.2's two-dimensional (Da, Db)
     conditioning model over the Annex D QM coder,
-    jpeg_arith.decode_jpeg_arith_lossless): same discipline as
+    jpeg_arith.lossless_diffs): same discipline as
     q_lossless_decode_audit — a fixture corpus from the spec-side
     encoder (fixtures.encode_jpeg_arith_lossless), decoded through the
     real Spark path, one row of hand-derived BIGINTs. Lossless decode

@@ -758,17 +758,26 @@ def q_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, _QUERY_VEC_ID, k=10, dim=EMB_DIM)
 
 
-def _sql_cosine_topk(dim: int = EMB_DIM, qid: int = _QUERY_VEC_ID, k: int = 10) -> str:
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
+def _dot_sql(a: str, b: str, dim: int) -> str:
+    """DuckDB dot product of two `dim`-wide embedding arrays as an
+    unrolled left-associative sum — the operators' dimension-sequential
+    double accumulation, bit for bit."""
+    return " + ".join(
+        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
+    )
 
+
+def _cos_sql(a: str, b: str, dim: int) -> str:
+    """DuckDB cosine similarity over `_dot_sql`."""
+    return f"({_dot_sql(a, b, dim)}) / (sqrt({_dot_sql(a, a, dim)}) * sqrt({_dot_sql(b, b, dim)}))"
+
+
+def _sql_cosine_topk(dim: int = EMB_DIM, qid: int = _QUERY_VEC_ID, k: int = 10) -> str:
     return f"""
 WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = {qid})
 SELECT vec_id,
-       ({chain('embedding', 'e')})
-       / (sqrt({chain('embedding', 'embedding')}) * sqrt({chain('e', 'e')})) AS cosine_sim
+       ({_dot_sql('embedding', 'e', dim)})
+       / (sqrt({_dot_sql('embedding', 'embedding', dim)}) * sqrt({_dot_sql('e', 'e', dim)})) AS cosine_sim
 FROM embeddings, q
 WHERE vec_id != {qid}
 ORDER BY cosine_sim DESC, vec_id ASC
@@ -796,21 +805,8 @@ EMB_NEAR_DUP_T = 0.35
 
 
 def _sql_embedding_near_dup(dim: int = EMB_DIM, modulus: int = 5) -> str:
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
-
-    sim = (
-        f"({chain('a.embedding', 'b.embedding')})"
-        f" / (sqrt({chain('a.embedding', 'a.embedding')})"
-        f" * sqrt({chain('b.embedding', 'b.embedding')}))"
-    )
-    selfsim = (
-        f"({chain('s.embedding', 's.embedding')})"
-        f" / (sqrt({chain('s.embedding', 's.embedding')})"
-        f" * sqrt({chain('s.embedding', 's.embedding')}))"
-    )
+    sim = _cos_sql("a.embedding", "b.embedding", dim)
+    selfsim = _cos_sql("s.embedding", "s.embedding", dim)
     return f"""
 WITH reps AS (
   SELECT embedding, MIN(vec_id) AS rep_id, COUNT(*) AS n_copies
@@ -870,16 +866,8 @@ def q_embedding_near_dup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_embedding_near_dup_ivf(dim: int = 64, n_cells: int = 16) -> str:
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
-
-    def cos_sql(a: str, b: str) -> str:
-        return f"({chain(a, b)}) / (sqrt({chain(a, a)}) * sqrt({chain(b, b)}))"
-
-    sim = cos_sql("a.embedding", "b.embedding")
-    selfsim = cos_sql("s.embedding", "s.embedding")
+    sim = _cos_sql("a.embedding", "b.embedding", dim)
+    selfsim = _cos_sql("s.embedding", "s.embedding", dim)
     return f"""
 WITH reps AS (
   SELECT embedding, MIN(vec_id) AS rep_id, COUNT(*) AS n_copies
@@ -890,7 +878,7 @@ cent AS (
 ),
 cell_sims AS (
   SELECT r.rep_id, r.embedding, r.n_copies, c.cid,
-         {cos_sql('r.embedding', 'c.cv')} AS sim
+         {_cos_sql('r.embedding', 'c.cv', dim)} AS sim
   FROM reps r CROSS JOIN cent c
 ),
 assigned AS (
@@ -946,22 +934,12 @@ def _sql_cosine_topk_ivf(
     choice — every tie broken by ascending cid exactly as the operator does.
     """
 
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
-
-    def cos_sql(a: str, b: str) -> str:
-        return (
-            f"({chain(a, b)}) / (sqrt({chain(a, a)}) * sqrt({chain(b, b)}))"
-        )
-
     return f"""
 WITH cent AS (
   SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < {n_cells}
 ),
 cell_sims AS (
-  SELECT e.vec_id, c.cid, {cos_sql('e.embedding', 'c.cv')} AS sim
+  SELECT e.vec_id, c.cid, {_cos_sql('e.embedding', 'c.cv', dim)} AS sim
   FROM embeddings e CROSS JOIN cent c
 ),
 assigned AS (
@@ -976,10 +954,10 @@ q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = {qid}),
 probe AS (
   SELECT c.cid
   FROM cent c CROSS JOIN q
-  ORDER BY {cos_sql('c.cv', 'q.e')} DESC, c.cid ASC
+  ORDER BY {_cos_sql('c.cv', 'q.e', dim)} DESC, c.cid ASC
   LIMIT {nprobe}
 )
-SELECT e.vec_id AS vec_id, {cos_sql('e.embedding', 'q.e')} AS cosine_sim
+SELECT e.vec_id AS vec_id, {_cos_sql('e.embedding', 'q.e', dim)} AS cosine_sim
 FROM embeddings e
 JOIN assigned a ON e.vec_id = a.vec_id
 CROSS JOIN q
@@ -1021,11 +999,6 @@ def _sql_lsh_bucket(vec: str, dim: int, n_planes: int = 8) -> str:
 def _sql_cosine_topk_lsh(
     dim: int = EMB_DIM, qid: int = _QUERY_VEC_ID, k: int = 10, max_hamming: int = 2
 ) -> str:
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
-
     return f"""
 WITH bucketed AS (
   SELECT vec_id, embedding, {_sql_lsh_bucket('embedding', dim)} AS bucket
@@ -1033,8 +1006,8 @@ WITH bucketed AS (
 ),
 q AS (SELECT embedding AS e, bucket AS qb FROM bucketed WHERE vec_id = {qid})
 SELECT vec_id,
-       ({chain('embedding', 'e')})
-       / (sqrt({chain('embedding', 'embedding')}) * sqrt({chain('e', 'e')})) AS cosine_sim
+       ({_dot_sql('embedding', 'e', dim)})
+       / (sqrt({_dot_sql('embedding', 'embedding', dim)}) * sqrt({_dot_sql('e', 'e', dim)})) AS cosine_sim
 FROM bucketed, q
 WHERE vec_id != {qid}
   AND bit_count(CAST(xor(bucket, qb) AS BIGINT)) <= {max_hamming}
@@ -1070,11 +1043,6 @@ def _sql_cosine_topk_rerank(
     sum_j t/(1+|t|) with t = c_j*q_j as an unrolled left-assoc chain —
     bit-equal to the pandas_udf's dimension-sequential accumulation."""
 
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
-
     def ss_term(j: int) -> str:
         t = f"(CAST(embedding[{j}] AS DOUBLE) * CAST(e[{j}] AS DOUBLE))"
         return f"({t} / (1.0 + abs({t})))"
@@ -1088,8 +1056,8 @@ WITH bucketed AS (
 q AS (SELECT embedding AS e, bucket AS qb FROM bucketed WHERE vec_id = {qid}),
 coarse AS (
   SELECT vec_id, embedding, e,
-         ({chain('embedding', 'e')})
-         / (sqrt({chain('embedding', 'embedding')}) * sqrt({chain('e', 'e')})) AS coarse_sim
+         ({_dot_sql('embedding', 'e', dim)})
+         / (sqrt({_dot_sql('embedding', 'embedding', dim)}) * sqrt({_dot_sql('e', 'e', dim)})) AS coarse_sim
   FROM bucketed, q
   WHERE vec_id != {qid}
     AND bit_count(CAST(xor(bucket, qb) AS BIGINT)) <= {max_hamming}
@@ -1286,12 +1254,6 @@ def _sql_ann_probe_policy_audit(
     # (200k -> 32/512, 2M -> 53/4096, modeled recall 900000 x1e6 — the
     # v2 law sits on its calibration crossings): pinned as literals,
     # like the banding ladder's tier-0 oracle
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-            for i in range(1, dim + 1)
-        )
-
     return f"""
 WITH bucketed AS (
   SELECT vec_id, embedding, {_sql_lsh_bucket('embedding', dim)} AS bucket
@@ -1300,8 +1262,8 @@ WITH bucketed AS (
 q AS (SELECT embedding AS e, bucket AS qb FROM bucketed WHERE vec_id = {qid}),
 cand AS (
   SELECT b.vec_id,
-         ({chain('b.embedding', 'e')})
-         / (sqrt({chain('b.embedding', 'b.embedding')}) * sqrt({chain('e', 'e')})) AS cosine_sim
+         ({_dot_sql('b.embedding', 'e', dim)})
+         / (sqrt({_dot_sql('b.embedding', 'b.embedding', dim)}) * sqrt({_dot_sql('e', 'e', dim)})) AS cosine_sim
   FROM bucketed b, q
   WHERE b.vec_id != {qid}
     AND bit_count(CAST(xor(b.bucket, qb) AS BIGINT)) <= {max_hamming}
@@ -1841,21 +1803,13 @@ def q_semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_semantic_dedup_stats(dim: int = EMB_DIM, n_cells: int = 16) -> str:
-    def chain(a: str, b: str) -> str:
-        return " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
-        )
-
-    def cos_sql(a: str, b: str) -> str:
-        return f"({chain(a, b)}) / (sqrt({chain(a, a)}) * sqrt({chain(b, b)}))"
-
-    sim = cos_sql("a.embedding", "b.embedding")
+    sim = _cos_sql("a.embedding", "b.embedding", dim)
     return f"""
 WITH cent AS (
   SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < {n_cells}
 ),
 cell_sims AS (
-  SELECT e.vec_id, c.cid, {cos_sql('e.embedding', 'c.cv')} AS sim
+  SELECT e.vec_id, c.cid, {_cos_sql('e.embedding', 'c.cv', dim)} AS sim
   FROM embeddings e CROSS JOIN cent c
 ),
 assigned AS (

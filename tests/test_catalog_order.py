@@ -142,6 +142,20 @@ def _rotate_module():
     return rotate_catalog
 
 
+def test_catalog_doc_in_sync():
+    """CATALOG.md is generated from the registry and the queries' first
+    docstring lines; it must match what tools/gen_catalog_doc.py renders
+    now, or a reader maps claims to a stale table."""
+    import sys
+
+    sys.path.insert(0, str(REPO / "tools"))
+    import gen_catalog_doc
+
+    assert gen_catalog_doc.render() == (REPO / "CATALOG.md").read_text(), (
+        "CATALOG.md is stale — run python tools/gen_catalog_doc.py"
+    )
+
+
 def _recorded_rounds() -> list[int]:
     return sorted(int(f.stem.split("_r")[1]) for f in REPO.glob("CORRECTNESS_r*.json"))
 

@@ -6,6 +6,8 @@ streaming self-join branch instead of a single collect_list state
 
 from __future__ import annotations
 
+import itertools
+
 import duckdb
 import pyarrow as pa
 from pyspark.sql import functions as F
@@ -104,34 +106,34 @@ def test_simhash_pipeline_with_adversarial_boilerplate(spark):
 
 
 def test_simhash_submask_partition_property():
-    """The n_sub round-robin chunk masks must exactly partition the bits
-    outside each band: pairwise disjoint, covering every non-band bit, and
-    never touching the band's own bits — this is what makes the hot-bucket
-    refinement lossless for hamming <= max_hamming pairs."""
-    bits, n_bands, max_hamming = dedup.SIMHASH_BITS, 4, 3
-    width = bits // n_bands
+    """The operator's n_sub round-robin chunk masks, at both fingerprint
+    widths, must exactly partition the bits outside each band, word by
+    word: pairwise disjoint, covering every non-band bit of every word,
+    never touching the band's own bits — this is what makes the
+    hot-bucket refinement lossless for hamming <= max_hamming pairs."""
+    n_bands, max_hamming, wb = 4, 3, 60
     n_sub = max_hamming + 1
-
-    def submask(b, j):  # mirror of the operator's construction
-        m, pos = 0, 0
-        for i in range(bits):
-            if b * width <= i < (b + 1) * width:
-                continue
-            if pos % n_sub == j:
-                m |= 1 << i
-            pos += 1
-        return m
-
-    for b in range(n_bands):
-        band_mask = ((1 << width) - 1) << (b * width)
-        masks = [submask(b, j) for j in range(n_sub)]
-        union = 0
-        for j, m in enumerate(masks):
-            assert m & band_mask == 0
-            for m2 in masks[j + 1 :]:
-                assert m & m2 == 0
-            union |= m
-        assert union == ((1 << bits) - 1) & ~band_mask
+    for bits, b in itertools.product(
+        (dedup.SIMHASH_BITS, dedup.SIMHASH_WIDE_BITS), range(n_bands)
+    ):
+        width = bits // n_bands
+        for word in range(bits // wb):
+            band_mask = sum(
+                1 << (i % wb)
+                for i in range(word * wb, (word + 1) * wb)
+                if b * width <= i < (b + 1) * width
+            )
+            masks = [
+                dedup._simhash_submask(bits, n_bands, n_sub, b, j, word)
+                for j in range(n_sub)
+            ]
+            union = 0
+            for j, m in enumerate(masks):
+                assert m & band_mask == 0
+                for m2 in masks[j + 1 :]:
+                    assert m & m2 == 0
+                union |= m
+            assert union == ((1 << wb) - 1) & ~band_mask
 
 
 def test_sized_join_fallback_identical(spark, monkeypatch):
@@ -196,41 +198,6 @@ def test_simhash_wide_pairs_subset_of_narrow(spark):
     wide = {(r["id_a"], r["id_b"]) for r in wide_pairs.collect()}
     narrow = {(r["id_a"], r["id_b"]) for r in dedup.simhash_near_dup_pairs(docs).collect()}
     assert wide <= narrow
-
-
-def test_simhash_wide_submask_partition_property():
-    """Wide-refine chunk masks: per band, the per-word masks must be
-    pairwise disjoint, cover every bit outside the band across BOTH words,
-    and never touch the band's own bits."""
-    bits, n_bands, max_hamming, wb = dedup.SIMHASH_WIDE_BITS, 4, 3, 60
-    width = bits // n_bands
-    n_sub = max_hamming + 1
-
-    def submask(b, j, word):  # mirror of simhash_near_dup_pairs
-        m, pos = 0, 0
-        for i in range(bits):
-            if b * width <= i < (b + 1) * width:
-                continue
-            if pos % n_sub == j and i // wb == word:
-                m |= 1 << (i % wb)
-            pos += 1
-        return m
-
-    for b in range(n_bands):
-        for word in range(bits // wb):
-            lo, hi = b * width, (b + 1) * width
-            band_bits_in_word = [
-                i % wb for i in range(word * wb, (word + 1) * wb) if lo <= i < hi
-            ]
-            band_mask = sum(1 << i for i in band_bits_in_word)
-            masks = [submask(b, j, word) for j in range(n_sub)]
-            union = 0
-            for j, m in enumerate(masks):
-                assert m & band_mask == 0
-                for m2 in masks[j + 1 :]:
-                    assert m & m2 == 0
-                union |= m
-            assert union == ((1 << wb) - 1) & ~band_mask
 
 
 def test_choose_simhash_width_tiers():

@@ -15,6 +15,7 @@ import pytest
 
 from seo_audit_etl_actor_spark.multimodal import binary_ops as B
 from seo_audit_etl_actor_spark.multimodal import fixtures as FX
+from seo_audit_etl_actor_spark.multimodal import jpeg as J
 
 # Spec-side encoders live in the package's fixtures module (shared with
 # queries/audit_ext.py's media_decode_audit). They are written from the
@@ -936,12 +937,9 @@ def test_jpeg_arith_gradient_noise_color_and_12bit():
 def test_jpeg_arith_dri_round_trip():
     """SOF9 restart intervals (strict T.81 restart: per-segment QM +
     statistics + prediction re-init, RSTn cycling validated) are exact
-    against the fixtures encoder and — since the r12 gate flip — decode
-    real by DEFAULT; `allow_restart=False` remains an explicit opt-out
-    that fake-routes (see jpeg_arith.decode_jpeg_arith's docstring)."""
+    against the fixtures encoder and decode real through the one
+    dispatcher, `jpeg.decode_jpeg`."""
     import numpy as np
-
-    from seo_audit_etl_actor_spark.multimodal import jpeg_arith as JA
 
     rng = np.random.default_rng(42)
     cases = [
@@ -960,14 +958,12 @@ def test_jpeg_arith_dri_round_trip():
         assert b"\xff\xdd" in data
         if fires:
             assert b"\xff\xd0" in data
-        # r12 default: DRI streams decode real; the opt-out fake-routes
-        assert JA.decode_jpeg_arith(data, allow_restart=False) is None
-        out = JA.decode_jpeg_arith(data)
+        out = J.decode_jpeg(data)
         assert out is not None and np.array_equal(out, expected), (ri, samp)
     # 12-bit precision with restarts
     img12 = rng.integers(0, 4096, (16, 24)).astype(np.int64)
     data, expected = FX.encode_jpeg_arith(img12, precision=12, restart_interval=2)
-    out = JA.decode_jpeg_arith(data, allow_restart=True)
+    out = J.decode_jpeg(data)
     assert out is not None and np.array_equal(out, expected)
     # strict validation: an out-of-cycle RSTn must fail, not resync
     data, _ = FX.encode_jpeg_arith(
@@ -976,7 +972,7 @@ def test_jpeg_arith_dri_round_trip():
     bad = bytearray(data)
     i = bad.find(b"\xff\xd0")
     bad[i + 1] = 0xD5
-    assert JA.decode_jpeg_arith(bytes(bad), allow_restart=True) is None
+    assert J.decode_jpeg(bytes(bad)) is None
 
 
 def test_jpeg_arith_progressive_dri_round_trip_behind_gate():
@@ -987,8 +983,6 @@ def test_jpeg_arith_progressive_dri_round_trip_behind_gate():
     default until arith_progressive_decode_audit rotates back into the
     driver window (r13)."""
     import numpy as np
-
-    from seo_audit_etl_actor_spark.multimodal import jpeg_arith as JA
 
     rng = np.random.default_rng(5)
     cases = [
@@ -1004,8 +998,8 @@ def test_jpeg_arith_progressive_dri_round_trip_behind_gate():
             img, chroma=chroma, restart_interval=ri, sampling=samp
         )
         assert b"\xff\xdd" in data
-        assert JA.decode_jpeg_arith_progressive(data) is None  # default gate
-        out = JA.decode_jpeg_arith_progressive(data, allow_restart=True)
+        assert J.decode_jpeg(data) is None  # default gate
+        out = J.decode_jpeg(data, allow_sof10_restart=True)
         assert out is not None, (ri, samp)
         assert int(np.abs(out.astype(int) - expected.astype(int)).max()) <= 1
     # strict validation: out-of-cycle RSTn fails, no resync
@@ -1015,7 +1009,7 @@ def test_jpeg_arith_progressive_dri_round_trip_behind_gate():
     bad = bytearray(data)
     i = bad.find(b"\xff\xd0")
     bad[i + 1] = 0xD4
-    assert JA.decode_jpeg_arith_progressive(bytes(bad), allow_restart=True) is None
+    assert J.decode_jpeg(bytes(bad), allow_sof10_restart=True) is None
 
 
 def test_jpeg_arith_single_component_scan_is_noninterleaved():
@@ -1025,11 +1019,9 @@ def test_jpeg_arith_single_component_scan_is_noninterleaved():
     interleaved MCU order here (blocks scrambled for sampling != (1,1))."""
     import numpy as np
 
-    from seo_audit_etl_actor_spark.multimodal import jpeg_arith as JA
-
     img = np.random.default_rng(7).integers(0, 256, (32, 24), dtype=np.uint8)
     data, expected = FX.encode_jpeg_arith(img, sampling=(2, 2))
-    out = JA.decode_jpeg_arith(data)
+    out = J.decode_jpeg(data)
     assert out is not None and np.array_equal(out, expected)
 
 
@@ -1077,9 +1069,8 @@ def test_jpeg_arith_real_flag_end_to_end(spark, tmp_path):
 
 # round 8 (ADVICE r7): non-integer Y sampling ratios must degrade to the
 # fake (return None), never emit a wrong-scale integer-floor upsample.
-# The guard lives in _jpeg_upsample_y, shared by the baseline
-# (_jpeg_decode_scan) and progressive (_decode_jpeg_progressive) tails,
-# so it cannot diverge between the two paths.
+# The guard lives in jpeg._upsample_y, shared by every decode path, so
+# it cannot diverge between them.
 
 
 def test_jpeg_upsample_guard_non_integer_ratio():
@@ -1087,10 +1078,10 @@ def test_jpeg_upsample_guard_non_integer_ratio():
 
     plane = np.arange(16 * 16, dtype=np.uint8).reshape(16, 16)
     # Y=(2,2) beside a hypothetical (3,3) component: 3 % 2 != 0 -> None
-    assert B._jpeg_upsample_y(plane, 2, 2, 3, 3, 10, 10) is None
+    assert J._upsample_y(plane, 2, 2, 3, 3, 10, 10) is None
     # mixed axes: one integer ratio is not enough
-    assert B._jpeg_upsample_y(plane, 1, 2, 2, 3, 10, 10) is None
-    assert B._jpeg_upsample_y(plane, 2, 1, 3, 2, 10, 10) is None
+    assert J._upsample_y(plane, 1, 2, 2, 3, 10, 10) is None
+    assert J._upsample_y(plane, 2, 1, 3, 2, 10, 10) is None
 
 
 def test_jpeg_upsample_integer_ratio_exact():
@@ -1099,11 +1090,11 @@ def test_jpeg_upsample_integer_ratio_exact():
     plane = np.arange(8 * 8, dtype=np.uint8).reshape(8, 8)
     # Y=(1,1) beside a (2,2) component on a 12x12 image: Y true res 6x6,
     # 2x repeat on both axes, cropped to 12x12
-    out = B._jpeg_upsample_y(plane, 1, 1, 2, 2, 12, 12)
+    out = J._upsample_y(plane, 1, 1, 2, 2, 12, 12)
     expect = np.repeat(np.repeat(plane[:6, :6], 2, axis=0), 2, axis=1)
     assert np.array_equal(out, expect)
     # full-resolution Y is returned cropped, untouched
-    out = B._jpeg_upsample_y(plane, 2, 2, 2, 2, 8, 8)
+    out = J._upsample_y(plane, 2, 2, 2, 2, 8, 8)
     assert np.array_equal(out, plane)
 
 
@@ -1170,7 +1161,7 @@ def test_jpeg_lossless_out_of_scope_returns_none():
     # restart intervals are documented out of scope: splice a DRI segment
     sof = data.index(b"\xff\xc3")
     with_dri = data[:sof] + b"\xff\xdd\x00\x04\x00\x02" + data[sof:]
-    assert B._decode_jpeg_lossless(with_dri) is None
+    assert B._decode_gray_pixels(with_dri) is None
     # 12-bit DCT (SOF1 extended sequential) stays out of scope
     assert B._decode_gray_pixels(data.replace(b"\xff\xc3", b"\xff\xc1", 1)) is None
 
@@ -1191,7 +1182,7 @@ def test_jpeg_lossless_real_flag_end_to_end(spark, tmp_path):
 
 # round 10: arithmetic-coded PROGRESSIVE JPEG (SOF10) — T.81 Annex G.2
 # scan procedures over the same QM coder and F.1.4.4 statistics bins.
-# Decoder is jpeg_arith.decode_jpeg_arith_progressive; encoder twin is
+# Decoder is jpeg_arith.progressive_scan; encoder twin is
 # fixtures.encode_jpeg_arith_progressive (7-scan two-level successive
 # approximation script, fresh statistics per scan).
 

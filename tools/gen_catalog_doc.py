@@ -12,7 +12,11 @@ from pathlib import Path
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+CATALOG_MD = Path(__file__).resolve().parent.parent / "CATALOG.md"
+
+
+def render() -> str:
+    """CATALOG.md's text for the current `QUERIES` registry."""
     from seo_audit_etl_actor_spark.queries.catalog import QUERIES
 
     lines = [
@@ -39,9 +43,13 @@ def main() -> None:
         kind = "oracle" if q.sql is not None else "rows-only"
         window = " (window)" if i <= 50 else ""
         lines.append(f"| {i}{window} | `{q.name}` | `{mod}` | {head} | {kind} |")
-    Path(__file__).resolve().parent.parent.joinpath("CATALOG.md").write_text(
-        "\n".join(lines) + "\n"
-    )
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    from seo_audit_etl_actor_spark.queries.catalog import QUERIES
+
+    CATALOG_MD.write_text(render())
     print(f"CATALOG.md: {len(QUERIES)} rows")
 
 
