@@ -6,8 +6,6 @@ streaming self-join branch instead of a single collect_list state
 
 from __future__ import annotations
 
-import itertools
-
 import duckdb
 import pyarrow as pa
 from pyspark.sql import functions as F
@@ -105,18 +103,10 @@ def test_simhash_pipeline_with_adversarial_boilerplate(spark):
     assert len([p for p in a if p[0] < 100 and p[1] < 100]) == 40 * 39 // 2
 
 
-def test_simhash_submask_partition_property():
-    """The operator's n_sub round-robin chunk masks, at both fingerprint
-    widths, must exactly partition the bits outside each band, word by
-    word: pairwise disjoint, covering every non-band bit of every word,
-    never touching the band's own bits — this is what makes the
-    hot-bucket refinement lossless for hamming <= max_hamming pairs."""
-    n_bands, max_hamming, wb = 4, 3, 60
+def _assert_submasks_partition(bits, n_bands=4, max_hamming=3, wb=60):
     n_sub = max_hamming + 1
-    for bits, b in itertools.product(
-        (dedup.SIMHASH_BITS, dedup.SIMHASH_WIDE_BITS), range(n_bands)
-    ):
-        width = bits // n_bands
+    width = bits // n_bands
+    for b in range(n_bands):
         for word in range(bits // wb):
             band_mask = sum(
                 1 << (i % wb)
@@ -134,6 +124,21 @@ def test_simhash_submask_partition_property():
                     assert m & m2 == 0
                 union |= m
             assert union == ((1 << wb) - 1) & ~band_mask
+
+
+def test_simhash_submask_partition_property():
+    """The operator's n_sub round-robin chunk masks must exactly partition
+    the bits outside each band, word by word: pairwise disjoint, covering
+    every non-band bit of every word, never touching the band's own bits —
+    this is what makes the hot-bucket refinement lossless for
+    hamming <= max_hamming pairs."""
+    _assert_submasks_partition(dedup.SIMHASH_BITS)
+
+
+def test_simhash_wide_submask_partition_property():
+    """The same partition property for the 120-bit fingerprint, whose
+    bands and chunks span both 60-bit words."""
+    _assert_submasks_partition(dedup.SIMHASH_WIDE_BITS)
 
 
 def test_sized_join_fallback_identical(spark, monkeypatch):
