@@ -78,18 +78,11 @@ def cached_dir(key: tuple, build: Callable[[str], None]) -> str:
     return d
 
 
-def cached_value(key: tuple, compute: Callable[[], object]) -> object:
-    """Memoize a computed value (e.g. an audit's result tuple whose
-    lifecycle mutates its own fixture and so can't re-run on a cached
-    dir). Computed at most once per session per key."""
-    if key not in _VALUES:
-        _VALUES[key] = compute()
-    return _VALUES[key]
-
-
 def peek_value(key: tuple) -> object | None:
-    """cached_value's non-computing half, for callers whose compute path
-    doesn't fit a thunk (early-return on hit, store late)."""
+    """The value stored under `key` this session (store_value), or None —
+    for callers that early-return on a hit and store late, e.g. an audit's
+    result tuple whose lifecycle mutates its own fixture and so can't
+    re-run on a cached dir."""
     return _VALUES.get(key)
 
 

@@ -508,7 +508,7 @@ def _trunc2(v: int) -> int:
 
 def encode_jpeg_progressive(y_plane, chroma=None, sampling=(1, 1), precision=8):
     """Progressive JFIF encoder (SOF2) with quant table all-ones — the
-    spec-side twin of `_decode_jpeg_progressive`, written from T.81
+    spec-side twin of `jpeg.decode_jpeg`'s SOF2 path, written from T.81
     Annex G independently of it. `precision` 8 or 12 (T.81 B.2.2:
     progressive allows both; only the level shift and the uint8
     reduction of expected_y widen). Scan script (the common two-level
@@ -999,7 +999,7 @@ def encode_jpeg_arith(
     y_plane, chroma=None, sampling=(1, 1), precision=8, restart_interval=0
 ):
     """Arithmetic-coded sequential JPEG encoder (SOF9) with quant table
-    all-ones — the spec-side twin of `jpeg_arith.decode_jpeg_arith`.
+    all-ones — the spec-side twin of `jpeg_arith.sequential`.
     Emits an explicit DAC segment with the default conditioning
     (DC L=0/U=1, AC Kx=5). Returns (jpeg_bytes, expected_y) with
     expected_y the encoder's own direct-formula IDCT reconstruction
@@ -1160,7 +1160,7 @@ def _encode_ac_band_first(enc, stats, kx, sign_ctx, va, ss, se):
 
 def _encode_ac_band_refine(enc, stats, sign_ctx, zz, ss, se, al):
     """G.2.4 AC refinement encode (the decode mirror lives in
-    jpeg_arith._arith_progressive_scan): ke = this stage's last
+    jpeg_arith.progressive_scan): ke = this stage's last
     significant index, kex = the previous stage's; EOB decisions only
     beyond kex; correction bits for nonzero-history coefficients at the
     first-magnitude bin; newly-significant coefficients (magnitude
@@ -1207,7 +1207,7 @@ def encode_jpeg_arith_progressive(
 ):
     """Arithmetic-coded progressive JPEG encoder (SOF10) with quant table
     all-ones — the spec-side twin of
-    `jpeg_arith.decode_jpeg_arith_progressive`, same scan script as the
+    `jpeg_arith.progressive_scan`, same scan script as the
     Huffman progressive twin (two-level successive approximation):
 
       1. DC first, interleaved, Al=1
@@ -1424,7 +1424,7 @@ def encode_jpeg_arith_lossless(
     chroma=None, sampling=(1, 1), cond=(0, 1),
 ):
     """Arithmetic-coded lossless JPEG (SOF11) encoder — the spec-side
-    twin of `jpeg_arith.decode_jpeg_arith_lossless`, mirroring
+    twin of `jpeg_arith.lossless_diffs`, mirroring
     `encode_jpeg_lossless`'s frame layout with the DHT replaced by a DAC
     conditioning segment and the SSSS/extra-bits entropy replaced by the
     QM-coded H.1.2.2 model: each difference is coded by the DC DIFF

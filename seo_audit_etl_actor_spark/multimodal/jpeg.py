@@ -433,9 +433,10 @@ def _huff_segments(body: bytes) -> list[bytes]:
 def _huff_sequential(ecs, order, mcux, mcuy, tables, huff, restart, coef) -> None:
     """Huffman sequential scan: every MCU's blocks, the emitted
     component's into `coef`, chroma only to advance the bitstream.
-    Restart segments reset the DC predictions."""
-    end = ecs.find(b"\xff\xd9")  # the body runs to the EOI
-    segments = _huff_segments(ecs[:end] if end >= 0 else ecs)
+    Restart segments reset the DC predictions. The entropy data ends at
+    the first marker that is not an RSTn (`_huff_ecs_end`), so a scan cut
+    short runs out of bits instead of reading the next segment."""
+    segments = _huff_segments(ecs[: _huff_ecs_end(ecs, 0)])
     y_cid, yh, yv, _tq = order[0]
     pred = {cid: 0 for cid, _, _, _ in order}
     mcu_idx = 0

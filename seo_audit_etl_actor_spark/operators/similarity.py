@@ -6,38 +6,108 @@ random-hyperplane-LSH bucketed variant is the 100 TB path (candidate set
 shrinks from n to n/2^n_planes per bucket; the bucket key is uniform so the
 self-join shuffle is skew-free).
 
+Each stage has one implementation: one query-vector lookup, one cosine
+(a literal-weight codegen chain), one LSH bucket routine (NumPy, serving
+the corpus UDF and the driver-side query bucket), one LSH candidate gate,
+one IVF codebook collect and one rep-pair loop. The vector width is read
+from the vectors themselves, never passed in.
+
 All arithmetic is double-precision, sequential left-to-right folds — the
 exact order the DuckDB oracle uses, so results are bit-identical.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — pandas_udf type-hint resolution needs it in globals
+import functools
+import hashlib
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from seo_audit_etl_actor_spark.session import ensure_package_on_executors
 
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
+
+def query_vector(
+    embeddings: DataFrame,
+    query_vec_id: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[float] | None:
+    """The stored vector of `query_vec_id` as Python floats (one
+    early-stopping driver lookup), or None when no row has that id."""
+    row = embeddings.where(F.col(id_col) == query_vec_id).select(vec_col).first()
+    return None if row is None else [float(x) for x in row[0]]
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (left-to-right, double) — deterministic
-    and oracle-matchable, unlike a parallel reduction."""
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _no_rows(embeddings: DataFrame, id_col: str, *score_cols: str) -> DataFrame:
+    """The empty top-k frame a missing query id yields — what the oracles
+    return for it."""
+    return embeddings.where(F.lit(False)).select(
+        F.col(id_col), *[F.lit(0.0).alias(c) for c in score_cols]
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def _chain_sql(vec_sql: str, factors: list[str]) -> str:
+    """Unrolled multiply-add chain `0.0 + v[1]*f1 + v[2]*f2 + ...` as ONE
+    SQL string. Building the same tree with Python Column operators costs
+    one py4j round-trip per term; parsing a single expr string is one
+    round-trip and the plan (and whole-stage codegen) is identical. The
+    0.0 seed and left-assoc order are the DuckDB oracle chains', so every
+    double is bit-identical to them."""
+    terms = [
+        f"CAST(element_at({vec_sql}, {j}) AS DOUBLE)*{f}"
+        for j, f in enumerate(factors, 1)
+    ]
+    return "(0.0D + " + " + ".join(terms) + ")"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine_query_cols(vec_sql: str, qvec: list[float]) -> Column:
+    """Cosine of an array column against a DRIVER-SIDE query vector,
+    emitted as one literal-weight codegen chain.
+
+    Bit-identical to the oracle's chain: the numerator terms multiply the
+    cast element by the literal double (same value CAST(e[j] AS DOUBLE)
+    produces), the column norm is the unrolled self-chain, and the query
+    norm is folded left-assoc in Python (IEEE doubles, same order) with
+    math.sqrt (correctly rounded — identical to SQL SQRT). The width is
+    the query vector's.
+
+    The point vs a crossJoin(broadcast(q)) form: a BroadcastNestedLoop
+    join breaks whole-stage codegen, so every downstream chain term runs
+    INTERPRETED (~15 µs/row at dim 64 — the r12 2M-vector corpus exposed
+    it at ~20 s/query); the literal chain keeps the whole scan inside one
+    WholeStageCodegen stage (~1 µs/row, scan-bound).
+    """
+    nq = 0.0
+    for y in qvec:
+        nq = nq + float(y) * float(y)
+    dot = _chain_sql(vec_sql, [f"({float(y)!r}D)" for y in qvec])
+    self_dot = _chain_sql(
+        vec_sql,
+        [f"CAST(element_at({vec_sql}, {j}) AS DOUBLE)" for j in range(1, len(qvec) + 1)],
+    )
+    return F.expr(f"({dot}) / (SQRT({self_dot}) * ({math.sqrt(nq)!r}D))")
+
+
+def rank_by_cosine(
+    cand: DataFrame,
+    qvec: list[float],
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Top-k of `cand` by cosine to the query vector, ties to the lower
+    id: one map-only codegen scan feeding TakeOrderedAndProject — Spark's
+    distributed top-k (per-partition heads, then merge)."""
+    return (
+        cand.select(F.col(id_col), cosine_query_cols(vec_col, qvec).alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 def cosine_topk(
@@ -46,129 +116,119 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
-    """Brute-force cosine top-k against one stored vector.
+    """Brute-force cosine top-k against one stored vector: the query
+    vector is fetched driver-side and inlined as a literal codegen chain
+    (cosine_query_cols), so the corpus pass is ONE map-only scan. A
+    missing query id gives no rows."""
+    qvec = query_vector(embeddings, query_vec_id, id_col, vec_col)
+    if qvec is None:
+        return _no_rows(embeddings, id_col, "cosine_sim")
+    cand = embeddings.where(F.col(id_col) != query_vec_id)
+    return rank_by_cosine(cand, qvec, k, id_col, vec_col)
 
-    With `dim` (r12 fast path) the query vector is fetched driver-side
-    (one early-stopping lookup) and inlined as a literal codegen chain
-    (cosine_query_cols — bit-identical to the HOF fold AND to the
-    oracle), so the corpus pass is ONE map-only WholeStageCodegen scan
-    feeding TakeOrderedAndProject — Spark's distributed top-k
-    (per-partition heads, then merge). Without `dim` the dim-agnostic
-    HOF path broadcasts the single-row query side instead (which costs a
-    BroadcastNestedLoopJoin that breaks codegen — interpreted chain
-    evaluation; fine for small corpora)."""
-    if dim:
-        q_row = embeddings.where(F.col(id_col) == query_vec_id).select(vec_col).first()
-        if q_row is None:
-            return embeddings.where(F.lit(False)).select(
-                F.col(id_col), F.lit(0.0).alias("cosine_sim")
-            )
-        sim = cosine_query_cols(vec_col, [float(x) for x in q_row[0]])
-        scan = embeddings
-    else:
-        q = embeddings.where(F.col(id_col) == query_vec_id).select(
-            F.col(vec_col).alias("__qvec")
-        )
-        sim = cosine(F.col(vec_col), F.col("__qvec"))
-        scan = embeddings.crossJoin(F.broadcast(q))
-    return (
-        scan.where(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
+
+def plane_weight(plane_idx: int, j: int) -> float:
+    """Component j of deterministic pseudo-random hyperplane `plane_idx`:
+    md5('hp|plane|j') mapped to [-1, 1), computed with hashlib (identical
+    to any engine's md5) — the NumPy plane matrix here and the DuckDB
+    oracle's literal weights are the same doubles. A component does not
+    depend on the vector width, so the planes for any width are prefixes
+    of one sequence."""
+    h = int(hashlib.md5(f"hp|{plane_idx}|{j}".encode()).hexdigest()[:15], 16)
+    return (h % 2001 - 1000) / 1000.0
+
+
+@functools.lru_cache(maxsize=64)
+def _planes(n_planes: int, width: int) -> np.ndarray:
+    """The (n_planes, width) plane matrix, built once per process and
+    shape and shared read-only by every caller."""
+    planes = np.asarray(
+        [[plane_weight(i, j) for j in range(width)] for i in range(n_planes)],
+        dtype=np.float64,
     )
+    planes.setflags(write=False)
+    return planes
 
 
-def hyperplane_values(dim: int, plane_idx: int) -> list[float]:
-    """Deterministic pseudo-random hyperplane: component j is derived from
-    md5('hp|plane|j') mapped to [-1, 1). Computed driver-side with hashlib
-    (identical to any engine's md5) and emitted as float literals — the plan
-    carries 64 constants per plane, not 64 hash expressions per row."""
-    import hashlib
-
-    out = []
-    for j in range(dim):
-        h = int(hashlib.md5(f"hp|{plane_idx}|{j}".encode()).hexdigest()[:15], 16)
-        out.append((h % 2001 - 1000) / 1000.0)
-    return out
+def _matrix(vecs) -> np.ndarray:
+    """One float64 row per array cell of an Arrow batch. Arrow hands back
+    ndarray elements; one 2D stack + exact float32->float64 widening
+    beats a per-row lambda (~2 us/row x corpus) by ~10x."""
+    return np.stack(vecs).astype(np.float64, copy=False)
 
 
-def hyperplane(dim: int, plane_idx: int) -> Column:
-    return F.array(*[F.lit(v) for v in hyperplane_values(dim, plane_idx)])
+def lsh_buckets(m: np.ndarray, n_planes: int) -> np.ndarray:
+    """Random-hyperplane LSH bucket id of every row of the float64 matrix
+    `m`: bit i = (row · plane_i > 0), planes of the rows' own width. The
+    one bucket routine — the corpus UDF (lsh_bucket_pandas) and the
+    driver-side query bucket both call it.
+
+    BLAS matmul for the dots, exact left-assoc recompute ONLY where the
+    fast value sits inside the summation-order error bound of zero:
+    |pairwise - leftassoc| <= 2n·eps·Σ|m_j·w_j| ≈ 5e-12 for dim 64 /
+    |x| ≤ 6 / |w| < 1 — so for |fast| ≥ 1e-8 the sign test provably
+    agrees with the oracle's 0.0-seeded chain, and the rare near-zero dots
+    get the chain verbatim. Bit-identical bucket, matmul speed."""
+    planes = _planes(n_planes, m.shape[1])
+    d = m @ planes.T
+    for r, c in zip(*np.nonzero(np.abs(d) < 1e-8)):
+        acc = 0.0
+        for x, w in zip(m[r], planes[c]):
+            acc = acc + x * w
+        d[r, c] = acc
+    return ((d > 0.0).astype(np.int64) << np.arange(n_planes, dtype=np.int64)).sum(axis=1)
 
 
-def _dot_sql(vec_sql: str, weights: list[float]) -> str:
-    """Unrolled multiply-add dot product as ONE SQL string. Building the
-    same tree with Python Column operators costs one py4j round-trip per
-    term (dim×planes ≈ thousands → multi-second plan construction);
-    parsing a single expr string is one round-trip and the resulting plan
-    (and whole-stage codegen) is identical."""
-    terms = [
-        f"CAST(element_at({vec_sql}, {j + 1}) AS DOUBLE)*({w!r}D)"
-        for j, w in enumerate(weights)
-    ]
-    return "(0.0D + " + " + ".join(terms) + ")"
+def _query_bucket(qvec: list[float], n_planes: int) -> int:
+    return int(lsh_buckets(np.asarray([qvec], dtype=np.float64), n_planes)[0])
 
 
-def dot_cols_sql(a_sql: str, b_sql: str, dim: int) -> str:
-    """Unrolled dot product of two array COLUMNS as one SQL string —
-    whole-stage-codegen arithmetic replacing the F.aggregate/zip_with HOF
-    fold (CodegenFallback: one interpreted lambda eval per element, which
-    the r12 2M-vector sf0.1 bench corpus exposed at ~10 s/query/pass).
-    The chain is the same left-assoc sequence as the fold, INCLUDING the
-    0.0 seed, so every double is bit-identical to `dot` and to the DuckDB
-    oracle chains."""
-    terms = [
-        f"CAST(element_at({a_sql}, {j}) AS DOUBLE)*CAST(element_at({b_sql}, {j}) AS DOUBLE)"
-        for j in range(1, dim + 1)
-    ]
-    return "(0.0D + " + " + ".join(terms) + ")"
+def lsh_bucket_pandas(n_planes: int = 8, vec_col: str = "embedding") -> Column:
+    """Arrow-batched LSH bucket id column (lsh_buckets over each batch).
+
+    Why Arrow (r12): at production plane counts an expression form is
+    n_planes × dim multiply-add terms in ONE generated method — past ~15
+    planes that crosses the JVM JIT's huge-method ceiling and the whole
+    stage drops to interpreted bytecode (~10 µs/row/plane measured on the
+    2M-vector corpus). The Arrow path is O(1) plan nodes and ~2 GFLOP/s
+    vectorized regardless of plane count."""
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        ensure_package_on_executors(active)
+
+    @pandas_udf("int")
+    def bucket_of(vecs: pd.Series) -> pd.Series:
+        m = _matrix(vecs.values)
+        return pd.Series(lsh_buckets(m, n_planes).astype("int32"))
+
+    return bucket_of(F.col(vec_col))
 
 
-def cosine_query_cols(vec_sql: str, qvec: list[float]) -> Column:
-    """Cosine of an array column against a DRIVER-SIDE query vector,
-    emitted as one literal-weight codegen chain (the lsh_bucket pattern).
-
-    Bit-identical to the oracle's chain: the numerator terms multiply the
-    cast element by the literal double (same value CAST(e[j] AS DOUBLE)
-    produces), the column norm is the unrolled self-chain, and the query
-    norm is folded left-assoc in Python (IEEE doubles, same order) with
-    math.sqrt (correctly rounded — identical to SQL SQRT).
-
-    The point vs the crossJoin(broadcast(q)) form: a BroadcastNestedLoop
-    join breaks whole-stage codegen, so every downstream chain term runs
-    INTERPRETED (~15 µs/row at dim 64 — the r12 2M-vector corpus exposed
-    it at ~20 s/query); the literal chain keeps the whole scan inside one
-    WholeStageCodegen stage (~1 µs/row, scan-bound).
-    """
-    import math
-
-    nq = 0.0
-    for y in qvec:
-        nq = nq + float(y) * float(y)
-    return F.expr(
-        f"({_dot_sql(vec_sql, [float(y) for y in qvec])})"
-        f" / (SQRT({dot_cols_sql(vec_sql, vec_sql, len(qvec))})"
-        f" * ({math.sqrt(nq)!r}D))"
-    )
-
-
-def lsh_bucket(vec_sql: str, dim: int, n_planes: int = 8) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i).
-
-    `vec_sql` is the SQL name/expression of the array column. The dot
-    products are unrolled multiply-add chains over literal plane weights —
-    whole-stage-codegen arithmetic, no interpreted lambda per element (the
-    bucket is sign-based so fold order is irrelevant here) — assembled as a
-    single expr string (see _dot_sql)."""
-    bits = [
-        f"(CASE WHEN {_dot_sql(vec_sql, hyperplane_values(dim, i))} > 0D"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i in range(n_planes)
-    ]
-    return F.expr("CAST((" + " + ".join(bits) + ") AS INT)")
+def lsh_candidates(
+    embeddings: DataFrame,
+    qvec: list[float],
+    query_vec_id: int,
+    n_planes: int = 8,
+    max_hamming: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, Column, int]:
+    """The LSH candidate stage: (the corpus minus the query row with its
+    Arrow bucket as `__bucket`, the hamming gate — bucket within
+    `max_hamming` bits of the query's — and the query bucket). The gate
+    is returned unapplied so a caller can filter on it or carry it as a
+    flag. The query bucket is computed driver-side by the same routine
+    and inlined as a literal: the candidate pass is one map-only scan, no
+    broadcast join."""
+    qb = _query_bucket(qvec, n_planes)
+    bucketed = embeddings.withColumn(
+        "__bucket", lsh_bucket_pandas(n_planes, vec_col)
+    ).where(F.col(id_col) != query_vec_id)
+    gate = F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qb)).cast("long")) <= max_hamming
+    return bucketed, gate, qb
 
 
 def rep_collapse(
@@ -212,31 +272,24 @@ def choose_sample_modulus(n_reps: int) -> int:
     return m
 
 
-# r13 negative result, recorded so it is not retried: replacing the
-# HOF-fold pair cosine with the unrolled element_at codegen chains
-# (dot_cols_sql) in the three rep-pair operators was A/B-measured
-# 1.7-2.6x SLOWER at sf0.1 (embedding_near_dup run 2.1-3.9 s HOF vs
-# 5.2-6.5 s chain; ivf likewise, 6 runs each, one session). The chains
-# win on MAP-ONLY scans (cosine_query_cols: one WholeStageCodegen
-# stage), but the pair stages evaluate the cosine behind a join — BNLJ
-# for the sample all-pairs, post-join filter for the cell join — where
-# the 64-term chain is (a) re-inlined into the filter condition (double
-# eval) and (b) evaluated interpreted, which costs more than the same
-# arithmetic as an interpreted fold. What DID win (below) is taking the
-# whole pair stage to the Arrow/NumPy path (guide §4.2), with the fold's
+# r13 negative result, recorded so it is not retried: scoring the rep
+# pairs with the unrolled element_at codegen chains in Spark was
+# A/B-measured 1.7-2.6x SLOWER at sf0.1 than even the interpreted fold it
+# was meant to replace (embedding_near_dup 5.2-6.5 s vs 2.1-3.9 s, 6 runs
+# each). The chains win on MAP-ONLY scans (cosine_query_cols), but a pair
+# stage evaluates the cosine behind a join, where the 64-term chain is
+# re-inlined into the filter condition and evaluated interpreted. What DID
+# win is the Arrow/NumPy pair stage below (guide §4.2), with the chain's
 # arithmetic preserved bit-for-bit.
 
 
 def _fold_dot_np(A, B):
-    """Per-row dot product with the HOF fold's EXACT arithmetic: float64
-    products per dimension, accumulated in ascending-dimension order from
-    a 0.0 seed — the same left-assoc IEEE sequence as dot()'s
-    zip_with + aggregate fold (and the DuckDB oracle chains), vectorized
-    ACROSS rows instead of interpreted per element. Same discipline as
+    """Per-row dot product with the oracle chain's EXACT arithmetic:
+    float64 products per dimension, accumulated in ascending-dimension
+    order from a 0.0 seed — the same left-assoc IEEE sequence as the
+    DuckDB chains, vectorized ACROSS rows. Same discipline as
     cosine_topk_rerank's rerank UDF (sequential across dims, vectorized
     across the batch)."""
-    import numpy as np
-
     acc = np.zeros(A.shape[0], dtype=np.float64)
     for j in range(A.shape[1]):
         acc = acc + A[:, j] * B[:, j]
@@ -250,109 +303,78 @@ def _fold_dot_np(A, B):
 _PAIR_BLOCK = 1_000_000
 
 
-def _rep_pair_frame(pdf, threshold: float, cell_val=None):
-    """Cross + self near-dup rows for ONE group of representatives.
+def _passes(sim, threshold: float):
+    """sim >= threshold, NaN (zero vectors) kept — Spark's and DuckDB's
+    NaN-greatest comparison order."""
+    return (sim >= threshold) | np.isnan(sim)
 
-    Replaces the cell self-join + per-pair interpreted HOF cosine with
-    NumPy over the group's Arrow batch (guide §4.2): sort by rep_id, form
-    the a<b upper-triangle pairs, score with _fold_dot_np (bit-identical
-    to the fold), keep sim >= threshold. NaN sims (zero vectors) are
-    KEPT, matching Spark's and DuckDB's NaN-greatest comparison order.
-    Self rows (n_copies > 1) use the same d/(sqrt(d)*sqrt(d)) sequence
-    the column form computed."""
-    import numpy as np
-    import pandas as pd
 
-    order = np.argsort(pdf["rep_id"].to_numpy(), kind="stable")
-    ids = pdf["rep_id"].to_numpy()[order]
-    nc = pdf["n_copies"].to_numpy()[order]
-    M = np.stack(pdf["__vec"].to_numpy()[order]).astype(np.float64, copy=False)
+def _pair_scan(pdf, threshold: float):
+    """The one rep-pair loop, for ONE group of representatives (columns
+    rep_id, __vec): sort by rep_id, stack, self-dot, norms, then score the
+    a<b upper-triangle pairs in _PAIR_BLOCK blocks with _fold_dot_np.
+
+    Returns (the rep_id-sorted pdf, each rep's self-cosine — the
+    d/(sqrt(d)*sqrt(d)) sequence —, which self-cosines pass, and an
+    iterator of (a, b, sim) blocks of the passing pairs, a and b being
+    positions in the sorted pdf)."""
+    pdf = pdf.iloc[np.argsort(pdf["rep_id"].to_numpy(), kind="stable")]
+    M = _matrix(pdf["__vec"].to_numpy())
     d_self = _fold_dot_np(M, M)
     norms = np.sqrt(d_self)
-    frames = []
-    ia, ib = np.triu_indices(len(ids), 1)
-    for s in range(0, len(ia), _PAIR_BLOCK):
-        sa, sb = ia[s : s + _PAIR_BLOCK], ib[s : s + _PAIR_BLOCK]
-        sim = _fold_dot_np(M[sa], M[sb]) / (norms[sa] * norms[sb])
-        keep = (sim >= threshold) | np.isnan(sim)
-        if keep.any():
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "id_a": ids[sa][keep],
-                        "id_b": ids[sb][keep],
-                        "cosine_sim": sim[keep],
-                        "n_pairs": (nc[sa][keep] * nc[sb][keep]).astype(np.int64),
-                    }
-                )
-            )
     selfsim = d_self / (norms * norms)
-    skeep = (nc > 1) & ((selfsim >= threshold) | np.isnan(selfsim))
-    if skeep.any():
-        frames.append(
-            pd.DataFrame(
-                {
-                    "id_a": ids[skeep],
-                    "id_b": ids[skeep],
-                    "cosine_sim": selfsim[skeep],
-                    "n_pairs": (nc[skeep] * (nc[skeep] - 1) // 2).astype(np.int64),
-                }
-            )
-        )
-    import numpy as _np
 
-    if frames:
-        out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    else:
-        out = pd.DataFrame(
-            {
-                "id_a": _np.array([], dtype=_np.int64),
-                "id_b": _np.array([], dtype=_np.int64),
-                "cosine_sim": _np.array([], dtype=_np.float64),
-                "n_pairs": _np.array([], dtype=_np.int64),
-            }
-        )
+    def blocks():
+        ia, ib = np.triu_indices(len(pdf), 1)
+        for s in range(0, len(ia), _PAIR_BLOCK):
+            sa, sb = ia[s : s + _PAIR_BLOCK], ib[s : s + _PAIR_BLOCK]
+            sim = _fold_dot_np(M[sa], M[sb]) / (norms[sa] * norms[sb])
+            keep = _passes(sim, threshold)
+            yield sa[keep], sb[keep], sim[keep]
+
+    return pdf, selfsim, _passes(selfsim, threshold), blocks()
+
+
+def _rep_pair_frame(pdf, threshold: float, cell_val=None):
+    """Cross + self near-dup rows for ONE group of representatives: the
+    passing rep pairs (n_pairs = n_a×n_b), then one self row per
+    duplicated rep whose self-cosine passes (n_pairs = C(n,2)). Replaces
+    a self-join + per-pair interpreted cosine with NumPy over the group's
+    Arrow batch (guide §4.2)."""
+    pdf, selfsim, self_ok, blocks = _pair_scan(pdf, threshold)
+    ids = pdf["rep_id"].to_numpy()
+    nc = pdf["n_copies"].to_numpy()
+    parts = [(ids[sa], ids[sb], sim, nc[sa] * nc[sb]) for sa, sb, sim in blocks]
+    s = np.flatnonzero((nc > 1) & self_ok)
+    parts.append((ids[s], ids[s], selfsim[s], nc[s] * (nc[s] - 1) // 2))
+    a, b, sim, n = (np.concatenate(c) for c in zip(*parts))
+    out = pd.DataFrame(
+        {"id_a": a, "id_b": b, "cosine_sim": sim, "n_pairs": n.astype(np.int64)}
+    )
     if cell_val is not None:
-        out.insert(0, "cell", _np.full(len(out), cell_val, dtype=_np.int32))
+        out.insert(0, "cell", np.full(len(out), cell_val, dtype=np.int32))
     return out
 
 
 def _rep_flag_frame(pdf, threshold: float, vec_col: str):
     """Per-rep SemDeDup facts for ONE cell group: (vector passthrough,
     rep_id, self_sim_ok, m_low) — the Arrow form of the cell self-join +
-    min aggregation in semantic_dedup_flags, with the fold arithmetic and
-    the NaN-greatest comparison order preserved (see _rep_pair_frame).
-    m_low = MIN rep_id over cell-mates with cosine >= threshold (both
-    pair directions, a != b), NULL when no mate qualifies."""
-    import numpy as np
-    import pandas as pd
-
-    order = np.argsort(pdf["rep_id"].to_numpy(), kind="stable")
-    ids = pdf["rep_id"].to_numpy()[order]
-    vec_raw = pdf["__vec"].to_numpy()[order]
-    M = np.stack(vec_raw).astype(np.float64, copy=False)
-    d_self = _fold_dot_np(M, M)
-    norms = np.sqrt(d_self)
-    selfsim = d_self / (norms * norms)
-    self_ok = (selfsim >= threshold) | np.isnan(selfsim)
-    m = len(ids)
+    min aggregation in semantic_dedup_flags. m_low = MIN rep_id over
+    cell-mates with cosine >= threshold (both pair directions, a != b),
+    NULL when no mate qualifies."""
+    pdf, _selfsim, self_ok, blocks = _pair_scan(pdf, threshold)
+    ids = pdf["rep_id"].to_numpy()
     sent = np.iinfo(np.int64).max
-    mlow = np.full(m, sent, dtype=np.int64)
-    ia, ib = np.triu_indices(m, 1)
-    for s in range(0, len(ia), _PAIR_BLOCK):
-        sa, sb = ia[s : s + _PAIR_BLOCK], ib[s : s + _PAIR_BLOCK]
-        sim = _fold_dot_np(M[sa], M[sb]) / (norms[sa] * norms[sb])
-        keep = (sim >= threshold) | np.isnan(sim)
-        np.minimum.at(mlow, sb[keep], ids[sa][keep])
-        np.minimum.at(mlow, sa[keep], ids[sb][keep])
+    mlow = np.full(len(ids), sent, dtype=np.int64)
+    for sa, sb, _sim in blocks:
+        np.minimum.at(mlow, sb, ids[sa])
+        np.minimum.at(mlow, sa, ids[sb])
     return pd.DataFrame(
         {
-            vec_col: vec_raw,
+            vec_col: pdf["__vec"].to_numpy(),
             "rep_id": ids,
             "self_sim_ok": self_ok,
-            "m_low": pd.array(
-                [None if v == sent else int(v) for v in mlow], dtype="Int64"
-            ),
+            "m_low": pd.arrays.IntegerArray(mlow, mlow == sent),
         }
     )
 
@@ -393,10 +415,9 @@ def embedding_near_dup_pairs(
 
     # ONE Arrow group (the sample is bounded at ~EMB_SAMPLE_TARGET reps by
     # the modulus tiers, so the quadratic stays a constant-size task):
-    # replaces the a.id<b.id BroadcastNestedLoopJoin whose per-pair HOF
+    # replaces the a.id<b.id BroadcastNestedLoopJoin whose per-pair
     # cosine ran interpreted — guide §4.2's batch-native path, measured
-    # ~2.1-3.9 s -> sub-second at sf0.1 with bit-identical output
-    # (_rep_pair_frame preserves the fold arithmetic and NaN order).
+    # ~2.1-3.9 s -> sub-second at sf0.1 with bit-identical output.
     out = (
         sample.withColumn("__g", F.lit(0))
         .groupBy("__g")
@@ -439,6 +460,27 @@ def choose_ivf_cells(n_vecs: int) -> int:
     return max(16, min(cells, IVF_MAX_CELLS))
 
 
+def ivf_codebook(
+    embeddings: DataFrame,
+    n_cells: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[tuple[int, list[float]]]:
+    """Deterministic IVF codebook, collected driver-side (a c-row read):
+    cell c's centroid is the stored vector with id c (a fixed,
+    reproducible codebook — the k-means training step is an offline
+    refinement, not a correctness requirement). orderBy pins the codebook
+    order (collect order off a filtered scan is partition order, not
+    guaranteed) — tie-breaks depend on it."""
+    return [
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in embeddings.where(F.col(id_col) < n_cells)
+        .select(id_col, vec_col)
+        .orderBy(id_col)
+        .collect()
+    ]
+
+
 def assign_ivf_cells(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -446,11 +488,8 @@ def assign_ivf_cells(
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
-    """IVF coarse quantization with deterministic centroids: cell c's
-    centroid is the stored vector with vec_id == c (a fixed, reproducible
-    codebook — the k-means training step is an offline refinement, not a
-    correctness requirement). Each vector is assigned to its max-cosine
-    centroid.
+    """IVF coarse quantization: each vector is assigned to its max-cosine
+    centroid (`centroids`, default ivf_codebook) as `__cell`.
 
     At 100 TB the assignment is a map-only Arrow pass (centroid matrix
     broadcast inside the UDF closure — a few KB); the cell column is then a
@@ -458,15 +497,7 @@ def assign_ivf_cells(
     IVF partition pruning.
     """
     if centroids is None:
-        # orderBy pins the codebook order (collect order off a filtered scan
-        # is partition order, not guaranteed) — tie-breaks depend on it
-        centroids = [
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in embeddings.where(F.col(id_col) < n_cells)
-            .select(id_col, vec_col)
-            .orderBy(id_col)
-            .collect()
-        ]
+        centroids = ivf_codebook(embeddings, n_cells, id_col, vec_col)
     # Arrow-batched argmax assignment (SURVEY §2.10's sanctioned Python
     # path for embedding math): one (batch × dim) @ (dim × n_cells) NumPy
     # matmul per Arrow batch. An expression-tree encoding was tried first
@@ -475,20 +506,13 @@ def assign_ivf_cells(
     # argmax ~2×n_cells times → a 500k-node condition and multi-second
     # planning), while the matmul is O(1) plan nodes and ~100 ns/vector.
     ensure_package_on_executors(embeddings.sparkSession)
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
     cids = np.asarray([cid for cid, _ in centroids], dtype=np.int64)
     cmat = np.asarray([cvec for _, cvec in centroids], dtype=np.float64)
     cnorms = np.sqrt((cmat * cmat).sum(axis=1))
 
     @pandas_udf("int")
     def cell_of(vecs: pd.Series) -> pd.Series:
-        # vectorized stack: Arrow hands back ndarray elements; one 2D
-        # stack + exact float32->float64 widening beats a per-row
-        # lambda (~2 us/row x corpus) by ~10x
-        m = np.stack(vecs.values).astype(np.float64, copy=False)
+        m = _matrix(vecs.values)
         vnorms = np.sqrt((m * m).sum(axis=1))
         sims = (m @ cmat.T) / np.outer(vnorms, cnorms)
         # Quantized-argmax contract: round to 6dp before argmax so the cell
@@ -502,6 +526,23 @@ def assign_ivf_cells(
         return pd.Series(cids[np.argmax(sims, axis=1)].astype("int32"))
 
     return embeddings.withColumn("__cell", cell_of(F.col(vec_col)))
+
+
+def _rep_cells(
+    embeddings: DataFrame, n_cells: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Representatives with their IVF cell — (cell, rep_id, n_copies,
+    __vec), the input of the per-cell Arrow pair stages. Copies share
+    their rep's cell, so the argmax runs once per representative; the
+    codebook is still the corpus's (vec_id c, not rep_id c)."""
+    centroids = ivf_codebook(embeddings, n_cells, id_col, vec_col)
+    reps = rep_collapse(embeddings, id_col, vec_col)
+    return assign_ivf_cells(reps, n_cells, "rep_id", vec_col, centroids).select(
+        F.col("__cell").alias("cell"),
+        "rep_id",
+        "n_copies",
+        F.col(vec_col).alias("__vec"),
+    )
 
 
 def embedding_near_dup_ivf_pairs(
@@ -520,10 +561,9 @@ def embedding_near_dup_ivf_pairs(
     scale-aware codebook default (choose_ivf_cells — average cell pinned
     near IVF_TARGET_CELL_SIZE members) that sum grows LINEARLY in the
     corpus; the r5 ANN ladder measured the fixed-16-cell form at b=1.69
-    (311 s at 31.6× sf0.1) versus this. The self-join shuffles on the cell
-    key; a skewed (hot) cell takes AQE's skew split. A true pair whose
-    members quantize into different cells is missed BY DESIGN (IVF's
-    recall trade-off); identical vectors always share a cell, so exact
+    (311 s at 31.6× sf0.1) versus this. A true pair whose members
+    quantize into different cells is missed BY DESIGN (IVF's recall
+    trade-off); identical vectors always share a cell, so exact
     duplicates are never missed.
 
     r12 redesign: the pair predicate runs at REPRESENTATIVE level
@@ -537,42 +577,23 @@ def embedding_near_dup_ivf_pairs(
     ~10³.
 
     r13: the within-cell pair stage is ONE Arrow pass — groupBy(cell)
-    applyInPandas with the fold arithmetic vectorized across the cell's
-    pairs (_rep_pair_frame, bit-identical output) — replacing the cell
-    self-join whose per-pair HOF cosine ran interpreted (~16M lambda
-    evals at sf0.1) plus the localCheckpoint the join needed to avoid
-    re-running the argmax UDF per side. The assignment now has a SINGLE
-    consumer, so no materialization job; one shuffle (on the cell key)
-    carries the rep frame once instead of twice. A pathological hot cell
-    is one Python group (no AQE split) — bounded by choose_ivf_cells'
-    ~IVF_TARGET_CELL_SIZE mean membership, same guarantee the old
-    self-join relied on for its Σ|cell|² bound.
+    applyInPandas (_rep_pair_frame, bit-identical output) — replacing the
+    cell self-join whose per-pair cosine ran interpreted plus the
+    localCheckpoint the join needed to avoid re-running the argmax UDF
+    per side. One shuffle (on the cell key) carries the rep frame once. A
+    pathological hot cell is one Python group (no AQE split) — bounded by
+    choose_ivf_cells' ~IVF_TARGET_CELL_SIZE mean membership.
     """
     if n_cells is None:
         # column-pruned count: parquet row-group metadata only, sub-second
         # at any corpus size
         n_cells = choose_ivf_cells(embeddings.count())
-    centroids = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in embeddings.where(F.col(id_col) < n_cells)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
-    reps = rep_collapse(embeddings, id_col, vec_col)
-    assigned = assign_ivf_cells(reps, n_cells, "rep_id", vec_col, centroids)
-    sel = assigned.select(
-        F.col("__cell").alias("cell"),
-        "rep_id",
-        "n_copies",
-        F.col(vec_col).alias("__vec"),
-    )
     thr = float(threshold)
 
     def cell_pairs(pdf):
         return _rep_pair_frame(pdf, thr, cell_val=pdf["cell"].iloc[0])
 
-    out = sel.groupBy("cell").applyInPandas(
+    out = _rep_cells(embeddings, n_cells, id_col, vec_col).groupBy("cell").applyInPandas(
         cell_pairs,
         "cell int, id_a long, id_b long, cosine_sim double, n_pairs long",
     )
@@ -615,10 +636,8 @@ def semantic_dedup_flags(
           c.id exceeds m_low = MIN(min_id over similar cell-mates).
     On an all-distinct corpus both legs degenerate to the original rule
     verbatim. The quadratic pair work runs over representatives only —
-    one Arrow pass per cell (r13, _rep_flag_frame: the fold arithmetic
-    vectorized across the cell's pairs, replacing the cell self-join +
-    interpreted per-pair HOF cosine AND the groupBy it fed); the per-copy
-    flags come back through one tier-gated join on the embedding key.
+    one Arrow pass per cell (r13, _rep_flag_frame); the per-copy flags
+    come back through one tier-gated join on the embedding key.
 
     Returns `embeddings` plus an is_dropped 0/1 column.
     """
@@ -626,21 +645,7 @@ def semantic_dedup_flags(
     if n_cells is None:
         n_total = embeddings.count()
         n_cells = choose_ivf_cells(n_total)
-    centroids = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in embeddings.where(F.col(id_col) < n_cells)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
-    reps = rep_collapse(embeddings, id_col, vec_col)
-    assigned = assign_ivf_cells(reps, n_cells, "rep_id", vec_col, centroids)
-    sel = assigned.select(
-        F.col("__cell").alias("cell"),
-        "rep_id",
-        "n_copies",
-        F.col(vec_col).alias("__vec"),
-    )
+    sel = _rep_cells(embeddings, n_cells, id_col, vec_col)
     # Broadcast only below the rep-count tier: the per-rep frame carries
     # the full embedding vectors, so on an all-distinct corpus it IS the
     # corpus and a forced broadcast would OOM at scale. n_total (when the
@@ -685,25 +690,19 @@ def cosine_topk_ivf(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: score only vectors in the `nprobe` cells whose
     centroids are most similar to the query — the partition-pruned scale
-    path (vs. LSH's hash-bucket pruning). Recall vs. brute force is
-    asserted in tests. With `dim`, candidate scoring is the unrolled
-    codegen chain (bit-identical to the HOF fold — dot_cols_sql)."""
-    # one driver collect serves both the codebook and the probe choice;
-    # orderBy pins the codebook order so tie-breaks are reproducible
-    centroids = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in embeddings.where(F.col(id_col) < n_cells)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
+    path (vs. LSH's hash-bucket pruning). Candidates are scored with the
+    literal chain (no broadcast join; the scan stays one codegen stage).
+    Recall vs. brute force is asserted in tests. A missing query id gives
+    no rows."""
+    qvec = query_vector(embeddings, query_vec_id, id_col, vec_col)
+    if qvec is None:
+        return _no_rows(embeddings, id_col, "cosine_sim")
+    # one driver collect serves both the codebook and the probe choice
+    centroids = ivf_codebook(embeddings, n_cells, id_col, vec_col)
     with_cell = assign_ivf_cells(embeddings, n_cells, id_col, vec_col, centroids)
-    q_row = embeddings.where(F.col(id_col) == query_vec_id).select(vec_col).first()
-    qvec = [float(x) for x in q_row[0]]
     cents = dict(centroids)
 
     def cos(a: list[float], b: list[float]) -> float:
@@ -712,23 +711,8 @@ def cosine_topk_ivf(
         return num / den if den else -2.0
 
     probe = sorted(cents, key=lambda c: cos(qvec, cents[c]), reverse=True)[:nprobe]
-    if dim:
-        # literal-chain scoring: no broadcast join, candidate scan stays
-        # one WholeStageCodegen stage (see cosine_query_cols)
-        sim = cosine_query_cols(vec_col, qvec)
-        scan = with_cell.where(F.col("__cell").isin(probe))
-    else:
-        q = embeddings.where(F.col(id_col) == query_vec_id).select(
-            F.col(vec_col).alias("__qvec")
-        )
-        sim = cosine(F.col(vec_col), F.col("__qvec"))
-        scan = with_cell.where(F.col("__cell").isin(probe)).crossJoin(F.broadcast(q))
-    return (
-        scan.where(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = with_cell.where(F.col("__cell").isin(probe)).where(F.col(id_col) != query_vec_id)
+    return rank_by_cosine(cand, qvec, k, id_col, vec_col)
 
 
 def cosine_topk_rerank(
@@ -736,7 +720,6 @@ def cosine_topk_rerank(
     query_vec_id: int,
     k: int = 10,
     n_candidates: int = 50,
-    dim: int = 64,
     n_planes: int = 8,
     max_hamming: int = 2,
     id_col: str = "vec_id",
@@ -756,39 +739,26 @@ def cosine_topk_rerank(
     interaction, sum_j s(c_j*q_j) with s(x)=x/(1+|x|): nonlinear in the
     per-dimension products (so it genuinely reorders the cosine ranking)
     yet rational arithmetic folded left-to-right — bit-reproducible by the
-    DuckDB oracle's unrolled chain, like the cosine fold.
+    DuckDB oracle's unrolled chain, like the cosine chain.
 
     The candidate vectors ride through the coarse top-N (N × dim doubles
     through TakeOrdered — a few KB), avoiding a second corpus scan to
-    re-fetch candidate embeddings.
+    re-fetch candidate embeddings. A missing query id gives no rows.
     """
     ensure_package_on_executors(embeddings.sparkSession)
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    q_row = embeddings.where(F.col(id_col) == query_vec_id).select(vec_col).first()
-    qv = np.asarray([float(x) for x in q_row[0]], dtype=np.float64)
-
-    # literal query bucket + literal-chain coarse cosine (r12): the
-    # candidate pass is one map-only scan, no broadcast join; the corpus
-    # bucket uses the Arrow path (bit-identical — see cosine_topk_lsh)
-    qb = lsh_bucket_py([float(x) for x in q_row[0]], dim, n_planes)
-    with_bucket = embeddings.withColumn(
-        "__bucket", lsh_bucket_pandas(dim, n_planes, vec_col)
+    qvec = query_vector(embeddings, query_vec_id, id_col, vec_col)
+    if qvec is None:
+        return _no_rows(embeddings, id_col, "coarse_sim", "rerank_score")
+    qv = np.asarray(qvec, dtype=np.float64)
+    bucketed, gate, _qb = lsh_candidates(
+        embeddings, qvec, query_vec_id, n_planes, max_hamming, id_col, vec_col
     )
     coarse = (
-        with_bucket.where(F.col(id_col) != query_vec_id)
-        .where(
-            F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qb)).cast("long"))
-            <= max_hamming
-        )
+        bucketed.where(gate)
         .select(
             F.col(id_col),
             F.col(vec_col),
-            cosine_query_cols(vec_col, [float(x) for x in q_row[0]]).alias(
-                "coarse_sim"
-            ),
+            cosine_query_cols(vec_col, qvec).alias("coarse_sim"),
         )
         .orderBy(F.col("coarse_sim").desc(), F.col(id_col).asc())
         .limit(n_candidates)
@@ -796,10 +766,7 @@ def cosine_topk_rerank(
 
     @pandas_udf("double")
     def rerank(vecs: pd.Series) -> pd.Series:
-        # vectorized stack: Arrow hands back ndarray elements; one 2D
-        # stack + exact float32->float64 widening beats a per-row
-        # lambda (~2 us/row x corpus) by ~10x
-        m = np.stack(vecs.values).astype(np.float64, copy=False)
+        m = _matrix(vecs.values)
         # dimension-by-dimension accumulation = the SQL chain's left-assoc
         # order per row (vectorized across the batch, sequential across
         # dims) — this is what makes the score exactly oracle-able
@@ -1038,73 +1005,6 @@ def choose_probes(
     }
 
 
-def lsh_bucket_pandas(dim: int, n_planes: int = 8, vec_col: str = "embedding") -> Column:
-    """Arrow-batched LSH bucket id — bit-identical to lsh_bucket's SQL
-    chain: each plane's dot product is accumulated dimension-by-dimension
-    (vectorized across the batch, sequential across dims — the same
-    left-assoc IEEE order as the 0.0D-seeded chain), so the sign test
-    agrees even when a dot product sits within an ulp of zero.
-
-    Why it exists (r12): at production plane counts the expression form
-    is n_planes × dim multiply-add terms in ONE generated method —
-    past ~15 planes that crosses the JVM JIT's huge-method ceiling and
-    the whole stage drops to interpreted bytecode (~10 µs/row/plane
-    measured on the 2M-vector corpus). The Arrow path is O(1) plan nodes
-    and ~2 GFLOP/s vectorized regardless of plane count."""
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_package_on_executors(active)
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.asarray(
-        [hyperplane_values(dim, i) for i in range(n_planes)], dtype=np.float64
-    )
-
-    @pandas_udf("int")
-    def bucket_of(vecs: pd.Series) -> pd.Series:
-        # vectorized stack: Arrow hands back ndarray elements; one 2D
-        # stack + exact float32->float64 widening beats a per-row
-        # lambda (~2 us/row x corpus) by ~10x
-        m = np.stack(vecs.values).astype(np.float64, copy=False)
-        # BLAS matmul for the dots, exact left-assoc recompute ONLY where
-        # the fast value sits inside the summation-order error bound of
-        # zero: |pairwise - leftassoc| <= 2n·eps·Σ|m_j·w_j| ≈ 5e-12 for
-        # dim 64 / |x| ≤ 6 / |w| < 1 — so for |fast| ≥ 1e-8 the sign test
-        # provably agrees with the chain, and the rare near-zero dots get
-        # the chain verbatim. Bit-identical bucket, matmul speed.
-        d = m @ planes.T
-        near = np.abs(d) < 1e-8
-        if near.any():
-            for r, c in zip(*np.nonzero(near)):
-                acc = 0.0
-                v, w = m[r], planes[c]
-                for j in range(v.shape[0]):
-                    acc = acc + v[j] * w[j]
-                d[r, c] = acc
-        out = ((d > 0.0).astype(np.int64) << np.arange(n_planes, dtype=np.int64)).sum(
-            axis=1
-        )
-        return pd.Series(out.astype("int32"))
-
-    return bucket_of(F.col(vec_col))
-
-
-def lsh_bucket_py(vec: list[float], dim: int, n_planes: int = 8) -> int:
-    """Driver-side twin of lsh_bucket for a single query vector: Python's
-    left-assoc sum matches the SQL chain bit-for-bit, so the bucket agrees
-    with the persisted corpus column."""
-    bucket = 0
-    for i in range(n_planes):
-        ws = hyperplane_values(dim, i)
-        if sum(float(x) * w for x, w in zip(vec, ws)) > 0.0:
-            bucket |= 1 << i
-    return bucket
-
-
 def hamming_ball(bucket: int, n_planes: int, max_hamming: int) -> list[int]:
     """All bucket ids within `max_hamming` bit flips of `bucket` — the
     candidate partition list for a pre-bucketed corpus (e.g. 37 of 256
@@ -1124,7 +1024,6 @@ def hamming_ball(bucket: int, n_planes: int, max_hamming: int) -> list[int]:
 def write_lsh_bucketed_corpus(
     embeddings: DataFrame,
     path: str,
-    dim: int,
     n_planes: int = 8,
     vec_col: str = "embedding",
 ) -> None:
@@ -1135,7 +1034,7 @@ def write_lsh_bucketed_corpus(
     """
     from seo_audit_etl_actor_spark.sources.partitioned import write_partitioned
 
-    with_bucket = embeddings.withColumn("bucket", lsh_bucket(vec_col, dim, n_planes))
+    with_bucket = embeddings.withColumn("bucket", lsh_bucket_pandas(n_planes, vec_col))
     write_partitioned(with_bucket, path, ["bucket"])
 
 
@@ -1157,25 +1056,17 @@ def cosine_topk_lsh_prebucketed(
     candidate directories (plan-asserted in tests). Top-k output is
     identical to cosine_topk_lsh for the same parameters.
     """
-    qb = lsh_bucket_py(query_vec, len(query_vec), n_planes)
-    ball = hamming_ball(qb, n_planes, max_hamming)
+    ball = hamming_ball(_query_bucket(query_vec, n_planes), n_planes, max_hamming)
     cand = corpus.where(F.col(bucket_col).isin(ball))
     if query_vec_id is not None:
         cand = cand.where(F.col(id_col) != query_vec_id)
-    # literal-chain cosine (r12): stays inside the pruned scan's codegen
-    sim = cosine_query_cols(vec_col, [float(v) for v in query_vec])
-    return (
-        cand.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return rank_by_cosine(cand, [float(v) for v in query_vec], k, id_col, vec_col)
 
 
 def cosine_topk_lsh(
     embeddings: DataFrame,
     query_vec_id: int,
     k: int = 10,
-    dim: int = 64,
     n_planes: int = 8,
     max_hamming: int = 2,
     id_col: str = "vec_id",
@@ -1184,7 +1075,7 @@ def cosine_topk_lsh(
     """LSH-bucketed ANN top-k: only vectors whose bucket is within
     `max_hamming` bits of the query's bucket are scored (defaults scan
     ~14% of the corpus for ~0.7 recall@10 on the synthetic embeddings;
-    hamming 3 → 36% scan, ~0.8).
+    hamming 3 → 36% scan, ~0.8). A missing query id gives no rows.
 
     This self-contained form recomputes the bucket column per query — right
     for the catalog harness (no side state). The production path is the
@@ -1194,35 +1085,14 @@ def cosine_topk_lsh(
     returns the identical top-k. Recall vs brute force is validated in
     tests (recall@10 on the synthetic corpus).
     """
-    q_row = embeddings.where(F.col(id_col) == query_vec_id).select(vec_col).first()
-    if q_row is None:
-        return embeddings.where(F.lit(False)).select(
-            F.col(id_col), F.lit(0.0).alias("cosine_sim")
-        )
-    qv = [float(x) for x in q_row[0]]
-    # query bucket computed driver-side (lsh_bucket_py — bit-identical to
-    # the SQL chain) and inlined as a literal: the candidate pass is ONE
-    # map-only WholeStageCodegen scan, no broadcast join (r12 — the join
-    # form left the chain interpreted; see cosine_query_cols)
-    qb = lsh_bucket_py(qv, dim, n_planes)
-    # Arrow bucket (bit-identical to the SQL chain — see lsh_bucket_pandas):
-    # the chain form put planes×dim + sim terms into one generated method,
-    # which sat exactly on the janino/JIT size boundary — it compiled
-    # standalone but failed (and fell back to interpreted eval) inside a
-    # long-lived bench session
-    with_bucket = embeddings.withColumn(
-        "__bucket", lsh_bucket_pandas(dim, n_planes, vec_col)
+    qvec = query_vector(embeddings, query_vec_id, id_col, vec_col)
+    if qvec is None:
+        return _no_rows(embeddings, id_col, "cosine_sim")
+    # Arrow bucket, not a planes×dim chain: the chain form put planes×dim
+    # + sim terms into one generated method, which sat exactly on the
+    # janino/JIT size boundary — it compiled standalone but failed (and
+    # fell back to interpreted eval) inside a long-lived bench session
+    bucketed, gate, _qb = lsh_candidates(
+        embeddings, qvec, query_vec_id, n_planes, max_hamming, id_col, vec_col
     )
-    cand = (
-        with_bucket.where(F.col(id_col) != query_vec_id)
-        .where(
-            F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qb)).cast("long"))
-            <= max_hamming
-        )
-    )
-    sim = cosine_query_cols(vec_col, qv)
-    return (
-        cand.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return rank_by_cosine(bucketed.where(gate), qvec, k, id_col, vec_col)

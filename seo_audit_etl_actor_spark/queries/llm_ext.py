@@ -755,7 +755,7 @@ def q_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 neighbors of vec_id=0 (sequential double
     fold — bit-identical to the oracle's explicit sum chain)."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    return similarity.cosine_topk(emb, _QUERY_VEC_ID, k=10, dim=EMB_DIM)
+    return similarity.cosine_topk(emb, _QUERY_VEC_ID, k=10)
 
 
 def _dot_sql(a: str, b: str, dim: int) -> str:
@@ -917,7 +917,7 @@ def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax + nprobe pruning + cosine scoring. Recall vs brute force is
     additionally asserted in tests."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    return similarity.cosine_topk_ivf(emb, _QUERY_VEC_ID, k=10, dim=EMB_DIM)
+    return similarity.cosine_topk_ivf(emb, _QUERY_VEC_ID, k=10)
 
 
 def _sql_cosine_topk_ivf(
@@ -977,20 +977,20 @@ def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL replays the same bucket assignment + hamming gate + cosine.
     Recall vs brute force is additionally asserted in tests."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    return similarity.cosine_topk_lsh(emb, _QUERY_VEC_ID, k=10, dim=EMB_DIM)
+    return similarity.cosine_topk_lsh(emb, _QUERY_VEC_ID, k=10)
 
 
 def _sql_lsh_bucket(vec: str, dim: int, n_planes: int = 8) -> str:
-    """DuckDB twin of similarity.lsh_bucket: same unrolled multiply-add
-    chains over the same literal weights — IEEE addition is left-assoc in
-    both engines, so the per-plane signs (and hence the bucket) agree
+    """DuckDB LSH bucket of a `dim`-wide embedding column: per plane, the
+    unrolled left-assoc multiply-add chain over similarity.plane_weight's
+    literal weights, 0.0-seeded. similarity.lsh_buckets takes the same
+    sign (exact chain recompute near zero), so the buckets agree
     bit-for-bit."""
     bits = []
     for i in range(n_planes):
-        ws = similarity.hyperplane_values(dim, i)
         terms = " + ".join(
-            f"CAST({vec}[{j + 1}] AS DOUBLE)*CAST({w!r} AS DOUBLE)"
-            for j, w in enumerate(ws)
+            f"CAST({vec}[{j + 1}] AS DOUBLE)*CAST({similarity.plane_weight(i, j)!r} AS DOUBLE)"
+            for j in range(dim)
         )
         bits.append(f"(CASE WHEN (0.0 + {terms}) > 0 THEN {1 << i} ELSE 0 END)")
     return "(" + " + ".join(bits) + ")"
@@ -1026,9 +1026,7 @@ def q_cosine_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-assoc rational arithmetic, so the whole pipeline — including the
     nonlinear second stage — has an exact DuckDB oracle."""
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    return similarity.cosine_topk_rerank(
-        emb, _QUERY_VEC_ID, k=10, n_candidates=50, dim=EMB_DIM
-    )
+    return similarity.cosine_topk_rerank(emb, _QUERY_VEC_ID, k=10, n_candidates=50)
 
 
 def _sql_cosine_topk_rerank(
@@ -1128,30 +1126,20 @@ def q_ann_probe_policy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # r12 cost shape: ONE full-corpus pass computes the bucket via the
-    # Arrow path (lsh_bucket_pandas — bit-identical left-assoc
-    # accumulation; the planes × dim expression form crosses the JIT
-    # huge-method ceiling at production plane counts and drops the whole
-    # stage to interpreted eval) and materializes ONLY the hamming-ball
-    # candidates (localCheckpoint of ~scan_frac·n rows, not the corpus).
-    # The query row's bucket + vector are inlined as LITERALS so every
-    # pass is a map-only codegen scan with no broadcast join (see
-    # cosine_query_cols). The two candidate predicates select the same
-    # rows BY CONSTRUCTION (bit_count(xor) <= h ⟺ bucket ∈ ball); both
-    # forms are kept live over the materialized set so `paths_agree`
+    # Arrow path (similarity.lsh_candidates — the planes × dim expression
+    # form crosses the JIT huge-method ceiling at production plane counts
+    # and drops the whole stage to interpreted eval) and materializes ONLY
+    # the hamming-ball candidates (localCheckpoint of ~scan_frac·n rows,
+    # not the corpus). The query row's bucket + vector are inlined as
+    # LITERALS so every pass is a map-only codegen scan with no broadcast
+    # join (see cosine_query_cols). The two candidate predicates select
+    # the same rows BY CONSTRUCTION (bit_count(xor) <= h ⟺ bucket ∈ ball);
+    # both forms are kept live over the materialized set so `paths_agree`
     # still cross-checks the recompute and prebucketed production paths.
-    bucketed = emb.withColumn("__b", similarity.lsh_bucket_pandas(EMB_DIM, pl))
-    q_row = (
-        emb.where(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()
-    )
-    qv = [float(x) for x in q_row[0]]
-    # query bucket driver-side (lsh_bucket_py — bit-identical chain), no
-    # corpus pass just to bucket one row
-    qb = similarity.lsh_bucket_py(qv, EMB_DIM, pl)
+    qv = similarity.query_vector(emb, _QUERY_VEC_ID)
+    bucketed, xor_gate, qb = similarity.lsh_candidates(emb, qv, _QUERY_VEC_ID, pl, h)
     ball = similarity.hamming_ball(qb, pl, h)
 
-    xor_gate = (
-        F.bit_count(F.col("__b").bitwiseXOR(F.lit(qb)).cast("long")) <= h
-    )
     # ball membership as a BROADCAST HASH JOIN, not an IN list: at
     # production plane counts the ball has thousands of ids (4,944 at 15
     # planes / h=5) and a literal IN degenerates to a per-row linear
@@ -1162,12 +1150,11 @@ def q_ann_probe_policy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the XOR arithmetic against the driver-enumerated ball.
     ball_df = spark.createDataFrame([(int(b),) for b in ball], "ball_b int")
     cand = (
-        bucketed.where(F.col("vec_id") != _QUERY_VEC_ID)
-        .withColumn("in_a", xor_gate)
-        .join(F.broadcast(ball_df), F.col("__b") == F.col("ball_b"), "left")
+        bucketed.withColumn("in_a", xor_gate)
+        .join(F.broadcast(ball_df), F.col("__bucket") == F.col("ball_b"), "left")
         .withColumn("in_b", F.col("ball_b").isNotNull())
         .where(F.col("in_a") | F.col("in_b"))
-        .select("vec_id", "embedding", "__b", "in_a", "in_b")
+        .select("vec_id", "embedding", "__bucket", "in_a", "in_b")
         .localCheckpoint(eager=True)
     )
     # path A: bit_count-XOR hamming gate (cosine_topk_lsh's form)
@@ -1177,27 +1164,21 @@ def q_ann_probe_policy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_b = cand.where("in_b")
 
     def topk_ids(cand: DataFrame) -> DataFrame:
-        sim = similarity.cosine_query_cols("embedding", qv)
-        return (
-            cand.select(F.col("vec_id"), sim.alias("cosine_sim"))
-            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-            .limit(10)
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    (-F.col("cosine_sim")).alias("s"),
-                                    F.col("vec_id").alias("i"),
-                                )
+        return similarity.rank_by_cosine(cand, qv, 10).agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                (-F.col("cosine_sim")).alias("s"),
+                                F.col("vec_id").alias("i"),
                             )
-                        ),
-                        lambda x: x["i"].cast("string"),
+                        )
                     ),
-                    ",",
-                ).alias("ids")
-            )
+                    lambda x: x["i"].cast("string"),
+                ),
+                ",",
+            ).alias("ids")
         )
 
     scanned = cand_a.agg(F.count(F.lit(1)).alias("scanned_rows"))

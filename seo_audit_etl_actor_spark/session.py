@@ -47,6 +47,26 @@ TABLES = (
 # the value it was started with.
 NO_DATAFRAME_DEBUGGING = ("spark.python.sql.dataFrameDebugging.enabled", "false")
 
+# Runtime-settable confs of the engine session: get_spark sets them on the
+# builder and re-applies them to a host-created session it reuses.
+RUNTIME_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    # AQE re-sizes joins from RUNTIME exchange stats; the static 10 MB
+    # default is far below what any executor comfortably holds and
+    # forces sort-merge exactly where a broadcast avoids re-shuffling a
+    # big cached side (minhash verification at 1000x sf0.1: the 1.3M-row
+    # candidate-pair frame measured ~20 MB at runtime, and sort-merge
+    # shuffled the 5M-row shingle-array frame twice for it — 202 s of
+    # pure exchange). 64 MB is standard production sizing.
+    ("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.timestampType", "TIMESTAMP_LTZ"),
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+)
+
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via `addPyFile`.
@@ -102,24 +122,11 @@ def get_spark(app_name: str = "seo-audit-etl-actor-spark") -> SparkSession:
     splitting), so the same logical plans serve local[32] and 100 TB.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in RUNTIME_CONFS:
+        builder = builder.config(k, v)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE re-sizes joins from RUNTIME exchange stats; the static 10 MB
-        # default is far below what any executor comfortably holds and
-        # forces sort-merge exactly where a broadcast avoids re-shuffling a
-        # big cached side (minhash verification at 1000x sf0.1: the 1.3M-row
-        # candidate-pair frame measured ~20 MB at runtime, and sort-merge
-        # shuffled the 5M-row shingle-array frame twice for it — 202 s of
-        # pure exchange). 64 MB is standard production sizing.
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.timestampType", "TIMESTAMP_LTZ")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        builder.config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Generated-class cache (static conf). The default LRU holds 100
         # compiled classes while one catalog pass generates >154 distinct
@@ -159,16 +166,7 @@ def get_spark(app_name: str = "seo-audit-etl-actor-spark") -> SparkSession:
         # Timezone-sensitive queries (hourly/monthly windows) compare against
         # a UTC DuckDB oracle, so re-apply every runtime-settable conf on the
         # reuse path; static confs (driver memory, UI) can't change post-start.
-        for k, v in (
-            ("spark.sql.adaptive.enabled", "true"),
-            ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-            ("spark.sql.adaptive.skewJoin.enabled", "true"),
-            ("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m"),
-            ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-            ("spark.sql.session.timeZone", "UTC"),
-            ("spark.sql.timestampType", "TIMESTAMP_LTZ"),
-            ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ):
+        for k, v in RUNTIME_CONFS:
             active.conf.set(k, v)
         return active
     return builder.master(f"local[{cpus}]").getOrCreate()

@@ -28,7 +28,7 @@ def test_lsh_mean_recall_at_10(emb):
     recalls = []
     for qid in QUERY_IDS:
         bf = set(_ids(similarity.cosine_topk(emb, qid, k=10)))
-        lsh = set(_ids(similarity.cosine_topk_lsh(emb, qid, k=10, dim=64)))
+        lsh = set(_ids(similarity.cosine_topk_lsh(emb, qid, k=10)))
         recalls.append(len(bf & lsh) / 10)
     assert sum(recalls) / len(recalls) >= 0.4, recalls
     assert all(r >= 0.1 for r in recalls), recalls
@@ -46,6 +46,24 @@ def test_brute_force_is_exact_on_itself(emb):
     deterministic (ties broken by vec_id)."""
     top = _ids(similarity.cosine_topk(emb, 0, k=10))
     assert len(top) == len(set(top)) == 10
+
+
+@pytest.mark.parametrize(
+    "op, cols",
+    [
+        (similarity.cosine_topk, ["vec_id", "cosine_sim"]),
+        (similarity.cosine_topk_lsh, ["vec_id", "cosine_sim"]),
+        (similarity.cosine_topk_ivf, ["vec_id", "cosine_sim"]),
+        (similarity.cosine_topk_rerank, ["vec_id", "coarse_sim", "rerank_score"]),
+    ],
+    ids=["bruteforce", "lsh", "ivf", "rerank"],
+)
+def test_missing_query_id_gives_no_rows(emb, op, cols):
+    """An id no row carries has no neighbours: every top-k operator
+    returns its usual columns and zero rows, as the DuckDB oracles do."""
+    df = op(emb, 10**9, k=10)
+    assert df.columns == cols
+    assert df.collect() == []
 
 
 # --- recall-targeting probe policy (r11) -----------------------------------
@@ -178,11 +196,11 @@ def test_multiprobe_lsh_beats_default_recall(emb):
     got_default, got_policy = [], []
     for qid in QUERY_IDS:
         bf = set(_ids(similarity.cosine_topk(emb, qid, k=10)))
-        d = set(_ids(similarity.cosine_topk_lsh(emb, qid, k=10, dim=64)))
+        d = set(_ids(similarity.cosine_topk_lsh(emb, qid, k=10)))
         w = set(
             _ids(
                 similarity.cosine_topk_lsh(
-                    emb, qid, k=10, dim=64,
+                    emb, qid, k=10,
                     n_planes=pol["n_planes"], max_hamming=pol["max_hamming"],
                 )
             )

@@ -53,3 +53,30 @@ def test_malformed_jpeg_decodes_to_none_or_frame_plane():
             if out is not None:
                 assert out.dtype == np.uint8 and out.shape == (16, 16), (kind, data.hex())
     assert n > 4000
+
+
+def test_huffman_sequential_scan_ends_at_next_marker():
+    """A baseline first scan's entropy data ends at the first non-RST
+    marker. With the scan cut anywhere in its first half and an APP0
+    segment of zero bytes after it, the decode must give None. Zero bytes
+    are valid Huffman codes, so reading on into the segment would fill
+    the missing blocks. The intact scan followed by the same segment
+    still decodes to the encoder's plane."""
+    import struct
+
+    from seo_audit_etl_actor_spark.multimodal import jpeg
+
+    img = np.random.default_rng(0).integers(0, 256, (32, 32), dtype=np.uint8)
+    blob, expected = FX.encode_jpeg(img)
+    sos = blob.index(b"\xff\xda")
+    start = sos + 2 + struct.unpack(">H", blob[sos + 2 : sos + 4])[0]
+    ecs = blob[start : blob.rindex(b"\xff\xd9")]
+    app0 = b"\xff\xe0" + struct.pack(">H", 2 + 1024) + bytes(1024)
+    full = jpeg.decode_jpeg(blob[:start] + ecs + app0 + b"\xff\xd9")
+    assert full is not None and np.array_equal(full, expected)
+    planes = [
+        cut
+        for cut in range(1, len(ecs) // 2)
+        if jpeg.decode_jpeg(blob[:start] + ecs[:cut] + app0 + b"\xff\xd9") is not None
+    ]
+    assert planes == []

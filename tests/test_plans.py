@@ -74,7 +74,7 @@ def test_arrow_udf_is_visible_in_plan(spark, sf_dir):
     """The detector's positive case: every other call site asserts its
     absence, so a broken detector would pass them all vacuously."""
     emb = load_table(spark, sf_dir, "embeddings")
-    df = emb.select("vec_id", similarity.lsh_bucket_pandas(64, 8).alias("bucket"))
+    df = emb.select("vec_id", similarity.lsh_bucket_pandas(8).alias("bucket"))
     assert audit.uses_python_udf(df)
 
 
@@ -130,13 +130,23 @@ def test_above_nation_avg_no_nested_loop_or_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in p, p
 
 
+@pytest.mark.parametrize("name", ["cosine_topk_bruteforce", "cosine_topk_ivf"])
+def test_cosine_topk_scores_without_nested_loop(spark, sf_dir, name):
+    """The query vector enters the scoring scan as literals: a broadcast
+    query side would plan a nested-loop or cartesian join and break
+    whole-stage codegen for every cosine term."""
+    p = audit.plan_string(SPECS[name].fn(spark, sf_dir))
+    assert "NestedLoop" not in p, p
+    assert "CartesianProduct" not in p, p
+
+
 def test_prebucketed_ann_prunes_partitions(spark, sf_dir, tmp_path_factory):
     """Persisted-bucket ANN path: the per-query scan must show non-empty
     PartitionFilters (hamming-ball IN list pruned at plan time) and return
     the identical top-k as the self-contained recompute form."""
     emb = load_table(spark, sf_dir, "embeddings")
     lake = str(tmp_path_factory.mktemp("ann") / "corpus")
-    similarity.write_lsh_bucketed_corpus(emb, lake, dim=64)
+    similarity.write_lsh_bucketed_corpus(emb, lake)
     corpus = spark.read.parquet(lake)
 
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
@@ -147,7 +157,7 @@ def test_prebucketed_ann_prunes_partitions(spark, sf_dir, tmp_path_factory):
     got = [(r["vec_id"], r["cosine_sim"]) for r in df.collect()]
     want = [
         (r["vec_id"], r["cosine_sim"])
-        for r in similarity.cosine_topk_lsh(emb, 0, k=10, dim=64).collect()
+        for r in similarity.cosine_topk_lsh(emb, 0, k=10).collect()
     ]
     assert got == want
 

@@ -51,7 +51,6 @@ from gen_scale import (
     high_query_ids,
 )
 from seo_audit_etl_actor_spark.operators import similarity
-from seo_audit_etl_actor_spark.queries.llm_ext import EMB_DIM
 from seo_audit_etl_actor_spark.session import get_spark, load_table
 
 K = 10
@@ -108,7 +107,7 @@ def run_rung(spark, label: str, sf_dir: str) -> dict:
     # ulp-scale reorderings don't move recall), noted for honesty.
     t0 = time.time()
     assigned = similarity.assign_ivf_cells(
-        emb.withColumn("b", similarity.lsh_bucket_pandas(EMB_DIM, planes)), n_cells
+        emb.withColumn("b", similarity.lsh_bucket_pandas(planes)), n_cells
     ).persist()
     qrows = assigned.where(F.col("vec_id").isin(all_qids)).collect()
     qvecs = {
